@@ -2120,7 +2120,7 @@ object SparkEntry {
     },
     // q324's 100-TB sibling: each micro-batch lands MERGE-ON-READ delta
     // files (write bytes ∝ |delta|, never the touched partition), the
-    // replay skips on the existing delta manifest, and a final
+    // replay skips on the existing manifest, and a final
     // compaction folds the splice back to one dir per partition with
     // totals unchanged — the Iceberg/Delta streaming-ingest lifecycle.
     "q326_stream_mor_ingest" -> { (s, dir) =>
@@ -2192,7 +2192,7 @@ object SparkEntry {
         scratchDir("graft-q333").resolve("user_totals").toString)
     },
     // Metadata-only aggregation: each delta commit folds its batch's
-    // per-partition (count, sum) into a cumulative stats manifest, so
+    // per-partition (count, sum) into its manifest's cumulative stats, so
     // full-table COUNT/SUM — at any version, including time travel —
     // is a one-file metadata read with zero data files opened (Delta's
     // numRecords / Iceberg's manifest value-counts); a physical recount

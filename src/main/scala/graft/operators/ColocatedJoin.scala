@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 
 import graft.functions.OracleSafe
@@ -28,20 +29,27 @@ import graft.functions.OracleSafe
   */
 object ColocatedJoin {
 
+  /** The dirs holding one partition's files — its Hive-style dir under
+    * every serving dir, with the value escaped the way Spark wrote it.
+    */
+  private def slicePaths(tableDir: String, partCol: String, part: String,
+      e: ManifestTable.Entry): Seq[String] = {
+    require(e.dels.isEmpty, s"$tableDir: partition $part has position deletes")
+    e.dirs.map(d =>
+      s"$tableDir/data/$d/${escapePathName(partCol)}=${escapePathName(part)}")
+  }
+
   /** One partition's files, read dir-scoped (maximal pruning: the scan
     * never even lists sibling partitions) with the partition column
     * restored from the manifest key.
     */
-  private def slice(spark: SparkSession, tableDir: String, partCol: String,
-      part: String, srcVersion: Long): DataFrame =
-    spark.read.parquet(s"$tableDir/data/v$srcVersion/$partCol=$part")
-      .withColumn(partCol, lit(part))
+  private def slice(spark: SparkSession, paths: Seq[String], partCol: String,
+      part: String): DataFrame =
+    spark.read.parquet(paths: _*).withColumn(partCol, lit(part))
 
-  private def sliceBytes(spark: SparkSession, tableDir: String,
-      partCol: String, part: String, srcVersion: Long): Long = {
-    val p = new Path(s"$tableDir/data/v$srcVersion/$partCol=$part")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getContentSummary(p).getLength
+  private def sliceBytes(spark: SparkSession, paths: Seq[String]): Long = {
+    val fs = ManifestTable.fileSystem(spark, paths.head)
+    paths.map(p => fs.getContentSummary(new Path(p)).getLength).sum
   }
 
   /** Inner-join two partition-mapped tables on `partCol` co-location
@@ -52,22 +60,19 @@ object ColocatedJoin {
   def colocatedJoin(spark: SparkSession, tableADir: String,
       tableBDir: String, partCol: String, keys: Seq[String],
       broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    val vA = ManifestTable.currentVersion(spark, tableADir).getOrElse(
-      sys.error(s"no published snapshot under $tableADir"))
-    val vB = ManifestTable.currentVersion(spark, tableBDir).getOrElse(
-      sys.error(s"no published snapshot under $tableBDir"))
-    val mapA = ManifestTable.readPartitionManifest(spark, tableADir, vA)
-    val mapB = ManifestTable.readPartitionManifest(spark, tableBDir, vB)
+    def partsOf(dir: String) = ManifestTable.readManifest(spark, dir,
+      ManifestTable.live(spark, dir)).parts
+    val (mapA, mapB) = (partsOf(tableADir), partsOf(tableBDir))
     val common = (mapA.keySet intersect mapB.keySet).toSeq.sorted
     require(common.nonEmpty,
       s"no common $partCol partitions between $tableADir and $tableBDir")
     common.map { p =>
-      val a = slice(spark, tableADir, partCol, p, mapA(p))
-      val b = slice(spark, tableBDir, partCol, p, mapB(p))
-        .drop(partCol)
+      val pathsB = slicePaths(tableBDir, partCol, p, mapB(p))
+      val a = slice(spark, slicePaths(tableADir, partCol, p, mapA(p)),
+        partCol, p)
+      val b = slice(spark, pathsB, partCol, p).drop(partCol)
       val build =
-        if (sliceBytes(spark, tableBDir, partCol, p, mapB(p))
-            <= broadcastMaxBytes) broadcast(b)
+        if (sliceBytes(spark, pathsB) <= broadcastMaxBytes) broadcast(b)
         else b
       a.join(build, keys)
     }.reduce(_ unionByName _)
@@ -89,10 +94,10 @@ object ColocatedJoin {
     val spark = events.sparkSession
     val base = events.select(col("event_type"), col("user_id"),
       OracleSafe.quant(col("value"), 100).as("cents"))
-    ManifestTable.publishPartitioned(base, tableADir, 1L, "event_type")
+    ManifestTable.appendPartitionedDelta(base, tableADir, 1L, "event_type")
     val perUser = base.groupBy("event_type", "user_id")
       .agg(count(lit(1)).as("cnt"), sum(col("cents")).as("sum_cents"))
-    ManifestTable.publishPartitioned(perUser, tableBDir, 1L, "event_type")
+    ManifestTable.appendPartitionedDelta(perUser, tableBDir, 1L, "event_type")
     colocatedJoin(spark, tableADir, tableBDir, "event_type",
         Seq("user_id"))
       .filter(col("cents") * 2 * col("cnt") > col("sum_cents") * 3)

@@ -2,9 +2,10 @@ package graft.operators
 
 import java.util.EnumSet
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.Options.CreateOpts
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
 import org.apache.spark.sql.functions._
 
 import graft.functions.OracleSafe
@@ -19,6 +20,12 @@ import graft.functions.OracleSafe
   * {{{
   *   data/v<N>/…parquet   immutable snapshot dirs (write-once, never edited)
   *   CURRENT              the pointer — one small file naming the live N
+  *   manifest/v<N>        partitioned tier only: one line per partition,
+  *                        `<escaped value>\t<dir>,<dir>[\tdel:<dir>,…]
+  *                        [\tstats:<rows>,<sum>]`, under an optional
+  *                        `#txn\t<app>\t<batch>` header; dirs are under
+  *                        `data/` (`v<N>`, or `t_<app>_b<batch>` and
+  *                        `c_v<N>` for txn-tagged commits)
   * }}}
   *
   * Protocol: (1) land the new snapshot's data files under `data/v<N>` —
@@ -52,6 +59,25 @@ object ManifestTable {
     FileContext.getFileContext(new Path(dir).toUri,
       spark.sparkContext.hadoopConfiguration)
 
+  private[operators] def fileSystem(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Versions named `v<N>…` directly under `tableDir/sub` (`data`,
+    * `manifest`, `commits`, `leases`), ascending; empty when the dir is
+    * absent.
+    */
+  private def listVersions(spark: SparkSession, tableDir: String,
+      sub: String): Seq[Long] = {
+    val fs = fileSystem(spark, tableDir)
+    val dir = new Path(s"$tableDir/$sub")
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("v"))
+      .flatMap(n => scala.util.Try(
+        n.stripPrefix("v").takeWhile(_.isDigit).toLong).toOption)
+      .sorted
+  }
+
   /** The version the pointer names right now, if any. Resolved eagerly —
     * a reader that holds the returned version is PINNED to that snapshot
     * whatever publishes happen after.
@@ -69,6 +95,11 @@ object ManifestTable {
       } finally in.close()
     }
   }
+
+  /** [[currentVersion]] of a table that must already be published. */
+  private[operators] def live(spark: SparkSession, tableDir: String): Long =
+    currentVersion(spark, tableDir).getOrElse(
+      sys.error(s"no published snapshot under $tableDir"))
 
   /** Publish `df` as snapshot `version`: land the data, then commit with
     * one atomic pointer rename. Re-running a crashed publish completes
@@ -113,11 +144,8 @@ object ManifestTable {
   /** Read the live snapshot through the pointer. The version is resolved
     * NOW; the returned (lazy) frame reads only that snapshot's dir.
     */
-  def read(spark: SparkSession, tableDir: String): DataFrame = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      sys.error(s"no published snapshot at $tableDir"))
-    spark.read.parquet(s"$tableDir/data/v$v")
-  }
+  def read(spark: SparkSession, tableDir: String): DataFrame =
+    spark.read.parquet(s"$tableDir/data/v${live(spark, tableDir)}")
 
   /** q241 — the q88 compaction re-run under the manifest protocol, with
     * the crash injected in its window: publish the fragmented events as
@@ -146,8 +174,7 @@ object ManifestTable {
           col("event_type"), col("n"), col("total_cents"))
     }
     val s1 = stageTotals("a_v1_published")
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val bytes = fs.getContentSummary(new Path(s"$tableDir/data/v1")).getLength
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val compacted = spark.read.parquet(s"$tableDir/data/v1")
@@ -170,16 +197,8 @@ object ManifestTable {
     spark.read.parquet(s"$tableDir/data/v$version")
 
   /** List the snapshot versions physically present under the table. */
-  def versions(spark: SparkSession, tableDir: String): Seq[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataDir = new Path(s"$tableDir/data")
-    if (!fs.exists(dataDir)) Seq.empty
-    else fs.listStatus(dataDir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      .sorted
-  }
+  def versions(spark: SparkSession, tableDir: String): Seq[Long] =
+    listVersions(spark, tableDir, "data")
 
   /** Reclaim history: delete every snapshot older than the newest
     * `keep`, never touching the pointer's target (the live version is
@@ -194,8 +213,7 @@ object ManifestTable {
     val live = currentVersion(spark, tableDir)
     val all = versions(spark, tableDir)
     val retained = all.takeRight(keep).toSet ++ live
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val dropped = all.filterNot(retained)
     dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
     dropped
@@ -435,7 +453,7 @@ object ManifestTable {
   }
 
   /** [[changeFeed]] over the PARTITION-MAPPED table: each step diffs
-    * consecutive [[readPartitionedVersion]] reads at the row grain.
+    * consecutive [[readPartitionedMoR]] reads at the row grain.
     * Requires every version in [fromVersion, toVersion] to still be
     * resolvable — i.e. retention (vacuum) must not outrun the consumer,
     * the exact ordering contract [[compactionChangeFeed]]'s spec pins.
@@ -444,8 +462,8 @@ object ManifestTable {
       partCol: String, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion, s"empty range: $fromVersion..$toVersion")
     (fromVersion until toVersion).map { v =>
-      rowDiff(readPartitionedVersion(spark, tableDir, partCol, v),
-        readPartitionedVersion(spark, tableDir, partCol, v + 1), v + 1)
+      rowDiff(readPartitionedMoR(spark, tableDir, partCol, v),
+        readPartitionedMoR(spark, tableDir, partCol, v + 1), v + 1)
     }.reduce(_ unionByName _)
   }
 
@@ -568,8 +586,7 @@ object ManifestTable {
       "the compactor races alone for v2 and must win")
     val appendStaleWon = tryCommit(appendCand, tableDir, baseV + 1, "appender")
     require(!appendStaleWon, "the appender's stale v2 attempt must lose")
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     def nDataFiles(v: Long): Int = fs
       .listStatus(new Path(s"$tableDir/data/v$v"))
       .count(_.getPath.getName.endsWith(".parquet"))
@@ -1181,17 +1198,8 @@ object ManifestTable {
       new Path(s"$tableDir/leases/v${version}_$owner"), false)
 
   /** Versions currently under at least one reader lease. */
-  def leasedVersions(spark: SparkSession, tableDir: String): Set[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/leases")
-    if (!fs.exists(dir)) Set.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix("v").takeWhile(_.isDigit).toLong).toOption)
-      .toSet
-  }
+  def leasedVersions(spark: SparkSession, tableDir: String): Set[Long] =
+    listVersions(spark, tableDir, "leases").toSet
 
   /** [[vacuum]] that honors reader leases: a leased version survives
     * retention no matter how old. Returns the versions deleted.
@@ -1203,8 +1211,7 @@ object ManifestTable {
     val all = versions(spark, tableDir)
     val retained = all.takeRight(keep).toSet ++ live ++
       leasedVersions(spark, tableDir)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val dropped = all.filterNot(retained)
     dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
     dropped
@@ -1264,11 +1271,9 @@ object ManifestTable {
     */
   def cachedTypeTotals(spark: SparkSession, tableDir: String,
       cacheDir: String): (DataFrame, Boolean, Long) = {
-    val v = currentVersion(spark, tableDir).getOrElse(
-      sys.error(s"no published snapshot under $tableDir"))
+    val v = live(spark, tableDir)
     val entry = s"$cacheDir/v$v"
-    val fs = new Path(cacheDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, cacheDir)
     val hit = fs.exists(new Path(s"$entry/_SUCCESS"))
     if (!hit) {
       readVersion(spark, tableDir, v)
@@ -1393,19 +1398,11 @@ object ManifestTable {
       case Some(v) => v
       case None => return Seq.empty
     }
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     // versions <= live are committed history — the pointer advanced past
     // them, so they are vacuum's domain, never GC's. A crashed publish's
     // debris is always ABOVE the pointer (the swap never happened).
-    val committed: Set[Long] = {
-      val dir = new Path(s"$tableDir/commits")
-      if (!fs.exists(dir)) Set.empty
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v"))
-        .flatMap(n => scala.util.Try(n.stripPrefix("v")
-          .takeWhile(_.isDigit).toLong).toOption).toSet
-    }
+    val committed = listVersions(spark, tableDir, "commits").toSet
     // refs protect by CONTENT (the version a branch/tag file names),
     // since a dev branch may sit above the main pointer (q290)
     val referenced: Set[Long] = {
@@ -1705,8 +1702,7 @@ object ManifestTable {
     */
   def liveIntentVersions(spark: SparkSession, tableDir: String,
       graceMs: Long): Set[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val dir = new Path(s"$tableDir/intents")
     if (!fs.exists(dir)) Set.empty
     else {
@@ -1731,8 +1727,7 @@ object ManifestTable {
   def safeOrphanVersions(spark: SparkSession, tableDir: String,
       graceMs: Long): Seq[Long] = {
     val live = liveIntentVersions(spark, tableDir, graceMs)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val now = System.currentTimeMillis()
     rawOrphanVersions(spark, tableDir).filterNot { v =>
       live(v) || {
@@ -1752,8 +1747,7 @@ object ManifestTable {
   def gcOrphansSafe(spark: SparkSession, tableDir: String,
       graceMs: Long): Seq[Long] = {
     val orphans = safeOrphanVersions(spark, tableDir, graceMs)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     orphans.foreach { v =>
       fs.delete(new Path(s"$tableDir/data/v$v"), true)
       fs.delete(new Path(s"$tableDir/intents/v$v"), false)
@@ -1989,8 +1983,7 @@ object ManifestTable {
     */
   def versionsViaCheckpoint(spark: SparkSession,
       tableDir: String): (Seq[Long], Long, Long) = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fileSystem(spark, tableDir)
     val cp = readCheckpoint(spark, tableDir)
     val (cpHead, cpList) = cp match {
       case Some((_, h, vs)) => (h, vs)
@@ -2056,67 +2049,338 @@ object ManifestTable {
     s1.unionByName(s2).unionByName(s3).orderBy("stage", "event_type")
   }
 
-  // ---------------------------------------------------------------- q306
+  // ------------------------------------------------ the partitioned tier
 
-  /** Partition values physically present under snapshot `version` for
-    * partition column `partCol` (the `col=value` dir names).
+  /** One partition of a partitioned-tier snapshot: the dirs under `data/`
+    * whose files serve it, oldest first (one dir for a copy-on-write
+    * table, base + deltas for merge-on-read); the dirs holding position
+    * deletes against those files; and its cumulative `(rows, sum)` stats
+    * while every commit touching it has kept them exact.
     */
-  def partitionValues(spark: SparkSession, tableDir: String, version: Long,
+  final case class Entry(dirs: Seq[String], dels: Seq[String] = Nil,
+      stats: Option[(Long, Long)] = None)
+
+  /** A partitioned-tier snapshot: partition value → [[Entry]], plus the
+    * `(appId, batchId)` tag of the txn commit that wrote it, if any.
+    */
+  final case class Manifest(parts: Map[String, Entry],
+      txn: Option[(String, Long)] = None)
+
+  /** Where an injected crash fires inside a partitioned commit: after its
+    * data landed but before its manifest is published, or after the
+    * manifest (the commit point) but before the pointer moves.
+    */
+  sealed trait CrashPoint
+  case object BeforeManifest extends CrashPoint
+  case object BeforePointer extends CrashPoint
+
+  private def manifestPath(tableDir: String, version: Long): Path =
+    new Path(s"$tableDir/manifest/v$version")
+
+  private def versionOf(dir: String): Long = dir.stripPrefix("v").toLong
+
+  /** Serving-dir order for splices: `v2` before `v10`. */
+  private val dirOrder: Ordering[String] = Ordering.by(d => (d.length, d))
+
+  /** The manifest codec (layout in the object doc). A partition value is
+    * stored as its escaped Hive-style dir name — the raw bytes for plain
+    * values, and never a tab, newline or `#` — and unescaped on read, so
+    * callers and filters only ever see raw values.
+    */
+  private def encode(m: Manifest): String =
+    (m.txn.map { case (app, b) => s"#txn\t$app\t$b" } ++
+      m.parts.toSeq.sortBy(_._1).map { case (p, e) =>
+        (Seq(escapePathName(p), e.dirs.mkString(",")) ++
+          (if (e.dels.isEmpty) None else Some(e.dels.mkString("del:", ",", ""))) ++
+          e.stats.map { case (n, s) => s"stats:$n,$s" }).mkString("\t")
+      }).mkString("", "\n", "\n")
+
+  /** The manifest of `version`, decoded from [[encode]]'s layout. */
+  def readManifest(spark: SparkSession, tableDir: String,
+      version: Long): Manifest = {
+    val lines = readFully(fc(spark, tableDir), manifestPath(tableDir, version))
+      .split("\n").toSeq.filter(_.nonEmpty)
+    def list(s: String): Seq[String] =
+      if (s.isEmpty) Nil else s.split(",").toSeq
+    Manifest(
+      lines.filterNot(_.startsWith("#")).map { line =>
+        val f = line.split("\t", -1)
+        val tagged = f.drop(2).map(t => t.span(_ != ':')).toMap
+        unescapePathName(f(0)) -> Entry(list(f(1)),
+          tagged.get("del").fold(Seq.empty[String])(d => list(d.drop(1))),
+          tagged.get("stats").map { s =>
+            val Array(n, sum) = s.drop(1).split(",")
+            (n.toLong, sum.toLong)
+          })
+      }.toMap,
+      lines.collectFirst { case l if l.startsWith("#txn\t") =>
+        val Array(_, app, b) = l.split("\t")
+        (app, b.toLong)
+      })
+  }
+
+  /** The commit log of a partitioned table: the versions with a manifest
+    * (a metadata-only commit such as a rollback has no data dir).
+    */
+  def manifestVersions(spark: SparkSession, tableDir: String): Seq[Long] =
+    listVersions(spark, tableDir, "manifest")
+
+  /** Serving lists as versions, for tables whose dirs are all `v<N>`. */
+  def readDeltaManifest(spark: SparkSession, tableDir: String,
+      version: Long): Map[String, Seq[Long]] =
+    readManifest(spark, tableDir, version).parts
+      .map { case (p, e) => p -> e.dirs.map(versionOf) }
+
+  private def partsAt(spark: SparkSession, tableDir: String,
+      version: Long): Map[String, Entry] =
+    if (version == 0L) Map.empty
+    else readManifest(spark, tableDir, version).parts
+
+  /** Partition values landed under `data/<dir>`: its `partCol=` dir
+    * names, unescaped.
+    */
+  def partitionValues(spark: SparkSession, tableDir: String, dir: String,
       partCol: String): Seq[String] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/data/v$version")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol="))
-      .map(_.stripPrefix(s"$partCol=")).sorted
+    val fs = fileSystem(spark, tableDir)
+    val path = new Path(s"$tableDir/data/$dir")
+    val prefix = s"${escapePathName(partCol)}="
+    if (!fs.exists(path)) Seq.empty
+    else fs.listStatus(path).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .map(n => unescapePathName(n.stripPrefix(prefix))).sorted
   }
 
-  /** Write snapshot `version`'s PARTITION MANIFEST: one metadata file
-    * mapping each partition value to the version whose files serve it.
-    * Exclusive-create — a version's manifest is written once by its
-    * committing writer, the same immutability as the data dirs.
+  /** Land `df` under `data/<dir>` partitioned by `partCol` — an
+    * idempotent overwrite of a dir no published manifest names yet — and
+    * return the partition values it wrote.
     */
-  def writePartitionManifest(spark: SparkSession, tableDir: String,
-      version: Long, mapping: Map[String, Long]): Unit = {
-    val body = mapping.toSeq.sorted
-      .map { case (p, v) => s"$p\t$v" }.mkString("", "\n", "\n")
-    require(putIfAbsent(spark,
-        new Path(s"$tableDir/pmanifest/v$version"), body),
-      s"partition manifest for v$version already exists")
-  }
-
-  def readPartitionManifest(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, Long] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/pmanifest/v$version"))
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map { line =>
-        val Array(p, v) = line.split("\t")
-        p -> v.toLong
-      }.toMap
-
-  /** Publish `df` partitioned by `partCol` as a FULL snapshot: every
-    * partition's files land under this version and the manifest maps
-    * them all here.
-    */
-  def publishPartitioned(df: DataFrame, tableDir: String, version: Long,
-      partCol: String): Unit = {
-    val spark = df.sparkSession
+  private def land(df: DataFrame, tableDir: String, dir: String,
+      partCol: String): Seq[String] = {
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/v$version")
-    val parts = partitionValues(spark, tableDir, version, partCol)
-    writePartitionManifest(spark, tableDir, version,
-      parts.map(_ -> version).toMap)
-    swapPointer(spark, tableDir, version)
+      .parquet(s"$tableDir/data/$dir")
+    partitionValues(df.sparkSession, tableDir, dir, partCol)
   }
+
+  /** Per-partition `(rows, sum(statCol))` of `df`: one aggregate job,
+    * bounded by |partitions| — paid only by commits that keep stats.
+    */
+  private def statsBy(df: DataFrame, partCol: String,
+      statCol: String): Map[String, (Long, Long)] =
+    df.groupBy(partCol).agg(count(lit(1)), sum(col(statCol))).collect()
+      .map(r => r.get(0).toString -> (r.getLong(1), r.getLong(2))).toMap
+
+  /** `prev` after a commit that lands `dir` for the `landed` partitions,
+    * as a data dir or, with `deletes`, as a delete dir. Stats stay exact
+    * only when the commit supplies its `delta` (added, or subtracted for
+    * deletes) and the partition's stats were exact before; a new
+    * partition starts from zero.
+    */
+  private def extend(prev: Map[String, Entry], landed: Seq[String],
+      dir: String, deletes: Boolean = false,
+      delta: Option[Map[String, (Long, Long)]] = None): Map[String, Entry] =
+    prev ++ landed.map { p =>
+      val e = prev.getOrElse(p, Entry(Nil, stats = Some((0L, 0L))))
+      val sign = if (deletes) -1 else 1
+      val stats = for {
+        d <- delta
+        (n0, s0) <- e.stats
+        (n, s) = d.getOrElse(p, (0L, 0L))
+      } yield (n0 + sign * n, s0 + sign * s)
+      p -> (if (deletes) e.copy(dels = e.dels :+ dir, stats = stats)
+        else e.copy(dirs = e.dirs :+ dir, stats = stats))
+    }
+
+  /** Put-if-absent `m` as `manifest/v<version>` — the commit point of
+    * every partitioned commit. Returns whether this call published.
+    */
+  private def publishManifest(spark: SparkSession, tableDir: String,
+      version: Long, m: Manifest, crash: Option[CrashPoint]): Boolean = {
+    if (crash.contains(BeforeManifest)) throw new InjectedCrash
+    val won = putIfAbsent(spark, manifestPath(tableDir, version), encode(m))
+    if (won && crash.contains(BeforePointer)) throw new InjectedCrash
+    won
+  }
+
+  private def advancePointer(spark: SparkSession, tableDir: String,
+      version: Long): Unit =
+    if (currentVersion(spark, tableDir).forall(_ < version))
+      swapPointer(spark, tableDir, version)
+
+  /** Commit at a caller-chosen `version` (version = batchId + 1 makes a
+    * streaming commit a pure function of its batch). A manifest already
+    * at `version` means an earlier run of this commit passed its commit
+    * point: the replay only completes a lagging pointer — never moving it
+    * backwards — and returns false. Otherwise `stage` lands the data and
+    * derives the manifest, which is published before the pointer swap. A
+    * crash before the publish leaves debris no reader resolves, which
+    * the replay overwrites. Returns true when this call committed.
+    */
+  private def commitAt(spark: SparkSession, tableDir: String, version: Long,
+      crash: Option[CrashPoint])(stage: => Manifest): Boolean =
+    if (fileSystem(spark, tableDir).exists(manifestPath(tableDir, version))) {
+      advancePointer(spark, tableDir, version)
+      false
+    } else {
+      require(publishManifest(spark, tableDir, version, stage, crash),
+        s"manifest v$version under $tableDir already exists")
+      swapPointer(spark, tableDir, version)
+      true
+    }
+
+  /** Commit at the NEXT free version, for writers that do not own the
+    * version sequence (txn-tagged appends, compactors): derive the
+    * manifest from the head's, put-if-absent the slot above, and on a
+    * lost slot derive again from the winner's. The pointer only ever
+    * advances. Returns the version won.
+    */
+  private def commitNext(spark: SparkSession, tableDir: String,
+      crash: Option[CrashPoint], maxTries: Int)(derive: Long => Manifest): Long = {
+    var tries = 0
+    while (tries < maxTries) {
+      val head = manifestVersions(spark, tableDir).lastOption.getOrElse(0L)
+      if (publishManifest(spark, tableDir, head + 1, derive(head), crash)) {
+        advancePointer(spark, tableDir, head + 1)
+        return head + 1
+      }
+      tries += 1
+    }
+    sys.error(s"no commit slot won in $maxTries tries under contention: $tableDir")
+  }
+
+  /** The one splice read: each serving dir is read once, pruned to the
+    * partitions that list it, and the reads are unioned — the splice
+    * count is |distinct dirs|, which compaction exists to bound. `tag`
+    * adds a column carrying each dir's version (`v<N>` dirs only).
+    */
+  private def splice(spark: SparkSession, tableDir: String, partCol: String,
+      parts: Seq[(String, Entry)], tag: Option[String]): DataFrame =
+    parts.flatMap { case (p, e) => e.dirs.map(_ -> p) }.groupBy(_._1).toSeq
+      .sortBy(_._1)(dirOrder)
+      .map { case (d, ps) =>
+        val df = spark.read.parquet(s"$tableDir/data/$d")
+          .filter(col(partCol).isin(ps.map(_._2).distinct.sorted: _*))
+        tag.fold(df)(t => df.withColumn(t, lit(versionOf(d))))
+      }.reduce(_ unionByName _)
+
+  /** Resolve snapshot `version` of a partitioned table, whichever
+    * commits built it; the manifest is read now, so the lazy frame is
+    * pinned to that snapshot. Partitions without position deletes are a
+    * plain [[splice]]. The rest are spliced with their row ids and
+    * anti-joined against their delete triples `(partCol, _src_version,
+    * _pos)`, so the join's probe side is ∝ touched partitions and its
+    * build side ∝ |deleted rows since the last compaction|. The build is
+    * broadcast only while its bytes fit `broadcastMaxBytes` (the
+    * [[ColocatedJoin]] discipline): past the gate Catalyst picks the
+    * strategy, with identical rows. `rowIds` keeps `_src_version` on
+    * every row — the form a DELETE-WHERE scans to turn its predicate
+    * into positions.
+    */
+  def readPartitionedMoR(spark: SparkSession, tableDir: String,
+      partCol: String, version: Long, rowIds: Boolean = false,
+      broadcastMaxBytes: Long = 64L << 20): DataFrame = {
+    val tag = if (rowIds) Some("_src_version") else None
+    val (touched, clean) = readManifest(spark, tableDir, version).parts.toSeq
+      .partition(_._2.dels.nonEmpty)
+    val merged = if (touched.isEmpty) None else {
+      val delDirs = touched.flatMap(_._2.dels).distinct.sorted(dirOrder)
+      val fs = fileSystem(spark, tableDir)
+      val delBytes = delDirs.map(d => fs.getContentSummary(
+        new Path(s"$tableDir/data/$d")).getLength).sum
+      val dels = delDirs.map { d =>
+        spark.read.parquet(s"$tableDir/data/$d")
+          .select(col(partCol), col("_src_version"), col("_pos"))
+      }.reduce(_ unionByName _)
+      val kept = splice(spark, tableDir, partCol, touched, Some("_src_version"))
+        .join(if (delBytes <= broadcastMaxBytes) broadcast(dels) else dels,
+          Seq(partCol, "_src_version", "_pos"), "left_anti")
+      Some(if (rowIds) kept else kept.drop("_src_version"))
+    }
+    (Option.when(clean.nonEmpty)(splice(spark, tableDir, partCol, clean, tag))
+      ++ merged).reduceOption(_ unionByName _)
+      .getOrElse(sys.error(s"empty manifest v$version under $tableDir"))
+  }
+
+  /** [[readPartitionedMoR]] of the live snapshot. */
+  def readPartitioned(spark: SparkSession, tableDir: String,
+      partCol: String): DataFrame =
+    readPartitionedMoR(spark, tableDir, partCol, live(spark, tableDir))
+
+  /** The one vacuum of the partitioned tier — reachability-based snapshot
+    * expiry (Iceberg's expire-snapshots): the newest `keep` manifests and
+    * the live one are retained, and every data or delete dir they list
+    * is kept; every other dir an expired manifest listed, and an expired
+    * version's own `data/v<N>`, is deleted. Before a compaction the live
+    * manifest still lists the whole delta chain, so nothing goes; after
+    * one, the chain goes in one sweep. Expired snapshots stop resolving
+    * once their files go. Dirs no manifest ever listed — an in-flight or
+    * crashed writer's data — are orphan GC's domain, never this one's.
+    * Reads one manifest per version. Returns the versions of the
+    * reclaimed `v<N>` dirs; txn-named dirs go by the same rule.
+    */
+  def vacuumPartitionedMoR(spark: SparkSession, tableDir: String,
+      keep: Int = 2): Seq[Long] = {
+    require(keep >= 1, s"must keep at least the live snapshot: $keep")
+    val all = manifestVersions(spark, tableDir)
+    val retained = all.takeRight(keep).toSet ++ currentVersion(spark, tableDir)
+    def dirsOf(v: Long): Seq[String] = readManifest(spark, tableDir, v)
+      .parts.values.flatMap(e => e.dirs ++ e.dels).toSeq
+    val kept = retained.flatMap(dirsOf)
+    val fs = fileSystem(spark, tableDir)
+    all.filterNot(retained).flatMap(v => s"v$v" +: dirsOf(v)).distinct
+      .filterNot(kept)
+      .filter(d => fs.delete(new Path(s"$tableDir/data/$d"), true)) // existed
+      .collect { case d if d.matches("v\\d+") => versionOf(d) }.sorted
+  }
+
+  /** Fold `resolved` — snapshot `from`'s rows, however resolved — into
+    * ONE dir per partition under `data/<dir>`: every serving list
+    * collapses to it, row ids are re-assigned (they need only be unique
+    * within a dir), and stats carry over, since compaction changes
+    * layout, never rows (the q88/q287/q309 invariant).
+    */
+  private def fold(resolved: DataFrame, tableDir: String, from: Long,
+      dir: String, partCol: String): Manifest = {
+    val prev = readManifest(resolved.sparkSession, tableDir, from).parts
+    val rows = if (resolved.columns.contains("_pos")) withRowIds(resolved)
+      else resolved
+    Manifest(land(rows, tableDir, dir, partCol).map(p =>
+      p -> Entry(Seq(dir), stats = prev.get(p).flatMap(_.stats))).toMap)
+  }
+
+  /** Compact the live snapshot into `version`: after it, reads open one
+    * dir per partition and [[vacuumPartitionedMoR]] can reclaim the
+    * sprawl. Totals are unchanged by contract. With `keyCol` the table is
+    * keyed: the fold is the [[readPartitionedMoRKeyed]] resolution, so
+    * upserts are applied and tombstones dropped physically (they have
+    * served their purpose once no older snapshot needs them).
+    */
+  def compactPartitionedMoR(spark: SparkSession, tableDir: String,
+      version: Long, partCol: String, keyCol: Option[String] = None): Unit = {
+    val from = live(spark, tableDir)
+    commitAt(spark, tableDir, version, None)(fold(
+      keyCol.fold(readPartitionedMoR(spark, tableDir, partCol, from))(
+        readPartitionedMoRKeyed(spark, tableDir, partCol, _, from)),
+      tableDir, from, s"v$version", partCol))
+  }
+
+  /** `df` with a persisted `_pos` row id. A position delete names a row
+    * as `(_src_version, _pos)`, so `_pos` need only be unique WITHIN a
+    * dir: `monotonically_increasing_id` — task-local counters, no window,
+    * no single-task bottleneck — is the 100-TB-safe assignment (Iceberg's
+    * per-file ordinal is the same idea at file grain). The id is written
+    * once and only read back, so its layout dependence is moot.
+    */
+  def withRowIds(df: DataFrame): DataFrame =
+    df.withColumn("_pos", monotonically_increasing_id())
+
+  // ---------------------------------------------------------------- q306
 
   /** DYNAMIC PARTITION OVERWRITE (Delta's `replaceWhere`, Hive/Spark's
     * dynamic-overwrite mode, Iceberg's `overwritePartitions`): commit a
     * new version that REWRITES only `replaced` partitions — `df` holds
     * the replacement rows (it may be empty: replacing a partition with
     * nothing is partition DELETE), every other partition is served by
-    * REFERENCE to the version that last wrote it, zero bytes copied.
+    * REFERENCE to the dirs that serve it now, zero bytes copied.
     * The new manifest = previous manifest − replaced + whatever `df`
     * physically landed; the pointer swap is the same atomic commit.
     *
@@ -2127,34 +2391,24 @@ object ManifestTable {
   def overwritePartitions(df: DataFrame, tableDir: String, version: Long,
       partCol: String, replaced: Seq[String]): Unit = {
     val spark = df.sparkSession
-    val prev = currentVersion(spark, tableDir).getOrElse(
-      sys.error(s"no published snapshot under $tableDir"))
-    val prevMap = readPartitionManifest(spark, tableDir, prev)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/v$version")
-    val landed = partitionValues(spark, tableDir, version, partCol)
-    require(landed.forall(replaced.contains),
-      s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-    val map = (prevMap -- replaced) ++ landed.map(_ -> version)
-    writePartitionManifest(spark, tableDir, version, map)
-    swapPointer(spark, tableDir, version)
+    val prev = partsAt(spark, tableDir, live(spark, tableDir))
+    commitAt(spark, tableDir, version, None) {
+      val dir = s"v$version"
+      val landed = land(df, tableDir, dir, partCol)
+      require(landed.forall(replaced.contains),
+        s"rows outside the replaced partitions: ${landed.diff(replaced)}")
+      Manifest((prev -- replaced) ++ landed.map(_ -> Entry(Seq(dir))))
+    }
   }
 
-  /** APPEND a batch into the partition-mapped table as `version`,
-    * IDEMPOTENTLY — the commit primitive a streaming writer needs
-    * (q324): touched partitions are rewritten as previous content ∪
-    * batch rows (read BY VERSION `version−1`, never through the
-    * pointer — after a crash-after-commit the pointer already names
-    * this batch's own output and reading it would double-apply),
-    * untouched partitions are carried by reference. Returns true when
-    * this call committed, false when the commit already existed (a
-    * replayed batch). The replay test is the MANIFEST file (written
-    * last before the swap, via put-if-absent): manifest present ⇒ data
-    * complete ⇒ the replay only completes a possibly-unswapped pointer
-    * and skips — so every crash window is covered: before the data
-    * write and between data and manifest the replay redoes the
-    * idempotent overwrite; between manifest and swap it re-swaps;
-    * after the swap it skips. The pointer is never moved backwards.
+  /** COPY-ON-WRITE streaming append of a batch as `version`, IDEMPOTENTLY
+    * — the commit primitive q324's stream uses: touched partitions are
+    * rewritten as previous content ∪ batch rows (read BY VERSION
+    * `version−1`, never through the pointer — after a
+    * crash-after-commit the pointer already names this batch's own
+    * output and reading it would double-apply), untouched partitions
+    * are carried by reference. Replays follow [[commitAt]]. Returns true
+    * when this call committed, false on a replay.
     *
     * Scale: per batch the write cost is O(touched partitions' data) —
     * the read-merge-write shape of a foreachBatch MERGE INTO; at
@@ -2163,80 +2417,20 @@ object ManifestTable {
     */
   def appendPartitionedIdempotent(df: DataFrame, tableDir: String,
       version: Long, partCol: String,
-      crashBeforeSwap: Boolean = false): Boolean = {
+      crash: Option[CrashPoint] = None): Boolean = {
     val spark = df.sparkSession
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(s"$tableDir/pmanifest/v$version"))) {
-      if (currentVersion(spark, tableDir).forall(_ < version))
-        swapPointer(spark, tableDir, version)
-      false
-    } else {
-      val prevMap = if (version == 1L) Map.empty[String, Long]
-        else readPartitionManifest(spark, tableDir, version - 1)
+    commitAt(spark, tableDir, version, crash) {
+      val prev = partsAt(spark, tableDir, version - 1)
       val touched = df.select(partCol).distinct().collect()
         .map(_.get(0).toString).toSeq.sorted // bounded by |partitions|
-      val merged = if (prevMap.isEmpty) df
-        else readPartitionedVersion(spark, tableDir, partCol, version - 1)
-          .filter(col(partCol).isin(touched.map(x => x: Any): _*))
+      val merged = if (prev.isEmpty) df
+        else readPartitionedMoR(spark, tableDir, partCol, version - 1)
+          .filter(col(partCol).isin(touched: _*))
           .unionByName(df)
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(s"$tableDir/data/v$version")
-      val landed = partitionValues(spark, tableDir, version, partCol)
-      writePartitionManifest(spark, tableDir, version,
-        (prevMap -- touched) ++ landed.map(_ -> version))
-      if (crashBeforeSwap) throw new InjectedCrash
-      swapPointer(spark, tableDir, version)
-      true
+      val dir = s"v$version"
+      Manifest((prev -- touched) ++
+        land(merged, tableDir, dir, partCol).map(_ -> Entry(Seq(dir))))
     }
-  }
-
-  /** Read the live partition-mapped snapshot: each partition's rows
-    * come from the version its manifest entry names — one
-    * partition-pruned read per distinct source version, unioned.
-    */
-  def readPartitioned(spark: SparkSession, tableDir: String,
-      partCol: String): DataFrame =
-    readPartitionedVersion(spark, tableDir, partCol,
-      currentVersion(spark, tableDir).getOrElse(
-        sys.error(s"no published snapshot under $tableDir")))
-
-  /** Versions referenced by the partition manifests of versions that
-    * would be RETAINED — the reachability set a vacuum over
-    * partition-mapped snapshots must also keep (Iceberg's
-    * reachability-based expiry: a snapshot owns files in OLDER version
-    * dirs by reference).
-    */
-  def partitionReferencedVersions(spark: SparkSession, tableDir: String,
-      retained: Set[Long]): Set[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    retained.flatMap { v =>
-      if (!fs.exists(new Path(s"$tableDir/pmanifest/v$v"))) Set.empty[Long]
-      else readPartitionManifest(spark, tableDir, v).values.toSet
-    }
-  }
-
-  /** [[vacuum]] for partition-mapped tables: keep-last-`keep` PLUS
-    * every version a retained manifest references — deleting a
-    * referenced dir would tear live partitions out of a newer snapshot.
-    * A version retained ONLY by reference is a file holder, not a
-    * time-travel target: its own manifest may name versions the vacuum
-    * reclaimed (exactly Iceberg's expire-snapshots semantics — live
-    * snapshots keep their files, expired snapshots stop resolving).
-    */
-  def vacuumPartitioned(spark: SparkSession, tableDir: String,
-      keep: Int = 2): Seq[Long] = {
-    require(keep >= 1, s"must keep at least the live snapshot: $keep")
-    val live = currentVersion(spark, tableDir)
-    val all = versions(spark, tableDir)
-    val base = all.takeRight(keep).toSet ++ live
-    val retained = base ++ partitionReferencedVersions(spark, tableDir, base)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dropped = all.filterNot(retained)
-    dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
-    dropped
   }
 
   /** q306 — DYNAMIC PARTITION OVERWRITE end to end: v1 publishes all
@@ -2245,7 +2439,7 @@ object ManifestTable {
     * other four served from v1's files BY REFERENCE, zero copies); v3
     * replaces the error partition with nothing (partition delete: the
     * new version writes no files for it and the manifest drops the
-    * entry); then a keep-1 [[vacuumPartitioned]] runs and must retain
+    * entry); then a keep-1 [[vacuumPartitionedMoR]] runs and must retain
     * v1 and v2 — both referenced by the live manifest — reclaiming
     * NOTHING (the reachability contract), with the final read served
     * from three physical versions at once. Output: per-stage totals
@@ -2257,9 +2451,9 @@ object ManifestTable {
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
     def stage(name: String): DataFrame = {
       val v = currentVersion(spark, tableDir).get
-      val map = readPartitionManifest(spark, tableDir, v)
-      val nNew = map.values.count(_ == v).toLong
-      val nRef = map.values.count(_ != v).toLong
+      val entries = readManifest(spark, tableDir, v).parts.values
+      val nNew = entries.count(_.dirs == Seq(s"v$v")).toLong
+      val nRef = entries.size - nNew
       readPartitioned(spark, tableDir, "event_type")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -2268,25 +2462,25 @@ object ManifestTable {
           lit(nNew).as("n_new_parts"), lit(nRef).as("n_ref_parts"),
           col("event_type"), col("n"), col("total_cents"))
     }
-    publishPartitioned(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
     val s1 = stage("a_full_publish")
     // re-price ONLY the purchase partition; everything else by reference
     overwritePartitions(
       slim.filter(col("event_type") === "purchase")
         .withColumn("value", col("value") * 2),
       tableDir, 2L, "event_type", Seq("purchase"))
-    require(partitionValues(spark, tableDir, 2L, "event_type") ==
+    require(partitionValues(spark, tableDir, "v2", "event_type") ==
       Seq("purchase"), "v2 must land exactly one partition dir")
     val s2 = stage("b_purchase_overwrite")
     // partition DELETE: replace the error partition with nothing
     overwritePartitions(slim.filter(lit(false)), tableDir, 3L,
       "event_type", Seq("error"))
-    require(partitionValues(spark, tableDir, 3L, "event_type").isEmpty,
+    require(partitionValues(spark, tableDir, "v3", "event_type").isEmpty,
       "the delete version must land no partition dirs")
     val s3 = stage("c_error_deleted")
     // reachability: the live manifest references v1 AND v2 — a keep-1
     // vacuum must reclaim nothing
-    val dropped = vacuumPartitioned(spark, tableDir, keep = 1)
+    val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
     require(dropped.isEmpty,
       s"vacuum must respect manifest references: dropped $dropped")
     val s4 = stage("d_post_vacuum")
@@ -2354,8 +2548,8 @@ object ManifestTable {
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
     def stage(name: String): DataFrame = {
       val v = currentVersion(spark, tableDir).get
-      val nSrc = readPartitionManifest(spark, tableDir, v)
-        .values.toSet.size.toLong
+      val nSrc = readManifest(spark, tableDir, v).parts.values
+        .flatMap(_.dirs).toSet.size.toLong
       readPartitioned(spark, tableDir, "event_type")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -2365,7 +2559,7 @@ object ManifestTable {
           lit(nSrc).as("n_src_versions"), col("event_type"), col("n"),
           col("total_cents"))
     }
-    publishPartitioned(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
     overwritePartitions(
       slim.filter(col("event_type") === "purchase")
         .withColumn("value", col("value") * 2),
@@ -2378,13 +2572,12 @@ object ManifestTable {
     // vacuum below physically reclaims (the q244/q280 discipline)
     val s1 = stage("a_sprawled").localCheckpoint()
     // the rewrite: materialize the mapped read as ONE full snapshot
-    publishPartitioned(readPartitioned(spark, tableDir, "event_type"),
-      tableDir, 4L, "event_type")
-    require(readPartitionManifest(spark, tableDir, 4L).values.toSet ==
-      Set(4L), "the rewrite must self-contain every partition")
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type")
+    require(readDeltaManifest(spark, tableDir, 4L).values.toSet ==
+      Set(Seq(4L)), "the rewrite must self-contain every partition")
     val s2 = stage("b_compacted") // same data, one source version
     // the sprawl is now unreferenced: ONE vacuum reclaims all of it
-    val dropped = vacuumPartitioned(spark, tableDir, keep = 1)
+    val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
     require(dropped == Seq(1L, 2L, 3L),
       s"vacuum must reclaim the whole sprawl: $dropped")
     val s3 = stage("c_post_vacuum")
@@ -2441,7 +2634,7 @@ object ManifestTable {
   def compactionChangeFeed(events: DataFrame, tableDir: String): DataFrame = {
     val spark = events.sparkSession
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
-    publishPartitioned(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
     overwritePartitions(
       slim.filter(col("event_type") === "purchase")
         .withColumn("value", col("value") * 2),
@@ -2450,10 +2643,9 @@ object ManifestTable {
       slim.filter(col("event_type") === "view")
         .withColumn("value", col("value") * 3),
       tableDir, 3L, "event_type", Seq("view"))
-    publishPartitioned(readPartitioned(spark, tableDir, "event_type"),
-      tableDir, 4L, "event_type")
-    require(readPartitionManifest(spark, tableDir, 4L).values.toSet ==
-      Set(4L), "the rewrite must self-contain every partition")
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type")
+    require(readDeltaManifest(spark, tableDir, 4L).values.toSet ==
+      Set(Seq(4L)), "the rewrite must self-contain every partition")
     val agg = changeFeedPartitioned(spark, tableDir, "event_type", 1L, 4L)
       .groupBy("version").agg(
         sum(when(col("change_type") === "update_post", 1L).otherwise(0L))
@@ -2507,25 +2699,9 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- q312
 
-  /** Versions with a partition manifest — the commit list of the
-    * partition-mapped table. Distinct from [[versions]] (data dirs):
-    * a metadata-only commit (rollback) has a manifest but NO data dir.
-    */
-  def partitionManifestVersions(spark: SparkSession,
-      tableDir: String): Seq[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/pmanifest")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      .sorted
-  }
-
   /** ROLL BACK the partition-mapped table to `toVersion` as a NEW
     * commit (Iceberg's `rollback_to_snapshot`): the new version's
-    * partition manifest is a byte-for-byte copy of `toVersion`'s and
+    * manifest is a copy of `toVersion`'s and
     * the pointer swap is the same atomic commit — ZERO data files
     * written, moved, or deleted, and the bad snapshot stays fully
     * time-travelable for audit. Rolling the pointer backwards instead
@@ -2536,27 +2712,13 @@ object ManifestTable {
     */
   def rollbackPartitioned(spark: SparkSession, tableDir: String,
       toVersion: Long): Long = {
-    val mvs = partitionManifestVersions(spark, tableDir)
+    val mvs = manifestVersions(spark, tableDir)
     require(mvs.contains(toVersion),
-      s"cannot roll back to v$toVersion: no partition manifest (have $mvs)")
+      s"cannot roll back to v$toVersion: no manifest (have $mvs)")
     val newV = mvs.max + 1
-    writePartitionManifest(spark, tableDir, newV,
-      readPartitionManifest(spark, tableDir, toVersion))
-    swapPointer(spark, tableDir, newV)
+    commitAt(spark, tableDir, newV, None)(
+      readManifest(spark, tableDir, toVersion).copy(txn = None))
     newV
-  }
-
-  /** [[readPartitioned]] pinned at an explicit version — time travel
-    * over the partition-mapped table.
-    */
-  def readPartitionedVersion(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame = {
-    val map = readPartitionManifest(spark, tableDir, version)
-    map.groupBy(_._2).toSeq.sortBy(_._1).map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.keys.toSeq.sorted.map(x => x: Any): _*))
-    }.reduce(_ unionByName _)
   }
 
   /** q312 — SNAPSHOT ROLLBACK end to end: v1 publishes all partitions;
@@ -2577,8 +2739,8 @@ object ManifestTable {
     val spark = events.sparkSession
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
     def stageOf(df: DataFrame, name: String, v: Long): DataFrame = {
-      val nSrc = readPartitionManifest(spark, tableDir, v)
-        .values.toSet.size.toLong
+      val nSrc = readManifest(spark, tableDir, v).parts.values
+        .flatMap(_.dirs).toSet.size.toLong
       df.groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
@@ -2591,7 +2753,7 @@ object ManifestTable {
       val v = currentVersion(spark, tableDir).get
       stageOf(readPartitioned(spark, tableDir, "event_type"), name, v)
     }
-    publishPartitioned(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
     val s1 = stage("a_published")
     // the bad deploy: purchase re-priced 100× — corruption in the data
     overwritePartitions(
@@ -2603,13 +2765,13 @@ object ManifestTable {
     require(v3 == 3L, s"rollback must commit as v3: $v3")
     require(versions(spark, tableDir) == Seq(1L, 2L),
       "rollback must write NO data dir — metadata only")
-    require(readPartitionManifest(spark, tableDir, 3L) ==
-      readPartitionManifest(spark, tableDir, 1L),
+    require(readManifest(spark, tableDir, 3L) ==
+      readManifest(spark, tableDir, 1L),
       "the rollback manifest must be an exact copy of the target's")
     val s3 = stage("c_rolled_back")
     // the bad snapshot stays pinned-readable for the audit
     val s4 = stageOf(
-      readPartitionedVersion(spark, tableDir, "event_type", 2L),
+      readPartitionedMoR(spark, tableDir, "event_type", 2L),
       "d_audit_bad_v2", 2L)
     s1.unionByName(s2).unionByName(s3).unionByName(s4)
       .orderBy("stage", "event_type")
@@ -2819,113 +2981,46 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- q326
 
-  /** Write snapshot `version`'s DELTA MANIFEST: each partition value maps
-    * to the ORDERED LIST of versions whose files serve it — the base
-    * snapshot plus every delta landed since the last compaction. This is
-    * the partition-file-grain analog of the q254/q266 row-grain sidecars
-    * (Iceberg/Delta merge-on-read: readers splice base + delta files;
-    * writers never rewrite what they didn't change). Exclusive-create,
-    * same immutability as [[writePartitionManifest]].
-    */
-  def writeDeltaManifest(spark: SparkSession, tableDir: String,
-      version: Long, mapping: Map[String, Seq[Long]]): Unit = {
-    val body = mapping.toSeq.sortBy(_._1)
-      .map { case (p, vs) => s"$p\t${vs.mkString(",")}" }
-      .mkString("", "\n", "\n")
-    require(putIfAbsent(spark,
-        new Path(s"$tableDir/dmanifest/v$version"), body),
-      s"delta manifest for v$version already exists")
-  }
-
-  def readDeltaManifest(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, Seq[Long]] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/dmanifest/v$version"))
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map { line =>
-        val Array(p, vs) = line.split("\t")
-        p -> vs.split(",").iterator.map(_.toLong).toSeq
-      }.toMap
-
-  /** Committed delta-manifest versions, ascending — the commit log of
-    * the merge-on-read table ([[partitionManifestVersions]]'s sibling).
-    */
-  def deltaManifestVersions(spark: SparkSession,
-      tableDir: String): Seq[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/dmanifest")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      .sorted
-  }
-
   /** MERGE-ON-READ streaming append — [[appendPartitionedIdempotent]]'s
     * 100-TB sibling. The COW form rewrites every touched partition as
     * previous-content ∪ batch per commit, so a stream whose batches keep
     * hitting hot partitions pays write amplification ∝ partition size.
     * This form lands ONLY the batch rows as this version's partition
-    * dirs and EXTENDS each touched partition's serving list in the delta
-    * manifest — per-batch bytes written ∝ |delta|, independent of how
-    * much data the partition has accumulated (ManifestTableSpec pins the
-    * byte ratio against the COW path on a skewed fixture). Reads splice
-    * the listed versions per partition ([[readPartitionedMoR]]) until a
-    * compaction ([[compactPartitionedMoR]]) folds the sprawl back to one
-    * dir per partition.
+    * dirs and EXTENDS each touched partition's serving list — per-batch
+    * bytes written ∝ |delta|, independent of how much data the
+    * partition has accumulated (ManifestTableSpec pins the byte ratio
+    * against the COW path on a skewed fixture). Reads splice the listed
+    * dirs per partition ([[readPartitionedMoR]]) until a compaction
+    * ([[compactPartitionedMoR]]) folds the sprawl back to one dir per
+    * partition. Replays follow [[commitAt]]: version = batchId + 1 keeps
+    * each commit a pure function of its batch. Returns true when this
+    * call committed, false on a replay.
     *
-    * Idempotence contract is unchanged from the COW form: the delta
-    * manifest is written last before the pointer swap via put-if-absent,
-    * so manifest-present ⇒ data complete ⇒ a replayed batch only
-    * completes a possibly-unswapped pointer and SKIPS; version =
-    * batchId + 1 keeps each commit a pure function of its batch. Returns
-    * true when this call committed, false on a replay.
+    * With `statCol` (q335), the commit also folds the batch's
+    * per-partition `(count, sum(statCol))` — one tiny aggregate of rows
+    * the writer already holds — into the cumulative stats of the same
+    * manifest, so the stats publish atomically with the data they
+    * describe. Without it no stats are computed, and the partitions it
+    * touches lose theirs.
     */
   def appendPartitionedDelta(df: DataFrame, tableDir: String,
-      version: Long, partCol: String,
-      crashBeforeSwap: Boolean = false): Boolean = {
-    val spark = df.sparkSession
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(s"$tableDir/dmanifest/v$version"))) {
-      if (currentVersion(spark, tableDir).forall(_ < version))
-        swapPointer(spark, tableDir, version)
-      false
-    } else {
-      val prevMap = if (version == 1L) Map.empty[String, Seq[Long]]
-        else readDeltaManifest(spark, tableDir, version - 1)
-      // the delta lands alone: an idempotent overwrite of THIS version's
-      // dir, no read of previous data at all — the write-side O(|delta|)
-      df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(s"$tableDir/data/v$version")
-      val landed = partitionValues(spark, tableDir, version, partCol)
-      val map = prevMap ++ landed.map(p =>
-        p -> (prevMap.getOrElse(p, Seq.empty) :+ version))
-      writeDeltaManifest(spark, tableDir, version, map)
-      if (crashBeforeSwap) throw new InjectedCrash
-      swapPointer(spark, tableDir, version)
-      true
-    }
-  }
+      version: Long, partCol: String, crash: Option[CrashPoint] = None,
+      statCol: Option[String] = None): Boolean =
+    append(df, tableDir, version, partCol, crash, statCol, deletes = false)
 
-  /** Resolve a merge-on-read partitioned snapshot: one partition-pruned
-    * read per DISTINCT source version, unioned — each partition's rows
-    * come from every version its serving list names. The splice count is
-    * |versions since last compaction|, which is exactly what
-    * [[compactPartitionedMoR]] exists to bound.
-    */
-  def readPartitionedMoR(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame = {
-    val map = readDeltaManifest(spark, tableDir, version)
-    val bySrc = map.toSeq
-      .flatMap { case (p, vs) => vs.map(v => (v, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    bySrc.map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-    }.reduce(_ unionByName _)
+  private def append(rows: DataFrame, tableDir: String, version: Long,
+      partCol: String, crash: Option[CrashPoint], statCol: Option[String],
+      deletes: Boolean): Boolean = {
+    val spark = rows.sparkSession
+    commitAt(spark, tableDir, version, crash) {
+      val prev = partsAt(spark, tableDir, version - 1)
+      val delta = statCol.map(statsBy(rows, partCol, _))
+      val dir = s"v$version"
+      val data = if (!deletes) rows
+        else rows.select(col(partCol), col("_src_version"), col("_pos"))
+      Manifest(extend(prev, land(data, tableDir, dir, partCol), dir,
+        deletes, delta))
+    }
   }
 
   // ---------------------------------------------------------------- q327
@@ -2946,19 +3041,18 @@ object ManifestTable {
       .parquet(s"$tableDir/stage/$writer")
 
   /** Partitions MODIFIED by the commits in `(baseVersion, headVersion]`:
-    * entries a manifest maps to its own version (freshly landed files)
-    * plus entries the previous manifest had that this one dropped
-    * (partition deletes). This is the conflict-validation set Iceberg's
-    * `validateNoConflictingData` walks over intervening snapshots.
+    * entries a manifest serves from its own version's dir (freshly
+    * landed files) plus entries the previous manifest had that this one
+    * dropped (partition deletes). This is the conflict-validation set
+    * Iceberg's `validateNoConflictingData` walks over intervening
+    * snapshots.
     */
   def partitionsModifiedSince(spark: SparkSession, tableDir: String,
       baseVersion: Long, headVersion: Long): Set[String] =
     ((baseVersion + 1) to headVersion).iterator.flatMap { v =>
-      val cur = readPartitionManifest(spark, tableDir, v)
-      val prev = if (v == 1L) Map.empty[String, Long]
-        else readPartitionManifest(spark, tableDir, v - 1)
-      cur.collect { case (p, src) if src == v => p } ++
-        (prev.keySet -- cur.keySet)
+      val cur = partsAt(spark, tableDir, v)
+      cur.collect { case (p, e) if e.dirs.contains(s"v$v") => p } ++
+        (partsAt(spark, tableDir, v - 1).keySet -- cur.keySet)
     }.toSet
 
   /** Commit a writer's staged partition overwrite OPTIMISTICALLY from
@@ -2971,7 +3065,7 @@ object ManifestTable {
     * from the new head and try again — OVERLAPPING WRITERS SERIALIZE.
     * Otherwise CAS the next slot: the winner renames its staged dir to
     * the version dir (metadata-only move — the files were written once),
-    * publishes prev-manifest − replaced + landed, and advances the
+    * commits prev-manifest − replaced + landed, and advances the
     * pointer; a loser waits for the winner's pointer and retries the
     * validation at the new head — DISJOINT WRITERS BOTH COMMIT, each
     * paying only a metadata rebase for the slots it lost.
@@ -2989,16 +3083,16 @@ object ManifestTable {
       if (conflicts.nonEmpty) return None // serialize: re-derive from head
       val target = head + 1
       if (claimCommit(spark, tableDir, target, writer)) {
-        val prevMap = if (head == 0L) Map.empty[String, Long]
-          else readPartitionManifest(spark, tableDir, head)
-        ctx.rename(new Path(s"$tableDir/stage/$writer"),
-          new Path(s"$tableDir/data/v$target"), Options.Rename.OVERWRITE)
-        val landed = partitionValues(spark, tableDir, target, partCol)
-        require(landed.forall(replaced.contains),
-          s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-        writePartitionManifest(spark, tableDir, target,
-          (prevMap -- replaced) ++ landed.map(_ -> target))
-        swapPointer(spark, tableDir, target)
+        commitAt(spark, tableDir, target, None) {
+          val prev = partsAt(spark, tableDir, head)
+          val dir = s"v$target"
+          ctx.rename(new Path(s"$tableDir/stage/$writer"),
+            new Path(s"$tableDir/data/$dir"), Options.Rename.OVERWRITE)
+          val landed = partitionValues(spark, tableDir, dir, partCol)
+          require(landed.forall(replaced.contains),
+            s"rows outside the replaced partitions: ${landed.diff(replaced)}")
+          Manifest((prev -- replaced) ++ landed.map(_ -> Entry(Seq(dir))))
+        }
         return Some(PartitionCommit(target, losses))
       }
       losses += 1
@@ -3042,13 +3136,13 @@ object ManifestTable {
       tableDir: String): DataFrame = {
     val spark = events.sparkSession
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
-    publishPartitioned(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
     val base = currentVersion(spark, tableDir).get
     def repriced(src: DataFrame, part: String, k: Int): DataFrame =
       src.filter(col("event_type") === part)
         .withColumn("value", col("value") * k)
     // both writers stage from the SAME pinned snapshot — the race
-    val pinned = readPartitionedVersion(spark, tableDir, "event_type", base)
+    val pinned = readPartitionedMoR(spark, tableDir, "event_type", base)
     stagePartitions(repriced(pinned, "purchase", 2), tableDir,
       "event_type", "writer_a")
     stagePartitions(repriced(pinned, "view", 3), tableDir,
@@ -3064,19 +3158,16 @@ object ManifestTable {
       .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
     // exercise B's CAS-loss path deterministically: a third committer
     // claims the v3 slot NOW; B races for v3, loses the slot, and the
-    // onLoss hook plays the winner's completion (no-op manifest +
-    // pointer) at exactly that point — B then waits out the (already
-    // satisfied) pointer, revalidates at the new head, and lands v4.
-    // This is the live-winner interleaving; the crashed-winner case is
-    // the spec's to drive.
+    // onLoss hook plays the winner's completion (a no-op commit: v2's
+    // manifest re-committed as v3) at exactly that point — B then waits
+    // out the (already satisfied) pointer, revalidates at the new head,
+    // and lands v4. This is the live-winner interleaving; the
+    // crashed-winner case is the spec's to drive.
     require(claimCommit(spark, tableDir, 3L, "writer_noop"),
       "pre-claiming the v3 slot must succeed")
-    val noopManifest = readPartitionManifest(spark, tableDir, 2L)
     val b = commitStagedPartitions(spark, tableDir, "event_type",
-      Seq("view"), "writer_b", base, onLoss = () => {
-        writePartitionManifest(spark, tableDir, 3L, noopManifest)
-        swapPointer(spark, tableDir, 3L)
-      })
+      Seq("view"), "writer_b", base,
+      onLoss = () => rollbackPartitioned(spark, tableDir, 2L))
     require(b.contains(PartitionCommit(4L, 1)),
       s"writer B must lose the pre-claimed slot once, then land v4: $b")
     val bLandedFile = new java.io.File(
@@ -3094,14 +3185,14 @@ object ManifestTable {
     // serialize: re-derive from the live head and commit on top
     val head = currentVersion(spark, tableDir).get
     stagePartitions(
-      repriced(readPartitionedVersion(spark, tableDir, "event_type", head),
+      repriced(readPartitionedMoR(spark, tableDir, "event_type", head),
         "purchase", 5), tableDir, "event_type", "writer_c")
     val c = commitStagedPartitions(spark, tableDir, "event_type",
       Seq("purchase"), "writer_c", head)
     require(c.contains(PartitionCommit(5L, 0)),
       s"C's rebased commit races alone and must land v5: $c")
     def stage(name: String, v: Long, losses: Int, conflict: Int): DataFrame =
-      readPartitionedVersion(spark, tableDir, "event_type", v)
+      readPartitionedMoR(spark, tableDir, "event_type", v)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
@@ -3162,32 +3253,6 @@ object ManifestTable {
        |         total_cents
        |  FROM cpc_abc)""".stripMargin
 
-  /** Fold the merge-on-read sprawl into ONE snapshot: materialize the
-    * spliced read into `version`'s dir and map every partition to a
-    * single-element serving list — the q309 rewrite commit applied to
-    * the delta-manifest table. Totals are unchanged by contract (the
-    * q88/q287/q309 compaction invariant); after it, reads open one
-    * version dir and the commit log can be vacuumed past the sprawl.
-    */
-  def compactPartitionedMoR(spark: SparkSession, tableDir: String,
-      version: Long, partCol: String): Unit =
-    publishCompactedMoR(
-      readPartitionedMoR(spark, tableDir, partCol,
-        currentVersion(spark, tableDir).getOrElse(
-          sys.error(s"no published snapshot under $tableDir"))),
-      tableDir, version, partCol)
-
-  private def publishCompactedMoR(resolved: DataFrame, tableDir: String,
-      version: Long, partCol: String): Unit = {
-    val spark = resolved.sparkSession
-    resolved.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/v$version")
-    val landed = partitionValues(spark, tableDir, version, partCol)
-    writeDeltaManifest(spark, tableDir, version,
-      landed.map(_ -> Seq(version)).toMap)
-    swapPointer(spark, tableDir, version)
-  }
-
   // ---------------------------------------------------------------- q329
 
   /** Resolve a KEYED merge-on-read snapshot: splice the delta files
@@ -3198,7 +3263,7 @@ object ManifestTable {
     * is a tombstone (`deleted = true`). Writers never read or rewrite
     * base data — an upsert or delete is just a delta row — so the
     * write path stays O(|delta|); the read pays one key-grain
-    * aggregation until [[compactPartitionedMoRKeyed]] applies the
+    * aggregation until a keyed [[compactPartitionedMoR]] applies the
     * deltas physically.
     *
     * Keys must be unique within a version (each delta upserts a key at
@@ -3207,16 +3272,9 @@ object ManifestTable {
     */
   def readPartitionedMoRKeyed(spark: SparkSession, tableDir: String,
       partCol: String, keyCol: String, version: Long): DataFrame = {
-    val map = readDeltaManifest(spark, tableDir, version)
-    val bySrc = map.toSeq
-      .flatMap { case (p, vs) => vs.map(v => (v, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    val tagged = bySrc.map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-        .withColumn("_commit_version", lit(srcV))
-    }.reduce(_ unionByName _)
+    val tagged = splice(spark, tableDir, partCol,
+      readManifest(spark, tableDir, version).parts.toSeq,
+      Some("_commit_version"))
     val cols = tagged.columns.filter(_ != "_commit_version")
     tagged
       .groupBy(col(keyCol).as("_k"))
@@ -3226,220 +3284,61 @@ object ManifestTable {
       .filter(!col("deleted"))
   }
 
-  /** Compaction for the KEYED MoR table: materialize the RESOLVED read
-    * (upserts applied, tombstones dropped — they have served their
-    * purpose once no older snapshot needs them) into one snapshot.
-    * Totals equal the pre-compaction resolved read by contract.
-    */
-  def compactPartitionedMoRKeyed(spark: SparkSession, tableDir: String,
-      version: Long, partCol: String, keyCol: String): Unit =
-    publishCompactedMoR(
-      readPartitionedMoRKeyed(spark, tableDir, partCol, keyCol,
-        currentVersion(spark, tableDir).getOrElse(
-          sys.error(s"no published snapshot under $tableDir"))),
-      tableDir, version, partCol)
-
-  /** Versions referenced by the DELTA manifests of retained versions —
-    * [[partitionReferencedVersions]]'s sibling for merge-on-read
-    * tables. A vacuum that only walked the COW manifests would tear
-    * live delta files out of every MoR snapshot.
-    */
-  def deltaReferencedVersions(spark: SparkSession, tableDir: String,
-      retained: Set[Long]): Set[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    retained.flatMap { v =>
-      if (!fs.exists(new Path(s"$tableDir/dmanifest/v$v")))
-        Set.empty[Long]
-      else readDeltaManifest(spark, tableDir, v).values.flatten.toSet
-    }
-  }
-
-  /** [[vacuumPartitioned]] for the merge-on-read table: keep-last-`keep`
-    * plus every version a retained DELTA manifest references. Before a
-    * compaction the live manifest references the whole delta chain —
-    * the vacuum must reclaim NOTHING; after one, the chain unpins in a
-    * single sweep (the q309 pairing, on delta manifests).
-    */
-  def vacuumPartitionedMoR(spark: SparkSession, tableDir: String,
-      keep: Int = 2): Seq[Long] = {
-    require(keep >= 1, s"must keep at least the live snapshot: $keep")
-    val live = currentVersion(spark, tableDir)
-    val all = deltaManifestVersions(spark, tableDir)
-    val base = all.takeRight(keep).toSet ++ live
-    val retained = base ++ deltaReferencedVersions(spark, tableDir, base)
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dropped = all.filterNot(retained)
-    dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
-    dropped
-  }
-
   // ---------------------------------------------------------------- q330
 
-  /** The TXN-TAGGED manifest tier: q326's streaming commits derive
-    * version = batchId + 1, which is a pure function of the batch but
-    * COLLIDES the moment any other committer (a compactor, a second
-    * stream) wants a version — the two rules can't share one log. This
-    * tier separates the two concerns the way Delta's transaction log
-    * does: IDEMPOTENCE comes from an (appId, batchId) txn tag recorded
-    * IN the commit, VERSIONS are CAS-allocated by whoever commits next,
-    * and data files are staged under txn-unique dirs BEFORE the
-    * metadata commit — the manifest references dirs by name, so there
-    * is no rename-after-commit window where a published manifest names
-    * missing data (the q241 lesson, strengthened: data first, one
-    * atomic metadata create, pointer advance last and monotone).
-    *
-    * Manifest format (`tmanifest/v<N>`): optional `#txn <app> <batch>`
-    * header, then `partition\tdir1,dir2` serving lists naming dirs
-    * under `data/`.
-    */
-  def readTxnManifest(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, Seq[String]] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/tmanifest/v$version"))
-      .split("\n").iterator.map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#"))
-      .map { line =>
-        val Array(p, ds) = line.split("\t")
-        p -> ds.split(",").toSeq
-      }.toMap
-
-  /** The txn tag a version's manifest carries, if any. */
-  def txnOf(spark: SparkSession, tableDir: String,
-      version: Long): Option[(String, Long)] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/tmanifest/v$version"))
-      .split("\n").iterator.map(_.trim)
-      .collectFirst { case l if l.startsWith("#txn\t") =>
-        val Array(_, app, b) = l.split("\t")
-        (app, b.toLong)
-      }
-
-  def txnManifestVersions(spark: SparkSession,
-      tableDir: String): Seq[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/tmanifest")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      .sorted
-  }
-
-  private def partitionValuesIn(spark: SparkSession, dir: String,
-      partCol: String): Seq[String] = {
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(dir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(s"$partCol="))
-      .map(_.stripPrefix(s"$partCol=")).sorted
-  }
-
-  /** Append `df` under txn tag (`appId`, `batchId`), CAS-allocating the
-    * version: stage the delta under `data/t_<app>_b<batch>` (idempotent
-    * overwrite — a replay re-stages the same bytes), then loop — read
-    * the head, merge serving lists, put-if-absent the next manifest.
-    * A CAS loss means another committer (a compactor, another stream)
-    * took the slot; the retry re-merges onto ITS manifest — append
-    * commutes with everything, so no conflict check is needed. Returns
-    * (version, committedNow): a tag already in the log short-circuits
-    * to (its version, false) — exactly-once under crash-replay without
-    * owning the version sequence.
+  /** TXN-TAGGED appends: q326's streaming commits derive version =
+    * batchId + 1, which is a pure function of the batch but COLLIDES the
+    * moment any other committer (a compactor, a second stream) wants a
+    * version — the two rules can't share one log. This form separates
+    * the two concerns the way Delta's transaction log does: IDEMPOTENCE
+    * comes from an (appId, batchId) txn tag recorded IN the commit's
+    * manifest, VERSIONS are CAS-allocated by whoever commits next
+    * ([[commitNext]]), and data lands under a txn-unique dir
+    * `data/t_<app>_b<batch>` BEFORE the metadata commit — the manifest
+    * names dirs, so there is no rename-after-commit window where a
+    * published manifest names missing data (the q241 lesson,
+    * strengthened: data first, one atomic metadata create, pointer
+    * advance last and monotone). A CAS loss re-merges onto the winner's
+    * manifest — append commutes with everything, so no conflict check is
+    * needed. Returns (version, committedNow): a tag already in the log
+    * short-circuits to (its version, false) — exactly-once under
+    * crash-replay without owning the version sequence.
     */
   def appendDeltaTxn(df: DataFrame, tableDir: String, appId: String,
       batchId: Long, partCol: String,
-      crashBeforePointer: Boolean = false): (Long, Boolean) = {
+      crash: Option[CrashPoint] = None): (Long, Boolean) = {
     val spark = df.sparkSession
-    val existing = txnManifestVersions(spark, tableDir).reverseIterator
-      .find(v => txnOf(spark, tableDir, v).contains((appId, batchId)))
-    existing match {
+    manifestVersions(spark, tableDir).reverseIterator
+      .find(v => readManifest(spark, tableDir, v).txn.contains((appId, batchId)))
+    match {
       case Some(v) =>
-        if (currentVersion(spark, tableDir).forall(_ < v))
-          swapPointer(spark, tableDir, v)
+        advancePointer(spark, tableDir, v)
         (v, false)
       case None =>
-        val dirName = s"t_${appId}_b$batchId"
-        df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-          .parquet(s"$tableDir/data/$dirName")
-        val landed =
-          partitionValuesIn(spark, s"$tableDir/data/$dirName", partCol)
-        while (true) {
-          val head = txnManifestVersions(spark, tableDir)
-            .lastOption.getOrElse(0L)
-          val prev = if (head == 0L) Map.empty[String, Seq[String]]
-            else readTxnManifest(spark, tableDir, head)
-          val map = prev ++ landed.map(p =>
-            p -> (prev.getOrElse(p, Seq.empty) :+ dirName))
-          val target = head + 1
-          val body = s"#txn\t$appId\t$batchId\n" + map.toSeq.sortBy(_._1)
-            .map { case (p, ds) => s"$p\t${ds.mkString(",")}" }
-            .mkString("", "\n", "\n")
-          if (putIfAbsent(spark,
-              new Path(s"$tableDir/tmanifest/v$target"), body)) {
-            if (crashBeforePointer) throw new InjectedCrash
-            if (currentVersion(spark, tableDir).forall(_ < target))
-              swapPointer(spark, tableDir, target)
-            return (target, true)
-          }
-          // lost the slot: the winner's manifest is already complete
-          // (data staged before metadata — no wait needed), re-merge
-        }
-        sys.error("unreachable")
+        val dir = s"t_${appId}_b$batchId"
+        val landed = land(df, tableDir, dir, partCol)
+        (commitNext(spark, tableDir, crash, Int.MaxValue) { head =>
+          Manifest(extend(partsAt(spark, tableDir, head), landed, dir),
+            Some((appId, batchId)))
+        }, true)
     }
   }
 
-  /** Resolve a txn-manifest snapshot: one partition-pruned read per
-    * distinct serving dir, unioned.
-    */
-  def readPartitionedTxn(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame = {
-    val map = readTxnManifest(spark, tableDir, version)
-    map.toSeq.flatMap { case (p, ds) => ds.map(d => (d, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (d, entries) =>
-        spark.read.parquet(s"$tableDir/data/$d")
-          .filter(col(partCol)
-            .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-      }.reduce(_ unionByName _)
-  }
-
-  /** Compaction as just another CAS committer: resolve the head's
-    * spliced read into `data/c_v<head>`, then race for the next slot
-    * like any writer. A CAS loss means a concurrent append landed —
-    * the staged fold is STALE (it lacks the new delta), so the
-    * compactor re-resolves and re-stages rather than publishing a
-    * snapshot that silently drops a commit (the Iceberg RewriteFiles
-    * revalidation). Returns the version it committed.
+  /** Compaction as just another CAS committer: fold the head's spliced
+    * read into `data/c_v<head>`, then race for the next slot like any
+    * writer. A CAS loss means a concurrent append landed — the staged
+    * fold is STALE (it lacks the new delta), so the compactor re-resolves
+    * and re-stages rather than publishing a snapshot that silently drops
+    * a commit (the Iceberg RewriteFiles revalidation). Returns the
+    * version it committed.
     */
   def compactPartitionedTxn(spark: SparkSession, tableDir: String,
-      partCol: String, maxRetries: Int = 8): Long = {
-    var tries = 0
-    while (tries <= maxRetries) {
-      val head = txnManifestVersions(spark, tableDir)
-        .lastOption.getOrElse(sys.error(s"nothing to compact: $tableDir"))
-      val dirName = s"c_v$head"
-      readPartitionedTxn(spark, tableDir, partCol, head)
-        .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(s"$tableDir/data/$dirName")
-      val landed =
-        partitionValuesIn(spark, s"$tableDir/data/$dirName", partCol)
-      val target = head + 1
-      val body = landed.sorted.map(p => s"$p\t$dirName")
-        .mkString("", "\n", "\n")
-      if (putIfAbsent(spark,
-          new Path(s"$tableDir/tmanifest/v$target"), body)) {
-        if (currentVersion(spark, tableDir).forall(_ < target))
-          swapPointer(spark, tableDir, target)
-        return target
-      }
-      tries += 1 // a concurrent commit landed: the fold is stale — redo
+      partCol: String, maxRetries: Int = 8): Long =
+    commitNext(spark, tableDir, None, maxRetries + 1) { head =>
+      require(head > 0L, s"nothing to compact: $tableDir")
+      fold(readPartitionedMoR(spark, tableDir, partCol, head), tableDir,
+        head, s"c_v$head", partCol)
     }
-    sys.error(s"compactor exhausted $maxRetries retries under contention")
-  }
 
   /** q329 — KEYED UPSERTS AND TOMBSTONES on the merge-on-read table,
     * the row-grain completion of q326 (whose deltas were pure inserts):
@@ -3451,7 +3350,7 @@ object ManifestTable {
     * tombstones; compaction applies both physically (totals unchanged —
     * require-pinned by the oracle hash); and the MoR-aware vacuum
     * proves the reachability contract both ways: keep-1 BEFORE
-    * compaction reclaims nothing (the live delta manifest references
+    * compaction reclaims nothing (the live manifest references
     * the whole chain), keep-1 AFTER reclaims exactly the three unpinned
     * delta dirs while the compacted read still serves. Output:
     * per-stage totals with version, spliced source-version count, and
@@ -3467,8 +3366,8 @@ object ManifestTable {
       col("value"), lit(false).as("deleted"))
     def stage(name: String, reclaimed: Long): DataFrame = {
       val v = currentVersion(spark, tableDir).get
-      val nSrc = readDeltaManifest(spark, tableDir, v)
-        .values.flatten.toSet.size.toLong
+      val nSrc = readManifest(spark, tableDir, v).parts.values
+        .flatMap(_.dirs).toSet.size.toLong
       readPartitionedMoRKeyed(spark, tableDir, "event_type", "event_id", v)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -3495,12 +3394,12 @@ object ManifestTable {
       tableDir, 3L, "event_type"))
     val s3 = stage("c_tombstoned", 0L)
     // reachability, pre-compaction: keep-1 must reclaim NOTHING — the
-    // live delta manifest references v1..v3
+    // live manifest references v1..v3
     val preDropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
     require(preDropped.isEmpty,
       s"pre-compaction vacuum must respect delta references: $preDropped")
-    compactPartitionedMoRKeyed(spark, tableDir, 4L, "event_type",
-      "event_id")
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type",
+      keyCol = Some("event_id"))
     val s4 = stage("d_compacted", 0L)
     // post-compaction: the chain unpins — keep-1 reclaims exactly v1..v3
     val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
@@ -3548,158 +3447,24 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- q331
 
-  /** POSITION-DELETE manifests (`posmanifest/v<N>`): each line is
-    * `partition\tbase:v1,v2\tdel:v3,v4` — per partition, the versions
-    * serving base ROWS and the versions serving delete TRIPLES
-    * `(partCol, _src_version, _pos)`. This is Iceberg's SECOND delete
-    * flavor beside q329's equality deletes: a delete names the physical
-    * row it kills (here `(source version, position)`; Iceberg uses
-    * `(file_path, pos)`), so the read applies it with an ANTI-JOIN
-    * against a delete set that is ∝ |deleted rows| — no key-grain
-    * aggregation over the base data at all, where the keyed MoR read
-    * pays a full-table `max_by` shuffle until compaction.
-    */
-  def writePosManifest(spark: SparkSession, tableDir: String,
-      version: Long,
-      mapping: Map[String, (Seq[Long], Seq[Long])]): Unit = {
-    val body = mapping.toSeq.sortBy(_._1)
-      .map { case (p, (bs, ds)) =>
-        s"$p\tbase:${bs.mkString(",")}\tdel:${ds.mkString(",")}" }
-      .mkString("", "\n", "\n")
-    require(putIfAbsent(spark,
-        new Path(s"$tableDir/posmanifest/v$version"), body),
-      s"position manifest for v$version already exists")
-  }
-
-  def readPosManifest(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, (Seq[Long], Seq[Long])] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/posmanifest/v$version"))
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map { line =>
-        val Array(p, bs, ds) = line.split("\t")
-        def vs(s: String, tag: String): Seq[Long] = {
-          val body = s.stripPrefix(tag)
-          if (body.isEmpty) Seq.empty
-          else body.split(",").iterator.map(_.toLong).toSeq
-        }
-        p -> (vs(bs, "base:"), vs(ds, "del:"))
-      }.toMap
-
-  /** Publish base rows with a persisted `_pos` row id. `_pos` only needs
-    * to be unique WITHIN this version (a delete names `(version, pos)`),
-    * so `monotonically_increasing_id` — task-local counters, no window,
-    * no single-task bottleneck — is the 100-TB-safe assignment; Iceberg's
-    * per-file ordinal is the same idea at file grain. The id is persisted
-    * at write and only ever read back, so its layout-dependence is moot.
-    */
-  def publishPosBase(df: DataFrame, tableDir: String, version: Long,
-      partCol: String): Unit = {
-    val spark = df.sparkSession
-    df.withColumn("_pos", monotonically_increasing_id())
-      .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/v$version")
-    val landed = partitionValues(spark, tableDir, version, partCol)
-    writePosManifest(spark, tableDir, version,
-      landed.map(p => p -> (Seq(version), Seq.empty[Long])).toMap)
-    swapPointer(spark, tableDir, version)
-  }
-
-  /** Commit a batch of position deletes: triples
-    * `(partCol, _src_version, _pos)` land under `data/v<version>` — bytes
-    * written ∝ |deleted rows|, never the touched partition — and the
-    * manifest extends the DELETE list of each touched partition.
+  /** Commit a batch of POSITION DELETES, Iceberg's second delete flavor
+    * beside q329's equality deletes: a delete names the physical row it
+    * kills as `(partCol, _src_version, _pos)` — Iceberg uses
+    * `(file_path, pos)` — over rows written through [[withRowIds]]. The
+    * triples land under `data/v<version>` — bytes written ∝ |deleted
+    * rows|, never the touched partition — and extend each touched
+    * partition's delete list; [[readPartitionedMoR]] applies them with an
+    * anti-join against a delete set ∝ |deleted rows|, with no key-grain
+    * aggregation over the base, where the keyed MoR read pays a
+    * full-table `max_by` shuffle until compaction. With `statCol` (q336)
+    * the commit subtracts the doomed rows' `(count, sum(statCol))` from
+    * the partitions' stats; `deletes` must then still carry that column.
+    * Replays follow [[commitAt]].
     */
   def appendPositionDeletes(deletes: DataFrame, tableDir: String,
-      version: Long, partCol: String): Unit = {
-    val spark = deletes.sparkSession
-    deletes.select(col(partCol), col("_src_version"), col("_pos"))
-      .write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/v$version")
-    val prev = readPosManifest(spark, tableDir, version - 1)
-    val landed = partitionValues(spark, tableDir, version, partCol)
-    val map = prev ++ landed.map { p =>
-      val (bs, ds) = prev.getOrElse(p, (Seq.empty[Long], Seq.empty[Long]))
-      p -> (bs, ds :+ version)
-    }
-    writePosManifest(spark, tableDir, version, map)
-    swapPointer(spark, tableDir, version)
-  }
-
-  /** The spliced read WITH the row-id columns still attached — the form
-    * a DELETE-WHERE scans to translate its predicate into positions.
-    * Partitions with NO delete files bypass the anti-join entirely (the
-    * per-partition application real formats do), so the join's probe
-    * side is ∝ touched partitions and its build side ∝ |deleted rows
-    * since the last compaction|. The broadcast hint is SIZE-GATED
-    * (manifest byte count vs `broadcastMaxBytes`, the [[ColocatedJoin]]
-    * discipline): scheduled compaction is what keeps the delete set
-    * broadcastable in steady state, and a table whose deletes have
-    * outgrown the threshold falls back to Catalyst's own strategy
-    * choice for the anti-join — correctness identical, and the
-    * broadcast claim never silently OOMs a 100-TB executor.
-    * PositionDeleteSpec pins the broadcast-path plan: no shuffle
-    * exchange anywhere in the resolved read.
-    */
-  def readPositionMoRRaw(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long,
-      broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    val map = readPosManifest(spark, tableDir, version)
-    def baseOf(parts: Map[String, (Seq[Long], Seq[Long])]): DataFrame =
-      parts.toSeq.flatMap { case (p, (bs, _)) => bs.map(v => (v, p)) }
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (srcV, entries) =>
-          spark.read.parquet(s"$tableDir/data/v$srcV")
-            .filter(col(partCol)
-              .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-            .withColumn("_src_version", lit(srcV))
-        }.reduce(_ unionByName _)
-    val (touched, untouched) = map.partition(_._2._2.nonEmpty)
-    val clean = if (untouched.isEmpty) None else Some(baseOf(untouched))
-    val merged = if (touched.isEmpty) None else {
-      val delVs = touched.values.flatMap(_._2).toSet.toSeq.sorted
-      val fs = new Path(tableDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val delBytes = delVs.map(v => fs.getContentSummary(
-        new Path(s"$tableDir/data/v$v")).getLength).sum
-      val dels = delVs.map { v =>
-        spark.read.parquet(s"$tableDir/data/v$v")
-          .select(col(partCol), col("_src_version"), col("_pos"))
-      }.reduce(_ unionByName _)
-      val build = if (delBytes <= broadcastMaxBytes) broadcast(dels)
-        else dels
-      Some(baseOf(touched).join(build,
-        Seq(partCol, "_src_version", "_pos"), "left_anti"))
-    }
-    (clean, merged) match {
-      case (Some(c), Some(m)) => c.unionByName(m)
-      case (Some(c), None)    => c
-      case (None, Some(m))    => m
-      case _ => sys.error(s"empty position manifest v$version: $tableDir")
-    }
-  }
-
-  /** Resolve a position-delete MoR snapshot: the raw read minus the row
-    * ids. Cost shape vs [[readPartitionedMoRKeyed]]: broadcast anti-join
-    * (zero shuffle of base data) vs full-table key aggregation.
-    */
-  def readPositionMoR(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame =
-    readPositionMoRRaw(spark, tableDir, partCol, version)
-      .drop("_src_version", "_pos")
-
-  /** Fold base + position deletes into ONE physical snapshot with fresh
-    * row ids; every partition's serving lists collapse to
-    * `base:[version] del:[]`. Totals unchanged by the q88/q287/q309
-    * compaction contract.
-    */
-  def compactPositionMoR(spark: SparkSession, tableDir: String,
-      version: Long, partCol: String): Unit =
-    publishPosBase(
-      readPositionMoR(spark, tableDir, partCol,
-        currentVersion(spark, tableDir).getOrElse(
-          sys.error(s"no published snapshot under $tableDir"))),
-      tableDir, version, partCol)
+      version: Long, partCol: String, crash: Option[CrashPoint] = None,
+      statCol: Option[String] = None): Boolean =
+    append(deletes, tableDir, version, partCol, crash, statCol, deletes = true)
 
   /** q331 — DELETE WHERE via position deletes, Iceberg's second delete
     * flavor beside q329's keyed/equality form: v1 publishes the base
@@ -3722,10 +3487,10 @@ object ManifestTable {
       col("value"))
     def stage(name: String): DataFrame = {
       val v = currentVersion(spark, tableDir).get
-      val m = readPosManifest(spark, tableDir, v)
-      val nBase = m.values.flatMap(_._1).toSet.size.toLong
-      val nDel = m.values.flatMap(_._2).toSet.size.toLong
-      readPositionMoR(spark, tableDir, "event_type", v)
+      val m = readManifest(spark, tableDir, v).parts.values
+      val nBase = m.flatMap(_.dirs).toSet.size.toLong
+      val nDel = m.flatMap(_.dels).toSet.size.toLong
+      readPartitionedMoR(spark, tableDir, "event_type", v)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
@@ -3733,11 +3498,11 @@ object ManifestTable {
           lit(nBase).as("n_base"), lit(nDel).as("n_del"),
           col("event_type"), col("n"), col("total_cents"))
     }
-    publishPosBase(slim, tableDir, 1L, "event_type")
+    appendPartitionedDelta(withRowIds(slim), tableDir, 1L, "event_type")
     val s1 = stage("a_base")
     def positionsWhere(pred: org.apache.spark.sql.Column): DataFrame =
-      readPositionMoRRaw(spark, tableDir, "event_type",
-          currentVersion(spark, tableDir).get)
+      readPartitionedMoR(spark, tableDir, "event_type",
+          currentVersion(spark, tableDir).get, rowIds = true)
         .filter(pred)
         .select(col("event_type"), col("_src_version"), col("_pos"))
     appendPositionDeletes(positionsWhere(pmod(col("event_id"), lit(7)) === 0),
@@ -3746,7 +3511,7 @@ object ManifestTable {
     appendPositionDeletes(positionsWhere(pmod(col("event_id"), lit(5)) === 0),
       tableDir, 3L, "event_type")
     val s3 = stage("c_del_mod5")
-    compactPositionMoR(spark, tableDir, 4L, "event_type")
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type")
     val s4 = stage("d_compacted")
     s1.unionByName(s2).unionByName(s3).unionByName(s4)
       .orderBy("stage", "event_type")
@@ -3793,112 +3558,36 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- q335
 
-  /** Idempotent small-file write (CREATE or OVERWRITE) — for metadata
-    * whose content is a pure function of the commit, where a crash-replay
-    * must be able to re-write the identical bytes ([[putIfAbsent]]'s
-    * sibling for the pre-commit-point files).
+  /** Cumulative `(rows, sum)` per partition at `version`, answered from
+    * the manifest alone — zero data files opened. This is how table
+    * formats answer `COUNT(*)`/`SUM` instantly: Iceberg keeps per-file
+    * value counts in manifests, Delta puts numRecords in the commit
+    * stats. Refused unless every partition's stats are exact.
     */
-  private def putOverwrite(spark: SparkSession, path: Path,
-      content: String): Unit = {
-    val uri = path.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val p = java.nio.file.Paths.get(uri.getPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, content.getBytes("UTF-8"))
-    } else {
-      val ctx = fc(spark, path.toString)
-      val out = ctx.create(path,
-        EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-        CreateOpts.createParent())
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-  }
-
-  /** COMMIT-TIME STATS manifests (`stmanifest/v<N>`): per partition,
-    * the CUMULATIVE `(row_count, stat_sum)` as of the version — additive
-    * over delta commits, so each commit folds its batch's one-line
-    * aggregate into the previous stats at O(|partitions|) metadata cost.
-    * This is how table formats answer `COUNT(*)`/`SUM` instantly:
-    * Iceberg keeps per-file value counts in manifests, Delta puts
-    * numRecords in the commit stats — a full-table aggregate becomes a
-    * METADATA read, zero data files opened.
-    */
-  def writeStatsManifest(spark: SparkSession, tableDir: String,
-      version: Long, stats: Map[String, (Long, Long)]): Unit =
-    putOverwrite(spark, new Path(s"$tableDir/stmanifest/v$version"),
-      stats.toSeq.sortBy(_._1)
-        .map { case (p, (n, s)) => s"$p\t$n\t$s" }
-        .mkString("", "\n", "\n"))
-
-  def readStatsManifest(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, (Long, Long)] =
-    readFully(fc(spark, tableDir),
-        new Path(s"$tableDir/stmanifest/v$version"))
-      .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
-      .map { line =>
-        val Array(p, n, s) = line.split("\t")
-        p -> (n.toLong, s.toLong)
-      }.toMap
-
-  /** [[appendPartitionedDelta]] with commit-time stats: before the
-    * commit point, the batch's per-partition `(count, sum(statCol))` —
-    * one tiny aggregate of rows the writer is already holding — folds
-    * into the previous cumulative stats under `stmanifest/v<version>`.
-    * The stats file is written BEFORE the delta manifest (the commit
-    * point), so delta-manifest-present ⇒ stats present; its content is
-    * a pure function of (batch, previous stats), so the crash-replay's
-    * re-write is byte-identical (hence overwrite, not put-if-absent).
-    */
-  def appendPartitionedDeltaWithStats(df: DataFrame, tableDir: String,
-      version: Long, partCol: String, statCol: String): Boolean = {
-    val spark = df.sparkSession
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(s"$tableDir/dmanifest/v$version"))) {
-      if (currentVersion(spark, tableDir).forall(_ < version))
-        swapPointer(spark, tableDir, version)
-      false
-    } else {
-      val prevStats = if (version == 1L) Map.empty[String, (Long, Long)]
-        else readStatsManifest(spark, tableDir, version - 1)
-      val batchStats = df.groupBy(partCol)
-        .agg(count(lit(1)).as("n"), sum(col(statCol)).as("s"))
-        .collect() // bounded by |partitions|
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val prevMap = if (version == 1L) Map.empty[String, Seq[Long]]
-        else readDeltaManifest(spark, tableDir, version - 1)
-      df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-        .parquet(s"$tableDir/data/v$version")
-      val landed = partitionValues(spark, tableDir, version, partCol)
-      writeStatsManifest(spark, tableDir, version,
-        prevStats ++ batchStats.map { case (p, (n, s)) =>
-          val (pn, ps) = prevStats.getOrElse(p, (0L, 0L))
-          p -> (pn + n, ps + s)
-        })
-      val map = prevMap ++ landed.map(p =>
-        p -> (prevMap.getOrElse(p, Seq.empty) :+ version))
-      writeDeltaManifest(spark, tableDir, version, map)
-      swapPointer(spark, tableDir, version)
-      true
-    }
+  def statsAt(spark: SparkSession, tableDir: String,
+      version: Long): Map[String, (Long, Long)] = {
+    val parts = readManifest(spark, tableDir, version).parts
+    require(parts.values.forall(_.stats.isDefined),
+      s"v$version under $tableDir has partitions without exact stats")
+    parts.map { case (p, e) => p -> e.stats.get }
   }
 
   /** Answer `GROUP BY partition: COUNT(*), SUM(statCol)` from METADATA
-    * ONLY — one stats-manifest read, zero data files opened. The
-    * returned plan is a local relation of |partitions| rows.
+    * ONLY ([[statsAt]]). The returned plan is a local relation of
+    * |partitions| rows.
     */
   def metadataAggregate(spark: SparkSession, tableDir: String,
       version: Long): DataFrame = {
     import spark.implicits._
-    readStatsManifest(spark, tableDir, version).toSeq.sortBy(_._1)
+    statsAt(spark, tableDir, version).toSeq.sortBy(_._1)
       .map { case (p, (n, s)) => (p, n, s) }
       .toDF("partition", "n", "stat_sum")
   }
 
   /** q335 — metadata-only aggregation from commit-time stats: three
     * delta commits (split on `event_id % 3`) each fold their batch's
-    * per-partition `(count, sum_cents)` into the cumulative stats
-    * manifest; the per-type totals are then answered WITHOUT OPENING A
+    * per-partition `(count, sum_cents)` into the cumulative stats of
+    * their manifest; the per-type totals are then answered WITHOUT OPENING A
     * DATA FILE at every version — including time travel to v2 — and
     * equal the oracle's recomputation from raw events. A scan-based
     * recount of the head cross-checks the stats in-plan (`require`).
@@ -3913,18 +3602,16 @@ object ManifestTable {
     val slim = events.select(col("event_id"), col("event_type"),
       OracleSafe.quant(col("value"), 100).as("cents"))
     (0 to 2).foreach { m =>
-      require(appendPartitionedDeltaWithStats(
+      require(appendPartitionedDelta(
         slim.filter(pmod(col("event_id"), lit(3)) === m),
-        tableDir, m + 1L, "event_type", "cents"))
+        tableDir, m + 1L, "event_type", statCol = Some("cents")))
     }
     // the head's stats must equal a physical recount — checked here so
     // the oracle row carries the cross-validated numbers
-    val physical = readPartitionedMoR(spark, tableDir, "event_type", 3L)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    require(readStatsManifest(spark, tableDir, 3L) == physical,
+    val physical = statsBy(
+      readPartitionedMoR(spark, tableDir, "event_type", 3L),
+      "event_type", "cents")
+    require(statsAt(spark, tableDir, 3L) == physical,
       "commit-time stats must equal the physical recount")
     def stage(name: String, v: Long): DataFrame =
       metadataAggregate(spark, tableDir, v)
@@ -3935,7 +3622,7 @@ object ManifestTable {
   }
 
   /** q336 — commit-time stats kept EXACT through position deletes, the
-    * composition of q335's stats manifests with q331's delete flavor.
+    * composition of q335's commit-time stats with q331's delete flavor.
     * The reason it works is specific to POSITION deletes: a DELETE WHERE
     * translates its predicate into positions by SCANNING the doomed rows
     * (q331's flow), so the writer is already holding their stat values
@@ -3947,10 +3634,9 @@ object ManifestTable {
     * exists to avoid (Iceberg marks stats inexact under such deletes;
     * the q329 tier leaves stats to compaction for the same reason).
     *
-    * Stats files are written immediately BEFORE each commit point; a
-    * crash in between leaves an orphan stats file at an uncommitted
-    * version — invisible, since every reader resolves the pointer and
-    * the commit manifest first. Stages: base, two DELETE WHERE commits,
+    * The stats ride in each commit's own manifest, so they publish
+    * atomically with the deletes they price. Stages: base, two DELETE
+    * WHERE commits,
     * compaction (stats carry forward unchanged — the q88/q309 totals
     * invariant, now visible in metadata). The head's stats are
     * cross-checked against a physical recount in-plan; the oracle
@@ -3960,37 +3646,26 @@ object ManifestTable {
     val spark = events.sparkSession
     val slim = events.select(col("event_id"), col("event_type"),
       OracleSafe.quant(col("value"), 100).as("cents"))
-    def statsOf(df: DataFrame): Map[String, (Long, Long)] =
-      df.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("s"))
-        .collect() // bounded by |partitions|
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    writeStatsManifest(spark, tableDir, 1L, statsOf(slim))
-    publishPosBase(slim, tableDir, 1L, "event_type")
+    require(appendPartitionedDelta(withRowIds(slim), tableDir, 1L,
+      "event_type", statCol = Some("cents")))
     def deleteWhere(v: Long, mod: Int): Unit = {
       // predicate → positions: the scan that names the doomed rows is
       // the same scan that prices the negative stats fold
-      val doomed = readPositionMoRRaw(spark, tableDir, "event_type", v - 1)
+      val doomed = readPartitionedMoR(spark, tableDir, "event_type", v - 1,
+          rowIds = true)
         .filter(pmod(col("event_id"), lit(mod)) === 0)
         .localCheckpoint()
-      val neg = statsOf(doomed)
-      writeStatsManifest(spark, tableDir, v,
-        readStatsManifest(spark, tableDir, v - 1).map { case (p, (n, s)) =>
-          val (dn, ds) = neg.getOrElse(p, (0L, 0L))
-          p -> (n - dn, s - ds)
-        })
-      appendPositionDeletes(doomed.select(col("event_type"),
-        col("_src_version"), col("_pos")), tableDir, v, "event_type")
+      require(appendPositionDeletes(doomed, tableDir, v, "event_type",
+        statCol = Some("cents")))
     }
     deleteWhere(2L, 7)
     deleteWhere(3L, 5)
     // compaction changes layout, never totals: stats carry forward
-    writeStatsManifest(spark, tableDir, 4L,
-      readStatsManifest(spark, tableDir, 3L))
-    compactPositionMoR(spark, tableDir, 4L, "event_type")
-    val physical = statsOf(readPositionMoR(spark, tableDir, "event_type", 4L))
-    require(readStatsManifest(spark, tableDir, 4L)
-        .filter(_._2._1 > 0L) == physical,
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type")
+    val physical = statsBy(
+      readPartitionedMoR(spark, tableDir, "event_type", 4L),
+      "event_type", "cents")
+    require(statsAt(spark, tableDir, 4L).filter(_._2._1 > 0L) == physical,
       "delete-folded stats must equal the physical recount")
     def stage(name: String, v: Long): DataFrame =
       metadataAggregate(spark, tableDir, v)

@@ -1190,8 +1190,7 @@ object EventStream {
     runOnce(injectCrashAt = -1L) // replays batch 1 (skipped), finishes 2
 
     val attempts = new java.io.File(att).listFiles().length
-    val commits = ManifestTable
-      .partitionManifestVersions(spark, tbl).size
+    val commits = ManifestTable.manifestVersions(spark, tbl).size
     ManifestTable.readPartitioned(spark, tbl, "event_type")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -1286,12 +1285,12 @@ object EventStream {
     runOnce(injectCrashAt = -1L) // replays batch 1 (skipped), finishes 2
 
     val attempts = new java.io.File(att).listFiles().length
-    val commits = ManifestTable.deltaManifestVersions(spark, tbl).size
+    val commits = ManifestTable.manifestVersions(spark, tbl).size
 
     def stage(name: String): DataFrame = {
       val v = ManifestTable.currentVersion(spark, tbl).get
-      val nSrc = ManifestTable.readDeltaManifest(spark, tbl, v)
-        .values.flatten.toSet.size
+      val nSrc = ManifestTable.readManifest(spark, tbl, v).parts.values
+        .flatMap(_.dirs).toSet.size
       ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -1375,8 +1374,7 @@ object EventStream {
     require(bfV == 1L && bfNew, s"backfill must land as v1: $bfV/$bfNew")
 
     def stage(name: String, nCommits: Long, attempts: Long): DataFrame =
-      ManifestTable.readPartitionedTxn(spark, tbl, "event_type",
-          ManifestTable.currentVersion(spark, tbl).get)
+      ManifestTable.readPartitioned(spark, tbl, "event_type")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           sum(graft.functions.OracleSafe.quant(col("value"), 100))
@@ -1416,12 +1414,11 @@ object EventStream {
     runOnce(injectCrashAt = -1L) // replays b0 (txn tag found → skip), b1
 
     val attempts = new java.io.File(att).listFiles().length.toLong
-    val versions = ManifestTable.txnManifestVersions(spark, tbl)
+    val versions = ManifestTable.manifestVersions(spark, tbl)
     require(versions == Seq(1L, 2L, 3L),
       s"expected backfill, live b0, live b1: $versions")
-    require(ManifestTable.txnOf(spark, tbl, 1L).contains(("backfill", 0L))
-        && ManifestTable.txnOf(spark, tbl, 2L).contains(("live", 0L))
-        && ManifestTable.txnOf(spark, tbl, 3L).contains(("live", 1L)),
+    require(versions.map(ManifestTable.readManifest(spark, tbl, _).txn) ==
+        Seq(Some(("backfill", 0L)), Some(("live", 0L)), Some(("live", 1L))),
       "the log must carry both writer identities in handoff order")
     val s2 = stage("b_handoff_complete", versions.size.toLong, attempts)
     s1.unionByName(s2).orderBy("stage", "event_type")
@@ -1514,16 +1511,15 @@ object EventStream {
     runOnce(injectCrashAt = -1L) // replays b1 (txn tag found, skipped)
 
     val attempts = new java.io.File(att).listFiles().length
-    val versions = ManifestTable.txnManifestVersions(spark, tbl)
+    val versions = ManifestTable.manifestVersions(spark, tbl)
     require(versions == Seq(1L, 2L, 3L, 4L),
       s"expected b0, b1, compaction, b2 commits: $versions")
     // the post-compaction append must SPLICE the compacted fold with
     // its own delta — the rebase the CAS loop exists for
-    val v4 = ManifestTable.readTxnManifest(spark, tbl, 4L)
-    require(v4.values.exists(_ == Seq("c_v2", "t_ingest_b2")),
+    val v4 = ManifestTable.readManifest(spark, tbl, 4L).parts
+    require(v4.values.exists(_.dirs == Seq("c_v2", "t_ingest_b2")),
       s"v4 must rebase onto the compacted manifest: $v4")
-    val head = ManifestTable.currentVersion(spark, tbl).get
-    ManifestTable.readPartitionedTxn(spark, tbl, "event_type", head)
+    ManifestTable.readPartitioned(spark, tbl, "event_type")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         sum(graft.functions.OracleSafe.quant(col("value"), 100))

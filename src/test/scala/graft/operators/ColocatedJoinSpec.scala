@@ -18,10 +18,10 @@ class ColocatedJoinSpec extends SparkSpec {
       ("x", 1L, 10L), ("x", 1L, 50L), ("x", 2L, 30L),
       ("y", 1L, 100L), ("y", 3L, 7L), ("z", 9L, 1L))
       .toDF("event_type", "user_id", "cents")
-    ManifestTable.publishPartitioned(facts, a, 1L, "event_type")
+    ManifestTable.appendPartitionedDelta(facts, a, 1L, "event_type")
     val agg = facts.groupBy("event_type", "user_id")
       .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
-    ManifestTable.publishPartitioned(agg, b, 1L, "event_type")
+    ManifestTable.appendPartitionedDelta(agg, b, 1L, "event_type")
     (a, b)
   }
 
@@ -76,10 +76,10 @@ class ColocatedJoinSpec extends SparkSpec {
     try {
       val a = s"$out/a"
       val b = s"$out/b"
-      ManifestTable.publishPartitioned(
+      ManifestTable.appendPartitionedDelta(
         Seq(("x", 1L, 10L), ("w", 2L, 5L)).toDF("event_type", "user_id", "cents"),
         a, 1L, "event_type")
-      ManifestTable.publishPartitioned(
+      ManifestTable.appendPartitionedDelta(
         Seq(("x", 1L, 1L, 10L)).toDF("event_type", "user_id", "cnt", "sum_cents"),
         b, 1L, "event_type")
       val joined = ColocatedJoin.colocatedJoin(spark, a, b,

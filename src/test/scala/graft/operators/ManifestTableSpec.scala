@@ -690,15 +690,15 @@ class ManifestTableSpec extends SparkSpec {
       val tbl = s"$out/tbl"
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0))
         .toDF("event_id", "event_type", "value")
-      ManifestTable.publishPartitioned(base, tbl, 1L, "event_type")
-      assert(ManifestTable.partitionValues(spark, tbl, 1L, "event_type")
+      ManifestTable.appendPartitionedDelta(base, tbl, 1L, "event_type")
+      assert(ManifestTable.partitionValues(spark, tbl, "v1", "event_type")
         == Seq("a", "b"))
       // overwrite partition a: v2 lands ONLY the a dir
       ManifestTable.overwritePartitions(
         base.filter(col("event_type") === "a")
           .withColumn("value", col("value") * 10),
         tbl, 2L, "event_type", Seq("a"))
-      assert(ManifestTable.partitionValues(spark, tbl, 2L, "event_type")
+      assert(ManifestTable.partitionValues(spark, tbl, "v2", "event_type")
         == Seq("a"), "only the replaced partition may land files")
       assert(!new java.io.File(s"$tbl/data/v2/event_type=b").exists(),
         "the untouched partition must have NO new files")
@@ -722,7 +722,7 @@ class ManifestTableSpec extends SparkSpec {
       // reachability vacuum: the live manifest maps a->2 (and v1 is
       // still referenced by v2's manifest if retained... here keep=1
       // retains v3 whose manifest references v2 only)
-      val dropped = ManifestTable.vacuumPartitioned(spark, tbl, keep = 1)
+      val dropped = ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
       assert(dropped == Seq(1L),
         s"v1 is unreferenced by the live manifest after the b delete: $dropped")
       val finalServed = ManifestTable
@@ -737,7 +737,7 @@ class ManifestTableSpec extends SparkSpec {
       val tbl = s"$out/tbl"
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0))
         .toDF("event_id", "event_type", "value")
-      ManifestTable.publishPartitioned(base, tbl, 1L, "event_type")
+      ManifestTable.appendPartitionedDelta(base, tbl, 1L, "event_type")
       // resolve NOW (pointer + manifest read eagerly), collect LATER
       val pinned = ManifestTable.readPartitioned(spark, tbl, "event_type")
       ManifestTable.overwritePartitions(
@@ -799,7 +799,7 @@ class ManifestTableSpec extends SparkSpec {
       def servedSum(): Long = ManifestTable
         .readPartitioned(spark, tbl, "event_type")
         .agg(sum(expr("CAST(value AS BIGINT)"))).head().getLong(0)
-      ManifestTable.publishPartitioned(base, tbl, 1L, "event_type")
+      ManifestTable.appendPartitionedDelta(base, tbl, 1L, "event_type")
       ManifestTable.overwritePartitions(
         base.filter(col("event_type") === "a")
           .withColumn("value", col("value") * 10),
@@ -811,13 +811,13 @@ class ManifestTableSpec extends SparkSpec {
       assert(ManifestTable.currentVersion(spark, tbl).contains(3L))
       assert(ManifestTable.versions(spark, tbl) == Seq(1L, 2L),
         "the rollback commit must create NO data dir")
-      assert(ManifestTable.readPartitionManifest(spark, tbl, 3L)
-        == ManifestTable.readPartitionManifest(spark, tbl, 1L),
+      assert(ManifestTable.readManifest(spark, tbl, 3L)
+        == ManifestTable.readManifest(spark, tbl, 1L),
         "the rollback manifest is an exact copy of the target's")
       assert(servedSum() == 6L, "the serve path is back to v1's data")
       // the bad snapshot stays time-travelable for the audit
       val audit = ManifestTable
-        .readPartitionedVersion(spark, tbl, "event_type", 2L)
+        .readPartitionedMoR(spark, tbl, "event_type", 2L)
         .agg(sum(expr("CAST(value AS BIGINT)"))).head().getLong(0)
       assert(audit == 42L, "the rolled-back version must stay readable")
       // history is append-only: the rollback itself reverts forward
@@ -825,7 +825,7 @@ class ManifestTableSpec extends SparkSpec {
       assert(v4 == 4L && servedSum() == 42L,
         "rolling back a rollback re-serves the overwrite as v4")
       // reachability vacuum never tears files out of a rollback commit
-      val dropped = ManifestTable.vacuumPartitioned(spark, tbl, keep = 1)
+      val dropped = ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
       assert(dropped.isEmpty,
         s"v1 and v2 are referenced by live manifests: $dropped")
       assert(servedSum() == 42L)
@@ -879,7 +879,7 @@ class ManifestTableSpec extends SparkSpec {
           .start()
         q.processAllAvailable(); q.awaitTermination()
       }
-      ManifestTable.publishPartitioned(slim, tbl, 1L, "event_type")
+      ManifestTable.appendPartitionedDelta(slim, tbl, 1L, "event_type")
       logCommit(1L)
       ManifestTable.overwritePartitions(
         slim.filter(col("event_type") === "purchase")
@@ -893,9 +893,7 @@ class ManifestTableSpec extends SparkSpec {
       logCommit(3L)
       runTail() // the consumer is live: v2/v3 consumed, checkpoint held
       // the compaction commit lands while the consumer is mid-stream
-      ManifestTable.publishPartitioned(
-        ManifestTable.readPartitioned(spark, tbl, "event_type"),
-        tbl, 4L, "event_type")
+      ManifestTable.compactPartitionedMoR(spark, tbl, 4L, "event_type")
       logCommit(4L)
       runTail() // resumes from the checkpoint, consumes the compaction
       // the compaction batch presented ZERO change rows
@@ -914,7 +912,7 @@ class ManifestTableSpec extends SparkSpec {
       assert(!served.exists(_.getAs[Long]("event_id") == 4L))
       // retention vs consumer: AFTER the tail passed the boundary the
       // vacuum may reclaim the sprawl...
-      assert(ManifestTable.vacuumPartitioned(spark, tbl, keep = 1)
+      assert(ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
         == Seq(1L, 2L, 3L))
       // ...but a consumer still BEHIND the boundary is now broken — the
       // expire-snapshots-vs-CDC ordering contract, observed:
@@ -925,101 +923,125 @@ class ManifestTableSpec extends SparkSpec {
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
-  test("q324 primitive: idempotent partitioned append across every crash window") {
-    val out = java.nio.file.Files.createTempDirectory("graft-ppa")
-    try {
-      val tbl = s"$out/tbl"
-      def rows(ids: Seq[(Long, String, Double)]) =
-        ids.toDF("event_id", "event_type", "value")
-      def served() = ManifestTable.readPartitioned(spark, tbl, "event_type")
-        .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      // bootstrap commit
-      assert(ManifestTable.appendPartitionedIdempotent(
-        rows(Seq((1L, "a", 1.0), (2L, "b", 2.0))), tbl, 1L, "event_type"))
-      assert(served() == Map("a" -> 1L, "b" -> 1L))
-      // v2 crashes BETWEEN manifest write and pointer swap
-      intercept[ManifestTable.InjectedCrash] {
-        ManifestTable.appendPartitionedIdempotent(
-          rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type",
-          crashBeforeSwap = true)
-      }
-      // readers still resolve v1; the manifest landed before the crash
-      assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
-      assert(served() == Map("a" -> 1L, "b" -> 1L))
-      // the replay detects the manifest, COMPLETES the swap, skips the
-      // write — rows are never doubled
-      assert(!ManifestTable.appendPartitionedIdempotent(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
-      assert(served() == Map("a" -> 2L, "b" -> 1L))
-      // untouched partition b is carried by REFERENCE to v1
-      assert(ManifestTable.readPartitionManifest(spark, tbl, 2L)
-        == Map("a" -> 2L, "b" -> 1L))
-      // a second replay is a pure no-op
-      assert(!ManifestTable.appendPartitionedIdempotent(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(served() == Map("a" -> 2L, "b" -> 1L))
-      // after v3 commits, a late v2 replay must NOT move the pointer back
-      assert(ManifestTable.appendPartitionedIdempotent(
-        rows(Seq((4L, "c", 4.0))), tbl, 3L, "event_type"))
-      assert(!ManifestTable.appendPartitionedIdempotent(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(ManifestTable.currentVersion(spark, tbl).contains(3L))
-      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-    } finally graft.Scratch.rmTree(out.toFile)
+  test("every partitioned commit path survives an injected crash") {
+    import ManifestTable.{BeforeManifest, BeforePointer, CrashPoint, Entry}
+    def rows(n: Int) = (n match {
+      case 1 => Seq((1L, "a"), (2L, "b"))
+      case 2 => Seq((3L, "a"))
+      case _ => Seq((4L, "c"))
+    }).map { case (i, p) => (i, p, i * 10) }
+      .toDF("event_id", "event_type", "cents")
+    // commit n deletes id 2, then id 1, by position in the version below
+    def doomed(tbl: String, n: Int) = ManifestTable
+      .readPartitionedMoR(spark, tbl, "event_type", n - 1L, rowIds = true)
+      .filter(col("event_id") === (if (n == 2) 2L else 1L))
+    val appended = Map(1 -> Set(1L, 2L), 2 -> Set(1L, 2L, 3L),
+      3 -> Set(1L, 2L, 3L, 4L))
+    // path, commit n (returns whether it committed now), the ids served
+    // after commit n, and the manifest commit 2 publishes
+    val paths: Seq[(String, (String, Int, Option[CrashPoint]) => Boolean,
+        Map[Int, Set[Long]], Map[String, Entry])] = Seq(
+      ("COW append", (t, n, c) => ManifestTable.appendPartitionedIdempotent(
+          rows(n), t, n.toLong, "event_type", c),
+        appended, Map("a" -> Entry(Seq("v2")), "b" -> Entry(Seq("v1")))),
+      ("MoR append", (t, n, c) => ManifestTable.appendPartitionedDelta(
+          rows(n), t, n.toLong, "event_type", c),
+        appended, Map("a" -> Entry(Seq("v1", "v2")), "b" -> Entry(Seq("v1")))),
+      ("stats append", (t, n, c) => ManifestTable.appendPartitionedDelta(
+          rows(n), t, n.toLong, "event_type", c, statCol = Some("cents")),
+        appended, Map("a" -> Entry(Seq("v1", "v2"), stats = Some((2L, 40L))),
+          "b" -> Entry(Seq("v1"), stats = Some((1L, 20L))))),
+      // commit 3 is a second app's batch 0: the txn path owns no versions,
+      // the CAS still allocates it v3
+      ("txn append", (t, n, c) => ManifestTable.appendDeltaTxn(rows(n), t,
+          if (n == 3) "app2" else "app", if (n == 3) 0L else n - 1L,
+          "event_type", c)._2,
+        appended, Map("a" -> Entry(Seq("t_app_b0", "t_app_b1")),
+          "b" -> Entry(Seq("t_app_b0")))),
+      ("position-delete append", (t, n, c) =>
+        if (n == 1) ManifestTable.appendPartitionedDelta(
+          ManifestTable.withRowIds(rows(1)), t, 1L, "event_type")
+        else ManifestTable.appendPositionDeletes(doomed(t, n), t, n.toLong,
+          "event_type", c),
+        Map(1 -> Set(1L, 2L), 2 -> Set(1L), 3 -> Set.empty[Long]),
+        Map("a" -> Entry(Seq("v1")), "b" -> Entry(Seq("v1"), Seq("v2")))))
+    for ((path, commit, served, v2) <- paths;
+         point <- Seq(BeforeManifest, BeforePointer)) {
+      val out = java.nio.file.Files.createTempDirectory("graft-crash")
+      try {
+        val tbl = s"$out/tbl"
+        val at = s"$path, crash $point"
+        def ids(v: Long): Set[Long] = ManifestTable
+          .readPartitionedMoR(spark, tbl, "event_type", v)
+          .select("event_id").collect().map(_.getLong(0)).toSet
+        def live(v: Long): Boolean =
+          ManifestTable.currentVersion(spark, tbl).contains(v)
+        assert(commit(tbl, 1, None), at)
+        intercept[ManifestTable.InjectedCrash](commit(tbl, 2, Some(point)))
+        // readers still resolve the last acknowledged commit
+        assert(live(1L) && ids(1L) == served(1), at)
+        // past the commit point the data is complete before the pointer
+        // names it
+        if (point == BeforePointer) assert(ids(2L) == served(2), at)
+        // the replay completes the commit: a fresh commit when the crash
+        // hit before the manifest, the pointer swap alone after it
+        assert(commit(tbl, 2, None) == (point == BeforeManifest), at)
+        assert(live(2L) && ids(2L) == served(2), at)
+        assert(ManifestTable.readManifest(spark, tbl, 2L).parts == v2, at)
+        // a second replay is a no-op, and a late one never moves the
+        // pointer back
+        assert(!commit(tbl, 2, None) && ids(2L) == served(2), at)
+        assert(commit(tbl, 3, None) && !commit(tbl, 2, None), at)
+        assert(live(3L) && ids(3L) == served(3), at)
+      } finally graft.Scratch.rmTree(out.toFile)
+    }
   }
 
-  test("q326 primitive: delta append across every crash window; compaction folds the splice") {
-    val out = java.nio.file.Files.createTempDirectory("graft-ppd")
-    try {
-      val tbl = s"$out/tbl"
-      def rows(ids: Seq[(Long, String, Double)]) =
-        ids.toDF("event_id", "event_type", "value")
-      def served() = {
-        val v = ManifestTable.currentVersion(spark, tbl).get
-        ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v)
-          .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      }
-      assert(ManifestTable.appendPartitionedDelta(
-        rows(Seq((1L, "a", 1.0), (2L, "b", 2.0))), tbl, 1L, "event_type"))
-      assert(served() == Map("a" -> 1L, "b" -> 1L))
-      // v2 crashes BETWEEN delta-manifest write and pointer swap
-      intercept[ManifestTable.InjectedCrash] {
-        ManifestTable.appendPartitionedDelta(
-          rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type",
-          crashBeforeSwap = true)
-      }
-      assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
-      assert(served() == Map("a" -> 1L, "b" -> 1L))
-      // the replay detects the delta manifest, completes the swap, skips
-      assert(!ManifestTable.appendPartitionedDelta(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
-      assert(served() == Map("a" -> 2L, "b" -> 1L))
-      // partition a is now SPLICED from v1+v2; b served from v1 alone
-      assert(ManifestTable.readDeltaManifest(spark, tbl, 2L)
-        == Map("a" -> Seq(1L, 2L), "b" -> Seq(1L)))
-      // a second replay is a pure no-op
-      assert(!ManifestTable.appendPartitionedDelta(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(served() == Map("a" -> 2L, "b" -> 1L))
-      // a late v2 replay after v3 must not move the pointer back
-      assert(ManifestTable.appendPartitionedDelta(
-        rows(Seq((4L, "c", 4.0))), tbl, 3L, "event_type"))
-      assert(!ManifestTable.appendPartitionedDelta(
-        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
-      assert(ManifestTable.currentVersion(spark, tbl).contains(3L))
-      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-      // compaction folds every partition to ONE serving version with
-      // identical totals (the q309 contract on the delta manifest)
-      ManifestTable.compactPartitionedMoR(spark, tbl, 4L, "event_type")
-      assert(ManifestTable.currentVersion(spark, tbl).contains(4L))
-      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
-      assert(ManifestTable.readDeltaManifest(spark, tbl, 4L)
-        == Map("a" -> Seq(4L), "b" -> Seq(4L), "c" -> Seq(4L)))
-    } finally graft.Scratch.rmTree(out.toFile)
+  test("hostile partition values round-trip on every tier") {
+    val values = Seq("plain", "a/b", "k=v", "50%", "x:y", "t\tab", "n\nl",
+      "#txn")
+    def batch(n: Int) = values.zipWithIndex
+      .map { case (p, i) => (100L * n + i, p, n.toLong) }
+      .toDF("event_id", "event_type", "cents")
+    def served(tbl: String): Map[String, (Long, Long)] = ManifestTable
+      .readPartitioned(spark, tbl, "event_type")
+      .groupBy("event_type").agg(count(lit(1)), sum("cents")).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // tier, commit n, compact into v3, the dir the compaction lands
+    val tiers: Seq[(String, (String, Int) => Unit, String => Unit, String)] =
+      Seq(
+        ("MoR", (t, n) => ManifestTable.appendPartitionedDelta(batch(n), t,
+            n.toLong, "event_type"),
+          t => ManifestTable.compactPartitionedMoR(spark, t, 3L, "event_type"),
+          "v3"),
+        ("COW", (t, n) => ManifestTable.appendPartitionedIdempotent(batch(n),
+            t, n.toLong, "event_type"),
+          t => ManifestTable.compactPartitionedMoR(spark, t, 3L, "event_type"),
+          "v3"),
+        ("txn", (t, n) => ManifestTable.appendDeltaTxn(batch(n), t, "app",
+            n.toLong, "event_type"),
+          t => ManifestTable.compactPartitionedTxn(spark, t, "event_type"),
+          "c_v2"))
+    for ((tier, append, compact, folded) <- tiers) {
+      val out = java.nio.file.Files.createTempDirectory("graft-hostile")
+      try {
+        val tbl = s"$out/tbl"
+        append(tbl, 1)
+        append(tbl, 2)
+        val both = values.map(_ -> (2L, 3L)).toMap
+        assert(ManifestTable.readManifest(spark, tbl, 2L).parts.keySet
+          == values.toSet, tier)
+        assert(served(tbl) == both, tier)
+        compact(tbl)
+        assert(ManifestTable.readManifest(spark, tbl, 3L).parts.values
+          .forall(_.dirs == Seq(folded)), tier)
+        assert(served(tbl) == both, tier)
+        ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
+        assert(new java.io.File(s"$tbl/data").list().toSet == Set(folded),
+          s"$tier: only the compacted dir may survive the vacuum")
+        assert(served(tbl) == both, tier)
+      } finally graft.Scratch.rmTree(out.toFile)
+    }
   }
 
   test("q327 disjoint writers racing on REAL threads both commit; manifests merge") {
@@ -1028,7 +1050,7 @@ class ManifestTableSpec extends SparkSpec {
       val tbl = s"$out/tbl"
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0))
         .toDF("event_id", "event_type", "value")
-      ManifestTable.publishPartitioned(base, tbl, 1L, "event_type")
+      ManifestTable.appendPartitionedDelta(base, tbl, 1L, "event_type")
       // both writers stage from the same pinned base, then race the
       // commit loop on real threads — whatever the interleaving, both
       // must land (disjoint partitions), one of them paying >=1 CAS loss
@@ -1056,12 +1078,12 @@ class ManifestTableSpec extends SparkSpec {
       val head = ManifestTable.currentVersion(spark, tbl).get
       assert(head == 3L)
       val got = ManifestTable
-        .readPartitionedVersion(spark, tbl, "event_type", 3L)
+        .readPartitionedMoR(spark, tbl, "event_type", 3L)
         .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(got == Map("a" -> 1L, "b" -> 1L, "c" -> 1L))
       val ids = ManifestTable
-        .readPartitionedVersion(spark, tbl, "event_type", 3L)
+        .readPartitionedMoR(spark, tbl, "event_type", 3L)
         .select("event_id").collect().map(_.getLong(0)).toSet
       assert(ids == Set(10L, 20L, 3L),
         "each writer's overwrite and the untouched partition must all serve")
@@ -1072,7 +1094,7 @@ class ManifestTableSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft-cpc2")
     try {
       val tbl = s"$out/tbl"
-      ManifestTable.publishPartitioned(
+      ManifestTable.appendPartitionedDelta(
         Seq((1L, "a", 1.0), (2L, "b", 2.0))
           .toDF("event_id", "event_type", "value"),
         tbl, 1L, "event_type")
@@ -1101,7 +1123,7 @@ class ManifestTableSpec extends SparkSpec {
         "event_type", Seq("a"), "wc", head)
         .contains(ManifestTable.PartitionCommit(3L, 0)))
       val ids = ManifestTable
-        .readPartitionedVersion(spark, tbl, "event_type", 3L)
+        .readPartitionedMoR(spark, tbl, "event_type", 3L)
         .select("event_id").collect().map(_.getLong(0)).toSet
       assert(ids == Set(31L, 2L), "the serialized overwrite must win cleanly")
     } finally graft.Scratch.rmTree(out.toFile)
@@ -1140,8 +1162,8 @@ class ManifestTableSpec extends SparkSpec {
       assert(served() == Map(1L -> 100.0, 3L -> 3.0))
       // compaction applies upserts + tombstones physically; the
       // tombstone row must be GONE from the files, not just masked
-      ManifestTable.compactPartitionedMoRKeyed(spark, tbl, 4L,
-        "event_type", "event_id")
+      ManifestTable.compactPartitionedMoR(spark, tbl, 4L, "event_type",
+        keyCol = Some("event_id"))
       assert(served() == Map(1L -> 100.0, 3L -> 3.0))
       assert(spark.read.parquet(s"$tbl/data/v4").count() == 2L,
         "compaction must drop tombstoned rows physically")
@@ -1149,45 +1171,6 @@ class ManifestTableSpec extends SparkSpec {
       assert(ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
         == Seq(1L, 2L, 3L))
       assert(served() == Map(1L -> 100.0, 3L -> 3.0))
-    } finally graft.Scratch.rmTree(out.toFile)
-  }
-
-  test("q330 txn protocol: tag-keyed idempotence across the crash window, versions CAS-allocated") {
-    val out = java.nio.file.Files.createTempDirectory("graft-txn")
-    try {
-      val tbl = s"$out/tbl"
-      def rows(ids: Seq[(Long, String, Double)]) =
-        ids.toDF("event_id", "event_type", "value")
-      def servedIds(): Set[Long] = {
-        val v = ManifestTable.currentVersion(spark, tbl).get
-        ManifestTable.readPartitionedTxn(spark, tbl, "event_type", v)
-          .select("event_id").collect().map(_.getLong(0)).toSet
-      }
-      assert(ManifestTable.appendDeltaTxn(
-        rows(Seq((1L, "a", 1.0))), tbl, "app", 0L, "event_type")
-        == ((1L, true)))
-      // batch 1 crashes AFTER its manifest commit, before the pointer
-      intercept[ManifestTable.InjectedCrash] {
-        ManifestTable.appendDeltaTxn(rows(Seq((2L, "b", 2.0))), tbl,
-          "app", 1L, "event_type", crashBeforePointer = true)
-      }
-      // data staged before metadata: the committed-but-unpointed v2 is
-      // already complete — a reader pinned to it would serve
-      assert(ManifestTable.readPartitionedTxn(spark, tbl, "event_type", 2L)
-        .count() == 2L)
-      // the replay finds the txn tag: same version back, no double rows,
-      // pointer completed
-      assert(ManifestTable.appendDeltaTxn(
-        rows(Seq((2L, "b", 2.0))), tbl, "app", 1L, "event_type")
-        == ((2L, false)))
-      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
-      assert(servedIds() == Set(1L, 2L))
-      // a second app's batch 0 is a DIFFERENT txn — it must commit,
-      // CAS-allocating v3 (no collision with app's batch numbering)
-      assert(ManifestTable.appendDeltaTxn(
-        rows(Seq((3L, "a", 3.0))), tbl, "app2", 0L, "event_type")
-        == ((3L, true)))
-      assert(servedIds() == Set(1L, 2L, 3L))
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
@@ -1216,11 +1199,11 @@ class ManifestTableSpec extends SparkSpec {
           catch { case t: Throwable => errs.add(t) }))
       ts.foreach(_.start()); ts.foreach(_.join())
       assert(errs.isEmpty, s"racing committers must not fail: $errs")
-      assert(ManifestTable.txnManifestVersions(spark, tbl)
+      assert(ManifestTable.manifestVersions(spark, tbl)
         == Seq(1L, 2L, 3L, 4L))
       val v = ManifestTable.currentVersion(spark, tbl).get
       assert(v == 4L)
-      val ids = ManifestTable.readPartitionedTxn(spark, tbl, "event_type", v)
+      val ids = ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v)
         .select("event_id").collect().map(_.getLong(0)).toSeq.sorted
       assert(ids == Seq(1L, 2L, 3L, 4L),
         "every row exactly once, whatever the interleaving")
@@ -1275,22 +1258,20 @@ class ManifestTableSpec extends SparkSpec {
       val tbl = s"$out/tbl"
       def rows(ids: Seq[(Long, String, Long)]) =
         ids.toDF("event_id", "event_type", "cents")
-      assert(ManifestTable.appendPartitionedDeltaWithStats(
-        rows(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))),
-        tbl, 1L, "event_type", "cents"))
-      assert(ManifestTable.readStatsManifest(spark, tbl, 1L)
+      def append(v: Long, ids: Seq[(Long, String, Long)],
+          statCol: Option[String] = Some("cents")) =
+        ManifestTable.appendPartitionedDelta(rows(ids), tbl, v, "event_type",
+          statCol = statCol)
+      assert(append(1L, Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))))
+      assert(ManifestTable.statsAt(spark, tbl, 1L)
         == Map("a" -> (2L, 30L), "b" -> (1L, 5L)))
-      assert(ManifestTable.appendPartitionedDeltaWithStats(
-        rows(Seq((4L, "a", 100L), (5L, "c", 7L))),
-        tbl, 2L, "event_type", "cents"))
+      assert(append(2L, Seq((4L, "a", 100L), (5L, "c", 7L))))
       // cumulative: a folds forward, untouched b carries, c appears
-      assert(ManifestTable.readStatsManifest(spark, tbl, 2L)
+      assert(ManifestTable.statsAt(spark, tbl, 2L)
         == Map("a" -> (3L, 130L), "b" -> (1L, 5L), "c" -> (1L, 7L)))
       // a replayed commit must not double-fold the stats
-      assert(!ManifestTable.appendPartitionedDeltaWithStats(
-        rows(Seq((4L, "a", 100L), (5L, "c", 7L))),
-        tbl, 2L, "event_type", "cents"))
-      assert(ManifestTable.readStatsManifest(spark, tbl, 2L)
+      assert(!append(2L, Seq((4L, "a", 100L), (5L, "c", 7L))))
+      assert(ManifestTable.statsAt(spark, tbl, 2L)
         == Map("a" -> (3L, 130L), "b" -> (1L, 5L), "c" -> (1L, 7L)))
       // metadata answer == physical scan answer, via the public reader
       val meta = ManifestTable.metadataAggregate(spark, tbl, 2L)
@@ -1303,9 +1284,16 @@ class ManifestTableSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSet
       assert(meta == scan)
-      // time travel: v1's stats file still serves v1's answer
+      // time travel: v1's manifest still serves v1's answer
       assert(ManifestTable.metadataAggregate(spark, tbl, 1L)
         .count() == 2L)
+      // a commit without stats leaves its partitions inexact: the
+      // metadata answer is refused rather than served stale
+      assert(append(3L, Seq((6L, "a", 1L)), statCol = None))
+      assert(ManifestTable.readManifest(spark, tbl, 3L).parts("b").stats
+        == Some((1L, 5L)))
+      intercept[IllegalArgumentException](
+        ManifestTable.metadataAggregate(spark, tbl, 3L))
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
@@ -1315,28 +1303,27 @@ class ManifestTableSpec extends SparkSpec {
       val tbl = s"$out/tbl"
       val base = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 5L))
         .toDF("event_id", "event_type", "cents")
-      ManifestTable.writeStatsManifest(spark, tbl, 1L,
-        Map("a" -> (2L, 30L), "b" -> (1L, 5L)))
-      ManifestTable.publishPosBase(base, tbl, 1L, "event_type")
+      assert(ManifestTable.appendPartitionedDelta(
+        ManifestTable.withRowIds(base), tbl, 1L, "event_type",
+        statCol = Some("cents")))
+      assert(ManifestTable.statsAt(spark, tbl, 1L)
+        == Map("a" -> (2L, 30L), "b" -> (1L, 5L)))
       // DELETE WHERE event_type = 'b' — wipes partition b entirely
-      val doomed = ManifestTable.readPositionMoRRaw(spark, tbl,
-          "event_type", 1L)
+      val doomed = ManifestTable.readPartitionedMoR(spark, tbl,
+          "event_type", 1L, rowIds = true)
         .filter(col("event_type") === "b")
-      ManifestTable.writeStatsManifest(spark, tbl, 2L,
-        Map("a" -> (2L, 30L), "b" -> (0L, 0L)))
-      ManifestTable.appendPositionDeletes(
-        doomed.select(col("event_type"), col("_src_version"), col("_pos")),
-        tbl, 2L, "event_type")
+      assert(ManifestTable.appendPositionDeletes(doomed, tbl, 2L,
+        "event_type", statCol = Some("cents")))
       // metadata keeps the exact (0, 0) row for the emptied partition;
       // the physical read simply has no group for it
-      assert(ManifestTable.readStatsManifest(spark, tbl, 2L)
+      assert(ManifestTable.statsAt(spark, tbl, 2L)
         == Map("a" -> (2L, 30L), "b" -> (0L, 0L)))
-      val phys = ManifestTable.readPositionMoR(spark, tbl, "event_type", 2L)
+      val phys = ManifestTable.readPartitionedMoR(spark, tbl, "event_type", 2L)
         .groupBy("event_type").agg(count(lit(1)).as("n"), sum("cents").as("s"))
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
         .toMap
       assert(phys == Map("a" -> (2L, 30L)))
-      assert(ManifestTable.readStatsManifest(spark, tbl, 2L)
+      assert(ManifestTable.statsAt(spark, tbl, 2L)
         .filter(_._2._1 > 0L) == phys)
     } finally graft.Scratch.rmTree(out.toFile)
   }
