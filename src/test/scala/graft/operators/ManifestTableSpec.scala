@@ -923,6 +923,142 @@ class ManifestTableSpec extends SparkSpec {
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
+  test("q324 primitive: idempotent partitioned append across every crash window") {
+    val out = java.nio.file.Files.createTempDirectory("graft-ppa")
+    try {
+      val tbl = s"$out/tbl"
+      def rows(ids: Seq[(Long, String, Double)]) =
+        ids.toDF("event_id", "event_type", "value")
+      def served() = ManifestTable.readPartitioned(spark, tbl, "event_type")
+        .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      // bootstrap commit
+      assert(ManifestTable.appendPartitionedIdempotent(
+        rows(Seq((1L, "a", 1.0), (2L, "b", 2.0))), tbl, 1L, "event_type"))
+      assert(served() == Map("a" -> 1L, "b" -> 1L))
+      // v2 crashes BETWEEN manifest write and pointer swap
+      intercept[ManifestTable.InjectedCrash] {
+        ManifestTable.appendPartitionedIdempotent(
+          rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type",
+          Some(ManifestTable.BeforePointer))
+      }
+      // readers still resolve v1; the manifest landed before the crash
+      assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
+      assert(served() == Map("a" -> 1L, "b" -> 1L))
+      // the replay detects the manifest, COMPLETES the swap, skips the
+      // write — rows are never doubled
+      assert(!ManifestTable.appendPartitionedIdempotent(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
+      assert(served() == Map("a" -> 2L, "b" -> 1L))
+      // untouched partition b is carried by REFERENCE to v1
+      assert(ManifestTable.readDeltaManifest(spark, tbl, 2L)
+        == Map("a" -> Seq(2L), "b" -> Seq(1L)))
+      // a second replay is a pure no-op
+      assert(!ManifestTable.appendPartitionedIdempotent(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(served() == Map("a" -> 2L, "b" -> 1L))
+      // after v3 commits, a late v2 replay must NOT move the pointer back
+      assert(ManifestTable.appendPartitionedIdempotent(
+        rows(Seq((4L, "c", 4.0))), tbl, 3L, "event_type"))
+      assert(!ManifestTable.appendPartitionedIdempotent(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(ManifestTable.currentVersion(spark, tbl).contains(3L))
+      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
+  test("q326 primitive: delta append across every crash window; compaction folds the splice") {
+    val out = java.nio.file.Files.createTempDirectory("graft-ppd")
+    try {
+      val tbl = s"$out/tbl"
+      def rows(ids: Seq[(Long, String, Double)]) =
+        ids.toDF("event_id", "event_type", "value")
+      def served() = {
+        val v = ManifestTable.currentVersion(spark, tbl).get
+        ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v)
+          .groupBy("event_type").agg(count(lit(1)).as("n")).collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      assert(ManifestTable.appendPartitionedDelta(
+        rows(Seq((1L, "a", 1.0), (2L, "b", 2.0))), tbl, 1L, "event_type"))
+      assert(served() == Map("a" -> 1L, "b" -> 1L))
+      // v2 crashes BETWEEN delta-manifest write and pointer swap
+      intercept[ManifestTable.InjectedCrash] {
+        ManifestTable.appendPartitionedDelta(
+          rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type",
+          Some(ManifestTable.BeforePointer))
+      }
+      assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
+      assert(served() == Map("a" -> 1L, "b" -> 1L))
+      // the replay detects the delta manifest, completes the swap, skips
+      assert(!ManifestTable.appendPartitionedDelta(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
+      assert(served() == Map("a" -> 2L, "b" -> 1L))
+      // partition a is now SPLICED from v1+v2; b served from v1 alone
+      assert(ManifestTable.readDeltaManifest(spark, tbl, 2L)
+        == Map("a" -> Seq(1L, 2L), "b" -> Seq(1L)))
+      // a second replay is a pure no-op
+      assert(!ManifestTable.appendPartitionedDelta(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(served() == Map("a" -> 2L, "b" -> 1L))
+      // a late v2 replay after v3 must not move the pointer back
+      assert(ManifestTable.appendPartitionedDelta(
+        rows(Seq((4L, "c", 4.0))), tbl, 3L, "event_type"))
+      assert(!ManifestTable.appendPartitionedDelta(
+        rows(Seq((3L, "a", 3.0))), tbl, 2L, "event_type"))
+      assert(ManifestTable.currentVersion(spark, tbl).contains(3L))
+      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
+      // compaction folds every partition to ONE serving version with
+      // identical totals (the q309 contract on the delta manifest)
+      ManifestTable.compactPartitionedMoR(spark, tbl, 4L, "event_type")
+      assert(ManifestTable.currentVersion(spark, tbl).contains(4L))
+      assert(served() == Map("a" -> 2L, "b" -> 1L, "c" -> 1L))
+      assert(ManifestTable.readDeltaManifest(spark, tbl, 4L)
+        == Map("a" -> Seq(4L), "b" -> Seq(4L), "c" -> Seq(4L)))
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
+  test("q330 txn protocol: tag-keyed idempotence across the crash window, versions CAS-allocated") {
+    val out = java.nio.file.Files.createTempDirectory("graft-txn")
+    try {
+      val tbl = s"$out/tbl"
+      def rows(ids: Seq[(Long, String, Double)]) =
+        ids.toDF("event_id", "event_type", "value")
+      def servedIds(): Set[Long] = {
+        val v = ManifestTable.currentVersion(spark, tbl).get
+        ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v)
+          .select("event_id").collect().map(_.getLong(0)).toSet
+      }
+      assert(ManifestTable.appendDeltaTxn(
+        rows(Seq((1L, "a", 1.0))), tbl, "app", 0L, "event_type")
+        == ((1L, true)))
+      // batch 1 crashes AFTER its manifest commit, before the pointer
+      intercept[ManifestTable.InjectedCrash] {
+        ManifestTable.appendDeltaTxn(rows(Seq((2L, "b", 2.0))), tbl,
+          "app", 1L, "event_type", Some(ManifestTable.BeforePointer))
+      }
+      // data staged before metadata: the committed-but-unpointed v2 is
+      // already complete — a reader pinned to it would serve
+      assert(ManifestTable.readPartitionedMoR(spark, tbl, "event_type", 2L)
+        .count() == 2L)
+      // the replay finds the txn tag: same version back, no double rows,
+      // pointer completed
+      assert(ManifestTable.appendDeltaTxn(
+        rows(Seq((2L, "b", 2.0))), tbl, "app", 1L, "event_type")
+        == ((2L, false)))
+      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
+      assert(servedIds() == Set(1L, 2L))
+      // a second app's batch 0 is a DIFFERENT txn — it must commit,
+      // CAS-allocating v3 (no collision with app's batch numbering)
+      assert(ManifestTable.appendDeltaTxn(
+        rows(Seq((3L, "a", 3.0))), tbl, "app2", 0L, "event_type")
+        == ((3L, true)))
+      assert(servedIds() == Set(1L, 2L, 3L))
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
   test("every partitioned commit path survives an injected crash") {
     import ManifestTable.{BeforeManifest, BeforePointer, CrashPoint, Entry}
     def rows(n: Int) = (n match {
