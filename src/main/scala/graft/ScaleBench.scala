@@ -27,260 +27,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
-  private val measured = Seq(
-    "q41_ngram_jaccard", "q42_minhash_signatures", "q43_lsh_candidates",
-    "q44_simhash", "q46_ann_lsh", "q53_ann_ivf_assign", "q54_ann_ivf_topk",
-    // round 4: the iterative component loop (shuffle-per-round), the
-    // two-pass BM25 scorer, and the simhash band join — all must grow
-    // ~linearly, not with pair count
-    "q57_bm25_topk", "q59_dedup_clusters", "q80_simhash_pairs",
-    "q87_ivf_kmeans",
-    // round 6: SemDeDup (within-cell pair cost Σ|cell|² ≈ n·√n) and the
-    // bucket-probed negative sampler (O(queries·probes·occupancy)) — both
-    // must track the IVF/LSH curves, not pair counts
-    "q110_semantic_dedup", "q116_negative_samples",
-    // fixed-point PageRank: k shuffle rounds over the candidate edge list
-    // — must grow with |E|, not with pair-path counts
-    "q122_pagerank",
-    // exact prefix-filtered Jaccard join: rare-first prefixes + length
-    // filter must keep candidates ~linear in docs, never all-pairs
-    "q141_prefix_join",
-    // round-7 additions — the round-6 heavy shapes the judge asked for
-    // scale rows on: per-user first-touch attribution (events), Kneser–Ney
-    // continuation counts (DISTINCT-collapsed bigram types), range-
-    // partitioned RFM deciles (the window-free NTILE), basket pair
-    // self-join (fan-out bounded by basket size), and BPE adjacent-pair
-    // counting (linear fan-out, vocab-bounded keys)
-    "q123_attribution", "q124_kn_continuation", "q96_rfm_decile",
-    "q100_basket_pairs", "q113_bpe_pairs",
-    // round-7 additions: the containment join (query-side prefix index —
-    // must stay linear in corpus postings), the KMV sketch (bottom-k per
-    // source, a bounded aggregate), the shard-shuffle manifest (per-shard
-    // window — shard count is the parallelism knob), and the dedup
-    // savings report (rides the q40 hash shuffle + the q59 cluster loop)
-    "q143_containment_join", "q145_kmv_distinct", "q146_shard_shuffle",
-    "q147_dedup_savings",
-    // round-8 additions (the round-7 queries that lacked scale rows):
-    // TPC-H Q3 shape (scan-pushed date windows + AQE joins + bounded
-    // top-10 — output fixed while inputs grow), the decorrelated
-    // nation-average subquery (customer-grain aggregate + 25-row
-    // broadcast — output grows with customers, compute with orders), and
-    // the weighted median (cumulative window over the domain-bounded
-    // price-cent grid, never raw rows)
-    "q148_shipping_priority", "q149_above_nation_avg", "q151_weighted_median",
-    // round-8 queries, measured the round they ship: the planning tier
-    // (constant-size sketches / bounded plan frames), the snapshot tier
-    // (fingerprint-grain joins), the index-quality tier (top-k-bounded
-    // rescoring), and the grid/window shapes
-    "q152_lateness_disordered", "q153_skew_plan", "q154_kmv_join_estimate",
-    "q155_ivf_recall_curve", "q156_snapshot_diff", "q157_bloom_semi_audit",
-    "q158_activity_islands", "q159_cm_sketch_audit", "q160_quota_sample",
-    "q161_histogram_drift", "q162_winsorized_mean", "q163_join_advisor",
-    "q164_incremental_refresh", "q165_matryoshka_audit",
-    // round-9 additions: the two round-8 post-recording queries (both
-    // calendar/day-grain window shapes — the ratio-≈1 claim, proven) and
-    // the three new round-9 queries: Q18 shape (AQE runtime broadcast of
-    // the having-filtered build side), the executed salt plan (broadcast
-    // plan frame + two-phase aggregate), and the watermark closure (the
-    // measurement pass + a ~24-micro-batch replay — floor-bound, the
-    // streaming analog of q101)
-    "q166_revenue_share", "q167_user_growth", "q168_big_customer_orders",
-    "q169_salted_plan_exec", "q170_watermark_closure",
-    // the anti-join tier (broadcast build side must stay bounded), the
-    // outer stream join (micro-batch floor-bound like q101/q170), and the
-    // temperature mix (bounded-heap picks + |strata|-row plan)
-    "q171_quiet_parts", "q172_stream_outer_join", "q173_temperature_mix",
-    // Q15 argmax: scan-pushed quarter window, 1-row max broadcast
-    "q174_top_supplier",
-    // round-9 TPC-H shapes: outer count-of-counts (output is the
-    // order-count histogram — fixed-size while inputs grow), the
-    // aggregate-join-back (per-part stats grow with parts, not lines),
-    // the semi+anti self-join pair (keyed on order — per-order groups
-    // stay constant-size per copy), the having-over-total (value table
-    // per part), and the market share (year-grain output)
-    "q175_order_count_distribution", "q176_small_quantity_revenue",
-    "q177_blocking_supplier", "q178_important_parts", "q179_market_share",
-    // round-9 pipeline ops: PQ (n·√n·(dim/m) encode), k-center (k linear
-    // passes), surprisal (vocab-keyed model join — vocab ×10 under the
-    // salted corpus), gram (n·d² with map-side collapse to d(d+1)/2 keys)
-    "q180_pq_audit", "q181_kcenter_coreset", "q182_doc_surprisal",
-    "q183_gram_audit",
-    // late round-9: Q20 nested-aggregate semi chain, the zone-map audit
-    // (bounded zone tables), the CDC struct-max fold (one aggregate),
-    // the checkpoint-resume stream (two-run micro-batch floor), Q19
-    // disjunctive residual, Q2 argmin-per-key, assortativity moments
-    "q184_excess_stock_suppliers", "q185_zonemap_audit", "q186_cdc_apply",
-    "q187_stream_checkpoint_resume", "q188_disjunctive_bands",
-    "q189_cheapest_supplier", "q190_degree_assortativity",
-    // round-9 TPC-H shapes, second batch: the Q4 semi (output fixed at 5
-    // priority rows), Q7/Q9 year-grain aggregates (output fixed while
-    // inputs grow), Q10 bounded top-20, Q12 2-row conditional counts,
-    // Q14 1-row ratio, and Q16 (grows with the part dim, not the fact —
-    // the DISTINCT pair collapse is the scale claim)
-    "q191_priority_pipeline", "q192_trade_volume", "q193_product_profit",
-    "q194_returned_items", "q195_priority_linestatus", "q196_promo_revenue",
-    "q197_supplier_diversity",
-    // Q1 multi-measure scan aggregate and Q6 scan-filter aggregate: both
-    // single-pass map-side-combinable shapes — ratio ≈ scan ratio
-    "q198_pricing_summary", "q199_forecast_revenue",
-    // shard plan rides one IVF assignment + a √n-bounded ranking window;
-    // context-length plan is a pure scan × |grid| broadcast; the join-order
-    // advisor is per-table aggregates + per-key count joins — compute
-    // grows with inputs, output stays 4 rows
-    "q200_index_shard_plan", "q201_context_length_plan",
-    "q202_join_order_advisor",
-    // incremental ingest probe (delta-bounded band lookups), the salted
-    // join execution (fact shuffle + 8x-replicated dim), the two-level
-    // prefix-sum histogram (grid-bounded windows), and the sampling
-    // certificate (two scan aggregates)
-    "q203_incremental_near_dup", "q204_salted_join_exec",
-    "q205_equi_depth_hist", "q206_sample_estimate_audit",
-    // gap-fill: output bounded by users x calendar span, windows at day grain
-    "q207_gap_fill_daily",
-    // round-10: executed join orders, range-shard audit, merge upsert,
-    // multi-source watermark (micro-batch floor-bound like q170)
-    "q208_join_order_exec", "q209_range_balanced_shards",
-    "q210_merge_upsert", "q211_multi_source_watermark",
-    "q212_join_strategy_exec",
-    // round-11: the privacy lattice trio (domain-bounded grids), the
-    // physical range write + zone-pruned scan (scan + bounded dir
-    // writes), and the two sketch-driven advisors (bottom-k heaps +
-    // scan aggregates — compute grows with input, output stays fixed)
-    "q213_k_anonymity", "q214_l_diversity", "q215_range_partitioned_write",
-    "q216_sketch_strategy_advisor", "q217_zone_pruned_scan",
-    "q218_t_closeness", "q219_sketch_join_order",
-    "q220_sketch_strategy_exec", "q221_anonymize_min_level",
-    "q222_bloom_strategy_exec", "q223_sketch_range_shards",
-    "q224_json_ingest_quarantine", "q225_schema_evolution",
-    // round-12 additions (the round-11 second batch the judge flagged as
-    // the evidence gap): the sampling/statistics tier (bounded-heap caps,
-    // grid/bounded-frame aggregates), the S-curve audit (rides the q141
-    // truth join — expect an output-bound ratio like q141's), BPE merge
-    // rounds (k bounded aggregates), the persisted-index trio (build
-    // cost grows with data, probe side dir-pruned), the encoding advisor
-    // (per-cluster-key windows), the sketch-ranked join execution, and
-    // the two streaming shapes (micro-batch floor-bound like q170/q187)
-    "q226_source_cap", "q227_pareto_frontier", "q228_bootstrap_ci",
-    "q229_group_estimate", "q230_lsh_s_curve", "q231_exactly_once_sink",
-    "q232_bpe_train", "q233_expectation_suite", "q234_session_window_stream",
-    "q235_persisted_ivf", "q236_encoding_advisor", "q237_bloom_index_lookup",
-    "q238_sketch_order_exec", "q239_inverted_index",
-    // round-12: the incremental index maintainers (delta-sized append +
-    // vocab/cell-grain merges riding a full build), the manifest-pointer
-    // publish (two full snapshot writes + metadata renames), and the
-    // streaming CDC upsert (micro-batch floor-bound like q231)
-    "q240_incremental_inverted", "q241_atomic_publish",
-    "q242_stream_cdc_upsert", "q243_incremental_ivf",
-    "q244_time_travel_vacuum", "q245_incremental_bloom",
-    "q247_pq_index", "q248_concurrent_commits",
-    "q249_change_feed", "q250_target_encoding",
-    "q251_seasonal_decompose", "q252_bpe_encode",
-    "q253_partition_evolution", "q254_merge_on_read",
-    "q255_rollup_pushdown", "q256_incremental_rollup",
-    "q257_incremental_components", "q258_residual_anomalies",
-    "q259_cuboid_routing", "q260_ks_drift", "q261_hilbert_cluster",
-    "q262_purged_cv", "q263_forget_user", "q264_multi_table_commit",
-    "q265_pit_join", "q266_mor_update", "q267_decayed_value_rank",
-    "q268_incremental_zonemap", "q269_layout_advisor",
-    "q270_yannakakis", "q271_recursive_closure", "q272_theta_setops",
-    "q273_rise_patterns", "q274_dp_release", "q275_cusum_changepoints",
-    "q276_loo_ablation", "q277_interleave_schedule", "q278_phrase_search",
-    "q279_dpp_star_join", "q280_leased_vacuum",
-    "q281_stream_index_maintenance", "q282_hll_rollup",
-    "q283_result_cache", "q284_index_intersection",
-    "q285_time_weighted_avg", "q286_wilson_ranking",
-    "q287_compact_vs_append", "q289_stream_manifest_tail",
-    "q290_branch_tags", "q291_roc_auc", "q292_calibration_bins",
-    "q293_chunk_dedup", "q294_gain_lift", "q295_string_zone_skip",
-    "q296_hll_native_agg", "q297_inc_string_zones",
-    "q298_orphan_gc", "q299_classifier_eval", "q301_mcc_eval",
-    "q300_curation_pipeline",
-    // round-14: intent-protected orphan GC (three publishes + two GC
-    // listings per rep — write-shaped like q298/q289) and the PR curve
-    // (q291's two-grain prefix; output grows with distinct cent scores)
-    "q302_safe_orphan_gc", "q303_pr_curve", "q304_manifest_checkpoint",
-    "q305_brier_score", "q306_partition_overwrite", "q307_cohens_kappa",
-    "q308_write_audit_publish", "q309_compact_partitioned",
-    // round-14 second wave: the ranking eval joins 2·|queries|·k top-k
-    // rows (its cost is the two index paths), Spearman/chi² are
-    // value-grain aggregates, rollback is metadata-plus-one-overwrite,
-    // and the report is ONE grain pass serving four metric families
-    "q310_ndcg_mrr", "q311_spearman", "q312_snapshot_rollback",
-    "q313_chi_square_drift", "q314_eval_report",
-    // grain maintenance (one persisted-artifact write + merge) and the
-    // streamed report (micro-batch floor + per-trigger state folds)
-    "q315_inc_eval_report", "q316_stream_eval_report",
-    // hybrid fusion: df-capped postings-join lexical arm + IVF arm
-    "q317_hybrid_rrf",
-    // round-15: the persisted ground truth (one fingerprint scan + an
-    // exact-arm build amortized across evals — carries the q310 exact
-    // shape, attributed) and the compaction-crossing change feed
-    // (per-step full-outer key diffs on the mapped reads)
-    "q318_persisted_ground_truth", "q319_compaction_change_feed",
-    // the multi-config eval (one exact-arm build + one deepest-probe
-    // candidate pass shared by all configs) and incremental GT
-    // maintenance (delta-term scoring vs the |Q|·|C| rebuild)
-    "q320_multi_probe_eval", "q321_incremental_ground_truth",
-    // filtered search: three strategies sharing ONE cell-probe pass,
-    // plus the exact filtered baseline arm
-    "q322_filtered_ann",
-    // duplicated spans: linear shingling + one shingle-grain df shuffle +
-    // per-doc island windows over duplicated offsets only
-    "q323_duplicated_spans",
-    // partitioned streaming ingest: 3 fixed micro-batches whose
-    // read-merge-write cost scales with the touched partitions' data
-    "q324_stream_partitioned_ingest",
-    // cluster-safe split audit: rides the q59 cluster labels + two
-    // cluster-grain aggregates
-    "q325_cluster_safe_split",
-    // round-16: merge-on-read streaming ingest (3 fixed micro-batches,
-    // write bytes ∝ delta), concurrent partitioned commits (5 commits +
-    // staged renames, data written once per writer), and the pipeline's
-    // cluster-keyed split (q300 stages + q59 labels + the leakage audit)
-    "q326_stream_mor_ingest", "q327_concurrent_partition_commits",
-    "q328_curated_cluster_split",
-    // keyed MoR upserts/tombstones: O(delta) commits, key-grain merge
-    // read, compaction + reachability vacuum both ways
-    "q329_mor_upsert_read",
-    // stream + compactor racing the txn log: 4 CAS commits + one fold
-    "q330_stream_compact_race",
-    // position-delete MoR: 4 commits; delete commits write triples ∝
-    // |deleted rows|, reads apply them as a broadcast anti-join (no
-    // base shuffle), the compaction fold is the data-proportional part
-    "q331_position_delete_mor",
-    // field-id evolution: 3 batch writes (data-proportional) + 2
-    // spliced head reads; evolution itself is one metadata file
-    "q332_field_id_evolution",
-    // storage-partitioned join: 2 publishes + |event_type| join
-    // branches (fixed fan-out), per-branch broadcast of the dim slice
-    "q333_colocated_partition_join",
-    // backfill + 2 live micro-batches into the txn log: 3 commit
-    // floors fixed at every scale; the backfill write is the
-    // data-proportional part
-    "q334_backfill_stream_handoff",
-    // commit-time stats: 3 delta commits each folding an O(|parts|)
-    // batch aggregate; the metadata read is O(|parts|) at any scale —
-    // the in-plan physical recount is the data-proportional part
-    "q335_metadata_count",
-    // stats through position deletes: q331's 4 commits + the negative
-    // folds (the doomed-row scans are the data-proportional part; each
-    // fold itself is O(|parts|) metadata)
-    "q336_metadata_stats_deletes",
-    // round-14 coverage sweep: carried event/document/embedding queries
-    // whose primary input scales with the 10× blow-up — measured to
-    // extend the zero-failure evidence past 220 queries (streaming and
-    // bank-CSV queries stay out: their inputs don't scale here)
-    "q60_events_hourly", "q61_sessionize", "q62_asof_join",
-    "q63_pivot_counts", "q72_range_join", "q76_window_suite",
-    "q85_exact_median", "q102_histogram", "q104_rarity",
-    "q106_outlier_fence", "q107_benford", "q108_funnel",
-    "q109_retention", "q126_markov_transitions", "q127_robust_spread",
-    "q132_active_users", "q133_spend_trend", "q136_hourly_bursts",
-    "q138_quantile_suite", "q39_vocab_topk", "q48_lang_id",
-    "q50_token_counts", "q55_contamination", "q56_quality_filter",
-    "q86_tfidf_terms", "q91_repetition", "q105_pack_sequences",
-    "q120_ngram_novelty", "q129_vocab_coverage", "q58_label_centroids",
-    "q97_int8_quant", "q131_embedding_audit")
+  /** The queries declared with `scale = true`, in registry order. */
+  private val measured = SparkEntry.registry.filter(_.scale).map(_.name)
 
   private def scaleDocs(spark: SparkSession, base: String, copies: Int): DataFrame = {
     val docs = graft.sources.TestData.documents(spark, base)

@@ -1,5181 +1,52 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.functions.OracleSafe._
-import graft.operators.{BankEtl, Bucketing, ColocatedJoin, DataQuality, Dedup, Events, FieldIdTable, Funnel, Graph, ManifestTable, Multimodal, Packing, Planning, Privacy, Profile, Sampling, Scd, Segmentation, Similarity, Skew, Snapshot, TextAnalysis, WarehouseSink, ZOrder}
-import graft.oracle.BankOracle
-import graft.sources.{BankAdapter, CsvSource, TestData}
-import graft.streaming.EventStream
+import graft.queries.{Compute, Query, StarSchema, Streaming, Writers}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's query contract — see SURVEY.md §7.
   *
   * Each entry in [[queries]] exercises one operator block from SURVEY.md §2
   * (IDs in the name), with a matching DuckDB oracle in [[oracleSql]].
   * Results are fully deterministic: decimal money, explicit ORDER BY,
-  * explicit tie-breaks.
+  * explicit tie-breaks. Both maps are derived from the [[Query]] records
+  * of the four families in `graft.queries`.
   */
 object SparkEntry {
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The monthly spend trend exercises the whole engine: adapter → cleaning
-    * → classifier → surrogate keys → fact assembly → dashboard aggregate.
+  /** Flagship query on the sf0.001 testdata; its caller smoke-checks
+    * rows > 0. The monthly spend trend exercises the whole engine:
+    * adapter → cleaning → classifier → surrogate keys → fact assembly →
+    * dashboard aggregate. A method, not a function value, so reflective
+    * callers keep finding `entry(SparkSession)`; it is a map lookup.
     */
   def entry(spark: SparkSession): DataFrame =
     queries("q29_dash_trend")(spark, "/root/testdata/sf0.001")
+
+  /** Every declared query; a name declared twice fails here rather than
+    * silently shadowing the earlier query.
+    */
+  val registry: Seq[Query] = {
+    val all = StarSchema.queries ++ Compute.queries ++ Writers.queries ++
+      Streaming.queries
+    val twice = all.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(twice.isEmpty,
+      s"queries declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    all
+  }
 
   /** Every query bootstraps the session first ([[graft.plans.GraftRuntime]])
     * so the custom operators plan on a caller-provided session that was
     * built without GraftExtensions.
     */
-  /** FD audit spec shared by the q137 query and its oracle (one list, no
-    * drift): the key FD holds by construction; the other two are expected
-    * to be violated — the audit reports, it does not assert.
-    */
-  private val fdSpecs: Seq[(String, String, String)] = Seq(
-    ("o_custkey_to_priority", "o_custkey", "o_orderpriority"),
-    ("o_orderdate_to_status", "o_orderdate", "o_orderstatus"),
-    ("o_orderkey_to_custkey", "o_orderkey", "o_custkey"))
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
-      name -> { (s: SparkSession, dir: String) =>
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
         graft.plans.GraftRuntime.ensure(s)
-        fn(s, dir)
+        q.build(s, dir)
       }
-    }
+    }.toMap
 
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // S1/P3/P5: parquet scan with filter + projection pushed into the scan.
-    "q01_scan_filter_project" -> { (s, dir) =>
-      TestData.lineitem(s, dir)
-        .filter(col("l_shipdate") < lit("1997-01-01").cast("timestamp") && col("l_quantity") > 45)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          moneyOut(money(col("l_extendedprice"))).as("price"))
-        // (l_orderkey, l_linenumber) is NOT unique in this data (linenumber
-        // is random) — price completes the total order over the output
-        .orderBy("l_orderkey", "l_linenumber", "price")
-    },
-
-    // A4/A5/A7 + P6: partial+final hash aggregation with exact decimal sums.
-    "q02_agg_groupby" -> { (s, dir) =>
-      TestData.lineitem(s, dir)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          moneyOut(sum(money(col("l_quantity"))).cast("decimal(18,2)")).as("sum_qty"),
-          moneyOut(sum(money(col("l_extendedprice"))).cast("decimal(18,2)")).as("sum_base_price"),
-          moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .cast("decimal(18,2)")).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-
-    // O2/O3: top-k — Spark plans TakeOrderedAndProject (no full sort at scale).
-    "q03_topk" -> { (s, dir) =>
-      TestData.lineitem(s, dir)
-        .join(TestData.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand")
-        .agg(moneyOut(sum(money(col("l_extendedprice"))).cast("decimal(18,2)")).as("total_revenue"))
-        .orderBy(desc("total_revenue"), asc("p_brand"))
-        .limit(5)
-    },
-
-    // J1/P2-pattern: inner equi join + θ-filter on columns of both sides.
-    "q04_join_theta_filter" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .join(TestData.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .filter(col("o_totalprice") > col("c_acctbal"))
-        .select(col("o_orderkey"), col("o_custkey"),
-          moneyOut(money(col("o_totalprice"))).as("price"),
-          moneyOut(money(col("c_acctbal"))).as("acctbal"))
-        .orderBy("o_orderkey")
-    },
-
-    // J2: left-semi join (EXISTS).
-    "q05_semi_join" -> { (s, dir) =>
-      TestData.customer(s, dir)
-        .join(TestData.orders(s, dir), col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    },
-
-    // Anti join (NOT EXISTS) — the orphan-check primitive (SURVEY.md §7.4-8):
-    // customers with no urgent order (every customer has SOME order in this
-    // data, so the anti-join runs against a filtered build side).
-    "q06_anti_join" -> { (s, dir) =>
-      TestData.customer(s, dir)
-        .join(TestData.orders(s, dir).filter(col("o_orderpriority") === "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-        .orderBy("c_custkey")
-    },
-
-    // J4-pattern: broadcast dictionary lookup chain.
-    "q07_lookup_join" -> { (s, dir) =>
-      TestData.supplier(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(TestData.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .select("s_suppkey", "s_name", "n_name", "r_name")
-        .orderBy("s_suppkey")
-    },
-
-    // O4: UNION ALL by name.
-    "q08_union" -> { (s, dir) =>
-      val o = TestData.orders(s, dir)
-      o.filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey"), col("o_orderpriority").as("priority"))
-        .unionByName(
-          o.filter(col("o_orderpriority") === "5-LOW")
-            .select(col("o_orderkey"), col("o_orderpriority").as("priority")))
-        .orderBy("o_orderkey", "priority")
-    },
-
-    // A1/A3: multi-column hash distinct.
-    "q09_distinct" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .select("o_orderstatus", "o_orderpriority").distinct()
-        .orderBy("o_orderstatus", "o_orderpriority")
-    },
-
-    // A2: deterministic keep-first via ranking window.
-    "q10_keep_first" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      TestData.orders(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("o_custkey"), col("o_orderkey").as("first_orderkey"),
-          col("o_orderdate").as("first_orderdate"))
-        .orderBy("o_custkey")
-    },
-
-    // Analytic window: running total + rank per partition.
-    "q11_window_running" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      TestData.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          moneyOut(sum(money(col("o_totalprice")))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("decimal(18,2)")).as("cum_spent"),
-          row_number().over(w).as("order_seq"))
-        .orderBy("o_custkey", "order_seq")
-    },
-
-    // The rest of the analytic-window family over one pass: ranking
-    // (dense_rank), distribution (ntile, percent_rank — exact double
-    // division of two ints), and offset (lag delta). One shuffle on the
-    // partition key serves all five functions.
-    "q76_window_suite" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-      TestData.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          dense_rank().over(w).as("drank"),
-          ntile(4).over(w).as("quartile"),
-          percent_rank().over(w).as("prank"),
-          moneyOut(coalesce(
-            money(col("o_totalprice")) - lag(money(col("o_totalprice")), 1).over(w),
-            lit(0).cast("decimal(18,2)"))).as("delta_prev"))
-        .orderBy("o_custkey", "o_orderkey")
-    },
-
-    // Exact distributed median per group by POSITIONAL selection: pick
-    // the middle element(s) with a total-order row_number, then
-    // (min+max)/2 of the one or two picked values — no interpolation
-    // formula to disagree on between engines. (At 100 TB you'd reach for
-    // approx_percentile; this is the exact twin that validates it.)
-    "q85_exact_median" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val byType = Window.partitionBy("event_type")
-      val w = byType.orderBy("value", "event_id")
-      TestData.events(s, dir)
-        .select(col("event_type"), col("value"), col("event_id"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(byType))
-        // middle positions rn ∈ {floor((n+1)/2), floor(n/2)+1}: rn*2-n is
-        // 1 for odd n (single middle), {0, 2} for even n (both middles)
-        .filter((col("rn") * 2 - col("n")).isin(0, 1, 2))
-        .groupBy("event_type")
-        .agg(((min("value") + max("value")) / 2).as("median"))
-        .orderBy("event_type")
-    },
-
-    // Approximate distinct (HyperLogLog++): the oracle cannot reproduce
-    // Spark's sketch, so the CONTRACT is what gets hash-checked — the
-    // estimate must land within 5% of exact (rsd 0.01, so a 5-sigma
-    // bound; deterministic for a fixed dataset — HLL has no RNG).
-    "q75_approx_distinct" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_exact"),
-          approx_count_distinct(col("user_id"), 0.01).as("approx"))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("approx") - col("n_exact")).cast("double") / col("n_exact")
-            <= 0.05).as("within_5pct"))
-        .orderBy("event_type")
-    },
-
-    // Hierarchical aggregate: ROLLUP(year, month).
-    "q12_rollup" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .rollup(year(col("o_orderdate")).as("y"), month(col("o_orderdate")).as("m"))
-        .agg(moneyOut(sum(money(col("o_totalprice"))).cast("decimal(18,2)")).as("total"))
-        .orderBy(asc_nulls_first("y"), asc_nulls_first("m"))
-    },
-
-    // Set operations: INTERSECT / EXCEPT (distinct semantics).
-    "q13_setops" -> { (s, dir) =>
-      val c = TestData.customer(s, dir)
-      val rich = c.filter(col("c_acctbal") > 5000).select("c_mktsegment")
-      val poor = c.filter(col("c_acctbal") < 0).select("c_mktsegment")
-      rich.intersect(poor).withColumn("op", lit("both"))
-        .unionByName(rich.except(poor).withColumn("op", lit("rich_only")))
-        .orderBy("op", "c_mktsegment")
-    },
-
-    // Hierarchical aggregate: CUBE over two dimensions.
-    "q14_cube" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .cube(col("o_orderstatus").as("st"), col("o_orderpriority").as("pri"))
-        .agg(moneyOut(sum(money(col("o_totalprice"))).cast("decimal(18,2)")).as("total"),
-          count(lit(1)).as("n"))
-        .orderBy(asc_nulls_first("st"), asc_nulls_first("pri"))
-    },
-
-    // Statistical aggregates: exact interpolated median over decimal money.
-    "q15_stats" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .groupBy("o_orderpriority")
-        .agg(
-          count(lit(1)).as("n"),
-          moneyOut(min(money(col("o_totalprice")))).as("min_price"),
-          moneyOut(max(money(col("o_totalprice")))).as("max_price"),
-          // moneySql is valid Spark SQL too — one fragment, two engines
-          expr(s"percentile(CAST(${moneySql("o_totalprice")} AS DOUBLE), 0.5)")
-            .as("median_price"))
-        .orderBy("o_orderpriority")
-    },
-
-    // Distinct aggregation (expand + two-phase under the hood).
-    "q16_count_distinct" -> { (s, dir) =>
-      TestData.lineitem(s, dir)
-        .groupBy("l_returnflag")
-        .agg(countDistinct(col("l_suppkey")).as("n_suppliers"),
-          countDistinct(col("l_partkey")).as("n_parts"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag")
-    },
-
-    // Generator + spine: a continuous date dimension from sequence/explode,
-    // left-joined to the data (the classic gap-free time axis).
-    "q17_date_spine" -> { (s, dir) =>
-      val o = TestData.orders(s, dir)
-      val bounds = o.agg(min(to_date(col("o_orderdate"))).as("lo"),
-        max(to_date(col("o_orderdate"))).as("hi"))
-      val spine = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 DAY"))).as("day"))
-      val daily = o.groupBy(to_date(col("o_orderdate")).as("day"))
-        .agg(count(lit(1)).as("n_orders"))
-      spine.join(daily, Seq("day"), "left")
-        .select(col("day"), coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-        .orderBy("day")
-    },
-
-    // ---- Bank warehouse (SURVEY.md §2 parity): cleaning J1-J3/P2/P4,
-    // dims D1-D12/A1-A3, fact J5-J9, dashboards A4-A6/O1-O3/D14.
-    "q20_bank_clean_accounts" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).cleanAccounts.orderBy("AccountID")
-    },
-    "q21_bank_clean_customers" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).cleanCustomers.orderBy("CustomerID")
-    },
-    "q22_bank_clean_transactions" -> { (s, dir) =>
-      // Amount stays DECIMAL inside the warehouse; DOUBLE only at this boundary
-      BankEtl.buildCached(s, dir).cleanTransactions
-        .withColumn("Amount", moneyOut(col("Amount")))
-        .orderBy("TransactionID")
-    },
-    "q23_dim_customer" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).dimCustomer.orderBy("Customer_Key")
-    },
-    "q24_dim_account" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).dimAccount.orderBy("Account_Key")
-    },
-    "q25_dim_merchant" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).dimMerchant.orderBy("Merchant_Key")
-    },
-    "q26_dim_location" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).dimLocation.orderBy("Location_Key")
-    },
-    "q27_dim_date" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).dimDate.orderBy("Date_Key")
-    },
-    "q28_fact_spending" -> { (s, dir) =>
-      BankEtl.buildCached(s, dir).fact
-        .withColumn("Amount_Spent", moneyOut(col("Amount_Spent")))
-        .orderBy("Transaction_Key")
-    },
-    // S2 with an oracle row: the MCC dictionary read from CSV (the
-    // reference's actual dictionary medium, etl.py:55) joined to the
-    // transactions — proves the CSV source feeds the classifier's join
-    // identically to the parquet-derived dictionary.
-    "q32_csv_mcc_enrich" -> { (s, dir) =>
-      BankAdapter.transactions(s, dir)
-        .join(broadcast(CsvSource.mccMapping(s, mccBrandsCsv)), Seq("MerchantName"))
-        .groupBy("Category")
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(col("Amount")).cast("decimal(18,2)")).as("total"))
-        .orderBy("Category")
-    },
-    // The SQL-text entry point (dashboard.py's literal surface): same
-    // dashboard, but through registerViews + spark.sql — Catalyst parses,
-    // analyzes, and optimizes the SQL string; the result must hash-match
-    // the same oracle as the DataFrame build.
-    "q33_sql_dash_top_categories" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.registerViews(w)
-      s.sql(BankEtl.DashboardSql.topCategories)
-    },
-    "q34_sql_dash_trend" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.registerViews(w)
-      s.sql(BankEtl.DashboardSql.trend)
-    },
-    "q35_sql_dash_age_groups" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.registerViews(w)
-      s.sql(BankEtl.DashboardSql.ageGroups)
-    },
-    // S4 with an oracle row: the full parquet warehouse write (dims +
-    // ym-partitioned fact) followed by a read-back aggregation over the
-    // partition column — the oracle computes the same rollup straight from
-    // the fact CTE, so a hash match proves the sink round-trips the data
-    // through the partition layout losslessly.
-    "q36_warehouse_roundtrip" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      val out = scratchDir("graft-q36").toString
-      WarehouseSink.write(w, out)
-      s.read.parquet(s"$out/Fact_Spending")
-        .groupBy("ym")
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(col("Amount_Spent")).cast("decimal(18,2)")).as("total"))
-        .orderBy("ym")
-    },
-    // S5 with an oracle row: every FK/PK constraint check as one lazy
-    // DataFrame; all-zero violation counts are themselves the asserted
-    // result, hash-matched against the oracle's anti-join/dup counts.
-    "q37_data_quality" -> { (s, dir) =>
-      DataQuality.checksDf(BankEtl.buildCached(s, dir))
-    },
-    "q29_dash_trend" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.dashTrend(w.fact, w.dimDate)
-    },
-    "q30_dash_top_categories" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.dashTopCategories(w.fact, w.dimMerchant)
-    },
-    "q31_dash_age_groups" -> { (s, dir) =>
-      val w = BankEtl.buildCached(s, dir)
-      BankEtl.dashAgeGroups(w.fact, w.dimCustomer)
-    },
-
-    // ---- LLM-data-pipeline operators: dedup, similarity, text, multimodal.
-    "q40_dedup_exact" -> { (s, dir) =>
-      Dedup.exact(TestData.documents(s, dir)).orderBy("text_hash")
-    },
-    "q53_ann_ivf_assign" -> { (s, dir) =>
-      Similarity.ivfAssign(TestData.embeddings(s, dir)).orderBy("vec_id")
-    },
-    // SemDeDup: IVF-cluster blocking + within-cell cosine domination.
-    "q110_semantic_dedup" -> { (s, dir) =>
-      Similarity.semanticDedup(TestData.embeddings(s, dir), threshold = 0.35)
-        .orderBy("vec_id")
-    },
-    // Contrastive-training negatives: hash-probed foreign LSH buckets.
-    "q116_negative_samples" -> { (s, dir) =>
-      Similarity.negativeSamples(TestData.embeddings(s, dir))
-        .orderBy("qid", "rank")
-    },
-    // Typed Aggregator (UDAF): per-label embedding centroid.
-    "q58_label_centroids" -> { (s, dir) =>
-      import s.implicits._
-      val quantized = TestData.embeddings(s, dir)
-        .select(col("label"),
-          transform(col("embedding"), x => quant(x)).as("q"))
-        .as[(Int, Seq[Long])]
-      quantized.groupByKey(_._1)
-        .mapValues(_._2)
-        .agg(graft.functions.VectorCentroid.toColumn.name("centroid"))
-        .toDF("label", "centroid")
-        .select(col("label"), posexplode(col("centroid")).as(Seq("d", "mean")))
-        .orderBy("label", "d")
-    },
-    "q55_contamination" -> { (s, dir) =>
-      TextAnalysis.contamination(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q56_quality_filter" -> { (s, dir) =>
-      TextAnalysis.qualityFilter(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Ranked retrieval over the corpus: stats broadcast + linear scoring
-    // pass + bounded-heap top-k. Query terms are fixed literals so the
-    // oracle computes the identical arithmetic.
-    "q57_bm25_topk" -> { (s, dir) =>
-      TextAnalysis.bm25(TestData.documents(s, dir), bm25Terms)
-    },
-    // Deterministic training-mix sampling: md5-hash coin per doc_id, so
-    // the subset is identical across runs, clusters, and engines — a pure
-    // filter on the scan, no shuffle.
-    "q38_stratified_sample" -> { (s, dir) =>
-      Sampling.stratifiedSample(TestData.documents(s, dir), sampleRates)
-        .orderBy("doc_id")
-    },
-    // Vocabulary building: corpus-global token frequencies, top 50.
-    "q39_vocab_topk" -> { (s, dir) =>
-      TextAnalysis.vocabTopK(TestData.documents(s, dir))
-    },
-    // Canonicalization pass: lowercase/strip/collapse, emitting the
-    // normalized identity hash.
-    "q78_text_normalize" -> { (s, dir) =>
-      TextAnalysis.normalized(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Keyword extraction: per-doc top TF-IDF terms, all-integer scoring,
-    // bounded top-k on the custom TopKPerKey operator.
-    "q86_tfidf_terms" -> { (s, dir) =>
-      TextAnalysis.tfidfTopTerms(TestData.documents(s, dir))
-        .orderBy("doc_id", "rank")
-    },
-    // Leakage-safe split: the coin is flipped on the near-dup cluster id,
-    // so paraphrase families never straddle train/test.
-    "q79_train_test_split" -> { (s, dir) =>
-      Sampling.leakageSafeSplit(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q54_ann_ivf_topk" -> { (s, dir) =>
-      Similarity.ivfTopK(TestData.embeddings(s, dir)).orderBy("qid", "rank")
-    },
-    // Index-quality closure: recall@k of the LSH index vs the exact
-    // baseline, per query.
-    "q77_ann_recall" -> { (s, dir) =>
-      Similarity.annRecall(TestData.embeddings(s, dir))
-    },
-    // IVF centroid refinement: two exact-integer Lloyd rounds over the
-    // seeded sample — real k-means, bit-identical across engines.
-    "q87_ivf_kmeans" -> { (s, dir) =>
-      Similarity.ivfKmeansCentroids(TestData.embeddings(s, dir))
-    },
-    "q41_ngram_jaccard" -> { (s, dir) =>
-      Dedup.ngramJaccardPairs(TestData.documents(s, dir), n = 3, threshold = 0.1)
-        .orderBy("doc_a", "doc_b")
-    },
-    "q42_minhash_signatures" -> { (s, dir) =>
-      Dedup.minhashSignatures(TestData.documents(s, dir)).orderBy("doc_id", "h")
-    },
-    "q43_lsh_candidates" -> { (s, dir) =>
-      Dedup.lshCandidates(TestData.documents(s, dir)).orderBy("doc_a", "doc_b")
-    },
-    // Pairs → clusters: connected components over the LSH candidate graph
-    // (iterative min-label propagation; the oracle is a recursive CTE).
-    // In-plan training-mix solver: feasible rates for a 3:1 target mix.
-    "q119_mixture_rates" -> { (s, dir) =>
-      Sampling.mixtureRates(TestData.documents(s, dir), Seq("src0" -> 3))
-        .orderBy("source")
-    },
-    // PMI-ranked adjacent-bigram collocations (log-free lift score).
-    "q117_collocations" -> { (s, dir) =>
-      TextAnalysis.collocations(TestData.documents(s, dir))
-    },
-    // Novelty curve: share of a doc's shingles no earlier doc contributed.
-    "q120_ngram_novelty" -> { (s, dir) =>
-      Dedup.ngramNovelty(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Per-source n-gram type/token diversity.
-    "q121_source_diversity" -> { (s, dir) =>
-      TextAnalysis.sourceDiversity(TestData.documents(s, dir)).orderBy("source")
-    },
-    // Quality-aware canonical pick: best doc per near-dup cluster.
-    "q118_canonical_pick" -> { (s, dir) =>
-      Dedup.canonicalByQuality(TestData.documents(s, dir)).orderBy("cluster_id")
-    },
-    // Fixed-point PageRank over the LSH candidate graph (exact BIGINT).
-    "q122_pagerank" -> { (s, dir) =>
-      Graph.pagerank(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // PageRank convergence audit: exact integer L1 residual per round.
-    "q142_pagerank_residuals" -> { (s, dir) =>
-      Graph.pagerankResiduals(TestData.documents(s, dir)).orderBy("round")
-    },
-    // First-order Markov transition matrix over per-user event sequences.
-    "q126_markov_transitions" -> { (s, dir) =>
-      Events.markovTransitions(TestData.events(s, dir))
-        .orderBy("prev_type", "next_type")
-    },
-    // Exact median + MAD per event type (robust location/scale).
-    "q127_robust_spread" -> { (s, dir) =>
-      Profile.robustSpread(TestData.events(s, dir)).orderBy("event_type")
-    },
-    // Overlapping sliding-window chunking of long docs (narrow-only plan).
-    "q128_chunk_docs" -> { (s, dir) =>
-      Packing.chunkDocs(TestData.documents(s, dir)).orderBy("doc_id", "chunk_idx")
-    },
-    // Per-doc OOV rate vs the in-plan top-V vocabulary (bounded broadcast).
-    "q129_vocab_coverage" -> { (s, dir) =>
-      TextAnalysis.vocabCoverage(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Cross-source near-dup overlap matrix (which feeds mirror which).
-    "q130_source_overlap" -> { (s, dir) =>
-      Dedup.sourceOverlap(TestData.documents(s, dir))
-        .orderBy("source_lo", "source_hi")
-    },
-    // EXACT Jaccard similarity join with recall-complete prefix filtering
-    // (the deterministic complement of the LSH candidate path).
-    "q141_prefix_join" -> { (s, dir) =>
-      Dedup.prefixJaccardJoin(TestData.documents(s, dir))
-        .orderBy("doc_a", "doc_b")
-    },
-    // EXACT containment join: which benchmark item leaked into which doc
-    // (query-side prefix filter, full-posting probe — never a broadcast).
-    "q143_containment_join" -> { (s, dir) =>
-      Dedup.containmentJoin(TestData.documents(s, dir))
-        .orderBy("bench_id", "corpus_id")
-    },
-    // Token-budget corpus mixing: exact integer water-filling level, small
-    // sources kept whole, large ones coin-sampled to the level.
-    "q144_corpus_mix" -> { (s, dir) =>
-      Sampling.corpusMix(TestData.documents(s, dir)).orderBy("source")
-    },
-    // KMV bottom-k distinct sketch per source, estimate hash-checked
-    // (not just the error contract — the sketch is engine-exact).
-    "q145_kmv_distinct" -> { (s, dir) =>
-      Dedup.kmvDistinct(TestData.documents(s, dir)).orderBy("source")
-    },
-    // Deterministic global shuffle + sharding: md5-coin permutation,
-    // map-side shard placement, order-sensitive per-shard checksums.
-    "q146_shard_shuffle" -> { (s, dir) =>
-      Sampling.shardShuffle(TestData.documents(s, dir)).orderBy("shard")
-    },
-    // Per-source token budget after exact and near-dup deduplication,
-    // consistent by construction with q40/q59's survivor rules.
-    "q147_dedup_savings" -> { (s, dir) =>
-      Dedup.dedupSavings(TestData.documents(s, dir)).orderBy("source")
-    },
-    // Embedding-quality audit: empty/zero vectors + exact norm stats.
-    "q131_embedding_audit" -> { (s, dir) =>
-      Similarity.embeddingAudit(TestData.embeddings(s, dir)).orderBy("label")
-    },
-    // DAU + trailing-7-day WAU via bounded-fanout sliding distinct.
-    "q132_active_users" -> { (s, dir) =>
-      Events.activeUsers(TestData.events(s, dir)).orderBy("day")
-    },
-    // Exact OLS spend slope per event type (drift detection, no ML lib).
-    "q133_spend_trend" -> { (s, dir) =>
-      Events.spendTrend(TestData.events(s, dir)).orderBy("event_type")
-    },
-    // Degree + triangles + clustering coefficient on the candidate graph.
-    "q134_triangle_stats" -> { (s, dir) =>
-      Graph.triangleStats(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Source-level TF-IDF top-k via the custom TopKPerKey operator.
-    "q135_source_keywords" -> { (s, dir) =>
-      TextAnalysis.sourceKeywords(TestData.documents(s, dir))
-        .orderBy("source", "rank")
-    },
-    // Hourly burst score vs trailing 24h window (range window on hours).
-    "q136_hourly_bursts" -> { (s, dir) =>
-      Events.hourlyBursts(TestData.events(s, dir)).orderBy("hour")
-    },
-    // Functional-dependency audit on orders (key FD holds; others don't).
-    "q137_fd_audit" -> { (s, dir) =>
-      DataQuality.fdAudit(TestData.orders(s, dir), fdSpecs).orderBy("fd")
-    },
-    // Exact percentile_disc suite per type, one window pass for all cuts.
-    "q138_quantile_suite" -> { (s, dir) =>
-      Profile.quantileSuite(TestData.events(s, dir)).orderBy("event_type")
-    },
-    // TPC-H Q5 shape: six-table star join, local-supplier revenue per
-    // region/nation. region+nation (bounded: 5/25 rows) are broadcast;
-    // the three data-sized joins are left to AQE (broadcast at test
-    // scale, shuffled co-partitioned on the cluster).
-    "q139_local_supplier_volume" -> { (s, dir) =>
-      val rn = TestData.nation(s, dir)
-        .join(broadcast(TestData.region(s, dir)),
-          col("n_regionkey") === col("r_regionkey"))
-      TestData.lineitem(s, dir)
-        .join(TestData.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(TestData.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(TestData.supplier(s, dir),
-          col("l_suppkey") === col("s_suppkey")
-            && col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(rn), col("s_nationkey") === col("n_nationkey"))
-        .groupBy("r_name", "n_name")
-        .agg(
-          moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .cast("decimal(18,2)")).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy("r_name", "n_name")
-    },
-    // Referential-integrity audit across the raw TPC-H feed: FK orphan
-    // counts (anti-joins over pruned key projections) + PK dup counts,
-    // one lazy unioned frame — the q37 shape for the analytics tables.
-    "q140_tpch_integrity" -> { (s, dir) =>
-      def orphans(name: String, child: DataFrame, ck: String,
-          parent: DataFrame, pk: String): DataFrame =
-        child.select(col(ck)).join(parent.select(col(pk)),
-            col(ck) === col(pk), "left_anti")
-          .agg(count(lit(1)).as("violations"))
-          .select(lit(name).as("check_name"), col("violations"))
-      def dups(name: String, df: DataFrame, keys: String*): DataFrame =
-        df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
-          .agg(sum(when(col("c") > 1, 1L).otherwise(0L)).as("violations"))
-          .select(lit(name).as("check_name"), col("violations"))
-      val (li, o, c, su, na, re) = (TestData.lineitem(s, dir),
-        TestData.orders(s, dir), TestData.customer(s, dir),
-        TestData.supplier(s, dir), TestData.nation(s, dir),
-        TestData.region(s, dir))
-      Seq(
-        orphans("lineitem.l_orderkey orphans", li, "l_orderkey", o, "o_orderkey"),
-        orphans("orders.o_custkey orphans", o, "o_custkey", c, "c_custkey"),
-        orphans("customer.c_nationkey orphans", c, "c_nationkey", na, "n_nationkey"),
-        orphans("supplier.s_nationkey orphans", su, "s_nationkey", na, "n_nationkey"),
-        orphans("nation.n_regionkey orphans", na, "n_regionkey", re, "r_regionkey"),
-        dups("orders pk dups", o, "o_orderkey"),
-        dups("customer pk dups", c, "c_custkey"),
-        dups("supplier pk dups", su, "s_suppkey"),
-        dups("lineitem pk dups", li, "l_orderkey", "l_linenumber"))
-        .reduce(_ unionByName _).orderBy("check_name")
-    },
-    // TPC-H Q3 shape: segment filter + a date window split across two
-    // tables, revenue per order, global top 10. Both date predicates are
-    // scan-pushed; the two data-sized joins go to AQE; the top-k is
-    // TakeOrderedAndProject (never a global sort). Ties on revenue break
-    // by l_orderkey so the kept set is a total order on any engine.
-    "q148_shipping_priority" -> { (s, dir) =>
-      val cut = lit("1998-06-01 00:00:00").cast("timestamp_ntz")
-      TestData.lineitem(s, dir).filter(col("l_shipdate") > cut)
-        .join(TestData.orders(s, dir).filter(col("o_orderdate") < cut),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(TestData.customer(s, dir)
-            .filter(col("c_mktsegment") === "BUILDING").select("c_custkey"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"),
-          (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100
-            + dayofmonth(col("o_orderdate"))).cast("int").as("order_ymd"),
-          col("o_orderpriority"))
-        .agg(moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .cast("decimal(18,2)")).as("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    },
-    // Correlated-subquery shape, decorrelated by hand: customers whose
-    // lifetime spend exceeds 2x their nation's per-customer average. The
-    // per-row subquery becomes one customer-grain aggregate reused on
-    // both sides (nation totals are a 25-row broadcast), and the
-    // comparison is cross-multiplied in exact BIGINT cents so no average
-    // is ever materialized as a float.
-    "q149_above_nation_avg" -> { (s, dir) =>
-      val spend = TestData.customer(s, dir)
-        .join(TestData.orders(s, dir), col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey", "c_nationkey")
-        .agg(coalesce(sum(quant(col("o_totalprice"), 100)), lit(0L)).as("cents"))
-      val nat = spend.groupBy("c_nationkey")
-        .agg(sum("cents").as("nation_cents"), count(lit(1)).as("n_cust"))
-      spend.join(broadcast(nat), Seq("c_nationkey"))
-        .filter(col("cents") * col("n_cust") > lit(2L) * col("nation_cents"))
-        .join(broadcast(TestData.nation(s, dir)),
-          col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name"),
-          (col("cents").cast("double") / lit(100.0)).as("spend"))
-        .orderBy("c_custkey")
-    },
-    // Watermark-lateness audit: the measured out-of-orderness distribution
-    // a streaming deployment sizes its watermark from (q64/q68/q84's knob).
-    "q150_lateness_audit" -> { (s, dir) =>
-      Events.latenessAudit(TestData.events(s, dir)).orderBy("event_type", "band")
-    },
-    // Same audit under an md5-permuted (worst-case disordered) arrival
-    // order, so every lateness band is exercised against the oracle —
-    // q150 on the ingest-ordered feed legitimately reports all on_time.
-    "q152_lateness_disordered" -> { (s, dir) =>
-      Events.latenessDisordered(TestData.events(s, dir)).orderBy("event_type", "band")
-    },
-    // Data-driven salting plan: per-key counts -> capped ceil-division salt
-    // fan-out (q70's manual salting turned into a measured decision).
-    "q153_skew_plan" -> { (s, dir) =>
-      Planning.skewPlan(TestData.events(s, dir), "event_type", 1500L)
-        .orderBy("event_type")
-    },
-    // Join-cardinality estimate from two constant-size KMV sketches over
-    // the click/view user-day key sets (q101's join, sized without running
-    // it), audited against the exact overlap.
-    "q154_kmv_join_estimate" -> { (s, dir) =>
-      val ev = TestData.events(s, dir)
-      def side(t: String) = ev.filter(col("event_type") === t)
-        .select((col("user_id") * 1000000L
-          + expr("ts_ns DIV 86400000000000")).as("key"))
-      Planning.kmvJoinOverlap(side("click"), side("view"), "key")
-    },
-    // Accuracy-vs-cost curve for the IVF index: recall@5 at probe depths
-    // 1/2/4, one candidate pass shared across depths.
-    "q155_ivf_recall_curve" -> { (s, dir) =>
-      Similarity.ivfRecallCurve(TestData.embeddings(s, dir))
-    },
-    // Truncated-embedding rank stability: Spearman rho between full and
-    // first-16-dim neighbor orders over each query's exact top-20.
-    "q165_matryoshka_audit" -> { (s, dir) =>
-      Similarity.matryoshkaRankAudit(TestData.embeddings(s, dir)).orderBy("qid")
-    },
-    // Content-addressed snapshot diff: per-(source, status) counts from a
-    // fingerprint-manifest full join over two derived pseudo-snapshots.
-    "q156_snapshot_diff" -> { (s, dir) =>
-      val (a, b) = Snapshot.snapshots(TestData.documents(s, dir))
-      Snapshot.diff(a, b).orderBy("source", "status")
-    },
-    // Bloom-filter semi-join pruning audit: events on purchase user-days,
-    // pruned by an in-plan-sized bloom over the purchase key set; the
-    // audit row measures exactly what the filter saved and what its false
-    // positives cost.
-    "q157_bloom_semi_audit" -> { (s, dir) =>
-      val ev = TestData.events(s, dir)
-      def ud = (col("user_id") * 1000000L
-        + expr("ts_ns DIV 86400000000000")).as("key")
-      Planning.bloomSemiAudit(
-        ev.filter(col("event_type") === "purchase").select(ud),
-        ev.select(ud), "key")
-    },
-    // Gaps-and-islands: per-user maximal consecutive-active-day streaks.
-    "q158_activity_islands" -> { (s, dir) =>
-      Events.activityIslands(TestData.events(s, dir))
-        .orderBy("user_id", "start_day")
-    },
-    // Count-Min sketch with audited overestimate for the exact top-20
-    // tokens — completes the sketch family (MG/KMV/HLL/KLL/Bloom/CM).
-    "q159_cm_sketch_audit" -> { (s, dir) =>
-      TextAnalysis.cmSketchAudit(TestData.documents(s, dir))
-        .orderBy(col("exact_cnt").desc, col("token"))
-    },
-    // Exact-quota uniform sample: the 25 smallest md5 coins per source.
-    "q160_quota_sample" -> { (s, dir) =>
-      Sampling.quotaSample(TestData.documents(s, dir), quota = 25)
-        .orderBy("source", "pick_rank")
-    },
-    // Snapshot-to-snapshot length-distribution drift, integer-exact L1.
-    "q161_histogram_drift" -> { (s, dir) =>
-      val (a, b) = Snapshot.snapshots(TestData.documents(s, dir))
-      Snapshot.histogramDrift(a, b).orderBy("source")
-    },
-    // Incremental view maintenance: snapshot A's aggregate + the row-level
-    // delta must equal the direct aggregate of snapshot B (the oracle).
-    "q164_incremental_refresh" -> { (s, dir) =>
-      val (a, b) = Snapshot.snapshots(TestData.documents(s, dir))
-      Snapshot.incrementalRefresh(a, b).orderBy("source")
-    },
-    // Exact weighted median (lower-median rule: first grid point where
-    // 2*cum >= total). The q85 trick generalized: collapse rows onto the
-    // (group, price-cent) grid FIRST — the cumulative window then runs
-    // over the bounded grid (distinct price points, domain-bounded at any
-    // corpus size), never over raw rows.
-    "q151_weighted_median" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val grid = TestData.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          quant(col("l_extendedprice"), 100).as("cents"))
-        .agg(sum(col("l_quantity").cast("long")).as("w"))
-      val cum = Window.partitionBy("flag").orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      grid
-        .withColumn("cum", sum("w").over(cum))
-        .withColumn("tot", sum("w").over(Window.partitionBy("flag")))
-        .filter(col("cum") * 2 >= col("tot"))
-        .groupBy("flag")
-        .agg(min("cents").as("mc"), min("tot").as("total_qty"))
-        .select(col("flag"),
-          (col("mc").cast("double") / lit(100.0)).as("weighted_median"),
-          col("total_qty"))
-        .orderBy("flag")
-    },
-    // Join-strategy advisor: measured (rows, bytes) per table -> the
-    // broadcast / shuffle_bloom / shuffle decision a planner wants.
-    "q163_join_advisor" -> { (s, dir) =>
-      Planning.joinAdvisor(Seq(
-        "region" -> TestData.region(s, dir),
-        "nation" -> TestData.nation(s, dir),
-        "customer" -> TestData.customer(s, dir),
-        "supplier" -> TestData.supplier(s, dir),
-        "part" -> TestData.part(s, dir),
-        "orders" -> TestData.orders(s, dir),
-        "lineitem" -> TestData.lineitem(s, dir),
-        "events" -> TestData.events(s, dir),
-        "documents" -> TestData.documents(s, dir),
-        "embeddings" -> TestData.embeddings(s, dir)))
-        .orderBy("table_name")
-    },
-    // Ratio-to-total window: each returnflag's share of its ship-month's
-    // revenue. Cent sums are exact; the ONE division per row divides
-    // integers both engines agree on. The share window reads the
-    // month-grain aggregate (bounded by the calendar), never raw rows.
-    "q166_revenue_share" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val monthly = TestData.lineitem(s, dir)
-        .groupBy(
-          (year(col("l_shipdate")) * 100 + month(col("l_shipdate"))).as("ym"),
-          col("l_returnflag").as("flag"))
-        .agg(sum(quant(col("l_extendedprice"), 100)).as("cents"))
-      monthly
-        .withColumn("month_cents", sum("cents").over(Window.partitionBy("ym")))
-        .select(col("ym"), col("flag"), col("cents"),
-          (col("cents").cast("double") / col("month_cents").cast("double"))
-            .as("share"))
-        .orderBy("ym", "flag")
-    },
-    // Cumulative-distinct growth curve: users are counted on their FIRST
-    // active day only (a per-user min), so the running total is an exact
-    // cumulative COUNT(DISTINCT) without distinct-state in the window —
-    // which runs over the day-grain frame (calendar-bounded, like q151's
-    // grid), never over events.
-    "q167_user_growth" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val firstDay = TestData.events(s, dir)
-        .groupBy("user_id")
-        .agg(min(expr("ts_ns DIV 86400000000000")).as("day"))
-      firstDay.groupBy("day").agg(count(lit(1)).as("new_users"))
-        .withColumn("cum_users",
-          sum("new_users").over(Window.orderBy("day")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .orderBy("day")
-    },
-    // Winsorized (p05/p95-clipped) mean price per returnflag — robust
-    // feature cleaning on the q151 grid: clip points come from the same
-    // cumulative window over the domain-bounded cent grid, the clipped
-    // sum is all-integer, and ONE division yields the mean.
-    "q162_winsorized_mean" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val grid = TestData.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          quant(col("l_extendedprice"), 100).as("cents"))
-        .agg(count(lit(1)).as("w"))
-      val cum = Window.partitionBy("flag").orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, 0)
-      val g = grid
-        .withColumn("cum", sum("w").over(cum))
-        .withColumn("tot", sum("w").over(Window.partitionBy("flag")))
-      val lo = g.filter(col("cum") * 20 >= col("tot"))
-        .groupBy("flag").agg(min("cents").as("lo_cents"))
-      val hi = g.filter(col("cum") * 20 >= col("tot") * 19)
-        .groupBy("flag").agg(min("cents").as("hi_cents"))
-      grid.join(broadcast(lo), Seq("flag")).join(broadcast(hi), Seq("flag"))
-        .groupBy(col("flag"), col("lo_cents"), col("hi_cents"))
-        .agg(sum(col("w")
-            * greatest(col("lo_cents"), least(col("hi_cents"), col("cents"))))
-          .as("clipped_cents"), sum("w").as("n"))
-        .select(col("flag"), col("lo_cents"), col("hi_cents"), col("n"),
-          (col("clipped_cents").cast("double")
-            / (col("n") * 100L).cast("double")).as("winsorized_mean"))
-        .orderBy("flag")
-    },
-    // TPC-H Q18 shape ("big customers"): a fact-scale groupBy whose
-    // HAVING-filtered output becomes the build side that prunes the same
-    // fact's orders — aggregate, then semi-join-like prune, then top-k.
-    // The build side is left to AQE deliberately: at this selectivity it
-    // converts to a runtime broadcast; at a scale where the filtered set
-    // outgrows the threshold it stays a shuffle join — exactly the
-    // decision q163's advisor measures. Top-100 is TakeOrderedAndProject
-    // (bounded heap), tie-broken by o_orderkey for a total order.
-    "q168_big_customer_orders" -> { (s, dir) =>
-      val big = TestData.lineitem(s, dir)
-        .groupBy("l_orderkey")
-        .agg(sum(col("l_quantity").cast("long")).as("sum_qty"))
-        .filter(col("sum_qty") > 250L)
-      TestData.orders(s, dir)
-        .join(big, col("o_orderkey") === col("l_orderkey"))
-        .join(TestData.customer(s, dir).select("c_custkey", "c_name"),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
-          (year(col("o_orderdate")) * 10000 + month(col("o_orderdate")) * 100
-            + dayofmonth(col("o_orderdate"))).cast("int").as("order_ymd"),
-          col("o_totalprice"), col("sum_qty"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(100)
-    },
-    // The q153 plan EXECUTED: the measured per-key salt fan-out drives a
-    // two-phase salted aggregate whose result must hash-match the plain
-    // groupBy (the oracle) — the salt only rewrites where rows meet.
-    "q169_salted_plan_exec" -> { (s, dir) =>
-      Planning.executeSkewPlan(TestData.events(s, dir), "event_type",
-          money(col("value")), saltFrom = col("event_id"),
-          targetRowsPerSalt = 1500L)
-        .select(col("event_type"), col("n"),
-          col("total").cast("decimal(18,2)").cast("double").as("total_value"))
-        .orderBy("event_type")
-    },
-    // TPC-H Q22/Q16 hybrid shape (anti-join tier): a measured scalar
-    // threshold (1.8x the average line quantity, cross-multiplied so no
-    // average is ever a float), an ANTI join against the parts that DO
-    // have a near-capacity line, and a brand rollup of the quiet rest.
-    // The dense-FK testdata makes the textbook "customers with no orders"
-    // empty, so the anti-join semantics are exercised where the data has
-    // real negatives. The threshold stats are a 1-row broadcast; the anti
-    // join's build side is the DISTINCT qualifying part-key set.
-    "q171_quiet_parts" -> { (s, dir) =>
-      val li = TestData.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"))
-      val stats = li.agg(sum("qty").as("sq"), count(lit(1)).as("cnt"))
-      val big = li.crossJoin(broadcast(stats))
-        .filter(col("qty") * 10L * col("cnt") > lit(18L) * col("sq"))
-        .select("l_partkey").distinct()
-      TestData.part(s, dir)
-        .join(big, col("p_partkey") === col("l_partkey"), "left_anti")
-        .groupBy(col("p_brand"))
-        .agg(count(lit(1)).as("n_parts"))
-        .orderBy("p_brand")
-    },
-    // Stream-stream LEFT OUTER interval join with sentinel-driven
-    // watermark finalization (the state semantics q101's inner join never
-    // exercises: null-padded rows emit only when the watermark proves no
-    // match can come).
-    "q172_stream_outer_join" -> { (s, dir) =>
-      EventStream.clickViewOuter(s, dir)
-    },
-    // Temperature-flattened (alpha = 1/2) training mix over languages:
-    // integer quotas from measured counts, filled by deterministic
-    // smallest-coin picks.
-    "q173_temperature_mix" -> { (s, dir) =>
-      Sampling.temperatureMix(TestData.documents(s, dir)).orderBy("lang")
-    },
-    // TPC-H Q15 shape (argmax with ties): quarterly revenue per supplier,
-    // then the supplier(s) AT the maximum — the "top view" pattern where
-    // the max is a 1-row broadcast back over the aggregate (never a global
-    // sort), and ties survive by construction (equality join on the exact
-    // decimal, no LIMIT 1 that would drop a tied supplier).
-    "q174_top_supplier" -> { (s, dir) =>
-      val lo = lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1998-04-01 00:00:00").cast("timestamp_ntz")
-      val rev = TestData.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .groupBy("l_suppkey")
-        .agg(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .cast("decimal(18,2)").as("rev"))
-      val mx = rev.agg(max("rev").as("mx"))
-      rev.crossJoin(broadcast(mx))
-        .filter(col("rev") === col("mx"))
-        .join(broadcast(TestData.supplier(s, dir).select("s_suppkey", "s_name")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          moneyOut(col("rev")).as("total_revenue"))
-        .orderBy("s_suppkey")
-    },
-    // TPC-H Q13 shape (count-of-counts): LEFT OUTER join with the filter
-    // INSIDE the join condition (customers keep their row even when every
-    // order is filtered away — a WHERE would silently turn the outer join
-    // inner), then a double aggregation: orders-per-customer, then
-    // customers-per-order-count. The second groupBy runs over one row per
-    // customer — tiny — so the plan cost is one fact shuffle + one
-    // broadcast-sized re-group.
-    "q175_order_count_distribution" -> { (s, dir) =>
-      TestData.customer(s, dir)
-        .join(TestData.orders(s, dir).filter(col("o_orderpriority") =!= "1-URGENT"),
-          col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    },
-    // TPC-H Q17 shape (aggregate-join-back on the same fact): per-part
-    // average line quantity feeds a filter on individual lines of that
-    // part (qty < 0.2 * avg, cross-multiplied to exact integers:
-    // 5*qty*cnt < sum). The per-part aggregate is orders of magnitude
-    // smaller than the fact, so its join back is broadcast-able; the brand
-    // dim filter broadcasts into both sides. One output row — Q17's
-    // "avg_yearly" with the division performed exactly once at the edge.
-    "q176_small_quantity_revenue" -> { (s, dir) =>
-      val parts = TestData.part(s, dir)
-        .filter(col("p_brand") === "Brand#13").select("p_partkey")
-      val li = TestData.lineitem(s, dir)
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-          money(col("l_extendedprice")).as("price"))
-      val perPart = li.groupBy("l_partkey")
-        .agg(sum("qty").as("sum_qty"), count(lit(1)).as("cnt_p"))
-      li.join(broadcast(perPart), Seq("l_partkey"))
-        .filter(col("qty") * 5L * col("cnt_p") < col("sum_qty"))
-        .agg(
-          (sum(col("price")).cast("decimal(18,2)").cast("double") / 7.0)
-            .as("avg_yearly"),
-          count(lit(1)).as("n_lines"))
-    },
-    // TPC-H Q21 shape (semi + anti self-joins on the fact): the supplier
-    // whose line shipped LAST in a multi-supplier order, with no other
-    // supplier tying that max — EXISTS(other supplier in order) AND NOT
-    // EXISTS(other supplier shipping >= me). Both self-joins are equi on
-    // l_orderkey with residual θ-conditions, so they shuffle once on the
-    // order key and never cartesian. Top-10 is a bounded heap.
-    "q177_blocking_supplier" -> { (s, dir) =>
-      val li = TestData.lineitem(s, dir)
-        .select("l_orderkey", "l_suppkey", "l_shipdate")
-      val other = li.select(col("l_orderkey").as("o2"), col("l_suppkey").as("s2"),
-        col("l_shipdate").as("d2"))
-      val last = li
-        .join(other, col("l_orderkey") === col("o2") && col("l_suppkey") =!= col("s2"),
-          "left_semi")
-        .join(other,
-          col("l_orderkey") === col("o2") && col("l_suppkey") =!= col("s2")
-            && col("d2") >= col("l_shipdate"), "left_anti")
-      last.groupBy("l_suppkey")
-        .agg(countDistinct(col("l_orderkey")).as("numwait"))
-        .join(broadcast(TestData.supplier(s, dir).select("s_suppkey", "s_name")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_name"), col("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(10)
-    },
-    // TPC-H Q11 shape (HAVING over a global scalar): per-part revenue from
-    // one region's suppliers, kept only when it exceeds 1/2000 of the
-    // regional total. The total is a 1-row broadcast; the comparison is
-    // cross-multiplied on exact decimal cents so no engine ever divides.
-    "q178_important_parts" -> { (s, dir) =>
-      val asia = TestData.supplier(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(TestData.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("s_suppkey")
-      val value = TestData.lineitem(s, dir)
-        .join(broadcast(asia), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey").as("partkey"))
-        .agg(sum(money(col("l_extendedprice"))).cast("decimal(18,2)").as("v"))
-      val total = value.agg(sum(col("v")).cast("decimal(20,2)").as("tot"))
-      value.crossJoin(broadcast(total))
-        .filter(col("v") * 2000 > col("tot"))
-        .select(col("partkey"), moneyOut(col("v")).as("value"))
-        .orderBy(col("value").desc, col("partkey"))
-    },
-    // TPC-H Q8 shape (market share): per order-year, the revenue fraction
-    // contributed by one nation's suppliers among orders placed by one
-    // region's customers. Conditional cent-exact sums; the share is ONE
-    // double division per year at the output boundary. Dims broadcast;
-    // the fact shuffles only for the orders and customer equi-joins.
-    "q179_market_share" -> { (s, dir) =>
-      val amerCust = TestData.customer(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(TestData.region(s, dir).filter(col("r_name") === "AMERICA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("c_custkey")
-      val suppNation = TestData.supplier(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      TestData.lineitem(s, dir)
-        .join(TestData.orders(s, dir).select("o_orderkey", "o_custkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(amerCust, col("o_custkey") === col("c_custkey"), "left_semi")
-        .join(broadcast(suppNation), col("l_suppkey") === col("s_suppkey"))
-        .select(year(col("o_orderdate")).as("o_year"),
-          money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("vol"),
-          col("supp_nation"))
-        .groupBy("o_year")
-        .agg(
-          sum(when(col("supp_nation") === "NATION_3", col("vol")).otherwise(lit(0)))
-            .cast("decimal(18,2)").as("nat"),
-          sum(col("vol")).cast("decimal(18,2)").as("tot"))
-        .select(col("o_year"),
-          (col("nat").cast("double") / col("tot").cast("double")).as("mkt_share"),
-          moneyOut(col("tot")).as("total_volume"))
-        .orderBy("o_year")
-    },
-    // Product-quantization distortion audit: per-subspace codebook
-    // utilization + exact integer reconstruction error.
-    "q180_pq_audit" -> { (s, dir) =>
-      Similarity.pqAudit(TestData.embeddings(s, dir))
-    },
-    // Farthest-point k-center coreset: greedy diverse seed selection with
-    // the coverage-radius curve, as one declarative k-round plan.
-    "q181_kcenter_coreset" -> { (s, dir) =>
-      Similarity.kcenterCoreset(TestData.embeddings(s, dir))
-    },
-    // Per-document unigram-LM surprisal (perplexity-filter core): integer
-    // floor-log2 model, one float division per doc at the edge.
-    "q182_doc_surprisal" -> { (s, dir) =>
-      TextAnalysis.docSurprisal(TestData.documents(s, dir))
-    },
-    // Exact Gram/covariance audit over the embedding corpus (whitening /
-    // dead-dimension pre-pass), upper triangle in exact BIGINT.
-    "q183_gram_audit" -> { (s, dir) =>
-      Similarity.gramAudit(TestData.embeddings(s, dir))
-    },
-    // TPC-H Q20 shape (nested aggregate → semi-join chain): suppliers
-    // holding more than 1/8 of a promo part's total flow (the fraction is
-    // chosen to make the predicate selective-but-nonempty at every SF). Two-level
-    // aggregation on the same fact (pair grain, then part grain), the
-    // part-grain frame broadcast back onto the pair grain, and the
-    // distinct qualifying suppliers semi-join into the supplier dim.
-    "q184_excess_stock_suppliers" -> { (s, dir) =>
-      val promo = TestData.part(s, dir)
-        .filter(col("p_type") === "PROMO").select("p_partkey")
-      val li = TestData.lineitem(s, dir)
-        .join(broadcast(promo), col("l_partkey") === col("p_partkey"))
-        .select(col("l_partkey"), col("l_suppkey"),
-          col("l_quantity").cast("long").as("qty"))
-      val perPair = li.groupBy("l_partkey", "l_suppkey")
-        .agg(sum("qty").as("qty_sp"))
-      val perPart = perPair.groupBy("l_partkey").agg(sum("qty_sp").as("qty_p"))
-      val excess = perPair.join(broadcast(perPart), Seq("l_partkey"))
-        .filter(col("qty_sp") * 8L > col("qty_p"))
-        .select("l_suppkey").distinct()
-      TestData.supplier(s, dir)
-        .join(excess, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .join(broadcast(TestData.nation(s, dir)),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("s_name"), col("n_name"))
-        .orderBy("s_suppkey")
-    },
-    // Zone-map pruning audit: measured data-skipping benefit of the
-    // natural key-range layout vs a date-clustered layout, per predicate.
-    "q185_zonemap_audit" -> { (s, dir) =>
-      Planning.zoneMapAudit(TestData.lineitem(s, dir))
-    },
-    // CDC apply: insert/update/delete log folded to final state by ONE
-    // struct-max aggregate (no window, no sort) with tombstone semantics.
-    "q186_cdc_apply" -> { (s, dir) =>
-      Scd.cdcApply(TestData.events(s, dir))
-    },
-    // Exactly-once checkpoint resume: two streaming runs, one checkpoint,
-    // one durable sink — hash-equality with the batch aggregate IS the
-    // restart-safety proof (any re-ingested file would double-count).
-    "q187_stream_checkpoint_resume" -> { (s, dir) =>
-      EventStream.checkpointResume(s, dir)
-    },
-    // TPC-H Q19 shape (disjunctive residual on an equi join): three
-    // OR'd brand/size/quantity bands — the join must stay a hash join on
-    // l_partkey with the OR evaluated as a residual, never a nested loop.
-    "q188_disjunctive_bands" -> { (s, dir) =>
-      val li = TestData.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-          money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("rev"))
-      val pt = TestData.part(s, dir).select("p_partkey", "p_brand", "p_size")
-      def band(brand: String, sizeHi: Int, qLo: Long, qHi: Long) =
-        col("p_brand") === brand && col("p_size").between(1, sizeHi) &&
-          col("qty").between(qLo, qHi)
-      li.join(broadcast(pt), col("l_partkey") === col("p_partkey") &&
-          (band("Brand#12", 15, 1L, 11L) || band("Brand#23", 25, 10L, 20L)
-            || band("Brand#34", 35, 20L, 30L)))
-        .agg(moneyOut(sum(col("rev")).cast("decimal(18,2)")).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    },
-    // TPC-H Q2 shape (argmin-per-key join-back): the cheapest EUROPE
-    // supplier per part by exact micro-cent unit price, picked by ONE
-    // struct-min aggregate (no window), ties to the smallest suppkey.
-    "q189_cheapest_supplier" -> { (s, dir) =>
-      val eur = TestData.supplier(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(TestData.region(s, dir).filter(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("s_suppkey", "s_name")
-      val li = TestData.lineitem(s, dir)
-        .join(broadcast(eur.select("s_suppkey")),
-          col("l_suppkey") === col("s_suppkey"), "left_semi")
-        .select(col("l_partkey"),
-          intDiv(quant(col("l_extendedprice"), 100) * lit(1000000L),
-            col("l_quantity").cast("long")).as("unit"),
-          col("l_suppkey"))
-      li.groupBy("l_partkey")
-        .agg(min(struct(col("unit"), col("l_suppkey"))).as("best"))
-        .select(col("l_partkey").as("partkey"),
-          col("best.l_suppkey").as("suppkey"),
-          col("best.unit").as("unit_microcents"))
-        .join(broadcast(eur), col("suppkey") === col("s_suppkey"))
-        .select("partkey", "suppkey", "s_name", "unit_microcents")
-        .orderBy("partkey")
-    },
-    // Degree assortativity of the near-dup candidate graph: one exact
-    // integer-moment aggregate, one float correlation at the edge.
-    "q190_degree_assortativity" -> { (s, dir) =>
-      Graph.degreeAssortativity(TestData.documents(s, dir))
-    },
-    // TPC-H Q4 shape (EXISTS → left-semi): order counts per priority for
-    // one quarter, kept only when at least one line of the order was
-    // returned (the testdata ships no commit/receipt dates — returnflag
-    // is the late-line stand-in). The date window pushes to the orders
-    // scan and the flag filter to the lineitem scan; the semi join
-    // carries only l_orderkey, so the shuffle moves one long column.
-    // Output is the 5-row priority histogram.
-    "q191_priority_pipeline" -> { (s, dir) =>
-      val lo = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1997-04-01 00:00:00").cast("timestamp_ntz")
-      TestData.orders(s, dir)
-        .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-        .join(TestData.lineitem(s, dir).filter(col("l_returnflag") === "R")
-            .select("l_orderkey"),
-          col("o_orderkey") === col("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    },
-    // TPC-H Q7 shape (two-nation trade volume): revenue flowing either
-    // direction between one nation pair, by ship year. The nation and
-    // supplier maps pre-filter to the pair and broadcast into the fact,
-    // so the "(s=A and c=B) or (s=B and c=A)" disjunction collapses to a
-    // residual supp≠cust check on two broadcast-carried strings. The
-    // customer map gets NO broadcast hint: unlike nation/supplier it
-    // grows with the customer dimension (~2/N of all customers), so Q7
-    // conventionally shuffles it at warehouse scale — AQE broadcasts it
-    // at bench scale where its measured size allows. Output 2×|years|.
-    "q192_trade_volume" -> { (s, dir) =>
-      val nat = TestData.nation(s, dir)
-        .filter(col("n_name").isin("NATION_3", "NATION_7"))
-      val supp = TestData.supplier(s, dir)
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("supp_nation"))
-      val cust = TestData.customer(s, dir)
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("n_name").as("cust_nation"))
-      TestData.lineitem(s, dir)
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(TestData.orders(s, dir).select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(cust, col("o_custkey") === col("c_custkey"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).as("l_year"))
-        .agg(moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .cast("decimal(18,2)")).as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    },
-    // TPC-H Q9 shape (product-type profit): per supplier nation per ship
-    // year, revenue minus a per-unit cost carried from the part dim (the
-    // testdata ships no partsupp — retailprice at a fixed 10% cost ratio
-    // stands in for ps_supplycost). Both cost and revenue stay cent-exact
-    // decimal until the output boundary; part and supplier-nation maps
-    // broadcast; the single fact shuffle is the (nation, year) aggregate.
-    "q193_product_profit" -> { (s, dir) =>
-      val parts = TestData.part(s, dir).filter(col("p_type") === "ECONOMY")
-        .select(col("p_partkey"), money(col("p_retailprice") * lit(0.1)).as("unit_cost"))
-      val suppNat = TestData.supplier(s, dir)
-        .join(broadcast(TestData.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      TestData.lineitem(s, dir)
-        .join(broadcast(parts), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(suppNat), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("nation"), year(col("l_shipdate")).as("o_year"))
-        .agg(moneyOut(
-          (sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            - sum(col("unit_cost") * col("l_quantity").cast("long")))
-            .cast("decimal(18,2)")).as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    },
-    // TPC-H Q10 shape (returned-item reporting): per-customer revenue
-    // from returned lines in one quarter's orders, top 20. The quarter
-    // filter pushes to the orders scan and the returnflag filter to the
-    // lineitem scan; the customer dim joins AFTER the aggregate collapses
-    // the fact to customer grain. Top-20 is a bounded heap with a unique
-    // key tie-break.
-    "q194_returned_items" -> { (s, dir) =>
-      val lo = lit("1996-10-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-      val rev = TestData.lineitem(s, dir).filter(col("l_returnflag") === "R")
-        .join(TestData.orders(s, dir)
-            .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-            .select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_custkey"))
-        .agg(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .cast("decimal(18,2)").as("rev"))
-      rev.join(TestData.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(TestData.nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
-        .select(col("c_custkey"), col("c_name"), col("n_name"),
-          moneyOut(col("rev")).as("revenue"), col("c_acctbal"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    },
-    // TPC-H Q12 shape (conditional two-way counts): per linestatus (the
-    // shipmode stand-in), how many lines shipped in one year belong to
-    // urgent/high-priority orders vs the rest. The orders side joins
-    // projected to (key, priority) only; the CASE sums are map-side
-    // combinable into a 2-row output.
-    "q195_priority_linestatus" -> { (s, dir) =>
-      val lo = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      TestData.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .join(TestData.orders(s, dir).select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_linestatus")
-        .agg(sum(when(high, lit(1L)).otherwise(lit(0L))).as("high_line_count"),
-          sum(when(high, lit(0L)).otherwise(lit(1L))).as("low_line_count"))
-        .orderBy("l_linestatus")
-    },
-    // TPC-H Q14 shape (promo revenue ratio): one month of lines, the part
-    // type broadcast in, conditional cent-exact sums, and ONE double
-    // division at the 1-row output boundary.
-    "q196_promo_revenue" -> { (s, dir) =>
-      val lo = lit("1997-03-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1997-04-01 00:00:00").cast("timestamp_ntz")
-      TestData.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi)
-        .join(broadcast(TestData.part(s, dir).select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey"))
-        .agg(
-          sum(when(col("p_type") === "PROMO",
-              money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .otherwise(lit(0).cast("decimal(18,2)")))
-            .cast("decimal(18,2)").as("p"),
-          sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .cast("decimal(18,2)").as("t"))
-        .select(
-          ((col("p").cast("double") * lit(100.0)) / col("t").cast("double"))
-            .as("promo_pct"),
-          moneyOut(col("p")).as("promo_revenue"),
-          moneyOut(col("t")).as("total_revenue"))
-    },
-    // TPC-H Q16 shape (supplier diversity with NOT IN): distinct suppliers
-    // per (brand, type, size) over the observed lineitem part–supplier
-    // pairs (no partsupp ships — the fact's DISTINCT pair set IS the
-    // relation), excluding one brand, one type, and a "complaint" supplier
-    // list via broadcast anti-join. The DISTINCT collapses the fact to
-    // relation grain BEFORE any dim work, so the expensive COUNT(DISTINCT)
-    // runs over pairs, not lines.
-    "q197_supplier_diversity" -> { (s, dir) =>
-      val complaints = TestData.supplier(s, dir)
-        .filter(col("s_name").like("%7")).select("s_suppkey")
-      val ps = TestData.lineitem(s, dir)
-        .select("l_partkey", "l_suppkey").distinct()
-        .join(broadcast(complaints), col("l_suppkey") === col("s_suppkey"), "left_anti")
-      ps.join(broadcast(TestData.part(s, dir)
-            .filter(col("p_brand") =!= "Brand#13" && col("p_type") =!= "PROMO")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
-    },
-    // TPC-H Q1 shape (pricing summary): the full multi-measure scan
-    // aggregate — exact-integer quantity sums, cent-exact decimal money
-    // sums, and averages performed as ONE double division each at the
-    // 4-row output boundary (discounts ride the exact 1/10000 grid so
-    // their average is integer arithmetic until the division). One scan,
-    // map-side partials, no joins — the canonical whole-stage-codegen
-    // aggregate. Completes the 22/22 classic TPC-H plan-shape set
-    // together with q199.
-    "q198_pricing_summary" -> { (s, dir) =>
-      val cut = lit("2001-09-01 00:00:00").cast("timestamp_ntz")
-      val n = count(lit(1))
-      TestData.lineitem(s, dir).filter(col("l_shipdate") <= cut)
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast("long")).as("sum_qty"),
-          moneyOut(sum(money(col("l_extendedprice")))
-            .cast("decimal(18,2)")).as("sum_base_price"),
-          moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .cast("decimal(18,2)")).as("sum_disc_price"),
-          moneyOut(sum(money(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-              * (lit(1.0) + col("l_tax"))))
-            .cast("decimal(18,2)")).as("sum_charge"),
-          (sum(col("l_quantity").cast("long")).cast("double") / n.cast("double"))
-            .as("avg_qty"),
-          (sum(money(col("l_extendedprice"))).cast("decimal(18,2)").cast("double")
-            / n.cast("double")).as("avg_price"),
-          (sum(quant(col("l_discount"), 10000)).cast("double")
-            / (n * lit(10000L)).cast("double")).as("avg_disc"),
-          n.as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    },
-    // TPC-H Q6 shape (forecast revenue change): pure scan-filter
-    // aggregate. The year window pushes to the parquet scan; the
-    // discount-band filter rides the exact 1/100 grid (a double BETWEEN
-    // on 0.05..0.07 is engine-dependent at the edges — the integer grid
-    // is not). 1-row output, zero shuffles past the final partial merge.
-    "q199_forecast_revenue" -> { (s, dir) =>
-      val lo = lit("1997-01-01 00:00:00").cast("timestamp_ntz")
-      val hi = lit("1998-01-01 00:00:00").cast("timestamp_ntz")
-      TestData.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lo && col("l_shipdate") < hi
-          && quant(col("l_discount"), 100).between(5, 7)
-          && col("l_quantity").cast("long") < 24)
-        .agg(
-          moneyOut(sum(money(col("l_extendedprice") * col("l_discount")))
-            .cast("decimal(18,2)")).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    },
-    // Balanced shard plan for serving the IVF index: √n-bounded cell
-    // table, sorted round-robin dealing, per-shard load audit.
-    "q200_index_shard_plan" -> { (s, dir) =>
-      Similarity.indexShardPlan(TestData.embeddings(s, dir))
-    },
-    // Context-length padding cost across a candidate grid — the sizing
-    // decision before sequence packing, all-integer until the rate.
-    "q201_context_length_plan" -> { (s, dir) =>
-      Packing.contextLengthPlan(TestData.documents(s, dir))
-    },
-    // Selinger join-order enumeration with estimate-vs-actual q-error.
-    "q202_join_order_advisor" -> { (s, dir) =>
-      Planning.joinOrderAdvisor(TestData.customer(s, dir),
-        TestData.orders(s, dir), TestData.lineitem(s, dir))
-    },
-    // Incremental ingest dedup: the delta probes the corpus's exact-
-    // fingerprint and LSH band indexes — no corpus self-join.
-    "q203_incremental_near_dup" -> { (s, dir) =>
-      Dedup.incrementalNearDup(TestData.documents(s, dir))
-    },
-    // Salted JOIN execution (the join analog of q169's salted aggregate):
-    // the fact side carries a deterministic salt, the dim side replicates
-    // once per salt value, and the (key, salt) equi-join provably equals
-    // the plain join — the oracle below IS the unsalted join, so equality
-    // is the correctness proof that salting only moves where rows meet.
-    "q204_salted_join_exec" -> { (s, dir) =>
-      val li = TestData.lineitem(s, dir).select(col("l_suppkey"),
-        col("l_orderkey"), money(col("l_extendedprice")).as("price"))
-      val sup = TestData.supplier(s, dir)
-        .select(col("s_suppkey").as("l_suppkey"), col("s_name"))
-      Skew.saltedJoin(li, sup, "l_suppkey", saltFrom = col("l_orderkey"),
-          buckets = 8)
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("n_lines"),
-          moneyOut(sum(col("price")).cast("decimal(18,2)")).as("revenue"))
-        .orderBy("s_name")
-    },
-    // Equi-depth histogram: optimizer statistics built with a two-level
-    // (shardable) prefix sum over the cent grid.
-    "q205_equi_depth_hist" -> { (s, dir) =>
-      Planning.equiDepthHistogram(TestData.lineitem(s, dir))
-    },
-    // Sample-estimate audit: 5% hash-coin estimate vs exact total, with
-    // a measured Hoeffding 95% certificate.
-    "q206_sample_estimate_audit" -> { (s, dir) =>
-      Sampling.estimateAudit(TestData.orders(s, dir))
-    },
-    // Calendar densification + LOCF: the user-day feature frame.
-    "q207_gap_fill_daily" -> { (s, dir) =>
-      Events.gapFillDaily(TestData.events(s, dir))
-    },
-    // The q202 join-order plan EXECUTED: best- and worst-ranked orders
-    // both run as real join chains; measured first-join cardinality sits
-    // next to the Selinger estimate; identical totals prove the order
-    // only moves cost, never results (the q169/q204 consumed-plan pattern).
-    "q208_join_order_exec" -> { (s, dir) =>
-      Planning.executeJoinOrder(TestData.customer(s, dir),
-        TestData.orders(s, dir), TestData.lineitem(s, dir))
-    },
-    // The q205 equi-depth statistics CONSUMED: measured bucket bounds
-    // route rows in a broadcast range join; the audit proves the routing
-    // reproduces the histogram depths exactly and stays balanced.
-    "q209_range_balanced_shards" -> { (s, dir) =>
-      Planning.rangeBalancedShards(TestData.lineitem(s, dir))
-    },
-    // MERGE INTO-style transactional upsert: two concurrent writers,
-    // key-level conflict detection, version-based resolution; the oracle
-    // is the SERIAL replay, so the hash-match is the serializability proof.
-    "q210_merge_upsert" -> { (s, dir) =>
-      Scd.mergeUpsert(TestData.customer(s, dir), TestData.orders(s, dir))
-    },
-    // Multi-source min-frontier watermark: a fast and a lagging stream
-    // union into one windowed aggregate; batch equality certifies the
-    // lagging source held the global watermark back (nothing dropped).
-    "q211_multi_source_watermark" -> { (s, dir) =>
-      EventStream.multiSourceWatermark(s, dir)
-    },
-    // The q163 strategy advice EXECUTED: the broadcast-sized dim joins
-    // with an explicit broadcast, the shuffle-sized one with sort-merge;
-    // plain-join totals prove the strategy moves bytes, never results.
-    "q212_join_strategy_exec" -> { (s, dir) =>
-      Planning.executeJoinStrategy(TestData.lineitem(s, dir),
-        TestData.supplier(s, dir), TestData.orders(s, dir))
-    },
-    // k-anonymity audit over a 4-level generalization lattice: per level,
-    // the k the QI grouping actually achieves and the re-identifiable
-    // population; coarsening only merges groups, so rows_at_risk is
-    // provably non-increasing up the lattice (PrivacySpec pins it).
-    "q213_k_anonymity" -> { (s, dir) =>
-      Privacy.kAnonymityAudit(TestData.customer(s, dir))
-    },
-    // l-diversity on the SAME lattice: k-anonymity's complement — a group
-    // can be large (k-safe) yet homogeneous in the sensitive attribute
-    // (the balance band); per level, the diversity each grouping achieves.
-    "q214_l_diversity" -> { (s, dir) =>
-      Privacy.lDiversityAudit(TestData.customer(s, dir))
-    },
-    // The q205 histogram's bounds driving an ACTUAL range-partitioned
-    // parquet write — the physical half of the q209 loop; the audit rows
-    // are read back off disk, so depth/bounds matches certify the layout.
-    "q215_range_partitioned_write" -> { (s, dir) =>
-      Planning.rangePartitionedWrite(TestData.lineitem(s, dir),
-        scratchDir("graft-q215").resolve("fact").toString)
-    },
-    // The q163 strategy decision made from CONSTANT-SIZE sketches (KMV
-    // row count × hash-sampled row width) instead of exact full scans —
-    // the 100 TB CBO path — with sketch-vs-exact labels and q-errors
-    // audited side by side.
-    "q216_sketch_strategy_advisor" -> { (s, dir) =>
-      Planning.sketchStrategyAdvisor(Seq(
-        ("customer", TestData.customer(s, dir), col("c_custkey")),
-        // (orderkey, linenumber) alone is NOT unique in the synthetic
-        // data — widen the row identifier until it is, or the KMV would
-        // correctly estimate distinct KEYS and miss duplicated rows
-        ("lineitem", TestData.lineitem(s, dir),
-          concat_ws("#", col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_suppkey"))),
-        ("orders", TestData.orders(s, dir), col("o_orderkey")),
-        ("supplier", TestData.supplier(s, dir), col("s_suppkey"))))
-    },
-    // The q185 zone maps CONSUMED: the fact written date-clustered, and
-    // each predicate scans only the surviving month partitions — totals
-    // from the pruned scan hash-match the oracle's full-table filter.
-    "q217_zone_pruned_scan" -> { (s, dir) =>
-      Planning.zonePrunedScan(TestData.lineitem(s, dir),
-        scratchDir("graft-q217").resolve("fact").toString)
-    },
-    // t-closeness completes the privacy trio on the same lattice: EMD
-    // between each group's sensitive distribution and the global one,
-    // compared in exact integers (only the reported max_emd is a double).
-    "q218_t_closeness" -> { (s, dir) =>
-      Privacy.tClosenessAudit(TestData.customer(s, dir))
-    },
-    // The q202 Selinger ranking made from five KMV sketches instead of
-    // exact stats — join ORDERING from constant-size statistics, with
-    // both rankings audited side by side (the q216 story's other half).
-    "q219_sketch_join_order" -> { (s, dir) =>
-      Planning.sketchJoinOrderAdvisor(TestData.customer(s, dir),
-        TestData.orders(s, dir), TestData.lineitem(s, dir))
-    },
-    // The q216 sketch verdicts CONSUMED (the q212 execution pattern):
-    // each dim joins under the strategy its sketch bytes earned;
-    // plain-join totals prove the sketch-driven plan moves bytes, never
-    // results — the sketch-CBO loop closed end to end.
-    "q220_sketch_strategy_exec" -> { (s, dir) =>
-      Planning.executeSketchStrategy(TestData.lineitem(s, dir),
-        TestData.supplier(s, dir), TestData.orders(s, dir))
-    },
-    // The q213 audit CONSUMED: the first satisfying lattice level is the
-    // minimal safe generalization, and the release applies exactly that
-    // suppression — every released group carries n >= k by construction.
-    "q221_anonymize_min_level" -> { (s, dir) =>
-      Privacy.anonymizeToK(TestData.customer(s, dir))
-    },
-    // The shuffle_bloom verdict EXECUTED: a bloom over the selective dim
-    // prunes the fact BEFORE the join shuffle; plain-join totals prove
-    // no false negatives — the q157→q163 loop closed.
-    "q222_bloom_strategy_exec" -> { (s, dir) =>
-      Planning.executeBloomStrategy(TestData.lineitem(s, dir),
-        TestData.orders(s, dir))
-    },
-    // Range sharding from the QUANTILE SKETCH (what repartitionByRange
-    // does at scale): sketch bounds route every row; the audit proves
-    // exact coverage and per-bucket depth within 5% of ideal — verdicts
-    // cross the oracle, sketch values stay in-engine (the q90 pattern).
-    "q223_sketch_range_shards" -> { (s, dir) =>
-      Planning.sketchRangeShards(TestData.lineitem(s, dir))
-    },
-    // JSONL ingest with malformed-row quarantine (the crawl source
-    // format): serialize -> deterministically mangle -> DROPMALFORMED
-    // parse + raw line count; the oracle's parquet-side split proves the
-    // round trip lost exactly the corrupted lines and nothing else.
-    "q224_json_ingest_quarantine" -> { (s, dir) =>
-      val staged = scratchDir("graft-q224").resolve("events_jsonl").toString
-      graft.sources.JsonSource.stageJsonl(TestData.events(s, dir), staged)
-      graft.sources.JsonSource.ingestWithQuarantine(s, staged)
-    },
-    // Schema evolution across ingest batches: v2 adds a column; the
-    // mergeSchema read-back proves old rows null-fill instead of the
-    // reader dropping rows or the new column (the lake-drift reality).
-    "q225_schema_evolution" -> { (s, dir) =>
-      val out = scratchDir("graft-q225").resolve("drift").toString
-      graft.sources.SchemaEvolution.stageDriftedBatches(
-        TestData.events(s, dir), out)
-      graft.sources.SchemaEvolution.evolvedRead(s, out)
-    },
-    // Per-source quota cap (the training-mix "domain cap"): keep the
-    // best k docs per source by vocabulary richness on the bounded-heap
-    // TopKPerKey operator — a per-key top-k, not a rate downsample.
-    "q226_source_cap" -> { (s, dir) =>
-      Sampling.sourceCap(TestData.documents(s, dir)).orderBy("source")
-    },
-    // Pareto frontier (the SKYLINE operator): non-dominated docs on the
-    // quality-vs-cost plane via a bounded-grid sweep — O(n) + a window
-    // over the length domain, never the O(n^2) dominance self-join.
-    "q227_pareto_frontier" -> { (s, dir) =>
-      TextAnalysis.paretoFrontier(TestData.documents(s, dir)).orderBy("n_chars")
-    },
-    // Poisson bootstrap (Chamandy et al. 2012): all 64 resamples in ONE
-    // pass via deterministic hash-Poisson multiplicities frozen as CDF
-    // grid literals — no libm, no RNG state; CI = exact order statistics
-    // of the replica means.
-    "q228_bootstrap_ci" -> { (s, dir) =>
-      Sampling.bootstrapCi(TestData.orders(s, dir))
-    },
-    // Per-group AQP: grouped estimates from the 5% hash-coin sample,
-    // each group earning its OWN Hoeffding certificate from its measured
-    // range and realized sample size — one combinable aggregate pass.
-    "q229_group_estimate" -> { (s, dir) =>
-      Sampling.groupEstimateAudit(TestData.orders(s, dir)).orderBy("priority")
-    },
-    // The LSH S-curve MEASURED: per (b, r) banding config, detection
-    // rate over exact-truth pairs per Jaccard decile, beside the
-    // 1-(1-J^r)^b theory at the decile midpoint (frozen as literals) —
-    // the dedup recall-vs-cost tuning evidence.
-    "q230_lsh_s_curve" -> { (s, dir) =>
-      Dedup.sCurveAudit(TestData.documents(s, dir)).orderBy("r", "j_band")
-    },
-    // Exactly-once to an external sink EXECUTED: foreachBatch crashes in
-    // the uncovered window (sink written, checkpoint not committed), the
-    // resumed run replays the batch, and the idempotent batch-keyed
-    // overwrite keeps the read-back equal to the batch oracle — 4
-    // attempts over 3 batches, zero duplicates.
-    "q231_exactly_once_sink" -> { (s, dir) =>
-      graft.streaming.EventStream.exactlyOnceSink(s, dir).orderBy("event_type")
-    },
-    // BPE training EXECUTED: three real merge rounds over the distinct-
-    // word frequency table (pick -> merge everywhere -> recount), with
-    // the corpus symbol count after each merge — the compression curve.
-    "q232_bpe_train" -> { (s, dir) =>
-      TextAnalysis.bpeTrain(TestData.documents(s, dir)).orderBy("round")
-    },
-    // Expectation-suite data contract: every row-wise rule + uniqueness
-    // compiled into ONE aggregate pass (rules declared once, both
-    // engines compile from the same list); relationship as a broadcast
-    // anti-join — the dbt-test shape at one-scan cost.
-    "q233_expectation_suite" -> { (s, dir) =>
-      DataQuality.expectationSuite(TestData.orders(s, dir),
-        TestData.customer(s, dir)).orderBy("expectation", "target")
-    },
-    // Native session_window in a STREAMING plan: gap-window state that
-    // MERGES across micro-batches (the mid-timeline split exercises it),
-    // closed by the watermark, against the batch lag-formulation oracle
-    // on the same ms grid.
-    "q234_session_window_stream" -> { (s, dir) =>
-      graft.streaming.EventStream.sessionWindowStream(s, dir)
-        .orderBy("user_id", "start_ms")
-    },
-    // The IVF index PERSISTED: centroids + cell-partitioned postings
-    // written to parquet, queries served from the LOADED artifacts only
-    // (cells re-derived against the loaded centroids). The oracle is
-    // q54's single-plan SQL — hash-equality is the round-trip
-    // certificate.
-    "q235_persisted_ivf" -> { (s, dir) =>
-      Similarity.persistedIvfTopK(TestData.embeddings(s, dir),
-        scratchDir("graft-q235").resolve("ivf_index").toString)
-        .orderBy("qid", "rank")
-    },
-    // Column-encoding advisor: the content statistics a columnar writer's
-    // encoding chooser runs on (distinct ratio, run lengths under the
-    // cluster order) and its verdict per column; the spec proves the
-    // advised encodings shrink real parquet bytes on disk.
-    "q236_encoding_advisor" -> { (s, dir) =>
-      Planning.encodingAdvisor(TestData.lineitem(s, dir)).orderBy("col_name")
-    },
-    // Point lookups on a NON-cluster key through a persisted per-zone
-    // Bloom index: candidate zones from the loaded bloom only, the fact
-    // scan opens only candidate dirs, and totals hash-match the direct
-    // filter (blooms admit no false negatives); the candidate-vs-matching
-    // gap measures the index's false-positive I/O.
-    "q237_bloom_index_lookup" -> { (s, dir) =>
-      Planning.bloomIndexedLookup(TestData.lineitem(s, dir),
-        scratchDir("graft-q237").resolve("bloom_index").toString)
-        .orderBy("probe_key")
-    },
-    // The q219 sketch ranking EXECUTED beside the exact ranking: both
-    // pickers' first-choice orders run as real left-deep chains with
-    // result-equal totals; same_pick certifies whether constant-size
-    // sketches reproduced the exact-statistics decision.
-    "q238_sketch_order_exec" -> { (s, dir) =>
-      Planning.executeSketchJoinOrder(TestData.customer(s, dir),
-        TestData.orders(s, dir), TestData.lineitem(s, dir))
-    },
-    // Conjunctive text search through a persisted inverted index: postings
-    // sharded by term hash, dictionary-derived query workload, each query
-    // reads only its terms' bucket dirs; the oracle recomputes the
-    // intersections logically from the raw documents.
-    "q239_inverted_index" -> { (s, dir) =>
-      TextAnalysis.invertedIndexLookup(TestData.documents(s, dir),
-        scratchDir("graft-q239").resolve("text_index").toString)
-    },
-    // Incremental maintenance of the persisted inverted index: build from
-    // the base batch, APPEND the delta batch (only its terms' bucket dirs
-    // gain files; dictionary merged to a new version dir), serve the q239
-    // workload from the maintained artifacts. Oracle = the index rebuilt
-    // from scratch over base+delta — hash equality is the IVM proof.
-    "q240_incremental_inverted" -> { (s, dir) =>
-      TextAnalysis.incrementalInvertedIndex(TestData.documents(s, dir),
-        scratchDir("graft-q240").resolve("text_index").toString)
-    },
-    // Streaming CDC upsert: the q186 change feed as a 3-chunk stream,
-    // each micro-batch MERGEd into a durable state table through the
-    // q241 manifest protocol, with a crash injected after batch 1's
-    // commit but before its checkpoint commit; the restart replays the
-    // batch idempotently (merge is a pure function of batchId) and the
-    // final table equals the batch cdcApply fold exactly.
-    "q242_stream_cdc_upsert" -> { (s, dir) =>
-      graft.streaming.EventStream.streamingCdcUpsert(s, dir)
-    },
-    // Streaming read OF the manifest table: a file stream tails the
-    // publish log (one publish = one micro-batch), each batch lands its
-    // version's change feed idempotently; a mid-stream crash + restart
-    // replays one batch without double-feeding any version.
-    "q289_stream_manifest_tail" -> { (s, dir) =>
-      graft.streaming.EventStream.manifestTailStream(s, dir)
-    },
-    // Manifest-pointer atomic publish: the q88 compaction re-run under a
-    // write-audit-publish commit protocol, with a crash injected between
-    // data-write and pointer-swap — the crash window still resolves the
-    // OLD snapshot with exact totals, the re-run commits v2, and totals
-    // are identical at every stage (compaction invisible, now atomically).
-    "q241_atomic_publish" -> { (s, dir) =>
-      ManifestTable.atomicCompactionPublish(TestData.events(s, dir),
-        scratchDir("graft-q241").resolve("events_table").toString)
-    },
-    // Version history under the manifest protocol: publish v1, publish a
-    // DELETE as v2, time-travel v1 (pre-delete totals still served),
-    // read CURRENT (post-delete), then vacuum keep-last-1 — v1
-    // physically reclaimed, CURRENT unharmed. Versions and retention
-    // counts pinned in the oracle.
-    "q244_time_travel_vacuum" -> { (s, dir) =>
-      ManifestTable.timeTravelVacuum(TestData.events(s, dir),
-        scratchDir("graft-q244").resolve("events_table").toString)
-    },
-    // Incremental maintenance of the persisted IVF index: build from the
-    // base batch (centroids frozen), append the delta assigned against
-    // the LOADED centroids (only its cells' dirs gain files), serve the
-    // q235 workload from the maintained artifacts. Oracle = the same
-    // frozen-centroid index computed logically over base+delta.
-    "q243_incremental_ivf" -> { (s, dir) =>
-      Similarity.incrementalIvfTopK(TestData.embeddings(s, dir),
-        scratchDir("graft-q243").resolve("ivf_index").toString)
-        .orderBy("qid", "rank")
-    },
-    // Incremental maintenance of the persisted per-zone Bloom index —
-    // the maintenance trio's third member: build from the base batch
-    // (per-zone bit sizes frozen), OR the delta's bit positions into its
-    // zones against the frozen sizes (only touched zone dirs gain
-    // files), serve the q237 probe workload from the maintained
-    // artifacts. Oracle = the same frozen-size index computed logically
-    // over base+delta; hash equality carries the no-false-negative
-    // contract across maintenance.
-    "q245_incremental_bloom" -> { (s, dir) =>
-      Planning.incrementalBloomLookup(TestData.lineitem(s, dir),
-        scratchDir("graft-q245").resolve("bloom_index").toString)
-        .orderBy("probe_key")
-    },
-    // The persisted IVF-PQ index (IVFADC): coarse inverted lists +
-    // product-quantized codes built to disk, queries coarse-routed
-    // against the loaded centroids, ADC lookup tables from the loaded
-    // codebooks, and only the query's cell's codes scanned — the
-    // compressed-corpus layout billion-scale ANN serving deploys.
-    "q247_pq_index" -> { (s, dir) =>
-      Similarity.persistedPqTopK(TestData.embeddings(s, dir),
-        scratchDir("graft-q247").resolve("pq_index").toString)
-        .orderBy("qid", "rank")
-    },
-    // Optimistic concurrency on the manifest table: two writers race
-    // from the same pinned snapshot; the loser's stale commit is REFUSED
-    // by the exclusive-create CAS (its staged files deleted unpublished),
-    // it rebases on the winner's snapshot and commits next. Final state
-    // is the serial application; versions and the conflict are pinned.
-    "q248_concurrent_commits" -> { (s, dir) =>
-      ManifestTable.concurrentCommitters(TestData.events(s, dir),
-        scratchDir("graft-q248").resolve("events_table").toString)
-    },
-    // q248's partition-mapped sibling: disjoint writers BOTH commit
-    // (the loser's retry is a metadata rebase — staged files renamed,
-    // never rewritten), an overlapping stale writer is refused and
-    // serializes on the live head; the Iceberg concurrent-append story.
-    "q327_concurrent_partition_commits" -> { (s, dir) =>
-      ManifestTable.concurrentPartitionCommits(TestData.events(s, dir),
-        scratchDir("graft-q327").resolve("events_table").toString)
-    },
-    // The table_changes() surface: three published versions (base;
-    // deletes+updates; inserts), the row-level CDF derived per
-    // consecutive pair with one full-outer key join, update rows as
-    // pre/post images, summarized per (version, change_type, type).
-    "q249_change_feed" -> { (s, dir) =>
-      ManifestTable.changeFeedSummary(TestData.events(s, dir),
-        scratchDir("graft-q249").resolve("events_table").toString)
-    },
-    // Leakage-safe (out-of-fold) target encoding: a category's encoding
-    // for a fold is the mean target over the OTHER folds only, folds
-    // group-aware by user — one bounded aggregate, |categories|×k rows.
-    "q250_target_encoding" -> { (s, dir) =>
-      Sampling.targetEncoding(TestData.events(s, dir))
-        .orderBy("event_type", "fold")
-    },
-    // Classical additive seasonal decomposition of daily spend: centered
-    // 7-day trend, per-weekday seasonal means of the detrended series,
-    // residual — integer-exact until the final two fp steps, on a
-    // calendar-bounded day grid.
-    "q251_seasonal_decompose" -> { (s, dir) =>
-      Events.seasonalDecompose(TestData.events(s, dir)).orderBy("day")
-    },
-    // Merge-on-read UPDATES: a (key, new value) patch sidecar applied at
-    // read (broadcast left join + coalesce), a delete sidecar stacked on
-    // top, then compaction — v3 totals must equal v4's (purge contract).
-    "q266_mor_update" -> { (s, dir) =>
-      ManifestTable.mergeOnReadUpdate(TestData.events(s, dir),
-        scratchDir("graft-q266").toString)
-    },
-    // Cross-table atomic transaction: one manifest maps every table to
-    // its version, swapped with one rename; an injected crash after the
-    // fact write leaves readers on the CONSISTENT v1 pair, and the
-    // fact/rollup totals ride side by side so consistency is measured.
-    "q264_multi_table_commit" -> { (s, dir) =>
-      ManifestTable.multiTableCommit(TestData.events(s, dir),
-        scratchDir("graft-q264").toString)
-    },
-    // Right-to-be-forgotten under the manifest: erase one user from the
-    // fact AND its derived rollup (delta-adjusted, never rebuilt), prove
-    // a measured zero remnant, vacuum the pre-erasure version so the
-    // forget is physical. Oracle pins the remnant to zero.
-    "q263_forget_user" -> { (s, dir) =>
-      ManifestTable.forgetUser(TestData.events(s, dir),
-        scratchDir("graft-q263").toString)
-    },
-    // Purged walk-forward CV folds with an embargo: temporal-leakage-safe
-    // splits (label-horizon purge + post-test embargo), per-fold role
-    // counts plus the measured purge safety margin as data.
-    "q262_purged_cv" -> { (s, dir) =>
-      Sampling.purgedCvFolds(TestData.events(s, dir))
-    },
-    // Exact two-sample KS drift per event type (early vs late half):
-    // binning-free sup|ECDF_a − ECDF_b|, all-integer numerator over the
-    // distinct-value grain, Smirnov α=0.05 gate on the way out.
-    "q260_ks_drift" -> { (s, dir) =>
-      Profile.ksDrift(TestData.events(s, dir))
-    },
-    // Trend/seasonality-aware anomaly days: |residual − median| > 3·MAD,
-    // exact medians via the q85 middle-rank convention, flag by
-    // multiplication (a zero-MAD series flags nothing, never divides).
-    "q258_residual_anomalies" -> { (s, dir) =>
-      Events.residualAnomalies(TestData.events(s, dir))
-    },
-    // The consumer half of the BPE loop: encode every document with the
-    // q232-trained merges — distinct word types encoded once through k
-    // broadcast-replace rounds, occurrences joined back — reporting the
-    // per-doc symbol counts and the compression the merges deliver.
-    "q252_bpe_encode" -> { (s, dir) =>
-      TextAnalysis.bpeEncode(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Partition-spec evolution under the manifest: old files stay in the
-    // 30-day layout, post-evolution files land in the 7-day layout, the
-    // manifest records each group's spec, and a straddling day-range
-    // read prunes each group by its own spec. Totals are layout-
-    // invariant — the oracle filters the raw events directly.
-    "q253_partition_evolution" -> { (s, dir) =>
-      ManifestTable.evolvedPartitionRead(TestData.events(s, dir),
-        scratchDir("graft-q253").resolve("events_table").toString)
-    },
-    // Merge-on-read deletes: the commit lands only a key-list sidecar
-    // (O(deleted keys), data files untouched), reads mask with one
-    // anti-join, and the purge compaction applies the vector physically
-    // with identical results — the CoW/MoR split table formats expose.
-    "q254_merge_on_read" -> { (s, dir) =>
-      ManifestTable.mergeOnReadDelete(TestData.events(s, dir),
-        scratchDir("graft-q254").resolve("events_table").toString)
-    },
-    // Aggregate pushdown through a block rollup: full blocks of the
-    // range answer from per-block pre-aggregates, only the two partial
-    // edge blocks scan raw rows; rollup + residual must equal the direct
-    // aggregate exactly (cent-exact sums make the rollup lossless).
-    "q255_rollup_pushdown" -> { (s, dir) =>
-      Planning.rollupPushdownAggregate(TestData.events(s, dir),
-        scratchDir("graft-q255").resolve("rollup").toString)
-    },
-    // Clustering-layout advisor: score linear vs Morton vs Hilbert by
-    // zone-pruned rows per workload predicate and pick the cheapest —
-    // deterministic integer zones, so the CHOICE itself is hashed.
-    "q269_layout_advisor" -> { (s, dir) =>
-      Planning.layoutAdvisor(TestData.events(s, dir))
-    },
-    // Yannakakis full reducer: two semi-join passes strip every dangling
-    // tuple from the acyclic 5-table chain before the join runs; the
-    // per-relation reduced counts are the measured benefit, and the
-    // reduced join's totals equal the direct join's by the theorem.
-    "q270_yannakakis" -> { (s, dir) =>
-      Planning.yannakakisReduction(TestData.region(s, dir),
-        TestData.nation(s, dir), TestData.customer(s, dir),
-        TestData.orders(s, dir), TestData.lineitem(s, dir))
-    },
-    // Wilson lower-bound ranking: confidence-adjusted return rates —
-    // the small-sample correction behind sort-by-rating; IEEE-exact
-    // (sqrt is correctly rounded; identical op order in both engines).
-    "q286_wilson_ranking" -> { (s, dir) =>
-      Profile.wilsonReturnRanking(TestData.lineitem(s, dir))
-    },
-    // Tie-corrected Spearman rank correlation per market segment:
-    // Pearson on doubled average ranks (exact BIGINT/DECIMAL sums, the
-    // q301 sqrt-product discipline); ranks computed at the bounded
-    // distinct-value grain, never by a row-level sort.
-    "q311_spearman" -> { (s, dir) =>
-      Profile.spearmanBySegment(TestData.customer(s, dir),
-        TestData.orders(s, dir))
-    },
-    // Chi-squared independence drift over (event_type x weekday): exact
-    // scaled-integer cell contributions (floor millionths), so the
-    // table statistic is a sum of exact integers; per-cell attribution
-    // carried beside the total — the categorical companion to q260 KS.
-    "q313_chi_square_drift" -> { (s, dir) =>
-      Profile.chiSquareDrift(TestData.events(s, dir))
-    },
-    // Compaction racing a live append: both writers pin the same base,
-    // the CAS picks one winner, the loser rebases — the final table is
-    // the serial replay (Iceberg's rewrite+append conflict, resolved).
-    "q287_compact_vs_append" -> { (s, dir) =>
-      ManifestTable.compactionVsAppend(TestData.events(s, dir),
-        scratchDir("graft-q287").resolve("events_table").toString)
-    },
-    // Branches and tags: named pointers into one immutable snapshot
-    // history — a dev commit moves only its own ref, a tag can never
-    // move, and a fast-forward merge is a pure pointer move.
-    "q290_branch_tags" -> { (s, dir) =>
-      ManifestTable.branchTagReads(TestData.events(s, dir),
-        scratchDir("graft-q290").resolve("events_table").toString)
-    },
-    // Exact tie-aware ROC AUC per event type via the Mann-Whitney pair
-    // count on the (type, score)-grain frame — integer-exact u2, one
-    // double division; two-grain prefix sums, never a global row sort.
-    "q291_roc_auc" -> { (s, dir) =>
-      Events.rocAucByType(TestData.events(s, dir))
-    },
-    // Calibration bins: integer-exact bin assignment against the max
-    // scalar, per-bin mean-predicted vs observed rate as single exact
-    // divisions — the reliability diagram beside q291's ranking gate.
-    "q292_calibration_bins" -> { (s, dir) =>
-      Events.calibrationBins(TestData.events(s, dir))
-    },
-    // RAG-ingestion chunking: overlapping token windows fingerprinted,
-    // duplicated-chunk mass per source — stateless explode + one
-    // combinable distinct on md5 keys; no join, no sort.
-    "q293_chunk_dedup" -> { (s, dir) =>
-      TextAnalysis.chunkDedup(TestData.documents(s, dir))
-    },
-    // Cumulative gains / lift by descending-score deciles at the
-    // score-group grain — integer-exact decile assignment (ties stay
-    // whole), capture and lift as single exact divisions.
-    "q294_gain_lift" -> { (s, dir) =>
-      Events.gainLift(TestData.events(s, dir))
-    },
-    // String zone maps with Iceberg-style truncated bounds: prefix
-    // predicates become half-open ranges, the skip test is byte-wise on
-    // 4-char bounds, and the serve opens only surviving zone dirs.
-    "q295_string_zone_skip" -> { (s, dir) =>
-      Planning.stringZoneSkipping(TestData.part(s, dir),
-        scratchDir("graft-q295").resolve("szs").toString)
-    },
-    // Native TypedImperativeAggregate HLL registers: one 512 B buffer
-    // per group through map-side partials — single-pass distinct
-    // estimates per type + global, same frozen-constant math as q282.
-    "q296_hll_native_agg" -> { (s, dir) =>
-      Planning.hllNativeDistinct(TestData.events(s, dir))
-    },
-    // Incremental string-zone-map maintenance: delta-only truncated
-    // bounds merge into the persisted artifact (least/greatest/sum),
-    // base never rescanned; the serve prunes with the merged bounds.
-    "q297_inc_string_zones" -> { (s, dir) =>
-      Planning.incrementalStringZoneMap(TestData.part(s, dir),
-        scratchDir("graft-q297").resolve("iszm").toString)
-    },
-    // Orphan GC: the dead writer's snapshot (crash between data-write
-    // and pointer-swap) is reclaimed by set arithmetic over version
-    // ids; pointer/CAS/ref-protected versions are never candidates.
-    "q298_orphan_gc" -> { (s, dir) =>
-      ManifestTable.orphanGc(TestData.events(s, dir),
-        scratchDir("graft-q298").resolve("events_table").toString)
-    },
-    // Multi-class classifier eval: confusion counts off one aggregate,
-    // per-class P/R/F1 + micro as single exact divisions, classes
-    // anchored on the static list (NULL precision over 0/0).
-    "q299_classifier_eval" -> { (s, dir) =>
-      Events.classifierEval(TestData.events(s, dir))
-    },
-    // The curation pipeline composed: dedup -> quality -> benchmark
-    // decontamination -> per-source quota in ONE plan, per-stage
-    // survivor counts — the operators proven to compose.
-    "q300_curation_pipeline" -> { (s, dir) =>
-      TextAnalysis.curationPipeline(TestData.documents(s, dir))
-    },
-    // Matthews correlation per class: exact integer numerator, the
-    // denominator as a product of four correctly-rounded sqrts (one
-    // BIGINT product would overflow); NULL on degenerate classes.
-    "q301_mcc_eval" -> { (s, dir) =>
-      Events.mccPerClass(TestData.events(s, dir))
-    },
-    // Orphan GC safe against an IN-FLIGHT publish: writer intents (the
-    // put-if-absent CAS) plus a grace-window age threshold — GC under a
-    // live intent reclaims nothing; once the intent expires it reclaims
-    // exactly the crashed writer's snapshot and dead intent file.
-    "q302_safe_orphan_gc" -> { (s, dir) =>
-      ManifestTable.safeOrphanGc(TestData.events(s, dir),
-        scratchDir("graft-q302").resolve("events_table").toString)
-    },
-    // Precision-recall curve per event type at the exact (type, score)
-    // cut grain: cum_tp/cum_n and cum_tp/n_pos as single exact
-    // divisions per row — the imbalanced-class companion to q291.
-    "q303_pr_curve" -> { (s, dir) =>
-      Events.prCurveByType(TestData.events(s, dir))
-    },
-    // Manifest checkpoint: one CAS-claimed metadata file naming every
-    // live version + an O(1) LAST locator — resolve splices the
-    // covered prefix with an incrementally-probed tail and must equal
-    // the full dir listing at every stage (require-pinned).
-    "q304_manifest_checkpoint" -> { (s, dir) =>
-      ManifestTable.checkpointResolve(TestData.events(s, dir),
-        scratchDir("graft-q304").resolve("events_table").toString)
-    },
-    // Brier score per class: the strictly-proper scoring rule, exact —
-    // the integer numerator decomposes off one (type)-grain aggregate
-    // (sum_c2 - 2*M*pos_cents + n_pos*M^2), one division per class.
-    "q305_brier_score" -> { (s, dir) =>
-      Events.brierByType(TestData.events(s, dir))
-    },
-    // Cohen's kappa: chance-corrected agreement as ONE exact division
-    // with cleared denominators (n*agree - chance) / (n^2 - chance),
-    // riding the q299 confusion aggregate.
-    "q307_cohens_kappa" -> { (s, dir) =>
-      Events.cohensKappa(TestData.events(s, dir))
-    },
-    // Dynamic partition overwrite (replaceWhere): a commit rewrites
-    // only the replaced partitions — everything else served from older
-    // versions BY REFERENCE via the partition manifest; empty
-    // replacement = partition delete; vacuum respects reachability.
-    "q306_partition_overwrite" -> { (s, dir) =>
-      ManifestTable.partitionOverwrite(TestData.events(s, dir),
-        scratchDir("graft-q306").resolve("events_table").toString)
-    },
-    // Write-audit-publish: candidates stage on a branch, an expectation
-    // audit gates the fast-forward promotion of main, a rejected
-    // candidate's branch drops and the safe GC sweeps its snapshot.
-    "q308_write_audit_publish" -> { (s, dir) =>
-      ManifestTable.writeAuditPublish(TestData.events(s, dir),
-        scratchDir("graft-q308").resolve("events_table").toString)
-    },
-    // Compaction of the partition-mapped table: the rewrite commit
-    // materializes the spliced read into one self-contained snapshot
-    // (totals provably unchanged), then one reachability vacuum
-    // reclaims the whole source-version sprawl.
-    "q309_compact_partitioned" -> { (s, dir) =>
-      ManifestTable.compactPartitioned(TestData.events(s, dir),
-        scratchDir("graft-q309").resolve("events_table").toString)
-    },
-    // The change feed CROSSING the compaction commit: v2/v3 present
-    // exactly their re-priced rows; the rewrite version presents ZERO
-    // change rows (compaction rewrites files, never rows) — the
-    // Iceberg rewrite_data_files-vs-CDC contract, oracle-pinned.
-    "q319_compaction_change_feed" -> { (s, dir) =>
-      ManifestTable.compactionChangeFeed(TestData.events(s, dir),
-        scratchDir("graft-q319").resolve("events_table").toString)
-    },
-    // Snapshot rollback as a roll-FORWARD commit: the new version's
-    // manifest is a copy of the target's — zero data moved (dir count
-    // require-pinned), the bad snapshot stays readable for audit.
-    "q312_snapshot_rollback" -> { (s, dir) =>
-      ManifestTable.snapshotRollback(TestData.events(s, dir),
-        scratchDir("graft-q312").resolve("events_table").toString)
-    },
-    // NDCG@k + MRR of the IVF serve path vs the exact baseline: graded
-    // relevance from the exact ranking, JVM-inlined integer discount
-    // literals keep DCG exact on both engines — the order-aware metrics
-    // q77's set-overlap recall cannot see.
-    "q310_ndcg_mrr" -> { (s, dir) =>
-      Similarity.retrievalRankingEval(TestData.embeddings(s, dir))
-    },
-    // The q310 eval re-rooted on a PERSISTED exact ground truth:
-    // brute-force top-k published once through the manifest pointer
-    // protocol, content-addressed by a corpus fingerprint; the second
-    // ensure call must detect it fresh and reuse it, and the oracle is
-    // the from-scratch chain — eval-from-artifact ≡ eval-from-scratch.
-    "q318_persisted_ground_truth" -> { (s, dir) =>
-      Similarity.persistedGroundTruthEval(TestData.embeddings(s, dir),
-        scratchDir("graft-q318").resolve("gt").toString)
-    },
-    // The multi-config eval the persisted ground truth amortizes:
-    // recall / mean-NDCG / MRR at every probe depth, one GT artifact,
-    // one candidate pass; every aggregate is exact-integer sums + one
-    // division (MRR rides the lcm(1..k) integer scale).
-    "q320_multi_probe_eval" -> { (s, dir) =>
-      Similarity.multiProbeEvalFromGroundTruth(TestData.embeddings(s, dir),
-        scratchDir("graft-q320").resolve("gt").toString)
-    },
-    // Incremental ground-truth maintenance: delta-proportional scoring
-    // merged into the stored top-k, published as the next version
-    // carrying the FULL corpus fingerprint; the oracle is the
-    // from-scratch rebuild — hash equality proves maintained = rebuilt.
-    "q321_incremental_ground_truth" -> { (s, dir) =>
-      Similarity.incrementalGroundTruth(TestData.embeddings(s, dir),
-        scratchDir("graft-q321").resolve("gt").toString)
-    },
-    // Filtered vector search, three serve strategies against the exact
-    // filtered baseline: black-box post-filter (underfills), over-fetch
-    // (recovers fill), filter-aware (the probe-budget upper bound) —
-    // hits provably monotone across the three; one shared probe pass.
-    "q322_filtered_ann" -> { (s, dir) =>
-      Similarity.filteredAnnAudit(TestData.embeddings(s, dir))
-    },
-    // Exact-substring dedup metric (Lee et al. 2022) at the token
-    // grain: per document, the fraction of tokens covered by n-grams
-    // shared with OTHER documents — cross-doc df test at the shingle
-    // grain (no self-join), interval union via gaps-and-islands.
-    "q323_duplicated_spans" -> { (s, dir) =>
-      TextAnalysis.duplicatedSpanAudit(TestData.documents(s, dir))
-    },
-    // Streaming ingest INTO the partition-mapped table: every micro-
-    // batch commits via the idempotent partitioned append (version =
-    // batchId + 1, read-by-version merge), a crash is injected in the
-    // commit-vs-checkpoint window, and the replay SKIPS on the existing
-    // manifest — exact final totals are the exactly-once proof.
-    "q324_stream_partitioned_ingest" -> { (s, dir) =>
-      graft.streaming.EventStream.streamIntoPartitionedTable(s, dir)
-    },
-    // q324's 100-TB sibling: each micro-batch lands MERGE-ON-READ delta
-    // files (write bytes ∝ |delta|, never the touched partition), the
-    // replay skips on the existing manifest, and a final
-    // compaction folds the splice back to one dir per partition with
-    // totals unchanged — the Iceberg/Delta streaming-ingest lifecycle.
-    "q326_stream_mor_ingest" -> { (s, dir) =>
-      graft.streaming.EventStream.streamIntoPartitionedMoR(s, dir)
-    },
-    // Streaming ingest and a compaction racing the SAME log: txn-tagged
-    // idempotence (appId, batchId) with CAS-allocated versions — the
-    // compactor folds v1+v2 as v3 between micro-batches, batch 2
-    // rebases onto the fold as v4, and the crash-replay straddling the
-    // compaction skips on the txn tag; exact totals prove exactly-once.
-    "q330_stream_compact_race" -> { (s, dir) =>
-      graft.streaming.EventStream.streamWithConcurrentCompaction(s, dir)
-    },
-    // Backfill → stream handoff: one batch job loads all history under
-    // appId "backfill", a streaming job ingests the live tail under
-    // appId "live", both into one txn-tagged log; the boundary is exact
-    // by predicate and a crash straddling the seam batch replays clean.
-    "q334_backfill_stream_handoff" -> { (s, dir) =>
-      graft.streaming.EventStream.backfillStreamHandoff(s, dir)
-    },
-    // Cluster-safe split: the doc-hash scheme leaks near-dup pairs
-    // across train/test; keying the coin on the q59 cluster label
-    // makes leakage structurally zero — both schemes audited per run.
-    "q325_cluster_safe_split" -> { (s, dir) =>
-      Sampling.clusterSafeSplit(TestData.documents(s, dir))
-    },
-    // q325's audit wired INTO the q300 pipeline: the curated survivors
-    // are split on the q59 cluster label (not the doc hash), and the
-    // leakage audit rides as a pipeline stage — leaky_clusters is
-    // structurally zero and the oracle recomputes it rather than pins.
-    "q328_curated_cluster_split" -> { (s, dir) =>
-      Sampling.curatedClusterSplit(TestData.documents(s, dir))
-    },
-    // Keyed upserts + tombstones on the MoR table (the Hudi read shape):
-    // every commit writes only delta rows, the read resolves latest-wins
-    // then drops tombstones, compaction applies both physically, and the
-    // MoR-aware vacuum honors delta references both before (reclaims
-    // nothing) and after (reclaims exactly the chain) the compaction.
-    "q329_mor_upsert_read" -> { (s, dir) =>
-      ManifestTable.morUpsertRead(TestData.events(s, dir),
-        scratchDir("graft-q329").resolve("events_table").toString)
-    },
-    // DELETE WHERE via POSITION deletes (Iceberg's second delete flavor
-    // beside q329's equality form): delete commits write (partition,
-    // src_version, pos) triples ∝ |deleted rows|; the read applies them
-    // with a broadcast anti-join over only the touched partitions — the
-    // base is never shuffled or key-aggregated, unlike the keyed read.
-    "q331_position_delete_mor" -> { (s, dir) =>
-      ManifestTable.positionDeleteRead(TestData.events(s, dir),
-        scratchDir("graft-q331").resolve("events_table").toString)
-    },
-    // Field-ID schema evolution (the piece q225's mergeSchema cannot
-    // give): renames are metadata-only — old files read under the new
-    // names via their immutable field ids — and a dropped-then-re-added
-    // column gets a fresh id, so dead same-named columns in old files
-    // never resurrect. Evolution commits are one tiny metadata file.
-    "q332_field_id_evolution" -> { (s, dir) =>
-      FieldIdTable.fieldIdEvolution(TestData.events(s, dir),
-        scratchDir("graft-q332").resolve("events_table").toString)
-    },
-    // Storage-partitioned join: both tables are partition-mapped on
-    // event_type, so the manifests plan one branch per common partition
-    // — the cross-partition shuffle is structurally gone, and broadcast
-    // is a PER-PARTITION decision from manifest byte counts (a slice
-    // broadcasts even when the whole dimension would not).
-    "q333_colocated_partition_join" -> { (s, dir) =>
-      ColocatedJoin.colocatedOverAverage(TestData.events(s, dir),
-        scratchDir("graft-q333").resolve("facts").toString,
-        scratchDir("graft-q333").resolve("user_totals").toString)
-    },
-    // Metadata-only aggregation: each delta commit folds its batch's
-    // per-partition (count, sum) into its manifest's cumulative stats, so
-    // full-table COUNT/SUM — at any version, including time travel —
-    // is a one-file metadata read with zero data files opened (Delta's
-    // numRecords / Iceberg's manifest value-counts); a physical recount
-    // cross-checks the stats in-plan.
-    "q335_metadata_count" -> { (s, dir) =>
-      ManifestTable.metadataCountRead(TestData.events(s, dir),
-        scratchDir("graft-q335").resolve("events_table").toString)
-    },
-    // Stats stay EXACT through position deletes: the DELETE WHERE scan
-    // that names the doomed rows also prices the negative stats fold,
-    // so COUNT/SUM remains a metadata read at every stage (base, two
-    // deletes, compaction) — the composition equality deletes cannot
-    // afford without the key-grain read MoR writes exist to avoid.
-    "q336_metadata_stats_deletes" -> { (s, dir) =>
-      ManifestTable.metadataStatsDeletes(TestData.events(s, dir),
-        scratchDir("graft-q336").resolve("events_table").toString)
-    },
-    // One-pass eval report: AUC, Brier, confusion/P/R/F1, and MCC all
-    // derived from ONE (type, cent-score) grain aggregate — the grain
-    // is a sufficient statistic, so four scans become one and every
-    // column stays bit-identical to its standalone query.
-    "q314_eval_report" -> { (s, dir) =>
-      Events.evalReport(TestData.events(s, dir))
-    },
-    // Incremental eval report: the grain is a pure SUM table, so a
-    // delta batch maintains the persisted artifact with one delta-only
-    // scan + an integer pn-merge — the nightly eval never rescans
-    // history; merged == full rebuild by oracle equality.
-    "q315_inc_eval_report" -> { (s, dir) =>
-      Events.incrementalEvalReport(TestData.events(s, dir),
-        scratchDir("graft-q315").resolve("eval_grain").toString)
-    },
-    // Streamed eval report: the streaming aggregation's state IS the
-    // bounded grain (|types| x |distinct cents|, never stream length);
-    // after the last micro-batch every metric equals the batch q314
-    // bit-for-bit — the oracle is q314's.
-    "q316_stream_eval_report" -> { (s, dir) =>
-      graft.streaming.EventStream.streamedEvalReport(s, dir)
-    },
-    // Hybrid retrieval with reciprocal rank fusion: the postings-join
-    // Jaccard arm + the IVF arm fused by rank alone (no score
-    // calibration) — the RRF score is a fixed two-term expression,
-    // bit-identical on both engines.
-    "q317_hybrid_rrf" -> { (s, dir) =>
-      Similarity.hybridRrfTopK(TestData.documents(s, dir),
-        TestData.embeddings(s, dir))
-    },
-    // Time-weighted average over irregular samples: step interpolation
-    // weights each value by its holding interval — exact BIGINT weighted
-    // sums, one division per user; one user_id shuffle for everything.
-    "q285_time_weighted_avg" -> { (s, dir) =>
-      Events.timeWeightedAverage(TestData.events(s, dir))
-    },
-    // Index intersection: the range predicate consults the zone map,
-    // the point predicate consults the per-zone Bloom, and the scan
-    // opens only the intersected zone dirs — composed file skipping.
-    "q284_index_intersection" -> { (s, dir) =>
-      Planning.indexIntersectionLookup(TestData.lineitem(s, dir),
-        scratchDir("graft-q284").resolve("ixn").toString)
-    },
-    // Version-keyed result cache: the snapshot version IS the cache
-    // key, so publishes invalidate by construction — four stages pin
-    // the miss/hit/miss/hit pattern with the served totals.
-    "q283_result_cache" -> { (s, dir) =>
-      ManifestTable.resultCache(TestData.events(s, dir),
-        scratchDir("graft-q283").resolve("events_table").toString)
-    },
-    // Persisted HLL-register rollup: day sketches land once, month and
-    // global distinct estimates merge the loaded registers (max per
-    // bucket) — pre-aggregated COUNT(DISTINCT) without rescans.
-    "q282_hll_rollup" -> { (s, dir) =>
-      Planning.hllSketchRollup(TestData.events(s, dir),
-        scratchDir("graft-q282").resolve("sketches").toString)
-    },
-    // Streaming index maintenance: document deltas maintain the
-    // persisted inverted index per micro-batch (idempotent per-batch
-    // posting dirs + versioned dict merges) through an injected crash;
-    // serving the maintained artifacts equals the rebuilt index.
-    "q281_stream_index_maintenance" -> { (s, dir) =>
-      EventStream.streamingIndexMaintenance(s, dir)
-    },
-    // Lease-protected vacuum: a reader lease pins v1 through a keep-1
-    // vacuum (only unleased v2 reclaimed), the leased snapshot is read
-    // physically AFTER the vacuum, then released and reclaimed.
-    "q280_leased_vacuum" -> { (s, dir) =>
-      ManifestTable.leasedVacuum(TestData.events(s, dir),
-        scratchDir("graft-q280").resolve("events_table").toString)
-    },
-    // Dynamic partition pruning: the dim-attribute filter prunes the
-    // ym-partitioned fact scan at runtime (no static predicate exists);
-    // DppSpec asserts the physical dirs, this query hashes the totals.
-    "q279_dpp_star_join" -> { (s, dir) =>
-      Planning.dppStarJoin(TestData.lineitem(s, dir),
-        scratchDir("graft-q279").resolve("star").toString)
-    },
-    // Phrase search over a persisted positional inverted index: the
-    // q239 index upgraded with token positions; phrases matched by a
-    // position-offset join over bucket-pruned posting reads, workload
-    // derived from the persisted bigram stats.
-    "q278_phrase_search" -> { (s, dir) =>
-      TextAnalysis.phraseSearch(TestData.documents(s, dir),
-        scratchDir("graft-q278").resolve("pos_index").toString)
-    },
-    // Closed-form weighted-interleave schedule: every doc's global
-    // training position from arithmetic against a broadcast source
-    // frame — no global sort; worst prefix deviation certified exactly.
-    "q277_interleave_schedule" -> { (s, dir) =>
-      Sampling.interleaveSchedule(TestData.documents(s, dir))
-    },
-    // Leave-one-out source ablation: per-source corpus dedup rate and
-    // mean size with that source removed, from one fingerprint-grain
-    // aggregate — influence measurement without |sources| rescans.
-    "q276_loo_ablation" -> { (s, dir) =>
-      Dedup.looSourceAblation(TestData.documents(s, dir))
-    },
-    // CUSUM level-shift detection in closed form: prefix sum + running
-    // min over the day-grain frame replaces the sequential recurrence;
-    // all-integer via day-count scaling.
-    "q275_cusum_changepoints" -> { (s, dir) =>
-      Events.cusumChangepoints(TestData.events(s, dir))
-    },
-    // DP histogram release: two counting queries noised from a frozen
-    // truncated-Laplace quantile table (hash-indexed so the oracle can
-    // replay it) and charged to one sequentially-composed eps budget.
-    "q274_dp_release" -> { (s, dir) =>
-      Privacy.dpHistogramRelease(TestData.events(s, dir))
-    },
-    // Row-pattern matching (the MATCH_RECOGNIZE A{3,}B shape) compiled
-    // to lag + gaps-and-islands windows: maximal rising runs followed
-    // by a drop, one user_id shuffle serving every window.
-    "q273_rise_patterns" -> { (s, dir) =>
-      Events.risePatterns(TestData.events(s, dir))
-    },
-    // Theta-sketch set algebra: union/intersection/difference distinct
-    // estimates from bottom-k sketches under the min-theta rule, exact
-    // audits riding along — the set-expression member of the sketch
-    // family (constant-size, mergeable, one aggregate per set).
-    "q272_theta_setops" -> { (s, dir) =>
-      Planning.thetaSketchSetOps(TestData.events(s, dir))
-    },
-    // Recursive hierarchy closure: pointer doubling resolves every
-    // node's root-distance in O(log depth) join rounds; the oracle is
-    // DuckDB's WITH RECURSIVE walking the same DIV-2 forest one level
-    // per pass — equality proves the doubling loop IS the closure.
-    "q271_recursive_closure" -> { (s, dir) =>
-      Graph.hierarchyClosure(TestData.customer(s, dir))
-    },
-    // Incremental zone-map maintenance: the delta alone aggregates, one
-    // outer merge join updates the persisted per-zone min/max/count —
-    // oracle rebuilds from scratch; updated == rebuilt via the hash.
-    "q268_incremental_zonemap" -> { (s, dir) =>
-      Planning.incrementalZoneMap(TestData.lineitem(s, dir),
-        scratchDir("graft-q268").toString)
-    },
-    // MV lattice routing: three persisted cuboids, each grouping query
-    // answered from the smallest subsuming cuboid (min rows, name
-    // tie-break), never the base table. Oracle recomputes the routing
-    // from cuboid sizes and answers directly from base — answered-from-
-    // cuboid == answered-from-base is the rewrite's correctness claim.
-    "q259_cuboid_routing" -> { (s, dir) =>
-      Planning.cuboidRouting(TestData.lineitem(s, dir),
-        scratchDir("graft-q259").toString)
-    },
-    // Incremental rollup maintenance: the q249 change images fold into
-    // per-(block, type) adjustments applied to the persisted rollup with
-    // one outer join — O(images), the base is never rescanned. Oracle =
-    // the rollup rebuilt over the post-change table; equality is the
-    // IVM proof, carried by the hash compare itself.
-    "q256_incremental_rollup" -> { (s, dir) =>
-      Planning.incrementalRollupMaintenance(TestData.events(s, dir),
-        scratchDir("graft-q256").resolve("rollup").toString)
-    },
-    // First-touch channel attribution with cent-exact revenue.
-    "q123_attribution" -> { (s, dir) =>
-      Funnel.attribution(TestData.events(s, dir)).orderBy("channel")
-    },
-    // Kneser-Ney continuation/fertility counts (LM training statistics).
-    "q124_kn_continuation" -> { (s, dir) =>
-      TextAnalysis.knContinuation(TestData.documents(s, dir))
-    },
-    // Hashing-trick linear classifier margin (model-inference shape).
-    "q125_classifier_margin" -> { (s, dir) =>
-      TextAnalysis.classifierMargin(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q59_dedup_clusters" -> { (s, dir) =>
-      Dedup.dedupClusters(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Incremental graph IVM: base labels persisted once, a delta edge
-    // batch merges components through a super-graph propagation bounded
-    // by the delta size, one broadcast remap rewrites touched labels.
-    // Oracle = components recomputed from scratch over ALL pairs;
-    // updated == rebuilt is the maintenance proof.
-    "q257_incremental_components" -> { (s, dir) =>
-      Dedup.incrementalComponents(TestData.documents(s, dir),
-        scratchDir("graft-q257").toString)
-    },
-    // SimHash signature → candidate pairs: pigeonhole banding (recall-
-    // complete for the Hamming threshold) + exact popcount verify.
-    "q80_simhash_pairs" -> { (s, dir) =>
-      Dedup.simhashPairs(TestData.documents(s, dir)).orderBy("doc_a", "doc_b")
-    },
-    "q44_simhash" -> { (s, dir) =>
-      Dedup.simhash(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q45_ann_brute" -> { (s, dir) =>
-      Similarity.bruteForceTopK(TestData.embeddings(s, dir)).orderBy("qid", "rank")
-    },
-    "q46_ann_lsh" -> { (s, dir) =>
-      Similarity.lshTopK(TestData.embeddings(s, dir)).orderBy("qid", "rank")
-    },
-    "q47_embedding_near_dups" -> { (s, dir) =>
-      Similarity.embeddingNearDups(TestData.embeddings(s, dir), threshold = 0.45)
-        .orderBy("vec_a", "vec_b")
-    },
-    "q48_lang_id" -> { (s, dir) =>
-      TextAnalysis.languageId(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q49_quality_signals" -> { (s, dir) =>
-      TextAnalysis.qualitySignals(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q50_token_counts" -> { (s, dir) =>
-      TextAnalysis.tokenCounts(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q51_fingerprints" -> { (s, dir) =>
-      TextAnalysis.fingerprints(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    "q52_multimodal_meta" -> { (s, dir) =>
-      Multimodal.documentMedia(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Frame sampling: ≤4 evenly spaced frames per media payload through
-    // the per-partition decoder; fan-out + fingerprint mirrored in SQL.
-    "q73_frame_sample" -> { (s, dir) =>
-      Multimodal.documentFrames(TestData.documents(s, dir))
-        .orderBy("doc_id", "frame_idx")
-    },
-    // Resize-to-fit planning over decoded metadata, integer-exact.
-    "q74_media_resize" -> { (s, dir) =>
-      Multimodal.resizePlan(Multimodal.documentMedia(TestData.documents(s, dir)))
-        .orderBy("doc_id")
-    },
-
-    // ---- Event-stream operators.
-    // D7-family probe over the nanosecond-timestamp events table.
-    "q60_events_hourly" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(money(col("value"))).cast("decimal(18,2)")).as("total_value"))
-        .orderBy("hour", "event_type")
-    },
-    // Co-located bucketed join: both sides written bucketed on the join
-    // key, so the sort-merge join plans with NO shuffle exchange (the
-    // no-Exchange property is asserted in BucketingSpec; here the driver
-    // hash-checks that the bucketed layout round-trips the values).
-    "q83_bucketed_join" -> { (s, dir) =>
-      Bucketing.writeBucketed(
-        TestData.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
-        "b83_orders", "o_custkey", 8)
-      Bucketing.writeBucketed(
-        TestData.customer(s, dir).select("c_custkey", "c_acctbal")
-          .withColumnRenamed("c_custkey", "o_custkey"),
-        "b83_customer", "o_custkey", 8)
-      s.table("b83_orders").join(s.table("b83_customer"), Seq("o_custkey"))
-        .hint("merge")
-        .groupBy("o_custkey")
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(money(col("o_totalprice"))).cast("decimal(18,2)")).as("total"))
-        .orderBy("o_custkey")
-    },
-    // Sliding (overlapping) windows: every event lands in size/slide = 2
-    // windows; the oracle replicates each event across its covering
-    // window starts with a 2-row generate_series.
-    "q81_sliding_window" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(money(col("value"))).cast("decimal(18,2)")).as("total_value"))
-        .select(unix_millis(col("w.start")).as("start_ms"),
-          col("event_type"), col("n"), col("total_value"))
-        .orderBy("start_ms", "event_type")
-    },
-    // The same sliding windows computed BY THE STREAMING ENGINE
-    // (watermark + overlapping window state, AvailableNow) — must land on
-    // the identical oracle as the batch formulation.
-    "q82_stream_sliding" -> { (s, dir) =>
-      EventStream.slidingHourly(s, dir)
-    },
-    // Small-file compaction: fragment the events table into 64 shards,
-    // compact to ~1 MB files, and hash-check the aggregate — the OPTIMIZE
-    // maintenance op must be invisible in the data.
-    "q88_compaction" -> { (s, dir) =>
-      val frag = scratchDir("graft-q88").resolve("events").toString
-      TestData.events(s, dir).repartition(64)
-        .write.mode("overwrite").parquet(frag)
-      WarehouseSink.compact(s, frag, targetBytes = 1L << 20)
-      s.read.parquet(frag)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(money(col("value"))).cast("decimal(18,2)")).as("total"))
-        .orderBy("event_type")
-    },
-    // Repetition detection (Gopher/C4 quality rule): dominant-n-gram
-    // fraction per document — multiplicity-preserving, unlike the dedup
-    // tier's distinct shingle sets.
-    "q91_repetition" -> { (s, dir) =>
-      TextAnalysis.repetition(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // PII scrub (compliance pass): regex counts + redaction over text with
-    // PII-shaped content — phone/IP/email derived deterministically from
-    // c_custkey with IDENTICAL integer arithmetic in the oracle (the slim
-    // test customer table carries no contact columns). Scan-only, codegen'd.
-    "q92_pii_redact" -> { (s, dir) =>
-      val key = col("c_custkey")
-      val phone = format_string("%02d-%03d-%03d-%04d",
-        (key % 25 + 10).cast("int"), (key % 1000).cast("int"),
-        (key * 7 % 1000).cast("int"), (key * 13 % 10000).cast("int"))
-      val ip = concat_ws(".", (key % 256).cast("string"), (key * 3 % 256).cast("string"),
-        (key * 5 % 256).cast("string"), (key * 9 % 256).cast("string"))
-      val email = concat(lit("user"), key.cast("string"), lit("@example.com"))
-      val txt = concat_ws(" ", col("c_name"), lit("ip"), ip, lit("tel"), phone,
-        lit("mail"), email, col("c_mktsegment"))
-      Privacy.detectRedact(
-        TestData.customer(s, dir).withColumn("txt", txt), "txt", Seq("c_custkey"))
-        .orderBy("c_custkey")
-    },
-    // Span-level dedup statistic (Lee et al. 2022): per document, token
-    // positions covered by an 8-gram that also occurs in another document.
-    "q93_dup_spans" -> { (s, dir) =>
-      Dedup.dupSpans(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Z-order (Morton) key — the multi-dimensional clustering key behind
-    // lakehouse OPTIMIZE ZORDER BY; the skipping payoff is measured in
-    // ZOrderSpec, the cross-engine check here pins the bit arithmetic.
-    "q94_zorder" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .select(col("event_id"),
-          ZOrder.morton(col("user_id"),
-            hour(col("ts")) * lit(60L) + minute(col("ts"))))
-        .orderBy("event_id")
-    },
-    // Hilbert clustering key over the same dims as q94's Morton key —
-    // the continuous curve (unit-step locality is spec-pinned; the
-    // cross-engine check pins the 16-plane rotation arithmetic).
-    "q261_hilbert_cluster" -> { (s, dir) =>
-      ZOrder.withHilbert(TestData.events(s, dir), col("user_id"),
-          hour(col("ts")) * lit(60L) + minute(col("ts")), "hkey")
-        .select("event_id", "hkey")
-        .orderBy("event_id")
-    },
-    // MinHash-estimate vs exact-Jaccard audit per LSH candidate pair —
-    // integer agreement counts and set sizes, exact on both engines.
-    "q95_minhash_error" -> { (s, dir) =>
-      Dedup.minhashEstimatePairs(TestData.documents(s, dir)).orderBy("doc_a", "doc_b")
-    },
-    // Global NTILE without the global window: RFM deciles via
-    // range-partitioned rank + NTILE arithmetic (see Segmentation) — the
-    // single-partition-Exchange killer applied to customer segmentation.
-    "q96_rfm_decile" -> { (s, dir) =>
-      Segmentation.rfmDeciles(TestData.orders(s, dir)).orderBy("custkey")
-    },
-    // Recency-decayed user value: exact integer half-life weights
-    // (shifted cents, no pow/float), bounded horizon, top-k users.
-    "q267_decayed_value_rank" -> { (s, dir) =>
-      Segmentation.decayedValueRank(TestData.events(s, dir))
-    },
-    // int8 embedding quantization with a per-vector verified error bound —
-    // all-integer arithmetic on the shared ×10⁴ grid (see Similarity).
-    "q97_int8_quant" -> { (s, dir) =>
-      Similarity.int8Quantize(TestData.embeddings(s, dir)).orderBy("vec_id")
-    },
-    // ORC as a second columnar source/sink: write the documents corpus as
-    // ORC, read it back, and prove content fidelity (md5 extremes) against
-    // the parquet-reading oracle. Formats differ; values must not.
-    "q98_orc_roundtrip" -> { (s, dir) =>
-      val path = scratchDir("graft-q98").resolve("documents_orc").toString
-      TestData.documents(s, dir).write.mode("overwrite").orc(path)
-      s.read.orc(path)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"),
-          min(md5(col("text"))).as("md5_min"), max(md5(col("text"))).as("md5_max"))
-        .orderBy("source")
-    },
-    // Two-pass heavy hitters: per-partition Misra-Gries candidates + exact
-    // confirm — the vocabulary never shuffles (see TextAnalysis scaladoc
-    // for the pigeonhole superset guarantee that makes this oracle-exact).
-    "q99_heavy_hitters" -> { (s, dir) =>
-      TextAnalysis.heavyHitters(TestData.documents(s, dir))
-        .orderBy(desc("cnt"), asc("token"))
-    },
-    // Market-basket pair counts: suppliers co-occurring in an order. The
-    // self-join fans out ≤ (items/order)² per order — bounded by the
-    // basket size, never by corpus size — and top-k plans as
-    // TakeOrderedAndProject (no global sort).
-    "q100_basket_pairs" -> { (s, dir) =>
-      val li = TestData.lineitem(s, dir)
-        .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk")).distinct()
-      li.join(li.select(col("ok"), col("sk").as("sk2")), Seq("ok"))
-        .filter(col("sk") < col("sk2"))
-        .groupBy(col("sk").as("supp_a"), col("sk2").as("supp_b"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy(desc("n_orders"), asc("supp_a"), asc("supp_b"))
-        .limit(20)
-    },
-    // Stream-stream interval join (the one join shape q67's stream-static
-    // doesn't cover): watermarked on both sides, time-bounded both ends,
-    // so join state is GC-able — checked against the batch self-join.
-    "q101_stream_stream_join" -> { (s, dir) =>
-      EventStream.clickViewPairs(s, dir)
-    },
-    // Equi-width histogram with in-plan integer bounds — profiling tier.
-    "q102_histogram" -> { (s, dir) =>
-      Profile.histogram(TestData.orders(s, dir),
-        money(col("o_totalprice")) * 100, k = 20).orderBy("bucket")
-    },
-    // One-pass column profiler: nulls / exact distincts / formatted
-    // min-max for every orders column, unpivoted to a row per column.
-    "q103_profile" -> { (s, dir) =>
-      import graft.operators.Profile.ColSpec
-      Profile.columns(TestData.orders(s, dir), Seq(
-        ColSpec.plain("o_orderkey"), ColSpec.plain("o_custkey"),
-        ColSpec.plain("o_orderstatus"), ColSpec.money("o_totalprice"),
-        ColSpec.ts("o_orderdate"), ColSpec.plain("o_orderpriority")))
-        .orderBy("col_name")
-    },
-    // Token-rarity quality score (mean document frequency) — the log-free
-    // perplexity-filter stand-in; integer until the final division.
-    "q104_rarity" -> { (s, dir) =>
-      TextAnalysis.tokenRarity(TestData.documents(s, dir)).orderBy("doc_id")
-    },
-    // Sequence packing for LLM training: deterministic budget-greedy
-    // chunking under a (source, shard)-bounded window — see Packing for
-    // why the shard key is what keeps this off the single-partition cliff.
-    "q105_pack_sequences" -> { (s, dir) =>
-      Packing.packSequences(TestData.documents(s, dir))
-        .orderBy("source", "shard", "seq_id")
-    },
-    // Exact positional p99 outlier fence per group (q85's machinery at an
-    // arbitrary percentile): rank + count windows partitioned BY GROUP
-    // (never global), the fence value broadcast back via a full-partition
-    // window max — one pass, no self-join.
-    "q106_outlier_fence" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val byType = Window.partitionBy("event_type")
-      val w = byType.orderBy("value", "event_id")
-      TestData.events(s, dir)
-        .select(col("event_type"), col("value"), col("event_id"))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(byType))
-        // quantile_disc-style position: floor((n-1)*99/100) + 1
-        .withColumn("pos", intDiv((col("n") - 1) * 99, lit(100)) + 1)
-        .withColumn("p99", max(when(col("rn") === col("pos"), col("value"))).over(byType))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), max("p99").as("p99"),
-          sum(when(col("value") > col("p99"), 1L).otherwise(0L)).as("n_above"))
-        .orderBy("event_type")
-    },
-    // Benford first-digit profile of order amounts (fraud-analytics
-    // screen): leading digit via STRING head of the integer cents — no
-    // floating log10 whose last ulp could disagree between engines.
-    "q107_benford" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .select((money(col("o_totalprice")) * 100).cast("long").as("cents"))
-        .filter(col("cents") > 0)
-        .select(substring(col("cents").cast("string"), 1, 1).as("digit"))
-        .groupBy("digit").agg(count(lit(1)).as("n"))
-        .orderBy("digit")
-    },
-    // Approximate percentile with a VERIFIED error contract (the q75
-    // pattern): per group, the KLL/GK sketch's p50/p90 must land within
-    // 1% of the exact percentile — the exactness anchor (count) and the
-    // contract verdicts are what cross the engine boundary, not the
-    // engine-specific sketch values. At 100 TB the exact side of this
-    // check is what you CAN'T run per-query; the contract query is the
-    // periodic audit that lets dashboards trust the sketch.
-    "q90_percentile_contract" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          expr("percentile(value, array(0.5D, 0.9D))").as("exact"),
-          expr("percentile_approx(value, array(0.5D, 0.9D), 1000)").as("approx"))
-        .select(col("event_type"), col("n"),
-          (abs(col("approx")(0) - col("exact")(0))
-            <= col("exact")(0) * 0.01).as("p50_within_1pct"),
-          (abs(col("approx")(1) - col("exact")(1))
-            <= col("exact")(1) * 0.01).as("p90_within_1pct"))
-        .orderBy("event_type")
-    },
-    // GROUPING SETS beyond rollup/cube: a time slice, an orthogonal
-    // priority slice, and the grand total in ONE pass over the fact —
-    // Spark expands the sets map-side (a single Expand + one shuffle), so
-    // at 100 TB this costs one scan instead of three unioned aggregates.
-    "q89_grouping_sets" -> { (s, dir) =>
-      TestData.orders(s, dir)
-        .select(year(col("o_orderdate")).as("y"), month(col("o_orderdate")).as("m"),
-          col("o_orderpriority").as("priority"), col("o_totalprice"))
-        .groupingSets(
-          Seq(Seq(col("y"), col("m")), Seq(col("priority")), Seq()),
-          col("y"), col("m"), col("priority"))
-        .agg(count(lit(1)).as("n"),
-          moneyOut(sum(money(col("o_totalprice"))).cast("decimal(18,2)")).as("total"))
-        .orderBy(asc_nulls_first("y"), asc_nulls_first("m"),
-          asc_nulls_first("priority"))
-    },
-    // Idempotent streaming ingest: the same file delivered twice (the
-    // at-least-once simulation) must collapse to exactly the distinct
-    // event count under dropDuplicatesWithinWatermark.
-    "q84_stream_dedup" -> { (s, dir) =>
-      import java.nio.file.{Files, Path}
-      val dup = scratchDir("graft-evdup")
-      for (n <- Seq("a.parquet", "b.parquet"))
-        Files.copy(Path.of(s"$dir/events.parquet"), dup.resolve(n))
-      val n = EventStream.dedupedCount(s, dup.toString)
-      import s.implicits._
-      Seq(n).toDF("n_distinct")
-    },
-    // Measured-watermark closure: the q150/q152 lateness methodology
-    // consumed end-to-end — a doubled, bounded-jitter-disordered feed is
-    // replayed in arrival-ordered micro-batches; the watermark is DERIVED
-    // from the measured max global-frontier lateness; the streamed
-    // dropDuplicatesWithinWatermark must then be exact (per-type distinct
-    // counts + the derived delay, both oracle-checked) with state bounded
-    // behind the watermark (asserted from progress metrics in the spec).
-    "q170_watermark_closure" -> { (s, dir) =>
-      EventStream.watermarkClosure(s, dir)
-    },
-    // Semi-structured: JSON property extraction from the events payload.
-    "q65_json_extract" -> { (s, dir) =>
-      TestData.events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("int").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"),
-          max(col("k")).as("max_k"))
-        .orderBy("event_type")
-    },
-
-    // Fuzzy matching (entity-resolution primitive): SymSpell delete-1
-    // blocking + edit-distance verify. Two strings with levenshtein <= 1
-    // always share a key in their delete-1 neighborhoods (delete the edited
-    // position from both sides), so the equi-join on the blocking key is
-    // COMPLETE for the threshold — identical output to the naive O(n^2)
-    // theta join, but candidate pairs are bounded by
-    // sum_over_keys C(bucket, 2) ~ O(n * avg_len * occupancy) instead of
-    // C(n, 2): the join shuffles on `bk` and scales to corpus-sized inputs.
-    "q66_fuzzy_match" -> { (s, dir) =>
-      val n = TestData.nation(s, dir).select(col("n_name"))
-      // name itself + every delete-one-char variant, deduped
-      val keyed = n.select(col("n_name"), explode(array_distinct(concat(
-        transform(sequence(lit(1), length(col("n_name"))), i =>
-          concat(col("n_name").substr(lit(1), i - 1),
-            col("n_name").substr(i + 1, length(col("n_name"))))),
-        array(col("n_name"))))).as("bk"))
-      keyed.as("a")
-        .join(keyed.as("b"),
-          col("a.bk") === col("b.bk") && col("a.n_name") < col("b.n_name"))
-        .select(col("a.n_name").as("name_a"), col("b.n_name").as("name_b"))
-        .distinct() // a pair can share several delete-1 keys
-        .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
-        .filter(col("dist") <= 1)
-        .orderBy("name_a", "name_b")
-    },
-
-    "q61_sessionize" -> { (s, dir) =>
-      Events.sessionize(TestData.events(s, dir)).orderBy("user_id", "session_seq")
-    },
-    // Ordered funnel: k-1 co-partitioned join+agg steps, no per-user state.
-    "q108_funnel" -> { (s, dir) =>
-      Funnel.funnel(TestData.events(s, dir)).orderBy("stage_idx")
-    },
-    // BPE trainer counting step: adjacent symbol-pair frequencies.
-    "q113_bpe_pairs" -> { (s, dir) =>
-      TextAnalysis.bpePairs(TestData.documents(s, dir))
-    },
-    // Incremental MV maintenance: merge(agg(base), agg(delta)) must equal
-    // the full recompute (the oracle computes the latter).
-    "q115_incremental_mv" -> { (s, dir) =>
-      graft.operators.Incremental
-        .monthlyOrdersMerged(TestData.orders(s, dir), "1999-01-01")
-        .orderBy("ym")
-    },
-    // Order-independent table checksum over engine-stable renderings.
-    "q114_table_fingerprint" -> { (s, dir) =>
-      DataQuality.fingerprint(TestData.orders(s, dir), Seq(
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_orderpriority"), quant(col("o_totalprice"), 100),
-        // NTZ → TZ cast is identity under the pinned UTC session zone
-        unix_millis(col("o_orderdate").cast("timestamp"))))
-    },
-    // Weekly cohort retention triangle.
-    "q109_retention" -> { (s, dir) =>
-      Funnel.retention(TestData.events(s, dir)).orderBy("cohort_week", "week_offset")
-    },
-    // Deterministic weighted sampling (integer A-Res) on the bounded heap.
-    "q111_weighted_sample" -> { (s, dir) =>
-      Sampling.weightedSample(TestData.orders(s, dir)).orderBy("stratum", "o_orderkey")
-    },
-    "q62_asof_join" -> { (s, dir) =>
-      Events.asOfLastSignup(TestData.events(s, dir)).orderBy("event_id")
-    },
-    "q63_pivot_counts" -> { (s, dir) =>
-      Events.pivotCounts(TestData.events(s, dir)).orderBy("user_id")
-    },
-    "q64_stream_tumbling" -> { (s, dir) =>
-      EventStream.tumblingHourly(s, dir)
-    },
-    // Stream-static join: the streaming fact enriched against a static
-    // broadcast dim (derived in-plan: cohort = user_id mod 4), then a
-    // windowless streaming aggregate — checked against the batch oracle.
-    "q67_stream_static_join" -> { (s, dir) =>
-      val dim = TestData.events(s, dir).select("user_id").distinct()
-        .withColumn("cohort", concat(lit("c"), (col("user_id") % 4).cast("string")))
-      EventStream.enrichedTypeTotals(s, dir, dim)
-    },
-    // Custom-state sessionization (flatMapGroupsWithState) must land on
-    // the SAME sessions as the batch lag/sum formulation — q61's oracle
-    // minus the money column.
-    "q68_stream_sessionize" -> { (s, dir) =>
-      EventStream.sessionizeStateful(s, dir)
-        .select("user_id", "session_seq", "n_events", "start_ms", "end_ms")
-        .orderBy("user_id", "session_seq")
-    },
-    // SCD2 merge: close-and-append over a deterministic snapshot delta
-    // (every 10th key changes, every 100th is brand new, every 3rd is
-    // absent from the update) — all three paths of the merge exercised
-    // and hash-checked against the oracle's full-join formulation.
-    // Point-in-time join: every order joins the SCD2 version effective
-    // on its order date (interval predicate as residual on the key
-    // equi-join); pre-cut orders must aggregate under the OLD attribute.
-    "q265_pit_join" -> { (s, dir) =>
-      Scd.pointInTimeJoin(TestData.orders(s, dir), TestData.customer(s, dir))
-    },
-    "q69_scd2_merge" -> { (s, dir) =>
-      val cust = TestData.customer(s, dir)
-      val dim = cust.select(col("c_custkey").as("k"),
-        col("c_nationkey").cast("int").as("nation"),
-        lit(java.sql.Date.valueOf("2020-01-01")).as("effective_from"),
-        lit(null).cast("date").as("effective_to"))
-      val upd = cust.filter(col("c_custkey") % 3 =!= 0)
-        .select(col("c_custkey").as("k"),
-          when(col("c_custkey") % 10 === 0, (col("c_nationkey") + 1) % 25)
-            .otherwise(col("c_nationkey")).cast("int").as("nation"))
-        .unionByName(cust.filter(col("c_custkey") % 100 === 0)
-          .select((col("c_custkey") + 1000000L).as("k"),
-            lit(7).cast("int").as("nation")))
-      Scd.type2(dim, upd, "k", Seq("nation"),
-          lit(java.sql.Date.valueOf("2024-06-01")))
-        .orderBy(col("k"), col("effective_from"))
-    },
-    // CDC detection: classify keys across two snapshots as
-    // insert/update/delete via one full-outer join (delta derived in-plan:
-    // every 10th key changes, every 7th is deleted, every 100th is new).
-    "q112_snapshot_diff" -> { (s, dir) =>
-      val cust = TestData.customer(s, dir)
-      val oldSnap = cust.select(col("c_custkey").as("k"),
-        col("c_nationkey").cast("int").as("nation"), col("c_mktsegment").as("seg"))
-      val newSnap = cust.filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("k"),
-          when(col("c_custkey") % 10 === 0, (col("c_nationkey") + 1) % 25)
-            .otherwise(col("c_nationkey")).cast("int").as("nation"),
-          col("c_mktsegment").as("seg"))
-        .unionByName(cust.filter(col("c_custkey") % 100 === 0)
-          .select((col("c_custkey") + 1000000L).as("k"),
-            lit(7).cast("int").as("nation"), lit("NEW").as("seg")))
-      Scd.snapshotDiff(oldSnap, newSnap, "k", Seq("nation", "seg"))
-        .orderBy("k", "change_type")
-    },
-    // Salted two-phase aggregation: the skew-mitigation rewrite must be
-    // invisible in the result — the oracle is the PLAIN group-by. Money
-    // stays decimal through both phases so partial-sum order can't leak.
-    "q70_salted_agg" -> { (s, dir) =>
-      Skew.saltedSum(TestData.events(s, dir), "user_id",
-          money(col("value")), saltFrom = col("event_id"))
-        .select(col("user_id"),
-          moneyOut(col("total").cast("decimal(18,2)")).as("total"))
-        .orderBy("user_id")
-    },
-    // Incremental ingestion dedup: the new batch is deduped against the
-    // ingested corpus AND within itself, all on 16-byte fingerprints.
-    "q71_incremental_dedup" -> { (s, dir) =>
-      Dedup.incrementalDedup(TestData.documents(s, dir)).orderBy("keep_doc_id")
-    },
-    // Range join: value-tier banding via θ-join against a broadcast
-    // 3-row range table.
-    "q72_range_join" -> { (s, dir) =>
-      Events.tierTotals(TestData.events(s, dir))
-    },
-  )
-
-  /** Committed CSV twin of [[BankAdapter.mccMapping]] — brands are the same
-    * fixed Brand#1..25 set at every scale factor, so one fixture serves all.
-    * Resolution order: `-Dgraft.mcc.csv=...` override; the source checkout
-    * path when running from the repo root; otherwise the classpath resource
-    * extracted to a temp file — so a packaged jar, spark-submit, or an IDE
-    * runner launched from any directory resolves the same bytes (the
-    * DuckDB oracle's `read_csv` gets whichever absolute path was picked).
-    */
-  /** Fixed retrieval query for q57 — terms from the synthetic corpus
-    * vocabulary, shared by engine and oracle.
-    */
-  val bm25Terms: Seq[String] = Seq("spark", "query", "join")
-
-  /** Temp dir for the sink/dedup queries that write real files per
-    * invocation — see [[graft.Scratch]]: deleted at JVM exit, and each
-    * re-invocation of the same query frees its predecessor's copy, so
-    * bench reps and scale runs keep disk flat instead of accumulating
-    * a warehouse copy per rep.
-    */
-  private def scratchDir(prefix: String): java.nio.file.Path =
-    graft.Scratch.dir(prefix)
-
-  /** q38 training mix: keep all of the curated source, half of the next,
-    * a tenth of everything else.
-    */
-  val sampleRates: Seq[(String, Int)] = Seq("src0" -> 100, "src1" -> 50)
-
-  /** Shared oracle for the batch (q81) and streaming (q82) sliding-window
-    * paths: each event is replicated to its size/slide = 2 covering
-    * window starts.
-    */
-  private val slidingWindowOracle: String =
-    s"""SELECT (epoch_ms(ts) // 3600000 - k) * 3600000 AS start_ms, event_type,
-               COUNT(*) AS n,
-               ${moneyOutSql(s"CAST(SUM(${moneySql("value")}) AS DECIMAL(18,2))")} AS total_value
-        FROM events, (SELECT unnest(generate_series(0, 1)) AS k)
-        GROUP BY 1, 2
-        ORDER BY 1, 2"""
-
-  lazy val mccBrandsCsv: String = sys.props.get("graft.mcc.csv").getOrElse {
-    val checkout = new java.io.File("src/main/resources/bank/mcc_brands.csv")
-    if (checkout.isFile) checkout.getAbsolutePath
-    else {
-      val in = getClass.getResourceAsStream("/bank/mcc_brands.csv")
-      require(in != null,
-        "bank/mcc_brands.csv not on classpath; set -Dgraft.mcc.csv=<path>")
-      val tmp = java.nio.file.Files.createTempFile("graft-mcc-brands", ".csv")
-      try java.nio.file.Files.copy(in, tmp,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      finally in.close()
-      // NOT deleteOnExit: the absolute path is baked into the generated
-      // oracle SQL, which DuckDB reads in a separate process AFTER this
-      // JVM exits — deleting at exit would break exactly the packaged-jar
-      // scenario this fallback exists for
-      tmp.toString
-    }
-  }
-
-  def oracleSql: Map[String, String] = BankOracle.queries ++ Map(
-    // identical result contract as q30/q29/q31 — the SQL-text paths must
-    // land on the same oracles as the DataFrame paths
-    "q33_sql_dash_top_categories" -> BankOracle.queries("q30_dash_top_categories"),
-    "q34_sql_dash_trend" -> BankOracle.queries("q29_dash_trend"),
-    "q35_sql_dash_age_groups" -> BankOracle.queries("q31_dash_age_groups"),
-
-    "q32_csv_mcc_enrich" ->
-      s"""WITH ${BankAdapter.ctes}
-          SELECT m.Category, COUNT(*) AS n,
-                 CAST(CAST(SUM(t.Amount) AS DECIMAL(18,2)) AS DOUBLE) AS total
-          FROM bank_transactions t
-          JOIN read_csv('$mccBrandsCsv', header=true) m USING (MerchantName)
-          GROUP BY m.Category
-          ORDER BY m.Category""",
-
-    "q01_scan_filter_project" ->
-      s"""SELECT l_orderkey, l_linenumber, ${moneyOutSql(moneySql("l_extendedprice"))} AS price
-          FROM lineitem
-          WHERE l_shipdate < TIMESTAMP '1997-01-01' AND l_quantity > 45
-          ORDER BY l_orderkey, l_linenumber, price""",
-
-    "q02_agg_groupby" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_quantity")}) AS DECIMAL(18,2))")} AS sum_qty,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2))")} AS sum_base_price,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1.0 - l_discount)")}) AS DECIMAL(18,2))")} AS sum_disc_price,
-                 COUNT(*) AS count_order
-          FROM lineitem
-          GROUP BY l_returnflag, l_linestatus
-          ORDER BY l_returnflag, l_linestatus""",
-
-    "q03_topk" ->
-      s"""SELECT p_brand,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2))")} AS total_revenue
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          GROUP BY p_brand
-          ORDER BY total_revenue DESC, p_brand
-          LIMIT 5""",
-
-    "q04_join_theta_filter" ->
-      s"""SELECT o_orderkey, o_custkey, ${moneyOutSql(moneySql("o_totalprice"))} AS price,
-                 ${moneyOutSql(moneySql("c_acctbal"))} AS acctbal
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          WHERE o_totalprice > c_acctbal
-          ORDER BY o_orderkey""",
-
-    "q05_semi_join" ->
-      s"""SELECT c_custkey, c_name FROM customer
-          WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-          ORDER BY c_custkey""",
-
-    "q06_anti_join" ->
-      s"""SELECT c_custkey, c_name FROM customer
-          WHERE NOT EXISTS (SELECT 1 FROM orders
-                            WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-          ORDER BY c_custkey""",
-
-    "q07_lookup_join" ->
-      s"""SELECT s_suppkey, s_name, n_name, r_name
-          FROM supplier
-          JOIN nation ON s_nationkey = n_nationkey
-          JOIN region ON n_regionkey = r_regionkey
-          ORDER BY s_suppkey""",
-
-    "q08_union" ->
-      s"""SELECT * FROM (
-            SELECT o_orderkey, o_orderpriority AS priority FROM orders
-            WHERE o_orderpriority = '1-URGENT'
-            UNION ALL
-            SELECT o_orderkey, o_orderpriority AS priority FROM orders
-            WHERE o_orderpriority = '5-LOW')
-          ORDER BY o_orderkey, priority""",
-
-    "q09_distinct" ->
-      s"""SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-          ORDER BY o_orderstatus, o_orderpriority""",
-
-    "q10_keep_first" ->
-      s"""SELECT o_custkey, o_orderkey AS first_orderkey, o_orderdate AS first_orderdate
-          FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey
-                  ORDER BY o_orderdate, o_orderkey) AS rn FROM orders)
-          WHERE rn = 1
-          ORDER BY o_custkey""",
-
-    "q11_window_running" ->
-      s"""SELECT o_custkey, o_orderkey, o_orderdate,
-                 ${moneyOutSql(s"""CAST(SUM(${moneySql("o_totalprice")}) OVER (
-                   PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(18,2))""")} AS cum_spent,
-                 ROW_NUMBER() OVER (PARTITION BY o_custkey
-                   ORDER BY o_orderdate, o_orderkey) AS order_seq
-          FROM orders
-          ORDER BY o_custkey, order_seq""",
-
-    "q12_rollup" ->
-      s"""SELECT CAST(year(o_orderdate) AS INT) AS y, CAST(month(o_orderdate) AS INT) AS m,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("o_totalprice")}) AS DECIMAL(18,2))")} AS total
-          FROM orders
-          GROUP BY ROLLUP (1, 2)
-          ORDER BY y NULLS FIRST, m NULLS FIRST""",
-
-    "q13_setops" ->
-      s"""SELECT * FROM (
-            SELECT c_mktsegment, 'both' AS op FROM (
-              SELECT c_mktsegment FROM customer WHERE c_acctbal > 5000
-              INTERSECT
-              SELECT c_mktsegment FROM customer WHERE c_acctbal < 0)
-            UNION ALL
-            SELECT c_mktsegment, 'rich_only' AS op FROM (
-              SELECT c_mktsegment FROM customer WHERE c_acctbal > 5000
-              EXCEPT
-              SELECT c_mktsegment FROM customer WHERE c_acctbal < 0))
-          ORDER BY op, c_mktsegment""",
-
-    "q17_date_spine" ->
-      s"""WITH bounds AS (
-            SELECT CAST(min(o_orderdate) AS DATE) AS lo, CAST(max(o_orderdate) AS DATE) AS hi
-            FROM orders),
-          spine AS (
-            SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day
-            FROM bounds),
-          daily AS (
-            SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n_orders
-            FROM orders GROUP BY 1)
-          SELECT spine.day, coalesce(daily.n_orders, 0) AS n_orders
-          FROM spine LEFT JOIN daily USING (day)
-          ORDER BY day""",
-
-    "q16_count_distinct" ->
-      s"""SELECT l_returnflag,
-                 COUNT(DISTINCT l_suppkey) AS n_suppliers,
-                 COUNT(DISTINCT l_partkey) AS n_parts,
-                 COUNT(*) AS n_rows
-          FROM lineitem
-          GROUP BY l_returnflag
-          ORDER BY l_returnflag""",
-
-    "q14_cube" ->
-      s"""SELECT o_orderstatus AS st, o_orderpriority AS pri,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("o_totalprice")}) AS DECIMAL(18,2))")} AS total,
-                 COUNT(*) AS n
-          FROM orders
-          GROUP BY CUBE (1, 2)
-          ORDER BY st NULLS FIRST, pri NULLS FIRST""",
-
-    "q15_stats" ->
-      s"""SELECT o_orderpriority,
-                 COUNT(*) AS n,
-                 ${moneyOutSql(s"MIN(${moneySql("o_totalprice")})")} AS min_price,
-                 ${moneyOutSql(s"MAX(${moneySql("o_totalprice")})")} AS max_price,
-                 quantile_cont(CAST(${moneySql("o_totalprice")} AS DOUBLE), 0.5) AS median_price
-          FROM orders
-          GROUP BY o_orderpriority
-          ORDER BY o_orderpriority""",
-
-    "q40_dedup_exact" ->
-      s"""${Dedup.exactSql}
-          ORDER BY text_hash""",
-
-    "q53_ann_ivf_assign" ->
-      s"""WITH ${Similarity.ivfAssignSql}
-          SELECT vec_id, cell, score FROM ivf_assign ORDER BY vec_id""",
-
-    "q116_negative_samples" ->
-      s"""WITH ${Similarity.negativeSamplesSql()}
-          SELECT qid, rank, neg_id FROM neg_samples ORDER BY qid, rank""",
-
-    "q110_semantic_dedup" ->
-      s"""WITH ${Similarity.semanticDedupSql(0.35)}
-          SELECT s.vec_id, s.cell,
-                 CAST(CASE WHEN d.vec_id IS NULL THEN 0 ELSE 1 END AS INT) AS dropped
-          FROM sd s LEFT JOIN sem_dom d ON s.vec_id = d.vec_id
-          ORDER BY s.vec_id""",
-
-    "q58_label_centroids" ->
-      s"""WITH qv AS (
-            SELECT vec_id, label,
-                   list_transform(embedding, x -> ${quantSql("x")}) AS q
-            FROM embeddings),
-          elems AS (
-            SELECT label, CAST(i - 1 AS INT) AS d, q[CAST(i AS INT)] AS x
-            FROM (SELECT label, q, unnest(generate_series(1, len(q))) AS i FROM qv) t)
-          SELECT label, d, CAST(SUM(x) AS DOUBLE) / COUNT(*) AS mean
-          FROM elems
-          GROUP BY label, d
-          ORDER BY label, d""",
-
-    "q55_contamination" ->
-      s"""WITH ${TextAnalysis.contaminationSql()}
-          SELECT doc_id, n_shingles, contaminated, contamination_ratio
-          FROM contamination ORDER BY doc_id""",
-
-    "q56_quality_filter" ->
-      s"""${TextAnalysis.qualityFilterSql()}
-          ORDER BY doc_id""",
-
-    "q57_bm25_topk" -> TextAnalysis.bm25Sql(bm25Terms),
-
-    "q38_stratified_sample" ->
-      s"""${Sampling.stratifiedSampleSql(sampleRates)}
-          ORDER BY doc_id""",
-
-    "q39_vocab_topk" -> TextAnalysis.vocabTopKSql(),
-
-    "q78_text_normalize" ->
-      s"""${TextAnalysis.normalizedSql}
-          ORDER BY doc_id""",
-
-    "q86_tfidf_terms" ->
-      s"""WITH ${TextAnalysis.tfidfTopTermsSql()}
-          SELECT doc_id, rank, token, score FROM tfidf_topk
-          ORDER BY doc_id, rank""",
-
-    "q79_train_test_split" ->
-      s"""WITH RECURSIVE ${Sampling.leakageSafeSplitSql()}
-          SELECT doc_id, cluster_id, split FROM split ORDER BY doc_id""",
-
-    "q54_ann_ivf_topk" ->
-      s"""WITH ${Similarity.ivfTopKSql()}
-          SELECT qid, rank, nid, score FROM ivf_topk ORDER BY qid, rank""",
-
-    "q77_ann_recall" ->
-      s"""WITH ${Similarity.annRecallSql()}
-          SELECT qid, hits, recall_at_k FROM ann_recall ORDER BY qid""",
-
-    "q87_ivf_kmeans" ->
-      s"""WITH ${Similarity.ivfKmeansCentroidsSql}
-          SELECT cid, d, mean FROM km_centroids ORDER BY cid, d""",
-
-    "q41_ngram_jaccard" ->
-      s"""WITH ${Dedup.ngramJaccardPairsSql(3, 0.1)}
-          SELECT doc_a, doc_b, inter, jaccard FROM jaccard_pairs
-          ORDER BY doc_a, doc_b""",
-
-    "q42_minhash_signatures" ->
-      s"""WITH ${Dedup.minhashSignaturesSql()}
-          SELECT doc_id, h, mh FROM minhash ORDER BY doc_id, h""",
-
-    "q43_lsh_candidates" ->
-      s"""WITH ${Dedup.lshCandidatesSql()}
-          SELECT doc_a, doc_b, n_shared_bands FROM lsh_pairs ORDER BY doc_a, doc_b""",
-
-    "q117_collocations" -> TextAnalysis.collocationsSql(),
-
-    "q122_pagerank" ->
-      s"""WITH ${Graph.pagerankSql()}
-          SELECT doc_id, rank_fp, score FROM pagerank ORDER BY doc_id""",
-
-    "q142_pagerank_residuals" ->
-      s"""WITH ${Graph.pagerankResidualsSql()}
-          SELECT round, residual_fp FROM pagerank_residuals ORDER BY round""",
-
-    "q126_markov_transitions" ->
-      s"""${Events.markovTransitionsSql}
-          ORDER BY prev_type, next_type""",
-
-    "q127_robust_spread" ->
-      s"""WITH ${Profile.robustSpreadSql}
-          SELECT event_type, median, mad FROM robust_spread ORDER BY event_type""",
-
-    "q128_chunk_docs" ->
-      s"""WITH ${Packing.chunkDocsSql()}
-          SELECT doc_id, chunk_idx, start_tok, chunk_tokens, chunk_fp
-          FROM chunks ORDER BY doc_id, chunk_idx""",
-
-    "q129_vocab_coverage" ->
-      s"""WITH ${TextAnalysis.vocabCoverageSql()}
-          SELECT doc_id, n_tokens, n_oov, oov_rate FROM vocab_cov ORDER BY doc_id""",
-
-    "q130_source_overlap" ->
-      s"""WITH ${Dedup.sourceOverlapSql()}
-          SELECT source_lo, source_hi, n_pairs FROM source_overlap
-          ORDER BY source_lo, source_hi""",
-
-    "q141_prefix_join" ->
-      s"""WITH ${Dedup.prefixJaccardJoinSql()}
-          SELECT doc_a, doc_b, n_inter, n_union, jaccard FROM prefix_join
-          ORDER BY doc_a, doc_b""",
-
-    "q143_containment_join" ->
-      s"""WITH ${Dedup.containmentJoinSql()}
-          SELECT bench_id, corpus_id, n_inter, n_q, containment
-          FROM containment_join ORDER BY bench_id, corpus_id""",
-
-    "q144_corpus_mix" ->
-      s"""WITH ${Sampling.corpusMixSql()}
-          SELECT source, n_docs, total_tokens, kept_docs, kept_tokens, fully_kept
-          FROM corpus_mix ORDER BY source""",
-
-    "q145_kmv_distinct" ->
-      s"""WITH ${Dedup.kmvDistinctSql()}
-          SELECT source, n_exact, kmv_estimate, rel_err FROM kmv_distinct
-          ORDER BY source""",
-
-    "q146_shard_shuffle" ->
-      s"""WITH ${Sampling.shardShuffleSql()}
-          SELECT shard, n_docs, n_tokens, first_coin, last_coin, order_checksum
-          FROM shard_shuffle ORDER BY shard""",
-
-    "q147_dedup_savings" ->
-      s"""WITH RECURSIVE ${Dedup.dedupSavingsSql()}
-          SELECT source, n_docs, total_tokens, exact_kept_docs, exact_kept_tokens,
-                 neardup_kept_docs, neardup_kept_tokens
-          FROM dedup_savings ORDER BY source""",
-
-    "q148_shipping_priority" ->
-      s"""SELECT l_orderkey,
-                 CAST(year(o_orderdate) * 10000 + month(o_orderdate) * 100
-                      + day(o_orderdate) AS INT) AS order_ymd,
-                 o_orderpriority,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2))")} AS revenue
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          WHERE c_mktsegment = 'BUILDING'
-            AND o_orderdate < TIMESTAMP '1998-06-01'
-            AND l_shipdate > TIMESTAMP '1998-06-01'
-          GROUP BY 1, 2, 3
-          ORDER BY revenue DESC, l_orderkey
-          LIMIT 10""",
-
-    "q149_above_nation_avg" ->
-      s"""WITH spend AS (
-            SELECT c_custkey, c_nationkey,
-                   COALESCE(SUM(${quantSql("o_totalprice", 100)}), 0) AS cents
-            FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-            GROUP BY c_custkey, c_nationkey),
-          nat AS (
-            SELECT c_nationkey, CAST(SUM(cents) AS BIGINT) AS nation_cents,
-                   COUNT(*) AS n_cust
-            FROM spend GROUP BY c_nationkey)
-          SELECT s.c_custkey, n.n_name, CAST(s.cents AS DOUBLE) / 100.0 AS spend
-          FROM spend s
-          JOIN nat a ON s.c_nationkey = a.c_nationkey
-          JOIN nation n ON s.c_nationkey = n.n_nationkey
-          WHERE s.cents * a.n_cust > 2 * a.nation_cents
-          ORDER BY s.c_custkey""",
-
-    "q150_lateness_audit" ->
-      s"""WITH ${Events.latenessAuditSql}
-          SELECT event_type, band, n, max_late_ms FROM lateness_audit
-          ORDER BY event_type, band""",
-
-    "q152_lateness_disordered" ->
-      s"""WITH ${Events.latenessDisorderedSql}
-          SELECT event_type, band, n, max_late_ms FROM lateness_audit
-          ORDER BY event_type, band""",
-
-    "q153_skew_plan" ->
-      s"""WITH ${Planning.skewPlanSql("events", "event_type", 1500L)}
-          SELECT event_type, n, salt_factor FROM skew_plan
-          ORDER BY event_type""",
-
-    "q154_kmv_join_estimate" ->
-      s"""WITH ${Planning.kmvJoinOverlapSql(
-              "SELECT CAST(user_id * 1000000 + epoch_ms(ts)//86400000 AS VARCHAR) AS key FROM events WHERE event_type = 'click'",
-              "SELECT CAST(user_id * 1000000 + epoch_ms(ts)//86400000 AS VARCHAR) AS key FROM events WHERE event_type = 'view'")}
-          SELECT n_a, n_b, n_inter, union_estimate, inter_estimate, rel_err
-          FROM kmv_overlap""",
-
-    "q155_ivf_recall_curve" ->
-      s"""WITH ${Similarity.ivfRecallCurveSql()}
-          SELECT nprobe, hits, recall FROM ivf_recall_curve
-          ORDER BY nprobe""",
-
-    "q156_snapshot_diff" ->
-      s"""WITH ${Snapshot.diffSql}
-          SELECT source, status, n FROM snapshot_diff
-          ORDER BY source, status""",
-
-    "q157_bloom_semi_audit" ->
-      s"""WITH ${Planning.bloomSemiAuditSql(
-              "SELECT CAST(user_id * 1000000 + epoch_ms(ts)//86400000 AS VARCHAR) AS key FROM events WHERE event_type = 'purchase'",
-              "SELECT CAST(user_id * 1000000 + epoch_ms(ts)//86400000 AS VARCHAR) AS key FROM events")}
-          SELECT n_probe_rows, n_pass_rows, n_true_rows, n_fp_rows,
-                 neg_keys, fp_keys, fp_key_rate
-          FROM bloom_audit""",
-
-    "q158_activity_islands" ->
-      s"""WITH ${Events.activityIslandsSql}
-          SELECT user_id, start_day, end_day, len_days FROM activity_islands
-          ORDER BY user_id, start_day""",
-
-    "q159_cm_sketch_audit" ->
-      s"""WITH ${TextAnalysis.cmSketchAuditSql()}
-          SELECT token, exact_cnt, cm_estimate, overestimate FROM cm_audit
-          ORDER BY exact_cnt DESC, token""",
-
-    "q160_quota_sample" ->
-      s"""WITH ${Sampling.quotaSampleSql(quota = 25)}
-          SELECT source, pick_rank, doc_id FROM quota_sample
-          ORDER BY source, pick_rank""",
-
-    "q161_histogram_drift" ->
-      s"""WITH ${Snapshot.driftSql()}
-          SELECT source, n_buckets, tot_a, tot_b, drift_l1 FROM histogram_drift
-          ORDER BY source""",
-
-    "q163_join_advisor" ->
-      s"""WITH ${Planning.joinAdvisorSql(Seq(
-            "region" -> "4 + COALESCE(len(r_name), 0) + 4",
-            "nation" -> "4 + COALESCE(len(n_name), 0) + 4 + 4",
-            "customer" -> ("8 + COALESCE(len(c_name), 0) + 4 + 4 + 8"
-              + " + COALESCE(len(c_mktsegment), 0) + 4"),
-            "supplier" -> "8 + COALESCE(len(s_name), 0) + 4 + 4 + 8",
-            "part" -> ("8 + COALESCE(len(p_name), 0) + 4 + COALESCE(len(p_brand), 0) + 4"
-              + " + COALESCE(len(p_type), 0) + 4 + 4 + 8"),
-            "orders" -> ("8 + 8 + COALESCE(len(o_orderstatus), 0) + 4 + 8 + 8"
-              + " + COALESCE(len(o_orderpriority), 0) + 4"),
-            "lineitem" -> ("8 + 8 + 8 + 4 + 8 + 8 + 8 + 8"
-              + " + COALESCE(len(l_returnflag), 0) + 4"
-              + " + COALESCE(len(l_linestatus), 0) + 4 + 8"),
-            // the engine's normalized events frame carries BOTH the micros
-            // ts (8) and the derived ts_ns (8) — mirror that width
-            "events" -> ("8 + 8 + 8 + COALESCE(len(event_type), 0) + 4 + 8"
-              + " + COALESCE(len(props), 0) + 4 + 8"),
-            "documents" -> ("8 + COALESCE(len(text), 0) + 4 + COALESCE(len(lang), 0) + 4"
-              + " + COALESCE(len(source), 0) + 4 + 8"),
-            "embeddings" -> "8 + COALESCE(len(embedding), 0) * 4 + 8 + 4"))}
-          SELECT table_name, n_rows, est_bytes, strategy FROM join_advisor
-          ORDER BY table_name""",
-
-    "q164_incremental_refresh" ->
-      s"""WITH ${Snapshot.incrementalRefreshSql}
-          SELECT source, n_docs, sum_chars FROM refresh_direct
-          ORDER BY source""",
-
-    "q165_matryoshka_audit" ->
-      s"""WITH ${Similarity.matryoshkaRankAuditSql()}
-          SELECT qid, n_cand, sum_d2, spearman_rho FROM matryoshka_audit
-          ORDER BY qid""",
-
-    "q166_revenue_share" ->
-      s"""WITH rs_m AS (
-            SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS INT) AS ym,
-                   l_returnflag AS flag,
-                   CAST(SUM(${quantSql("l_extendedprice", 100)}) AS BIGINT) AS cents
-            FROM lineitem GROUP BY 1, 2)
-          SELECT ym, flag, cents,
-                 CAST(cents AS DOUBLE)
-                   / CAST(SUM(cents) OVER (PARTITION BY ym) AS DOUBLE) AS share
-          FROM rs_m ORDER BY ym, flag""",
-
-    "q167_user_growth" ->
-      s"""WITH ug_f AS (
-            SELECT user_id, MIN(epoch_ms(ts) // 86400000) AS day
-            FROM events GROUP BY user_id),
-          ug_d AS (SELECT day, COUNT(*) AS new_users FROM ug_f GROUP BY day)
-          SELECT day, new_users,
-                 CAST(SUM(new_users) OVER (ORDER BY day
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-                   AS cum_users
-          FROM ug_d ORDER BY day""",
-
-    "q168_big_customer_orders" ->
-      s"""WITH big AS (
-            SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-            FROM lineitem GROUP BY 1
-            HAVING SUM(CAST(l_quantity AS BIGINT)) > 250)
-          SELECT c_name, c_custkey, o_orderkey,
-                 CAST(year(o_orderdate) * 10000 + month(o_orderdate) * 100
-                      + day(o_orderdate) AS INT) AS order_ymd,
-                 o_totalprice, sum_qty
-          FROM orders
-          JOIN big ON o_orderkey = big.l_orderkey
-          JOIN customer ON c_custkey = o_custkey
-          ORDER BY o_totalprice DESC, o_orderkey
-          LIMIT 100""",
-
-    "q169_salted_plan_exec" ->
-      s"""SELECT event_type, COUNT(*) AS n,
-                 CAST(CAST(SUM(${moneySql("value")}) AS DECIMAL(18,2)) AS DOUBLE)
-                   AS total_value
-          FROM events GROUP BY event_type ORDER BY event_type""",
-
-    "q174_top_supplier" ->
-      s"""WITH ts_rev AS (
-            SELECT l_suppkey,
-                   CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2)) AS rev
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1998-01-01'
-              AND l_shipdate < TIMESTAMP '1998-04-01'
-            GROUP BY 1)
-          SELECT s_suppkey, s_name, ${moneyOutSql("rev")} AS total_revenue
-          FROM ts_rev JOIN supplier ON l_suppkey = s_suppkey
-          WHERE rev = (SELECT MAX(rev) FROM ts_rev)
-          ORDER BY s_suppkey""",
-
-    "q175_order_count_distribution" ->
-      s"""SELECT c_count, custdist FROM (
-            SELECT c_count, COUNT(*) AS custdist FROM (
-              SELECT c_custkey, COUNT(o_orderkey) AS c_count
-              FROM customer LEFT JOIN orders
-                ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-              GROUP BY c_custkey) ocd_pc
-            GROUP BY c_count) ocd_d
-          ORDER BY custdist DESC, c_count DESC""",
-
-    "q176_small_quantity_revenue" ->
-      s"""WITH sq_li AS (
-            SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-                   ${moneySql("l_extendedprice")} AS price
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE p_brand = 'Brand#13'),
-          sq_pp AS (
-            SELECT l_partkey, CAST(SUM(qty) AS BIGINT) AS sum_qty,
-                   COUNT(*) AS cnt_p
-            FROM sq_li GROUP BY 1)
-          SELECT CAST(CAST(SUM(price) AS DECIMAL(18,2)) AS DOUBLE) / 7.0
-                   AS avg_yearly,
-                 COUNT(*) AS n_lines
-          FROM sq_li JOIN sq_pp USING (l_partkey)
-          WHERE qty * 5 * cnt_p < sum_qty""",
-
-    "q177_blocking_supplier" ->
-      s"""WITH bs_li AS (
-            SELECT l_orderkey, l_suppkey, l_shipdate FROM lineitem)
-          SELECT s_name, COUNT(DISTINCT l_orderkey) AS numwait
-          FROM bs_li l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-          WHERE EXISTS (
-              SELECT 1 FROM bs_li l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-            AND NOT EXISTS (
-              SELECT 1 FROM bs_li l3
-              WHERE l3.l_orderkey = l1.l_orderkey
-                AND l3.l_suppkey <> l1.l_suppkey
-                AND l3.l_shipdate >= l1.l_shipdate)
-          GROUP BY s_name
-          ORDER BY numwait DESC, s_name LIMIT 10""",
-
-    "q178_important_parts" ->
-      s"""WITH ip_asia AS (
-            SELECT s_suppkey FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'),
-          ip_val AS (
-            SELECT l_partkey AS partkey,
-                   CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2)) AS v
-            FROM lineitem JOIN ip_asia ON l_suppkey = s_suppkey
-            GROUP BY 1),
-          ip_tot AS (SELECT CAST(SUM(v) AS DECIMAL(20,2)) AS tot FROM ip_val)
-          SELECT partkey, ${moneyOutSql("v")} AS value
-          FROM ip_val, ip_tot
-          WHERE v * 2000 > tot
-          ORDER BY value DESC, partkey""",
-
-    "q179_market_share" ->
-      s"""WITH ms_cust AS (
-            SELECT c_custkey FROM customer
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'AMERICA'),
-          ms_agg AS (
-            SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-                   CAST(SUM(CASE WHEN n_name = 'NATION_3'
-                     THEN ${moneySql("l_extendedprice * (1 - l_discount)")}
-                     ELSE 0 END) AS DECIMAL(18,2)) AS nat,
-                   CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")})
-                     AS DECIMAL(18,2)) AS tot
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN supplier ON l_suppkey = s_suppkey
-            JOIN nation ON s_nationkey = n_nationkey
-            WHERE o_custkey IN (SELECT c_custkey FROM ms_cust)
-            GROUP BY 1)
-          SELECT o_year, CAST(nat AS DOUBLE) / CAST(tot AS DOUBLE) AS mkt_share,
-                 ${moneyOutSql("tot")} AS total_volume
-          FROM ms_agg ORDER BY o_year""",
-
-    "q180_pq_audit" ->
-      s"""WITH ${Similarity.pqAuditSql()}
-          SELECT subspace, n_vecs, codes_used, total_sqerr, mean_sqerr
-          FROM pq_audit ORDER BY subspace""",
-
-    "q181_kcenter_coreset" ->
-      s"""WITH ${Similarity.kcenterCoresetSql()}
-          SELECT step, center_id, radius FROM kcenter ORDER BY step""",
-
-    "q182_doc_surprisal" ->
-      s"""WITH ${TextAnalysis.docSurprisalSql()}
-          SELECT doc_id, n_tokens, surprisal_bits, bits_per_token
-          FROM doc_surprisal ORDER BY doc_id""",
-
-    "q183_gram_audit" ->
-      s"""WITH ${Similarity.gramAuditSql}
-          SELECT i, j, second_moment, cov_num
-          FROM gram_audit ORDER BY i, j""",
-
-    "q184_excess_stock_suppliers" ->
-      s"""WITH es_li AS (
-            SELECT l_partkey, l_suppkey, CAST(l_quantity AS BIGINT) AS qty
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE p_type = 'PROMO'),
-          es_sp AS (
-            SELECT l_partkey, l_suppkey, CAST(SUM(qty) AS BIGINT) AS qty_sp
-            FROM es_li GROUP BY 1, 2),
-          es_p AS (
-            SELECT l_partkey, CAST(SUM(qty_sp) AS BIGINT) AS qty_p
-            FROM es_sp GROUP BY 1),
-          es_s AS (
-            SELECT DISTINCT l_suppkey
-            FROM es_sp JOIN es_p USING (l_partkey)
-            WHERE qty_sp * 8 > qty_p)
-          SELECT s_suppkey, s_name, n_name
-          FROM supplier JOIN nation ON s_nationkey = n_nationkey
-          WHERE s_suppkey IN (SELECT l_suppkey FROM es_s)
-          ORDER BY s_suppkey""",
-
-    "q185_zonemap_audit" ->
-      s"""WITH ${Planning.zoneMapAuditSql()}
-          SELECT layout, pred_id, n_zones, zones_skipped, rows_skipped, skip_ratio
-          FROM zone_map_audit ORDER BY layout, pred_id""",
-
-    "q186_cdc_apply" ->
-      s"""WITH ${Scd.cdcApplySql()}
-          SELECT user_id, n_ops, last_op, deleted, final_value
-          FROM cdc_apply ORDER BY user_id""",
-
-    "q188_disjunctive_bands" ->
-      s"""SELECT ${moneyOutSql("CAST(SUM(rev) AS DECIMAL(18,2))")} AS revenue,
-                 COUNT(*) AS n_lines
-          FROM (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-                       ${moneySql("l_extendedprice * (1 - l_discount)")} AS rev
-                FROM lineitem) db_li
-          JOIN part ON l_partkey = p_partkey AND (
-               (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-                  AND qty BETWEEN 1 AND 11)
-            OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-                  AND qty BETWEEN 10 AND 20)
-            OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-                  AND qty BETWEEN 20 AND 30))""",
-
-    "q189_cheapest_supplier" ->
-      s"""WITH ch_eur AS (
-            SELECT s_suppkey, s_name FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'EUROPE'),
-          ch_li AS (
-            SELECT l_partkey,
-                   ${intDivSql(
-                     s"${quantSql("l_extendedprice", 100)} * 1000000",
-                     "CAST(l_quantity AS BIGINT)")} AS unit,
-                   l_suppkey
-            FROM lineitem
-            WHERE l_suppkey IN (SELECT s_suppkey FROM ch_eur)),
-          ch_best AS (
-            SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-                   unit AS unit_microcents
-            FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY l_partkey
-                    ORDER BY unit, l_suppkey) AS rn FROM ch_li) t
-            WHERE rn = 1)
-          SELECT partkey, suppkey, s_name, unit_microcents
-          FROM ch_best JOIN ch_eur ON suppkey = s_suppkey
-          ORDER BY partkey""",
-
-    "q190_degree_assortativity" ->
-      s"""WITH ${Graph.degreeAssortativitySql()}
-          SELECT m, sx, sy, sxy, sxx, syy, assortativity
-          FROM degree_assortativity""",
-
-    "q191_priority_pipeline" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS order_count
-          FROM orders
-          WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-            AND o_orderdate < TIMESTAMP '1997-04-01'
-            AND EXISTS (SELECT 1 FROM lineitem
-                        WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-          GROUP BY 1 ORDER BY 1""",
-
-    "q192_trade_volume" ->
-      s"""SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-                 CAST(year(l_shipdate) AS INT) AS l_year,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2))")} AS revenue
-          FROM lineitem
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation sn ON s_nationkey = sn.n_nationkey
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation cn ON c_nationkey = cn.n_nationkey
-          WHERE sn.n_name IN ('NATION_3', 'NATION_7')
-            AND cn.n_name IN ('NATION_3', 'NATION_7')
-            AND sn.n_name <> cn.n_name
-          GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-
-    "q193_product_profit" ->
-      s"""WITH pp_part AS (
-            SELECT p_partkey, ${moneySql("p_retailprice * 0.1")} AS unit_cost
-            FROM part WHERE p_type = 'ECONOMY')
-          SELECT n_name AS nation, CAST(year(l_shipdate) AS INT) AS o_year,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) - SUM(unit_cost * CAST(l_quantity AS BIGINT)) AS DECIMAL(18,2))")} AS sum_profit
-          FROM lineitem
-          JOIN pp_part ON l_partkey = p_partkey
-          JOIN supplier ON l_suppkey = s_suppkey
-          JOIN nation ON s_nationkey = n_nationkey
-          GROUP BY 1, 2 ORDER BY nation, o_year DESC""",
-
-    "q194_returned_items" ->
-      s"""WITH ri_rev AS (
-            SELECT o_custkey,
-                   CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2)) AS rev
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            WHERE l_returnflag = 'R'
-              AND o_orderdate >= TIMESTAMP '1996-10-01'
-              AND o_orderdate < TIMESTAMP '1997-01-01'
-            GROUP BY 1)
-          SELECT c_custkey, c_name, n_name, ${moneyOutSql("rev")} AS revenue,
-                 c_acctbal
-          FROM ri_rev
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-          ORDER BY revenue DESC, c_custkey LIMIT 20""",
-
-    "q195_priority_linestatus" ->
-      s"""SELECT l_linestatus,
-                 CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                               THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-                 CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                               THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-            AND l_shipdate < TIMESTAMP '1998-01-01'
-          GROUP BY 1 ORDER BY 1""",
-
-    "q196_promo_revenue" ->
-      s"""WITH pr AS (
-            SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-                       THEN ${moneySql("l_extendedprice * (1 - l_discount)")}
-                       ELSE CAST(0 AS DECIMAL(18,2)) END) AS DECIMAL(18,2)) AS p,
-                   CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")})
-                     AS DECIMAL(18,2)) AS t
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-              AND l_shipdate < TIMESTAMP '1997-04-01')
-          SELECT (CAST(p AS DOUBLE) * 100.0) / CAST(t AS DOUBLE) AS promo_pct,
-                 ${moneyOutSql("p")} AS promo_revenue,
-                 ${moneyOutSql("t")} AS total_revenue
-          FROM pr""",
-
-    "q198_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2))")} AS sum_base_price,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2))")} AS sum_disc_price,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount) * (1 + l_tax)")}) AS DECIMAL(18,2))")} AS sum_charge,
-                 CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE)
-                   / CAST(COUNT(*) AS DOUBLE) AS avg_qty,
-                 CAST(CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2)) AS DOUBLE)
-                   / CAST(COUNT(*) AS DOUBLE) AS avg_price,
-                 CAST(SUM(${quantSql("l_discount", 10000)}) AS DOUBLE)
-                   / CAST(COUNT(*) * 10000 AS DOUBLE) AS avg_disc,
-                 COUNT(*) AS count_order
-          FROM lineitem
-          WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q199_forecast_revenue" ->
-      s"""SELECT ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * l_discount")}) AS DECIMAL(18,2))")} AS revenue,
-                 COUNT(*) AS n_lines
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-            AND l_shipdate < TIMESTAMP '1998-01-01'
-            AND ${quantSql("l_discount", 100)} BETWEEN 5 AND 7
-            AND CAST(l_quantity AS BIGINT) < 24""",
-
-    "q200_index_shard_plan" ->
-      s"""WITH ${Similarity.indexShardPlanSql()}
-          SELECT shard, n_cells, n_vecs, load_x_shards
-          FROM index_shard_plan ORDER BY shard""",
-
-    "q201_context_length_plan" ->
-      s"""WITH ${Packing.contextLengthPlanSql()}
-          SELECT seq_len, n_docs, total_tokens, n_seqs, pad_tokens, pad_frac
-          FROM context_length_plan ORDER BY seq_len""",
-
-    "q207_gap_fill_daily" ->
-      s"""WITH ${Events.gapFillDailySql()}
-          SELECT user_id, day, day_cents, n_events, carried_type,
-                 days_since_active
-          FROM gap_fill ORDER BY user_id, day""",
-
-    // the UNSALTED join on purpose — equality proves the salted execution
-    "q204_salted_join_exec" ->
-      s"""SELECT s_name, COUNT(*) AS n_lines,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice")}) AS DECIMAL(18,2))")} AS revenue
-          FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          GROUP BY 1 ORDER BY 1""",
-
-    "q205_equi_depth_hist" ->
-      s"""WITH ${Planning.equiDepthHistogramSql()}
-          SELECT bucket, lo_cents, hi_cents, n_rows, depth_x_buckets
-          FROM equi_depth ORDER BY bucket""",
-
-    "q206_sample_estimate_audit" ->
-      s"""WITH ${Sampling.estimateAuditSql()}
-          SELECT n_pop, n_sample, est_cents, exact_cents, abs_err_cents,
-                 hoeffding_bound_cents, within_bound
-          FROM estimate_audit""",
-
-    "q203_incremental_near_dup" ->
-      s"""WITH ${Dedup.incrementalNearDupSql()}
-          SELECT doc_id, n_exact, n_near, status
-          FROM incremental_near_dup ORDER BY doc_id""",
-
-    "q202_join_order_advisor" ->
-      s"""WITH ${Planning.joinOrderAdvisorSql()}
-          SELECT join_order, first_join_est, first_join_actual, q_error,
-                 final_est, rk
-          FROM join_order_advisor ORDER BY rk""",
-
-    // totals from ONE fixed order on purpose: equality across the two
-    // executed orders is the proof the ranking only moves cost
-    "q208_join_order_exec" ->
-      s"""WITH ${Planning.executeJoinOrderSql()}
-          SELECT order_rank, join_order, est_first_rows, first_join_rows,
-                 n_rows, total_cents
-          FROM join_order_exec ORDER BY order_rank""",
-
-    "q209_range_balanced_shards" ->
-      s"""WITH ${Planning.rangeBalancedShardsSql()}
-          SELECT bucket, lo_cents, hi_cents, assigned_rows, hist_rows,
-                 depth_match, depth_x_buckets
-          FROM range_balanced ORDER BY bucket""",
-
-    // the serial replay on purpose: equality with the concurrent
-    // set-based merge is the serializability certificate
-    "q210_merge_upsert" ->
-      s"""WITH ${Scd.mergeUpsertSql()}
-          SELECT key, n_writes_a, n_writes_b, conflict, winner_version,
-                 final_state, final_cents
-          FROM merge_upsert ORDER BY key""",
-
-    // batch equality certifies the min-frontier watermark rule: had the
-    // global watermark followed the fast source, the lag rows would drop
-    "q211_multi_source_watermark" ->
-      s"""WITH ${EventStream.multiSourceWatermarkSql()}
-          SELECT event_type, src, n_windows, n_events
-          FROM multi_source_watermark ORDER BY event_type, src""",
-
-    // plain joins on purpose: equality across the two advised executions
-    // is the proof the strategy choice moves bytes, never results
-    "q212_join_strategy_exec" ->
-      s"""WITH ${Planning.executeJoinStrategySql(
-            supplierBytes = "8 + COALESCE(len(s_name), 0) + 4 + 4 + 8",
-            ordersBytes = "8 + 8 + COALESCE(len(o_orderstatus), 0) + 4 + 8 + 8"
-              + " + COALESCE(len(o_orderpriority), 0) + 4")}
-          SELECT table_name, strategy, n_rows, total_cents
-          FROM join_strategy_exec ORDER BY table_name""",
-
-    "q213_k_anonymity" ->
-      s"""WITH ${Privacy.kAnonymityAuditSql()}
-          SELECT level, qi, n_groups, min_group_size, rows_at_risk,
-                 satisfies_k
-          FROM k_anonymity ORDER BY level""",
-
-    "q214_l_diversity" ->
-      s"""WITH ${Privacy.lDiversityAuditSql()}
-          SELECT level, qi, n_groups, min_diversity, rows_at_risk,
-                 satisfies_l
-          FROM l_diversity ORDER BY level""",
-
-    // the oracle models the write round trip as the identity it must
-    // be — a hash match certifies the files carry exactly the planned rows
-    "q215_range_partitioned_write" ->
-      s"""WITH ${Planning.rangePartitionedWriteSql()}
-          SELECT bucket, lo_cents, hi_cents, rows_on_disk, hist_rows,
-                 depth_match, bounds_match, depth_x_buckets
-          FROM range_write_audit ORDER BY bucket""",
-
-    "q216_sketch_strategy_advisor" ->
-      s"""WITH ${Planning.sketchStrategyAdvisorSql(Seq(
-            ("customer", "c_custkey",
-              "8 + COALESCE(len(c_name), 0) + 4 + 4 + 8"
-                + " + COALESCE(len(c_mktsegment), 0) + 4"),
-            ("lineitem",
-              "CAST(l_orderkey AS VARCHAR) || '#' || CAST(l_linenumber AS VARCHAR)"
-                + " || '#' || CAST(l_partkey AS VARCHAR)"
-                + " || '#' || CAST(l_suppkey AS VARCHAR)",
-              "8 + 8 + 8 + 4 + 8 + 8 + 8 + 8"
-                + " + COALESCE(len(l_returnflag), 0) + 4"
-                + " + COALESCE(len(l_linestatus), 0) + 4 + 8"),
-            ("orders", "o_orderkey",
-              "8 + 8 + COALESCE(len(o_orderstatus), 0) + 4 + 8 + 8"
-                + " + COALESCE(len(o_orderpriority), 0) + 4"),
-            ("supplier", "s_suppkey",
-              "8 + COALESCE(len(s_name), 0) + 4 + 4 + 8")))}
-          SELECT table_name, n_rows, kmv_rows, q_error_rows, est_bytes,
-                 sketch_bytes, strategy_exact, strategy_sketch, agree
-          FROM sketch_strategy ORDER BY table_name""",
-
-    // totals from a plain full filter on purpose: equality with the
-    // engine's partition-pruned scan proves skipping zones lost nothing
-    "q217_zone_pruned_scan" ->
-      s"""WITH ${Planning.zonePrunedScanSql()}
-          SELECT pred_id, n_zones, zones_scanned, zones_skipped, rows_read,
-                 n_rows, total_cents
-          FROM zone_pruned_scan ORDER BY pred_id""",
-
-    "q218_t_closeness" ->
-      s"""WITH ${Privacy.tClosenessAuditSql()}
-          SELECT level, qi, n_groups, max_emd, rows_at_risk, satisfies_t
-          FROM t_closeness ORDER BY level""",
-
-    "q219_sketch_join_order" ->
-      s"""WITH ${Planning.sketchJoinOrderAdvisorSql()}
-          SELECT join_order, est_exact, est_sketch, rk_exact, rk_sketch,
-                 rank_match
-          FROM sketch_join_order ORDER BY rk_exact""",
-
-    // plain joins on purpose: equality under the sketch-chosen strategies
-    // is the proof the sketch decision moves bytes, never results
-    "q220_sketch_strategy_exec" ->
-      s"""WITH ${Planning.executeSketchStrategySql(
-            supplierBytes = "8 + COALESCE(len(s_name), 0) + 4 + 4 + 8",
-            ordersBytes = "8 + 8 + COALESCE(len(o_orderstatus), 0) + 4 + 8 + 8"
-              + " + COALESCE(len(o_orderpriority), 0) + 4")}
-          SELECT table_name, strategy, n_rows, total_cents
-          FROM sketch_strategy_exec ORDER BY table_name""",
-
-    "q221_anonymize_min_level" ->
-      s"""WITH ${Privacy.anonymizeToKSql()}
-          SELECT level, nat_g, seg_g, band_g, n
-          FROM anonymized ORDER BY nat_g, seg_g, band_g""",
-
-    // plain unfiltered join on purpose: equality with the bloom-pruned
-    // execution is the no-false-negatives proof
-    "q222_bloom_strategy_exec" ->
-      s"""WITH ${Planning.executeBloomStrategySql()}
-          SELECT strategy, n_fact_rows, n_pass_rows, n_join_rows,
-                 n_fp_rows, total_cents
-          FROM bloom_strategy_exec""",
-
-    // the q90 contract form: the oracle pins the exact total and the
-    // verdicts the engine's quantile sketch must earn
-    "q223_sketch_range_shards" ->
-      s"""WITH ${Planning.sketchRangeShardsSql()}
-          SELECT n_buckets, n_total, all_within_tol
-          FROM sketch_range_shards""",
-
-    // parquet-side split with the same corruption key: equality proves
-    // the JSON round trip lost exactly the corrupted lines
-    "q224_json_ingest_quarantine" ->
-      s"""WITH ${graft.sources.JsonSource.ingestWithQuarantineSql()}
-          SELECT event_type, n, total_cents
-          FROM json_ingest ORDER BY event_type""",
-
-    "q225_schema_evolution" ->
-      s"""WITH ${graft.sources.SchemaEvolution.evolvedReadSql()}
-          SELECT src, n, n_channel_null, n_channels, total_cents
-          FROM schema_evolution ORDER BY src""",
-
-    "q226_source_cap" ->
-      s"""WITH ${Sampling.sourceCapSql()}
-          SELECT source, n_docs, n_kept, n_dropped, kept_chars, total_chars
-          FROM source_cap ORDER BY source""",
-
-    "q227_pareto_frontier" ->
-      s"""WITH ${TextAnalysis.paretoFrontierSql()}
-          SELECT doc_id, n_chars, q
-          FROM pareto_frontier ORDER BY n_chars""",
-
-    "q228_bootstrap_ci" ->
-      s"""WITH ${Sampling.bootstrapCiSql()}
-          SELECT n_pop, n_reps, exact_mean_cents, boot_lo_cents,
-                 boot_hi_cents, covered
-          FROM bootstrap_ci""",
-
-    "q229_group_estimate" ->
-      s"""WITH ${Sampling.groupEstimateAuditSql()}
-          SELECT priority, n_pop, n_sample, est_cents, exact_cents,
-                 abs_err_cents, hoeffding_bound_cents, within_bound
-          FROM group_estimate_audit ORDER BY priority""",
-
-    "q230_lsh_s_curve" ->
-      s"""WITH ${Dedup.sCurveAuditSql()}
-          SELECT r, b, j_band, n_pairs, n_detected, detect_rate, theory_mid
-          FROM s_curve ORDER BY r, j_band""",
-
-    // the plain batch aggregate on purpose: equality is the proof the
-    // replayed foreachBatch write was idempotent (an append sink would
-    // double batch 1's rows and fail this hash-match)
-    "q231_exactly_once_sink" ->
-      s"""WITH ${graft.streaming.EventStream.exactlyOnceSinkSql()}
-          SELECT event_type, n, total_cents, n_batches, n_attempts,
-                 replay_happened
-          FROM exactly_once_sink ORDER BY event_type""",
-
-    "q232_bpe_train" ->
-      s"""WITH ${TextAnalysis.bpeTrainSql()}
-          SELECT round, pair, freq, corpus_symbols
-          FROM bpe_train ORDER BY round""",
-
-    "q233_expectation_suite" ->
-      s"""WITH ${DataQuality.expectationSuiteSql()}
-          SELECT expectation, target, n_rows, n_violations, pass
-          FROM expectation_suite ORDER BY expectation, target""",
-
-    "q234_session_window_stream" ->
-      s"""WITH ${graft.streaming.EventStream.sessionWindowStreamSql()}
-          SELECT user_id, start_ms, end_ms, n_events, total_cents
-          FROM session_window_stream ORDER BY user_id, start_ms""",
-
-    // The persisted round trip must reproduce the in-plan q54 result
-    // exactly — the oracle IS ivfTopKSql.
-    "q235_persisted_ivf" ->
-      s"""WITH ${Similarity.ivfTopKSql()}
-          SELECT qid, rank, nid, score FROM ivf_topk ORDER BY qid, rank""",
-
-    "q236_encoding_advisor" ->
-      s"""WITH ${Planning.encodingAdvisorSql()}
-          SELECT col_name, n, n_distinct, sum_len, runs_clustered, advice
-          FROM encoding_advice ORDER BY col_name""",
-
-    "q237_bloom_index_lookup" ->
-      s"""WITH ${Planning.bloomIndexedLookupSql()}
-          SELECT probe_key, zones_total, zones_candidate, zones_matching,
-                 n_rows, total_cents
-          FROM bloom_lookup ORDER BY probe_key""",
-
-    "q245_incremental_bloom" ->
-      s"""WITH ${Planning.incrementalBloomLookupSql()}
-          SELECT probe_key, zones_total, zones_candidate, zones_matching,
-                 n_rows, total_cents
-          FROM inc_bloom_lookup ORDER BY probe_key""",
-
-    "q247_pq_index" ->
-      s"""WITH ${Similarity.persistedPqTopKSql()}
-          SELECT qid, rank, nid, adc_dist
-          FROM pq_serve ORDER BY qid, rank""",
-
-    "q248_concurrent_commits" ->
-      s"""WITH ${ManifestTable.concurrentCommittersSql()}
-          SELECT stage, version, conflict, event_type, n, total_cents
-          FROM concurrent_commits ORDER BY stage, event_type""",
-
-    "q327_concurrent_partition_commits" ->
-      s"""WITH ${ManifestTable.concurrentPartitionCommitsSql()}
-          SELECT stage, version, cas_losses, conflict, event_type, n,
-                 total_cents
-          FROM concurrent_partition_commits ORDER BY stage, event_type""",
-
-    "q249_change_feed" ->
-      s"""WITH ${ManifestTable.changeFeedSummarySql()}
-          SELECT version, change_type, event_type, n, total_cents
-          FROM change_feed ORDER BY version, change_type, event_type""",
-
-    "q250_target_encoding" ->
-      s"""WITH ${Sampling.targetEncodingSql()}
-          SELECT event_type, fold, n_fold, encoded_cents
-          FROM target_encoding ORDER BY event_type, fold""",
-
-    "q251_seasonal_decompose" ->
-      s"""WITH ${Events.seasonalDecomposeSql()}
-          SELECT day, season, cents, trend7, seasonal7, residual7
-          FROM seasonal_decompose ORDER BY day""",
-
-    "q258_residual_anomalies" ->
-      s"""WITH ${Events.residualAnomaliesSql()}
-          SELECT day, cents, residual7, med_res, mad_res
-          FROM residual_anomalies ORDER BY day""",
-
-    "q260_ks_drift" ->
-      s"""WITH ${Profile.ksDriftSql()}
-          SELECT event_type, na, nb, d_num, d_stat, drifted
-          FROM ks_drift ORDER BY event_type""",
-
-    "q266_mor_update" ->
-      s"""WITH ${ManifestTable.mergeOnReadUpdateSql()}
-          SELECT stage, version, event_type, n, total_cents
-          FROM mor_update ORDER BY stage, event_type""",
-
-    "q265_pit_join" ->
-      s"""WITH ${Scd.pointInTimeJoinSql()}
-          SELECT ver, nation, n_orders, total_cents
-          FROM pit_join ORDER BY ver, nation""",
-
-    "q264_multi_table_commit" ->
-      s"""WITH ${ManifestTable.multiTableCommitSql()}
-          SELECT stage, fact_v, rollup_v, orphaned_dirs, event_type, fact_n,
-                 fact_cents, consistent
-          FROM multi_table ORDER BY stage, event_type""",
-
-    "q263_forget_user" ->
-      s"""WITH ${ManifestTable.forgetUserSql()}
-          SELECT stage, version, n_versions, target_user, event_type, n,
-                 total_cents
-          FROM forget_user ORDER BY stage, event_type""",
-
-    "q262_purged_cv" ->
-      s"""WITH ${Sampling.purgedCvFoldsSql()}
-          SELECT fold, lo_ms, hi_ms, n_test, n_train, n_purged, n_embargo,
-                 min_gap_ms
-          FROM purged_cv ORDER BY fold""",
-
-    "q252_bpe_encode" ->
-      s"""WITH ${TextAnalysis.bpeEncodeSql()}
-          SELECT doc_id, n_words, syms_before, syms_after, compression
-          FROM bpe_encode ORDER BY doc_id""",
-
-    "q253_partition_evolution" ->
-      s"""WITH ${ManifestTable.evolvedPartitionReadSql()}
-          SELECT event_type, n, total_cents
-          FROM evolved_read ORDER BY event_type""",
-
-    "q254_merge_on_read" ->
-      s"""WITH ${ManifestTable.mergeOnReadDeleteSql()}
-          SELECT stage, version, event_type, n, total_cents
-          FROM mor_delete ORDER BY stage, event_type""",
-
-    "q255_rollup_pushdown" ->
-      s"""WITH ${Planning.rollupPushdownAggregateSql()}
-          SELECT event_type, n, total_cents
-          FROM rollup_pushdown ORDER BY event_type""",
-
-    "q256_incremental_rollup" ->
-      s"""WITH ${Planning.incrementalRollupMaintenanceSql()}
-          SELECT p, event_type, n, cents
-          FROM incremental_rollup ORDER BY p, event_type""",
-
-    "q269_layout_advisor" ->
-      s"""WITH ${Planning.layoutAdvisorSql()}
-          SELECT pred_id, layout, rows_read, zones_scanned, n_match
-          FROM layout_advisor ORDER BY pred_id""",
-
-    "q270_yannakakis" ->
-      s"""WITH ${Planning.yannakakisReductionSql()}
-          SELECT section, name, n_filtered, n_reduced, cents
-          FROM yannakakis ORDER BY section, name""",
-
-    "q271_recursive_closure" ->
-      s"""WITH RECURSIVE ${Graph.hierarchyClosureSql()}
-          SELECT depth, n_nodes, total_cents, min_key, max_key
-          FROM hierarchy_closure ORDER BY depth""",
-
-    "q286_wilson_ranking" ->
-      s"""WITH ${Profile.wilsonReturnRankingSql()}
-          SELECT l_partkey, n, r, rate, wilson_lb
-          FROM wilson_rank ORDER BY wilson_lb DESC, l_partkey""",
-
-    "q311_spearman" ->
-      s"""WITH ${Profile.spearmanBySegmentSql()}
-          SELECT c_mktsegment, n, rho
-          FROM spearman ORDER BY c_mktsegment""",
-
-    "q313_chi_square_drift" ->
-      s"""WITH ${Profile.chiSquareDriftSql()}
-          SELECT event_type, dow, o, e_e6, contrib_e6, chi2_e6, df
-          FROM chi_square_drift ORDER BY event_type, dow""",
-
-    "q287_compact_vs_append" ->
-      s"""WITH ${ManifestTable.compactionVsAppendSql()}
-          SELECT stage, version, conflict, event_type, n, total_cents
-          FROM compact_vs_append ORDER BY stage, event_type""",
-
-    "q289_stream_manifest_tail" ->
-      s"""WITH ${ManifestTable.changeFeedSummarySql()}
-          SELECT version, change_type, event_type, n, total_cents,
-                 CAST(3 AS BIGINT) AS n_batches,
-                 CAST(4 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM change_feed ORDER BY version, change_type, event_type""",
-
-    "q290_branch_tags" ->
-      s"""WITH ${ManifestTable.branchTagReadsSql()}
-          SELECT stage, ref, version, event_type, n, total_cents
-          FROM branch_tags ORDER BY stage, event_type""",
-
-    "q291_roc_auc" ->
-      s"""WITH ${Events.rocAucByTypeSql()}
-          SELECT event_type, n_pos, n_neg, u2, auc
-          FROM roc_auc ORDER BY event_type""",
-
-    "q292_calibration_bins" ->
-      s"""WITH ${Events.calibrationBinsSql()}
-          SELECT bin, n, n_pos, sum_cents, mean_pred, obs_rate, abs_gap
-          FROM calibration ORDER BY bin""",
-
-    "q293_chunk_dedup" ->
-      s"""WITH ${TextAnalysis.chunkDedupSql()}
-          SELECT source, n_chunks, n_distinct, dup_chunks, dup_ratio
-          FROM chunk_dedup ORDER BY source""",
-
-    "q294_gain_lift" ->
-      s"""WITH ${Events.gainLiftSql()}
-          SELECT decile, n, n_pos, cum_n, cum_pos, capture, lift
-          FROM gain_lift ORDER BY decile""",
-
-    "q295_string_zone_skip" ->
-      s"""WITH ${Planning.stringZoneSkippingSql()}
-          SELECT pred_id, n_zones, zones_scanned, zones_skipped,
-                 n_rows, total_cents
-          FROM string_zone_skip ORDER BY pred_id""",
-
-    "q296_hll_native_agg" ->
-      s"""WITH ${Planning.hllNativeDistinctSql()}
-          SELECT scope, v_zeros, denom, est, branch, n_exact
-          FROM hll_native ORDER BY scope""",
-
-    "q297_inc_string_zones" ->
-      s"""WITH ${Planning.incrementalStringZoneMapSql()}
-          SELECT pred_id, n_zones, zones_scanned, zones_skipped,
-                 n_rows, total_cents
-          FROM inc_string_zones ORDER BY pred_id""",
-
-    "q298_orphan_gc" ->
-      s"""WITH ${ManifestTable.orphanGcSql()}
-          SELECT stage, version, n_version_dirs, n_orphans,
-                 event_type, n, total_cents
-          FROM orphan_gc ORDER BY stage, event_type""",
-
-    "q299_classifier_eval" ->
-      s"""WITH ${Events.classifierEvalSql()}
-          SELECT cls, tp, fp, fn, precision, recall, f1
-          FROM classifier_eval ORDER BY cls""",
-
-    "q300_curation_pipeline" ->
-      s"""WITH ${TextAnalysis.curationPipelineSql()}
-          SELECT stage, source, n_docs, n_tokens
-          FROM curation ORDER BY stage, source""",
-
-    "q301_mcc_eval" ->
-      s"""WITH ${Events.mccPerClassSql()}
-          SELECT cls, tp, fp, fn, tn, mcc
-          FROM mcc_eval ORDER BY cls""",
-
-    "q302_safe_orphan_gc" ->
-      s"""WITH ${ManifestTable.safeOrphanGcSql()}
-          SELECT stage, version, n_version_dirs, n_live_intents,
-                 n_reclaimed, event_type, n, total_cents
-          FROM safe_orphan_gc ORDER BY stage, event_type""",
-
-    "q303_pr_curve" ->
-      s"""WITH ${Events.prCurveByTypeSql()}
-          SELECT event_type, s, pn, cum_n, cum_tp, n_pos, precision, recall
-          FROM pr_curve ORDER BY event_type, s""",
-
-    "q304_manifest_checkpoint" ->
-      s"""WITH ${ManifestTable.checkpointResolveSql()}
-          SELECT stage, version, n_versions, cp_seq, cp_head, n_tail,
-                 event_type, n, total_cents
-          FROM checkpoint_resolve ORDER BY stage, event_type""",
-
-    "q305_brier_score" ->
-      s"""WITH ${Events.brierByTypeSql()}
-          SELECT cls, n_all, n_pos, sq_num, brier
-          FROM brier_eval ORDER BY cls""",
-
-    "q307_cohens_kappa" ->
-      s"""WITH ${Events.cohensKappaSql()}
-          SELECT n_all, agree, chance, p_o, p_e, kappa
-          FROM kappa_eval""",
-
-    "q306_partition_overwrite" ->
-      s"""WITH ${ManifestTable.partitionOverwriteSql()}
-          SELECT stage, version, n_new_parts, n_ref_parts, event_type,
-                 n, total_cents
-          FROM partition_overwrite ORDER BY stage, event_type""",
-
-    "q308_write_audit_publish" ->
-      s"""WITH ${ManifestTable.writeAuditPublishSql()}
-          SELECT stage, version, verdict, n_bad, n_version_dirs,
-                 event_type, n, total_cents
-          FROM wap ORDER BY stage, event_type""",
-
-    "q309_compact_partitioned" ->
-      s"""WITH ${ManifestTable.compactPartitionedSql()}
-          SELECT stage, version, n_version_dirs, n_src_versions,
-                 event_type, n, total_cents
-          FROM compact_partitioned ORDER BY stage, event_type""",
-
-    "q312_snapshot_rollback" ->
-      s"""WITH ${ManifestTable.snapshotRollbackSql()}
-          SELECT stage, version, n_version_dirs, n_src_versions,
-                 event_type, n, total_cents
-          FROM snapshot_rollback ORDER BY stage, event_type""",
-
-    "q310_ndcg_mrr" ->
-      s"""WITH ${Similarity.retrievalRankingEvalSql()}
-          SELECT qid, hits, mrr, dcg_e6, ndcg
-          FROM retrieval_eval ORDER BY qid""",
-
-    "q318_persisted_ground_truth" ->
-      s"""WITH ${Similarity.persistedGroundTruthEvalSql()}
-          SELECT qid, hits, mrr, dcg_e6, ndcg, gt_version
-          FROM gt_eval ORDER BY qid""",
-
-    "q319_compaction_change_feed" ->
-      s"""WITH ${ManifestTable.compactionChangeFeedSql()}
-          SELECT version, is_compaction, n_update, pre_cents, post_cents,
-                 n_insert, n_delete
-          FROM compaction_change_feed ORDER BY version""",
-
-    "q320_multi_probe_eval" ->
-      s"""WITH ${Similarity.multiProbeEvalFromGroundTruthSql()}
-          SELECT nprobe, nq, hits, recall, sum_dcg_e6, mean_ndcg, mrr
-          FROM multi_probe_eval ORDER BY nprobe""",
-
-    "q321_incremental_ground_truth" ->
-      s"""WITH ${Similarity.incrementalGroundTruthSql()}
-          SELECT qid, rank, nid, score
-          FROM brute_topk ORDER BY qid, rank""",
-
-    "q322_filtered_ann" ->
-      s"""WITH ${Similarity.filteredAnnAuditSql()}
-          SELECT variant, nq, n_served, underfilled, hits, recall
-          FROM filtered_ann_audit ORDER BY variant""",
-
-    "q323_duplicated_spans" ->
-      s"""WITH ${TextAnalysis.duplicatedSpanAuditSql()}
-          SELECT doc_id, n_tokens, dup_tokens, dup_fraction
-          FROM duplicated_span_audit ORDER BY doc_id""",
-
-    // three chunks -> commits v1..v3; batches 0,1 run, crash, 1 replays
-    // (skipped), 2 runs -> 4 attempts; totals = every event exactly once
-    "q324_stream_partitioned_ingest" ->
-      s"""WITH spt_tot AS (
-            SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(${quantSql("value", 100)}) AS BIGINT)
-                     AS total_cents
-            FROM events GROUP BY 1)
-          SELECT event_type, n, total_cents,
-                 CAST(3 AS BIGINT) AS n_commits,
-                 CAST(4 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM spt_tot ORDER BY event_type""",
-
-    "q325_cluster_safe_split" ->
-      s"""WITH RECURSIVE ${Sampling.clusterSafeSplitSql()}
-          SELECT scheme, n_train, n_val, n_test, n_clusters, leaky_clusters
-          FROM cluster_safe_split ORDER BY scheme""",
-
-    "q328_curated_cluster_split" ->
-      s"""WITH RECURSIVE ${Sampling.curatedClusterSplitSql()}
-          SELECT split, source, n_docs, n_tokens, n_clusters,
-                 leaky_clusters
-          FROM curated_cluster_split ORDER BY split, source""",
-
-    "q329_mor_upsert_read" ->
-      s"""WITH ${ManifestTable.morUpsertReadSql()}
-          SELECT stage, version, n_src_versions, reclaimed, event_type,
-                 n, total_cents
-          FROM mor_upsert_read ORDER BY stage, event_type""",
-
-    "q331_position_delete_mor" ->
-      s"""WITH ${ManifestTable.positionDeleteReadSql()}
-          SELECT stage, version, n_base, n_del, event_type, n,
-                 total_cents
-          FROM position_delete_read ORDER BY stage, event_type""",
-
-    "q332_field_id_evolution" ->
-      s"""WITH ${FieldIdTable.fieldIdEvolutionSql()}
-          SELECT stage, event_type, n, total_cents, n_channel,
-                 n_channel_vals
-          FROM field_id_evolution ORDER BY stage, event_type""",
-
-    "q333_colocated_partition_join" ->
-      s"""WITH ${ColocatedJoin.colocatedOverAverageSql()}
-          SELECT event_type, n_over, n_users, over_cents
-          FROM colocated_over_average ORDER BY event_type""",
-
-    "q335_metadata_count" ->
-      s"""WITH ${ManifestTable.metadataCountReadSql()}
-          SELECT stage, event_type, n, total_cents
-          FROM metadata_count_read ORDER BY stage, event_type""",
-
-    "q336_metadata_stats_deletes" ->
-      s"""WITH ${ManifestTable.metadataStatsDeletesSql()}
-          SELECT stage, version, event_type, n, total_cents
-          FROM metadata_stats_deletes ORDER BY stage, event_type""",
-
-    // b0, b1, compaction, b2 -> 4 commits; crash after b1+compaction,
-    // replay skips on the txn tag -> 4 attempts over 3 batches
-    "q330_stream_compact_race" ->
-      s"""WITH scr_tot AS (
-            SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(${quantSql("value", 100)}) AS BIGINT)
-                     AS total_cents
-            FROM events GROUP BY 1)
-          SELECT event_type, n, total_cents,
-                 CAST(4 AS BIGINT) AS n_commits,
-                 CAST(3 AS BIGINT) AS compact_version,
-                 CAST(4 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM scr_tot ORDER BY event_type""",
-
-    // the seam: backfill takes epoch_us(ts) <= lo+(hi-lo)//2, the
-    // stream takes the rest — stage b equals raw totals (no row lost or
-    // doubled at the handoff); 3 commits (backfill, live b0, live b1),
-    // 3 attempts (b0 ran twice: crash then tag-skip replay)
-    "q334_backfill_stream_handoff" ->
-      s"""WITH bsh_cut AS (
-            SELECT MIN(epoch_us(ts))
-                     + (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) // 2 AS cut
-            FROM events),
-          bsh_a AS (
-            SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(${quantSql("value", 100)}) AS BIGINT)
-                     AS total_cents
-            FROM events WHERE epoch_us(ts) <= (SELECT cut FROM bsh_cut)
-            GROUP BY 1),
-          bsh_b AS (
-            SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(${quantSql("value", 100)}) AS BIGINT)
-                     AS total_cents
-            FROM events GROUP BY 1)
-          SELECT stage, event_type, n, total_cents, n_commits,
-                 n_attempts, replay_happened
-          FROM (
-            SELECT 'a_backfill_only' AS stage, event_type, n, total_cents,
-                   CAST(1 AS BIGINT) AS n_commits,
-                   CAST(0 AS BIGINT) AS n_attempts,
-                   FALSE AS replay_happened
-            FROM bsh_a
-            UNION ALL
-            SELECT 'b_handoff_complete', event_type, n, total_cents,
-                   3, 3, TRUE
-            FROM bsh_b)
-          ORDER BY stage, event_type""",
-
-    // same delivery pins as q324 (3 commits, 4 attempts, replay TRUE);
-    // the MoR read splices >=2 versions pre-compaction (chunks 1 and 3
-    // are non-empty by construction) and exactly 1 after — totals
-    // identical at both stages is the exactly-once AND compaction proof
-    "q326_stream_mor_ingest" ->
-      s"""WITH smor_tot AS (
-            SELECT event_type, COUNT(*) AS n,
-                   CAST(SUM(${quantSql("value", 100)}) AS BIGINT)
-                     AS total_cents
-            FROM events GROUP BY 1)
-          SELECT stage, event_type, n, total_cents, multi_version,
-                 CAST(3 AS BIGINT) AS n_commits,
-                 CAST(4 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM (SELECT 'a_mor_stream' AS stage, TRUE AS multi_version,
-                       event_type, n, total_cents
-                FROM smor_tot
-                UNION ALL
-                SELECT 'b_compacted', FALSE, event_type, n, total_cents
-                FROM smor_tot)
-          ORDER BY stage, event_type""",
-
-    "q314_eval_report" ->
-      s"""WITH ${Events.evalReportSql()}
-          SELECT cls, n, auc, brier, tp, fp, fn, tn,
-                 precision, recall, f1, mcc
-          FROM eval_report ORDER BY cls""",
-
-    "q315_inc_eval_report" ->
-      s"""WITH ${Events.incrementalEvalReportSql()}
-          SELECT stage, cls, n, auc, brier, tp, fp, fn, tn,
-                 precision, recall, f1, mcc
-          FROM inc_eval_report ORDER BY stage, cls""",
-
-    // the stream's oracle IS the batch report — streaming-vs-batch
-    // equality is the q68/q82 contract applied to the eval tier
-    "q316_stream_eval_report" ->
-      s"""WITH ${Events.evalReportSql()}
-          SELECT cls, n, auc, brier, tp, fp, fn, tn,
-                 precision, recall, f1, mcc
-          FROM eval_report ORDER BY cls""",
-
-    "q317_hybrid_rrf" ->
-      s"""WITH ${Similarity.hybridRrfTopKSql()}
-          SELECT qid, rank, nid, lex_rank, sem_rank, rrf
-          FROM hybrid_rrf ORDER BY qid, rank""",
-
-    "q285_time_weighted_avg" ->
-      s"""WITH ${Events.timeWeightedAverageSql()}
-          SELECT user_id, n_events, span_ms, wsum, twap_cents
-          FROM twap ORDER BY user_id""",
-
-    "q284_index_intersection" ->
-      s"""WITH ${Planning.indexIntersectionLookupSql()}
-          SELECT probe_key, zones_total, zones_range, zones_bloom,
-                 zones_used, n_rows, total_cents
-          FROM index_intersection ORDER BY probe_key""",
-
-    "q283_result_cache" ->
-      s"""WITH ${ManifestTable.resultCacheSql()}
-          SELECT stage, version, served_from, event_type, n, total_cents
-          FROM result_cache ORDER BY stage, event_type""",
-
-    "q282_hll_rollup" ->
-      s"""WITH ${Planning.hllSketchRollupSql()}
-          SELECT scope, v_zeros, denom, est, branch, n_exact
-          FROM hll_rollup ORDER BY scope""",
-
-    // Same logical result as q239 (the rebuilt index over the FULL
-    // corpus) plus the pinned delivery verdicts: 2 delta batches,
-    // 3 attempts (batch 0 replayed), replay_happened true.
-    "q281_stream_index_maintenance" ->
-      s"""WITH ${TextAnalysis.invertedIndexLookupSql()}
-          SELECT query_id, n_terms, n_docs, sum_doc_ids, min_doc_id,
-                 max_doc_id, CAST(2 AS BIGINT) AS n_batches,
-                 CAST(3 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM inverted_lookup ORDER BY query_id""",
-
-    "q280_leased_vacuum" ->
-      s"""WITH ${ManifestTable.leasedVacuumSql()}
-          SELECT stage, version, n_versions, event_type, n, total_cents
-          FROM leased_vacuum ORDER BY stage, event_type""",
-
-    "q279_dpp_star_join" ->
-      s"""WITH ${Planning.dppStarJoinSql()}
-          SELECT ym, n, total_cents
-          FROM dpp_star ORDER BY ym""",
-
-    "q278_phrase_search" ->
-      s"""WITH ${TextAnalysis.phraseSearchSql()}
-          SELECT query_id, t1, t2, n_occ, n_docs, sum_pair_doc_ids,
-                 min_doc_id, max_doc_id
-          FROM phrase_search ORDER BY query_id""",
-
-    "q277_interleave_schedule" ->
-      s"""WITH ${Sampling.interleaveScheduleSql()}
-          SELECT source, w, n_docs, first_pos, sum_pos, max_dev
-          FROM interleave_schedule ORDER BY source""",
-
-    "q276_loo_ablation" ->
-      s"""WITH ${Dedup.looSourceAblationSql()}
-          SELECT source, n_docs, owned_fps, loo_docs, loo_dups,
-                 loo_dup_rate, loo_avg_chars
-          FROM loo_ablation ORDER BY source""",
-
-    "q275_cusum_changepoints" ->
-      s"""WITH ${Events.cusumChangepointsSql()}
-          SELECT day, n, cusum, flagged
-          FROM cusum_days ORDER BY day""",
-
-    "q274_dp_release" ->
-      s"""WITH ${Privacy.dpHistogramReleaseSql()}
-          SELECT section, key, true_n, noise_fp, released, eps_num, eps_den
-          FROM dp_release ORDER BY section, key""",
-
-    "q273_rise_patterns" ->
-      s"""WITH ${Events.risePatternsSql()}
-          SELECT user_id, n_patterns, max_rise, peak_cents
-          FROM rise_patterns ORDER BY user_id""",
-
-    "q272_theta_setops" ->
-      s"""WITH ${Planning.thetaSketchSetOpsSql()}
-          SELECT pair, theta, n_union_below, n_inter_below, n_diff_below,
-                 est_union, est_inter, est_diff,
-                 exact_union, exact_inter, exact_diff
-          FROM theta_setops ORDER BY pair""",
-
-    "q268_incremental_zonemap" ->
-      s"""WITH ${Planning.incrementalZoneMapSql()}
-          SELECT zone, zmin, zmax, zn
-          FROM inc_zonemap ORDER BY zone""",
-
-    "q259_cuboid_routing" ->
-      s"""WITH ${Planning.cuboidRoutingSql()}
-          SELECT query_dims, routed_cuboid, cuboid_rows, n_groups, n_rows,
-                 total_qc, max_group_qc
-          FROM cuboid_routing ORDER BY query_dims""",
-
-    "q238_sketch_order_exec" ->
-      s"""WITH ${Planning.executeSketchJoinOrderSql()}
-          SELECT picker, join_order, est_rows, first_join_rows, n_rows,
-                 total_cents, same_pick
-          FROM sketch_order_exec ORDER BY picker""",
-
-    "q239_inverted_index" ->
-      s"""WITH ${TextAnalysis.invertedIndexLookupSql()}
-          SELECT query_id, n_terms, n_docs, sum_doc_ids, min_doc_id,
-                 max_doc_id
-          FROM inverted_lookup ORDER BY query_id""",
-
-    // Same logical result as q239 — the oracle IS the rebuilt-from-
-    // scratch index over base+delta; the engine side serves it from the
-    // incrementally maintained artifacts instead.
-    "q240_incremental_inverted" ->
-      s"""WITH ${TextAnalysis.invertedIndexLookupSql()}
-          SELECT query_id, n_terms, n_docs, sum_doc_ids, min_doc_id,
-                 max_doc_id
-          FROM inverted_lookup ORDER BY query_id""",
-
-    "q243_incremental_ivf" ->
-      s"""WITH ${Similarity.incrementalIvfTopKSql()}
-          SELECT qid, rank, nid, score FROM ivf_inc_topk
-          ORDER BY qid, rank""",
-
-    "q241_atomic_publish" ->
-      s"""WITH ${ManifestTable.atomicCompactionPublishSql()}
-          SELECT stage, version, event_type, n, total_cents
-          FROM atomic_publish ORDER BY stage, event_type""",
-
-    "q244_time_travel_vacuum" ->
-      s"""WITH ${ManifestTable.timeTravelVacuumSql()}
-          SELECT stage, version, n_versions, event_type, n, total_cents
-          FROM time_travel ORDER BY stage, event_type""",
-
-    // The batch cdcApply fold plus the PINNED delivery verdicts the
-    // engine must earn: 3 batches, 4 attempts (batch 1 merged twice),
-    // replay_happened true — totals equal to the batch fold prove the
-    // replayed merge was idempotent.
-    "q242_stream_cdc_upsert" ->
-      s"""WITH ${Scd.cdcApplySql()}
-          SELECT user_id, n_ops, last_op, deleted, final_value,
-                 CAST(3 AS BIGINT) AS n_batches,
-                 CAST(4 AS BIGINT) AS n_attempts,
-                 TRUE AS replay_happened
-          FROM cdc_apply ORDER BY user_id""",
-
-    "q197_supplier_diversity" ->
-      s"""WITH sd_ps AS (
-            SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-            WHERE l_suppkey NOT IN (
-              SELECT s_suppkey FROM supplier WHERE s_name LIKE '%7'))
-          SELECT p_brand, p_type, p_size,
-                 COUNT(DISTINCT l_suppkey) AS supplier_cnt
-          FROM sd_ps JOIN part ON l_partkey = p_partkey
-          WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
-          GROUP BY 1, 2, 3
-          ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""",
-
-    "q171_quiet_parts" ->
-      s"""WITH qp_s AS (
-            SELECT CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sq,
-                   COUNT(*) AS cnt
-            FROM lineitem),
-          qp_big AS (
-            SELECT DISTINCT l_partkey FROM lineitem, qp_s
-            WHERE CAST(l_quantity AS BIGINT) * 10 * cnt > 18 * sq)
-          SELECT p_brand, COUNT(*) AS n_parts
-          FROM part p
-          WHERE NOT EXISTS (SELECT 1 FROM qp_big b WHERE b.l_partkey = p.p_partkey)
-          GROUP BY p_brand
-          ORDER BY p_brand""",
-
-    "q172_stream_outer_join" ->
-      s"""WITH ${EventStream.clickViewOuterSql()}
-          SELECT user_id, n_pairs, n_unmatched FROM click_view_outer
-          ORDER BY user_id""",
-
-    "q173_temperature_mix" ->
-      s"""WITH ${Sampling.temperatureMixSql()}
-          SELECT lang, n_docs, quota, weight, n_sampled, sampled_chars
-          FROM temperature_mix ORDER BY lang""",
-
-    "q162_winsorized_mean" ->
-      s"""WITH wz_grid AS (
-            SELECT l_returnflag AS flag, ${quantSql("l_extendedprice", 100)} AS cents,
-                   COUNT(*) AS w
-            FROM lineitem GROUP BY 1, 2),
-          wz_cum AS (
-            SELECT flag, cents, w,
-                   SUM(w) OVER (PARTITION BY flag ORDER BY cents
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-                   SUM(w) OVER (PARTITION BY flag) AS tot
-            FROM wz_grid),
-          wz_lo AS (SELECT flag, MIN(cents) AS lo_cents FROM wz_cum
-                    WHERE cum * 20 >= tot GROUP BY flag),
-          wz_hi AS (SELECT flag, MIN(cents) AS hi_cents FROM wz_cum
-                    WHERE cum * 20 >= tot * 19 GROUP BY flag)
-          SELECT g.flag, l.lo_cents, h.hi_cents,
-                 CAST(SUM(g.w) AS BIGINT) AS n,
-                 CAST(SUM(g.w * GREATEST(l.lo_cents, LEAST(h.hi_cents, g.cents))) AS DOUBLE)
-                   / CAST(SUM(g.w) * 100 AS DOUBLE) AS winsorized_mean
-          FROM wz_grid g
-          JOIN wz_lo l ON l.flag = g.flag
-          JOIN wz_hi h ON h.flag = g.flag
-          GROUP BY g.flag, l.lo_cents, h.hi_cents
-          ORDER BY g.flag""",
-
-    "q151_weighted_median" ->
-      s"""WITH wm_grid AS (
-            SELECT l_returnflag AS flag, ${quantSql("l_extendedprice", 100)} AS cents,
-                   CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS w
-            FROM lineitem GROUP BY 1, 2),
-          wm_cum AS (
-            SELECT flag, cents, w,
-                   SUM(w) OVER (PARTITION BY flag ORDER BY cents
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-                   SUM(w) OVER (PARTITION BY flag) AS tot
-            FROM wm_grid)
-          SELECT flag, CAST(MIN(cents) AS DOUBLE) / 100.0 AS weighted_median,
-                 CAST(MIN(tot) AS BIGINT) AS total_qty
-          FROM wm_cum WHERE cum * 2 >= tot
-          GROUP BY flag ORDER BY flag""",
-
-    "q131_embedding_audit" ->
-      s"""WITH ${Similarity.embeddingAuditSql}
-          SELECT label, n, n_empty, n_zero, min_n2, max_n2, avg_n2
-          FROM emb_audit ORDER BY label""",
-
-    "q132_active_users" ->
-      s"""WITH ${Events.activeUsersSql()}
-          SELECT day, dau, wau FROM active_users ORDER BY day""",
-
-    "q133_spend_trend" ->
-      s"""WITH ${Events.spendTrendSql}
-          SELECT event_type, n, slope_cents_per_day FROM spend_trend
-          ORDER BY event_type""",
-
-    "q134_triangle_stats" ->
-      s"""WITH ${Graph.triangleStatsSql()}
-          SELECT doc_id, degree, triangles, clustering FROM triangle_stats
-          ORDER BY doc_id""",
-
-    "q135_source_keywords" ->
-      s"""WITH ${TextAnalysis.sourceKeywordsSql()}
-          SELECT source, rank, term, tf, df, score FROM src_kw
-          ORDER BY source, rank""",
-
-    "q136_hourly_bursts" ->
-      s"""WITH ${Events.hourlyBurstsSql()}
-          SELECT hour, n, trailing_n, n_window, score FROM hourly_bursts
-          ORDER BY hour""",
-
-    "q137_fd_audit" ->
-      s"""SELECT * FROM (
-          ${DataQuality.fdAuditSql("orders", fdSpecs)}
-          ) ORDER BY fd""",
-
-    "q138_quantile_suite" ->
-      s"""WITH ${Profile.quantileSuiteSql()}
-          SELECT event_type, p25, p50, p75, p90, p99 FROM quantile_suite
-          ORDER BY event_type""",
-
-    "q139_local_supplier_volume" ->
-      s"""SELECT r_name, n_name,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("l_extendedprice * (1 - l_discount)")}) AS DECIMAL(18,2))")} AS revenue,
-                 COUNT(*) AS n_items
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-          JOIN nation   ON s_nationkey = n_nationkey
-          JOIN region   ON n_regionkey = r_regionkey
-          GROUP BY r_name, n_name
-          ORDER BY r_name, n_name""",
-
-    "q140_tpch_integrity" ->
-      """SELECT * FROM (
-           SELECT 'lineitem.l_orderkey orphans' AS check_name, COUNT(*) AS violations
-           FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-           WHERE o.o_orderkey IS NULL
-         UNION ALL
-           SELECT 'orders.o_custkey orphans', COUNT(*)
-           FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-           WHERE c.c_custkey IS NULL
-         UNION ALL
-           SELECT 'customer.c_nationkey orphans', COUNT(*)
-           FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-           WHERE n.n_nationkey IS NULL
-         UNION ALL
-           SELECT 'supplier.s_nationkey orphans', COUNT(*)
-           FROM supplier s LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey
-           WHERE n.n_nationkey IS NULL
-         UNION ALL
-           SELECT 'nation.n_regionkey orphans', COUNT(*)
-           FROM nation n LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-           WHERE r.r_regionkey IS NULL
-         UNION ALL
-           SELECT 'orders pk dups', CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM (SELECT COUNT(*) AS c FROM orders GROUP BY o_orderkey) g
-         UNION ALL
-           SELECT 'customer pk dups', CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM (SELECT COUNT(*) AS c FROM customer GROUP BY c_custkey) g
-         UNION ALL
-           SELECT 'supplier pk dups', CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM (SELECT COUNT(*) AS c FROM supplier GROUP BY s_suppkey) g
-         UNION ALL
-           SELECT 'lineitem pk dups', CAST(SUM(CASE WHEN c > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM (SELECT COUNT(*) AS c FROM lineitem GROUP BY l_orderkey, l_linenumber) g
-         ) ORDER BY check_name""",
-
-    "q123_attribution" ->
-      s"""${Funnel.attributionSql()}
-          ORDER BY channel""",
-
-    "q124_kn_continuation" ->
-      s"""WITH ${TextAnalysis.knContinuationSql()}
-          SELECT word, cnt, continuations, fertility FROM kn_stats
-          ORDER BY continuations DESC, word""",
-
-    "q125_classifier_margin" ->
-      s"""WITH ${TextAnalysis.classifierMarginSql()}
-          SELECT doc_id, n_tokens, margin, keep FROM clf_margin ORDER BY doc_id""",
-
-    "q120_ngram_novelty" ->
-      s"""WITH ${Dedup.ngramNoveltySql()}
-          SELECT doc_id, n_shingles, novel, novelty FROM novelty ORDER BY doc_id""",
-
-    "q121_source_diversity" ->
-      s"""WITH ${TextAnalysis.sourceDiversitySql()}
-          SELECT source, distinct_ngrams, total_postings, n_docs, diversity
-          FROM src_div ORDER BY source""",
-
-    "q119_mixture_rates" ->
-      s"""${Sampling.mixtureRatesSql(Seq("src0" -> 3))}
-          ORDER BY source""",
-
-    "q118_canonical_pick" ->
-      s"""WITH RECURSIVE ${Dedup.canonicalByQualitySql()}
-          SELECT cluster_id, n_members, canonical_id, best_n_chars
-          FROM canonical ORDER BY cluster_id""",
-
-    "q59_dedup_clusters" ->
-      s"""WITH RECURSIVE ${Dedup.dedupClustersSql()}
-          SELECT doc_id, cluster_id, is_survivor FROM dedup_clusters ORDER BY doc_id""",
-
-    "q257_incremental_components" ->
-      s"""WITH RECURSIVE ${Dedup.dedupClustersSql()}
-          SELECT doc_id, cluster_id, is_survivor FROM dedup_clusters ORDER BY doc_id""",
-
-    "q44_simhash" ->
-      s"""WITH ${Dedup.simhashSql}
-          SELECT doc_id, simhash FROM simhash ORDER BY doc_id""",
-
-    "q80_simhash_pairs" ->
-      s"""WITH ${Dedup.simhashPairsSql()}
-          SELECT doc_a, doc_b, hamming FROM sh_pairs ORDER BY doc_a, doc_b""",
-
-    "q45_ann_brute" ->
-      s"""WITH ${Similarity.bruteForceTopKSql()}
-          SELECT qid, rank, nid, score FROM brute_topk ORDER BY qid, rank""",
-
-    "q46_ann_lsh" ->
-      s"""WITH ${Similarity.lshTopKSql()}
-          SELECT qid, rank, nid, score FROM lsh_topk ORDER BY qid, rank""",
-
-    "q47_embedding_near_dups" ->
-      s"""WITH ${Similarity.embeddingNearDupsSql(0.45)}
-          SELECT vec_a, vec_b, score FROM near_dups ORDER BY vec_a, vec_b""",
-
-    "q48_lang_id" ->
-      s"""${TextAnalysis.languageIdSql}
-          ORDER BY doc_id""",
-
-    "q49_quality_signals" ->
-      s"""${TextAnalysis.qualitySignalsSql}
-          ORDER BY doc_id""",
-
-    "q50_token_counts" ->
-      s"""${TextAnalysis.tokenCountsSql}
-          ORDER BY doc_id""",
-
-    "q51_fingerprints" ->
-      s"""${TextAnalysis.fingerprintsSql}
-          ORDER BY doc_id""",
-
-    "q52_multimodal_meta" ->
-      s"""${Multimodal.documentMediaSql}
-          ORDER BY doc_id""",
-
-    "q73_frame_sample" ->
-      s"""${Multimodal.documentFramesSql}
-          ORDER BY doc_id, frame_idx""",
-
-    "q74_media_resize" ->
-      s"""${Multimodal.resizePlanSql()}
-          ORDER BY doc_id""",
-
-    "q60_events_hourly" ->
-      s"""SELECT date_trunc('hour', ts) AS hour, event_type,
-                 COUNT(*) AS n,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("value")}) AS DECIMAL(18,2))")} AS total_value
-          FROM events
-          GROUP BY 1, 2
-          ORDER BY 1, 2""",
-
-    "q81_sliding_window" -> slidingWindowOracle,
-    "q82_stream_sliding" -> slidingWindowOracle,
-
-    // the compaction rewrite must be invisible in the data
-    "q88_compaction" ->
-      s"""SELECT event_type, COUNT(*) AS n,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("value")}) AS DECIMAL(18,2))")} AS total
-          FROM events
-          GROUP BY event_type
-          ORDER BY event_type""",
-
-    // dominant-n-gram fraction, multiplicity preserved
-    "q91_repetition" ->
-      s"""${TextAnalysis.repetitionSql()}
-          ORDER BY doc_id""",
-
-    // regex PII counts + redaction over the same derived text
-    "q92_pii_redact" ->
-      s"""${Privacy.detectRedactSql(
-        """(SELECT c_custkey,
-          |        concat_ws(' ', c_name,
-          |          'ip', concat_ws('.', CAST(c_custkey % 256 AS VARCHAR),
-          |                               CAST(c_custkey * 3 % 256 AS VARCHAR),
-          |                               CAST(c_custkey * 5 % 256 AS VARCHAR),
-          |                               CAST(c_custkey * 9 % 256 AS VARCHAR)),
-          |          'tel', printf('%02d-%03d-%03d-%04d',
-          |                        CAST(c_custkey % 25 + 10 AS INT), CAST(c_custkey % 1000 AS INT),
-          |                        CAST(c_custkey * 7 % 1000 AS INT), CAST(c_custkey * 13 % 10000 AS INT)),
-          |          'mail', 'user' || CAST(c_custkey AS VARCHAR) || '@example.com',
-          |          c_mktsegment) AS txt
-          | FROM customer) c""".stripMargin,
-        "txt", Seq("c_custkey"))}
-          ORDER BY c_custkey""",
-
-    // cross-doc duplicated 8-gram span coverage per document
-    "q93_dup_spans" ->
-      s"""${Dedup.dupSpansSql()}
-          ORDER BY doc_id""",
-
-    // Morton bit-interleave of (user_id, minute-of-day), BIGINT-exact
-    "q94_zorder" ->
-      s"""WITH ${ZOrder.mortonSql("events",
-        "user_id", "EXTRACT(hour FROM ts) * 60 + EXTRACT(minute FROM ts)",
-        Seq("event_id"))}
-          SELECT event_id, zkey FROM zfinal ORDER BY event_id""",
-
-    // Hilbert quadrant-rotation walk, BIGINT-exact, generated from the
-    // same plane loop as the engine side
-    "q261_hilbert_cluster" ->
-      s"""WITH ${ZOrder.hilbertSql("events",
-        "user_id", "EXTRACT(hour FROM ts) * 60 + EXTRACT(minute FROM ts)",
-        Seq("event_id"))}
-          SELECT event_id, hkey FROM hfinal ORDER BY event_id""",
-
-    // minhash agreement vs exact overlap, all integers
-    "q95_minhash_error" ->
-      s"""WITH ${Dedup.minhashEstimatePairsSql()}
-          ORDER BY doc_a, doc_b""",
-
-    // exact shifted-cents decay, same integer weights
-    "q267_decayed_value_rank" ->
-      s"""WITH ${Segmentation.decayedValueRankSql()}
-          SELECT user_id, decayed_scaled, raw_cents, active_days
-          FROM decayed_rank""",
-
-    // native NTILE over the identical total order (window is fine 1-node)
-    "q96_rfm_decile" ->
-      s"""WITH ${Segmentation.rfmDecilesSql()}
-          ORDER BY custkey""",
-
-    // same all-integer rounding and error bound via list lambdas
-    "q97_int8_quant" ->
-      s"""WITH ${Similarity.int8QuantizeSql()}
-          SELECT vec_id, amax, max_code, max_err, within_bound FROM int8q
-          ORDER BY vec_id""",
-
-    // the oracle reads the PARQUET corpus; Spark answered from its ORC copy
-    "q98_orc_roundtrip" ->
-      """SELECT source, COUNT(*) AS n_docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-        |       MIN(md5(text)) AS md5_min, MAX(md5(text)) AS md5_max
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    // definitionally-exact full group-by checks the sketch-based plan
-    "q99_heavy_hitters" ->
-      s"""WITH ${TextAnalysis.heavyHittersSql()}
-          SELECT token, cnt, n FROM hh ORDER BY cnt DESC, token""",
-
-    // same basket self-join, top 20 pairs with full tie-break
-    "q100_basket_pairs" ->
-      """WITH baskets AS (SELECT DISTINCT l_orderkey AS ok, l_suppkey AS sk FROM lineitem)
-        |SELECT a.sk AS supp_a, b.sk AS supp_b, COUNT(*) AS n_orders
-        |FROM baskets a JOIN baskets b ON a.ok = b.ok AND a.sk < b.sk
-        |GROUP BY a.sk, b.sk
-        |ORDER BY n_orders DESC, supp_a, supp_b
-        |LIMIT 20""".stripMargin,
-
-    // the batch self-join the streaming interval join must agree with
-    "q101_stream_stream_join" ->
-      EventStream.clickViewPairsSql(),
-
-    // identical integer bucket arithmetic over the cents grid
-    "q102_histogram" ->
-      s"""WITH ${Profile.histogramSql("orders",
-        s"${moneySql("o_totalprice")} * 100")}
-          SELECT CAST(bucket AS INT) AS bucket, n, lo_v, hi_v FROM hist
-          ORDER BY bucket""",
-
-    // per-column stats, one SELECT per column UNION'd (single-node oracle)
-    "q103_profile" -> {
-      import graft.operators.Profile.ColSpec
-      Profile.columnsSql("orders", Seq(
-        ColSpec.plain("o_orderkey"), ColSpec.plain("o_custkey"),
-        ColSpec.plain("o_orderstatus"), ColSpec.money("o_totalprice"),
-        ColSpec.ts("o_orderdate"), ColSpec.plain("o_orderpriority"))) +
-        "\nORDER BY col_name"
-    },
-
-    // same df join/aggregate, integer until the last division
-    "q104_rarity" ->
-      s"""WITH ${TextAnalysis.tokenRaritySql()}
-          SELECT doc_id, n_tokens, sum_df, mean_df FROM rarity
-          ORDER BY doc_id""",
-
-    // identical budget-greedy packing arithmetic under the same window
-    "q105_pack_sequences" ->
-      s"""WITH ${Packing.packSequencesSql()}
-          SELECT source, shard, seq_id, n_docs, seq_tokens FROM packs
-          ORDER BY source, shard, seq_id""",
-
-    // same positional p99 and strict-above count via windows
-    "q106_outlier_fence" ->
-      """WITH r AS (
-        |  SELECT event_type, value,
-        |         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-        |         COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |f AS (
-        |  SELECT event_type, value, n,
-        |         MAX(CASE WHEN rn = ((n - 1) * 99) // 100 + 1 THEN value END)
-        |           OVER (PARTITION BY event_type) AS p99
-        |  FROM r)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, MAX(p99) AS p99,
-        |       CAST(SUM(CASE WHEN value > p99 THEN 1 ELSE 0 END) AS BIGINT) AS n_above
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // same leading digit of the integer cents, string head not log10
-    "q107_benford" ->
-      s"""SELECT substr(CAST(CAST(${moneySql("o_totalprice")} * 100 AS BIGINT) AS VARCHAR), 1, 1)
-                   AS digit,
-                 COUNT(*) AS n
-          FROM orders
-          WHERE CAST(${moneySql("o_totalprice")} * 100 AS BIGINT) > 0
-          GROUP BY digit ORDER BY digit""",
-
-    // the sketch's error contract must hold — the oracle pins the verdict
-    "q90_percentile_contract" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |       TRUE AS p50_within_1pct, TRUE AS p90_within_1pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // three independent slices of the fact in one grouped pass
-    "q89_grouping_sets" ->
-      s"""SELECT CAST(year(o_orderdate) AS INT) AS y, CAST(month(o_orderdate) AS INT) AS m,
-                 o_orderpriority AS priority, COUNT(*) AS n,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("o_totalprice")}) AS DECIMAL(18,2))")} AS total
-          FROM orders
-          GROUP BY GROUPING SETS ((y, m), (priority), ())
-          ORDER BY y NULLS FIRST, m NULLS FIRST, priority NULLS FIRST""",
-
-    // a doubled source must dedup back to the distinct id count
-    "q84_stream_dedup" ->
-      """SELECT CAST(COUNT(DISTINCT event_id) AS BIGINT) AS n_distinct
-        |FROM events""".stripMargin,
-
-    // the derived watermark (from the measured doubled-feed lateness) and
-    // the streamed dedup's exact per-type distinct counts
-    "q170_watermark_closure" ->
-      s"""WITH ${EventStream.watermarkClosureSql()}
-          SELECT event_type, n_unique, wm_sec FROM watermark_closure
-          ORDER BY event_type""",
-
-    // the bucketed layout must be invisible in the values
-    "q83_bucketed_join" ->
-      s"""SELECT o_custkey, COUNT(*) AS n,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("o_totalprice")}) AS DECIMAL(18,2))")} AS total
-          FROM orders JOIN customer ON o_custkey = c_custkey
-          GROUP BY o_custkey
-          ORDER BY o_custkey""",
-
-    "q65_json_extract" ->
-      s"""SELECT event_type, COUNT(*) AS n,
-                 CAST(SUM(CAST(json_extract_string(props, '$$.k') AS INT)) AS BIGINT) AS sum_k,
-                 MIN(CAST(json_extract_string(props, '$$.k') AS INT)) AS min_k,
-                 MAX(CAST(json_extract_string(props, '$$.k') AS INT)) AS max_k
-          FROM events
-          GROUP BY event_type
-          ORDER BY event_type""",
-
-    "q66_fuzzy_match" ->
-      s"""WITH fuzzy_keys AS (
-            SELECT n_name,
-                   unnest(list_distinct(list_append(
-                     list_transform(generate_series(1, length(n_name)),
-                       i -> substr(n_name, 1, i - 1) || substr(n_name, i + 1)),
-                     n_name))) AS bk
-            FROM nation
-          )
-          SELECT name_a, name_b, CAST(levenshtein(name_a, name_b) AS INT) AS dist
-          FROM (
-            SELECT DISTINCT a.n_name AS name_a, b.n_name AS name_b
-            FROM fuzzy_keys a JOIN fuzzy_keys b
-              ON a.bk = b.bk AND a.n_name < b.n_name
-          )
-          WHERE levenshtein(name_a, name_b) <= 1
-          ORDER BY name_a, name_b""",
-
-    "q61_sessionize" ->
-      s"""${Events.sessionizeSql()}
-          ORDER BY user_id, session_seq""",
-
-    "q108_funnel" ->
-      s"""${Funnel.funnelSql()}
-          ORDER BY stage_idx""",
-
-    "q113_bpe_pairs" -> TextAnalysis.bpePairsSql(),
-
-    "q115_incremental_mv" ->
-      s"""${graft.operators.Incremental.monthlyOrdersFullSql}
-          ORDER BY ym""",
-
-    "q114_table_fingerprint" ->
-      DataQuality.fingerprintSql("orders", Seq(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
-        quantSql("o_totalprice", 100), "epoch_ms(o_orderdate)")),
-
-    "q112_snapshot_diff" ->
-      """WITH oldsnap AS (
-        |  SELECT c_custkey AS k, CAST(c_nationkey AS INT) AS nation,
-        |         c_mktsegment AS seg
-        |  FROM customer),
-        |newsnap AS (
-        |  SELECT c_custkey AS k,
-        |         CAST(CASE WHEN c_custkey % 10 = 0 THEN (c_nationkey + 1) % 25
-        |              ELSE c_nationkey END AS INT) AS nation,
-        |         c_mktsegment AS seg
-        |  FROM customer WHERE c_custkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000 AS k, CAST(7 AS INT) AS nation, 'NEW' AS seg
-        |  FROM customer WHERE c_custkey % 100 = 0)
-        |SELECT * FROM (
-        |  SELECT COALESCE(o.k, n.k) AS k,
-        |         CASE WHEN o.k IS NULL THEN 'insert'
-        |              WHEN n.k IS NULL THEN 'delete'
-        |              WHEN (o.nation IS DISTINCT FROM n.nation)
-        |                OR (o.seg IS DISTINCT FROM n.seg) THEN 'update' END AS change_type,
-        |         n.nation, n.seg
-        |  FROM oldsnap o FULL OUTER JOIN newsnap n ON o.k = n.k)
-        |WHERE change_type IS NOT NULL
-        |ORDER BY k, change_type""".stripMargin,
-
-    "q109_retention" ->
-      s"""${Funnel.retentionSql}
-          ORDER BY cohort_week, week_offset""",
-
-    "q111_weighted_sample" ->
-      s"""${Sampling.weightedSampleSql()}
-          ORDER BY stratum, o_orderkey""",
-
-    "q62_asof_join" ->
-      s"""${Events.asOfLastSignupSql}
-          ORDER BY event_id""",
-
-    "q63_pivot_counts" ->
-      s"""${Events.pivotCountsSql}
-          ORDER BY user_id""",
-
-    "q64_stream_tumbling" -> EventStream.tumblingHourlySql,
-
-    // the resumed two-run stream must equal the one-shot batch aggregate
-    "q187_stream_checkpoint_resume" -> EventStream.tumblingHourlySql,
-
-    "q67_stream_static_join" ->
-      """SELECT 'c' || CAST(user_id % 4 AS VARCHAR) AS cohort, event_type,
-        |       COUNT(*) AS n
-        |FROM events
-        |GROUP BY cohort, event_type
-        |ORDER BY cohort, event_type""".stripMargin,
-
-    // identical session contract as the batch formulation (q61), money
-    // column omitted — the stateful streaming path must find the same
-    // session boundaries
-    "q68_stream_sessionize" ->
-      s"""SELECT user_id, session_seq, n_events, start_ms, end_ms
-          FROM (${Events.sessionizeSql()})
-          ORDER BY user_id, session_seq""",
-
-    "q69_scd2_merge" ->
-      """WITH dim AS (
-        |  SELECT c_custkey AS k, CAST(c_nationkey AS INT) AS nation,
-        |         DATE '2020-01-01' AS effective_from,
-        |         CAST(NULL AS DATE) AS effective_to
-        |  FROM customer),
-        |upd AS (
-        |  SELECT c_custkey AS k,
-        |         CAST(CASE WHEN c_custkey % 10 = 0 THEN (c_nationkey + 1) % 25
-        |              ELSE c_nationkey END AS INT) AS nation
-        |  FROM customer WHERE c_custkey % 3 <> 0
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000 AS k, CAST(7 AS INT) AS nation
-        |  FROM customer WHERE c_custkey % 100 = 0),
-        |keep AS (
-        |  SELECT d.k, d.nation, d.effective_from, d.effective_to
-        |  FROM dim d LEFT JOIN upd u ON d.k = u.k
-        |  WHERE u.k IS NULL OR d.nation = u.nation),
-        |close AS (
-        |  SELECT d.k, d.nation, d.effective_from, DATE '2024-06-01' AS effective_to
-        |  FROM dim d JOIN upd u ON d.k = u.k WHERE d.nation <> u.nation),
-        |opennew AS (
-        |  SELECT u.k, u.nation, DATE '2024-06-01' AS effective_from,
-        |         CAST(NULL AS DATE) AS effective_to
-        |  FROM upd u LEFT JOIN dim d ON d.k = u.k
-        |  WHERE d.k IS NULL OR d.nation <> u.nation)
-        |SELECT * FROM keep UNION ALL SELECT * FROM close
-        |UNION ALL SELECT * FROM opennew
-        |ORDER BY k, effective_from""".stripMargin,
-
-    // the salt must be invisible: plain group-by is the oracle
-    "q70_salted_agg" ->
-      s"""SELECT user_id,
-                 ${moneyOutSql(s"CAST(SUM(${moneySql("value")}) AS DECIMAL(18,2))")} AS total
-          FROM events
-          GROUP BY user_id
-          ORDER BY user_id""",
-
-    "q71_incremental_dedup" ->
-      s"""WITH ${Dedup.incrementalDedupSql()}
-          SELECT keep_doc_id, fingerprint, n_copies FROM incremental
-          ORDER BY keep_doc_id""",
-
-    "q76_window_suite" ->
-      s"""SELECT o_custkey, o_orderkey,
-                 CAST(DENSE_RANK() OVER w AS INT) AS drank,
-                 CAST(NTILE(4) OVER w AS INT) AS quartile,
-                 PERCENT_RANK() OVER w AS prank,
-                 ${moneyOutSql(s"COALESCE(${moneySql("o_totalprice")} - LAG(${moneySql("o_totalprice")}, 1) OVER w, 0)")} AS delta_prev
-          FROM orders
-          WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-          ORDER BY o_custkey, o_orderkey""",
-
-    "q85_exact_median" ->
-      """SELECT event_type, (MIN(value) + MAX(value)) / 2 AS median
-        |FROM (SELECT event_type, value,
-        |             ROW_NUMBER() OVER (PARTITION BY event_type
-        |                                ORDER BY value, event_id) AS rn,
-        |             COUNT(*) OVER (PARTITION BY event_type) AS n
-        |      FROM events) t
-        |WHERE rn * 2 - n IN (0, 1, 2)
-        |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // the oracle asserts the CONTRACT: estimates must sit inside the bound
-    "q75_approx_distinct" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
-        |       TRUE AS within_5pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q72_range_join" -> Events.tierTotalsSql,
-  )
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 }

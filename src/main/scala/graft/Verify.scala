@@ -11,6 +11,12 @@ object Verify {
     // extra args (local iteration only; the driver passes exactly two)
     // restrict the dump to the named queries
     val only = args.drop(2).toSet
+    val unknown = only -- SparkEntry.queries.keySet
+    if (unknown.nonEmpty) {
+      System.err.println(
+        s"[verify] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

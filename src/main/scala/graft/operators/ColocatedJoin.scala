@@ -30,13 +30,15 @@ import graft.functions.OracleSafe
 object ColocatedJoin {
 
   /** The dirs holding one partition's files — its Hive-style dir under
-    * every serving dir, with the value escaped the way Spark wrote it.
+    * every serving dir, named the way Spark wrote it
+    * ([[ManifestTable.partitionDir]]).
     */
   private def slicePaths(tableDir: String, partCol: String, part: String,
       e: ManifestTable.Entry): Seq[String] = {
     require(e.dels.isEmpty, s"$tableDir: partition $part has position deletes")
     e.dirs.map(d =>
-      s"$tableDir/data/$d/${escapePathName(partCol)}=${escapePathName(part)}")
+      s"$tableDir/data/$d/${escapePathName(partCol)}=" +
+        ManifestTable.partitionDir(part))
   }
 
   /** One partition's files, read dir-scoped (maximal pruning: the scan
@@ -63,7 +65,9 @@ object ColocatedJoin {
     def partsOf(dir: String) = ManifestTable.readManifest(spark, dir,
       ManifestTable.live(spark, dir)).parts
     val (mapA, mapB) = (partsOf(tableADir), partsOf(tableBDir))
-    val common = (mapA.keySet intersect mapB.keySet).toSeq.sorted
+    // an equi-join never matches the NULL partition (keyed `null`)
+    val common = (mapA.keySet intersect mapB.keySet).toSeq
+      .filter(_ != null).sorted
     require(common.nonEmpty,
       s"no common $partCol partitions between $tableADir and $tableBDir")
     common.map { p =>

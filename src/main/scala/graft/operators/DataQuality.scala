@@ -13,7 +13,7 @@ object DataQuality {
   final case class Violations(check: String, count: Long)
 
   /** One row per dim: (display name, oracle CTE name, surrogate key).
-    * [[checksDf]] and the DuckDB twin in BankOracle both iterate THIS list,
+    * [[checksDf]] and q37's DuckDB oracle both iterate THIS list,
     * so the check set cannot drift between engine and oracle.
     */
   val dimKeys: Seq[(String, String, String)] = Seq(

@@ -4,8 +4,8 @@ import java.util.EnumSet
 
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
 import org.apache.hadoop.fs.Options.CreateOpts
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, escapePathName, unescapePathName}
 import org.apache.spark.sql.functions._
 
 import graft.functions.OracleSafe
@@ -2082,15 +2082,43 @@ object ManifestTable {
   /** Serving-dir order for splices: `v2` before `v10`. */
   private val dirOrder: Ordering[String] = Ordering.by(d => (d.length, d))
 
+  /** A partition value as its Hive-style dir name, escaped the way Spark
+    * writes it. NULL and `""` both land in Spark's default partition dir,
+    * which Spark reads back as NULL: that is the NULL partition, keyed
+    * `null` in a [[Manifest]].
+    */
+  def partitionDir(value: String): String =
+    if (value == null || value.isEmpty) DEFAULT_PARTITION_NAME
+    else escapePathName(value)
+
+  /** The partition key a [[partitionDir]] name stands for. */
+  private def partitionKey(dirName: String): String =
+    if (dirName == DEFAULT_PARTITION_NAME) null else unescapePathName(dirName)
+
+  /** The partition key a row's raw `partCol` value lands under. */
+  private def partitionKeyOf(value: Any): String =
+    Option(value).map(_.toString).filter(_.nonEmpty).orNull
+
+  /** Partition keys in order, the NULL partition first. */
+  private val keyOrder: Ordering[String] = Ordering.by(Option(_: String))
+
+  /** Rows of the partitions `keys`; `isin` never matches NULL, so the NULL
+    * partition adds an `isNull` test.
+    */
+  private def inPartitions(partCol: String, keys: Seq[String]): Column = {
+    val in = col(partCol).isin(keys.filter(_ != null).distinct.sorted: _*)
+    if (keys.contains(null)) in || col(partCol).isNull else in
+  }
+
   /** The manifest codec (layout in the object doc). A partition value is
-    * stored as its escaped Hive-style dir name — the raw bytes for plain
-    * values, and never a tab, newline or `#` — and unescaped on read, so
-    * callers and filters only ever see raw values.
+    * stored as its [[partitionDir]] name — the raw bytes for plain
+    * values, and never a tab, newline or `#` — and decoded on read, so
+    * callers and filters only ever see raw values or the NULL key.
     */
   private def encode(m: Manifest): String =
     (m.txn.map { case (app, b) => s"#txn\t$app\t$b" } ++
-      m.parts.toSeq.sortBy(_._1).map { case (p, e) =>
-        (Seq(escapePathName(p), e.dirs.mkString(",")) ++
+      m.parts.toSeq.sortBy(_._1)(keyOrder).map { case (p, e) =>
+        (Seq(partitionDir(p), e.dirs.mkString(",")) ++
           (if (e.dels.isEmpty) None else Some(e.dels.mkString("del:", ",", ""))) ++
           e.stats.map { case (n, s) => s"stats:$n,$s" }).mkString("\t")
       }).mkString("", "\n", "\n")
@@ -2106,7 +2134,7 @@ object ManifestTable {
       lines.filterNot(_.startsWith("#")).map { line =>
         val f = line.split("\t", -1)
         val tagged = f.drop(2).map(t => t.span(_ != ':')).toMap
-        unescapePathName(f(0)) -> Entry(list(f(1)),
+        partitionKey(f(0)) -> Entry(list(f(1)),
           tagged.get("del").fold(Seq.empty[String])(d => list(d.drop(1))),
           tagged.get("stats").map { s =>
             val Array(n, sum) = s.drop(1).split(",")
@@ -2136,8 +2164,8 @@ object ManifestTable {
     if (version == 0L) Map.empty
     else readManifest(spark, tableDir, version).parts
 
-  /** Partition values landed under `data/<dir>`: its `partCol=` dir
-    * names, unescaped.
+  /** Partition keys landed under `data/<dir>`: its `partCol=` dir
+    * names, decoded.
     */
   def partitionValues(spark: SparkSession, tableDir: String, dir: String,
       partCol: String): Seq[String] = {
@@ -2147,7 +2175,7 @@ object ManifestTable {
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).toSeq.map(_.getPath.getName)
       .filter(_.startsWith(prefix))
-      .map(n => unescapePathName(n.stripPrefix(prefix))).sorted
+      .map(n => partitionKey(n.stripPrefix(prefix))).sorted(keyOrder)
   }
 
   /** Land `df` under `data/<dir>` partitioned by `partCol` — an
@@ -2167,7 +2195,8 @@ object ManifestTable {
   private def statsBy(df: DataFrame, partCol: String,
       statCol: String): Map[String, (Long, Long)] =
     df.groupBy(partCol).agg(count(lit(1)), sum(col(statCol))).collect()
-      .map(r => r.get(0).toString -> (r.getLong(1), r.getLong(2))).toMap
+      .toSeq.groupMapReduce(r => partitionKeyOf(r.get(0)))(
+        r => (r.getLong(1), r.getLong(2))) { case ((n, s), (m, t)) => (n + m, s + t) }
 
   /** `prev` after a commit that lands `dir` for the `landed` partitions,
     * as a data dir or, with `deletes`, as a delete dir. Stats stay exact
@@ -2258,7 +2287,7 @@ object ManifestTable {
       .sortBy(_._1)(dirOrder)
       .map { case (d, ps) =>
         val df = spark.read.parquet(s"$tableDir/data/$d")
-          .filter(col(partCol).isin(ps.map(_._2).distinct.sorted: _*))
+          .filter(inPartitions(partCol, ps.map(_._2)))
         tag.fold(df)(t => df.withColumn(t, lit(versionOf(d))))
       }.reduce(_ unionByName _)
 
@@ -2290,9 +2319,14 @@ object ManifestTable {
         spark.read.parquet(s"$tableDir/data/$d")
           .select(col(partCol), col("_src_version"), col("_pos"))
       }.reduce(_ unionByName _)
-      val kept = splice(spark, tableDir, partCol, touched, Some("_src_version"))
-        .join(if (delBytes <= broadcastMaxBytes) broadcast(dels) else dels,
-          Seq(partCol, "_src_version", "_pos"), "left_anti")
+      val spliced = splice(spark, tableDir, partCol, touched,
+        Some("_src_version"))
+      val build = if (delBytes <= broadcastMaxBytes) broadcast(dels) else dels
+      // `<=>` on the partition, so deletes in the NULL partition match
+      val kept = spliced.join(build,
+        spliced(partCol) <=> build(partCol) &&
+          spliced("_src_version") === build("_src_version") &&
+          spliced("_pos") === build("_pos"), "left_anti")
       Some(if (rowIds) kept else kept.drop("_src_version"))
     }
     (Option.when(clean.nonEmpty)(splice(spark, tableDir, partCol, clean, tag))
@@ -2422,10 +2456,11 @@ object ManifestTable {
     commitAt(spark, tableDir, version, crash) {
       val prev = partsAt(spark, tableDir, version - 1)
       val touched = df.select(partCol).distinct().collect()
-        .map(_.get(0).toString).toSeq.sorted // bounded by |partitions|
+        .map(r => partitionKeyOf(r.get(0))).toSeq.distinct
+        .sorted(keyOrder) // bounded by |partitions|
       val merged = if (prev.isEmpty) df
         else readPartitionedMoR(spark, tableDir, partCol, version - 1)
-          .filter(col(partCol).isin(touched: _*))
+          .filter(inPartitions(partCol, touched))
           .unionByName(df)
       val dir = s"v$version"
       Manifest((prev -- touched) ++
@@ -3579,7 +3614,7 @@ object ManifestTable {
   def metadataAggregate(spark: SparkSession, tableDir: String,
       version: Long): DataFrame = {
     import spark.implicits._
-    statsAt(spark, tableDir, version).toSeq.sortBy(_._1)
+    statsAt(spark, tableDir, version).toSeq.sortBy(_._1)(keyOrder)
       .map { case (p, (n, s)) => (p, n, s) }
       .toDF("partition", "n", "stat_sum")
   }

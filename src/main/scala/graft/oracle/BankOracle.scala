@@ -93,113 +93,4 @@ object BankOracle {
        |  JOIN dim_merchant dm ON t.Final_Name = dm.MerchantName_Source
        |  JOIN dim_location dl ON t.TransactionCountry = dl.Transaction_Country)""".stripMargin
   }
-
-  /** Oracle entries for the bank-warehouse queries (q20-q31). */
-  def queries: Map[String, String] = Map(
-    "q20_bank_clean_accounts" ->
-      s"""$prelude
-         |SELECT AccountID, CustomerID, AccountType, OpenDate
-         |FROM clean_accounts ORDER BY AccountID""".stripMargin,
-
-    "q21_bank_clean_customers" ->
-      s"""$prelude
-         |SELECT CustomerID, FirstName, LastName, BirthDate, Gender, City, Country
-         |FROM clean_customers ORDER BY CustomerID""".stripMargin,
-
-    "q22_bank_clean_transactions" ->
-      s"""$prelude
-         |SELECT TransactionID, AccountID, MerchantName,
-         |       CAST(Amount AS DOUBLE) AS Amount, TransactionTimestamp,
-         |       TransactionCountry, BeneficiaryName, TransactionDescription
-         |FROM clean_transactions ORDER BY TransactionID""".stripMargin,
-
-    "q23_dim_customer" ->
-      s"""$prelude
-         |SELECT Customer_Key, CustomerID_Source, CustomerName, Age_Group, Gender,
-         |       City, Country, BirthDate
-         |FROM dim_customer ORDER BY Customer_Key""".stripMargin,
-
-    "q24_dim_account" ->
-      s"""$prelude
-         |SELECT Account_Key, AccountID_Source, Account_Type, Account_Open_Date
-         |FROM dim_account ORDER BY Account_Key""".stripMargin,
-
-    "q25_dim_merchant" ->
-      s"""$prelude
-         |SELECT Merchant_Key, MerchantName_Source, Category
-         |FROM dim_merchant ORDER BY Merchant_Key""".stripMargin,
-
-    "q26_dim_location" ->
-      s"""$prelude
-         |SELECT Location_Key, Transaction_Country, Transaction_Region
-         |FROM dim_location ORDER BY Location_Key""".stripMargin,
-
-    "q27_dim_date" ->
-      s"""$prelude
-         |SELECT Date_Key, Full_Date, Day_Of_Week, Day_Name, Is_Weekend, Month,
-         |       Month_Name, Quarter, Year, Hour_Of_Day
-         |FROM dim_date ORDER BY Date_Key""".stripMargin,
-
-    "q28_fact_spending" ->
-      s"""$prelude
-         |SELECT Transaction_Key, Date_Key, Customer_Key, Account_Key, Merchant_Key,
-         |       Location_Key, CAST(Amount_Spent AS DOUBLE) AS Amount_Spent,
-         |       Transaction_Count
-         |FROM fact_spending
-         |ORDER BY Transaction_Key""".stripMargin,
-
-    "q29_dash_trend" ->
-      s"""$prelude
-         |SELECT d.Year, d.Month,
-         |       ${yearMonthSql("d.Year", "d.Month")} AS YearMonth,
-         |       CAST(CAST(SUM(f.Amount_Spent) AS DECIMAL(18,2)) AS DOUBLE) AS Total_Spent
-         |FROM fact_spending f JOIN dim_date d ON f.Date_Key = d.Date_Key
-         |GROUP BY d.Year, d.Month
-         |ORDER BY d.Year, d.Month""".stripMargin,
-
-    "q30_dash_top_categories" ->
-      s"""$prelude
-         |SELECT m.Category,
-         |       CAST(CAST(SUM(f.Amount_Spent) AS DECIMAL(18,2)) AS DOUBLE) AS Total_Spent
-         |FROM fact_spending f JOIN dim_merchant m ON f.Merchant_Key = m.Merchant_Key
-         |GROUP BY m.Category
-         |ORDER BY Total_Spent DESC, m.Category
-         |LIMIT 5""".stripMargin,
-
-    "q31_dash_age_groups" ->
-      s"""$prelude
-         |SELECT c.Age_Group,
-         |       CAST(CAST(SUM(f.Amount_Spent) AS DECIMAL(18,2)) AS DOUBLE) AS Total_Spent
-         |FROM fact_spending f JOIN dim_customer c ON f.Customer_Key = c.Customer_Key
-         |GROUP BY c.Age_Group
-         |ORDER BY Total_Spent DESC, c.Age_Group""".stripMargin,
-
-    // S4 twin: the engine side writes the ym-partitioned parquet warehouse
-    // and re-aggregates the read-back fact; the oracle aggregates the same
-    // fact directly — byte-identical results prove the sink lost nothing.
-    "q36_warehouse_roundtrip" ->
-      s"""$prelude
-         |SELECT CAST(Date_Key // 10000 AS INT) AS ym, COUNT(*) AS n,
-         |       CAST(CAST(SUM(Amount_Spent) AS DECIMAL(18,2)) AS DOUBLE) AS total
-         |FROM fact_spending
-         |GROUP BY ym ORDER BY ym""".stripMargin,
-
-    // S5 twin: FK orphan / PK dup counts, generated from the SAME
-    // DataQuality.dimKeys list the engine iterates.
-    "q37_data_quality" -> {
-      val branches = graft.operators.DataQuality.dimKeys.flatMap {
-        case (name, cte, key) => Seq(
-          s"""SELECT 'fact.$key orphans' AS check_name, COUNT(*) AS violations
-             |FROM fact_spending f
-             |WHERE NOT EXISTS (SELECT 1 FROM $cte d WHERE d.$key = f.$key)""".stripMargin,
-          s"""SELECT '$name dup keys' AS check_name,
-             |       COUNT($key) - COUNT(DISTINCT $key) AS violations
-             |FROM $cte""".stripMargin)
-      }
-      s"""$prelude
-         |SELECT check_name, violations FROM (
-         |${branches.mkString("\nUNION ALL\n")}
-         |) ORDER BY check_name""".stripMargin
-    },
-  )
 }

@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Driver-contract smoke: entry() returns rows; every declared query has an
-  * oracle or is consciously rows-only; names match between the two maps.
+  * oracle; names match between the two derived maps; every query runs, and
+  * starts a stream exactly when its family is streaming.
   */
 class EntrySpec extends SparkSpec {
 
@@ -36,10 +38,26 @@ class EntrySpec extends SparkSpec {
 
   test("all queries run and are non-degenerate on sf0.001") {
     val allowedEmpty = Set("q47_embedding_near_dups") // no near-dup pairs at this sf
-    SparkEntry.queries.foreach { case (name, fn) =>
+    // the family rule checked by behaviour: a streaming-family query starts
+    // a stream, no other query does. onQueryStarted is posted on the
+    // starting thread, so the count is settled when the query returns.
+    val started = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.incrementAndGet()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val streaming = graft.queries.Streaming.queries.map(_.name).toSet
+    spark.streams.addListener(listener)
+    try SparkEntry.queries.foreach { case (name, fn) =>
+      val before = started.get()
       val n = fn(spark, sf).count()
       assert(n > 0 || allowedEmpty(name), s"$name returned 0 rows")
-    }
+      val streams = started.get() - before
+      if (streaming(name)) assert(streams > 0, s"$name is streaming but starts no stream")
+      else assert(streams == 0, s"$name starts $streams streams outside the streaming family")
+    } finally spark.streams.removeListener(listener)
   }
 
   test("q148: the limit(10) keeps exactly the 10 best of the full ranking") {

@@ -1136,46 +1136,73 @@ class ManifestTableSpec extends SparkSpec {
   test("hostile partition values round-trip on every tier") {
     val values = Seq("plain", "a/b", "k=v", "50%", "x:y", "t\tab", "n\nl",
       "#txn")
-    def batch(n: Int) = values.zipWithIndex
+    // NULL and "" both land in Spark's default partition dir and read
+    // back as NULL: the NULL partition, keyed `null` in the manifest
+    def batch(n: Int) = (values ++ Seq(null, "")).zipWithIndex
       .map { case (p, i) => (100L * n + i, p, n.toLong) }
       .toDF("event_id", "event_type", "cents")
     def served(tbl: String): Map[String, (Long, Long)] = ManifestTable
       .readPartitioned(spark, tbl, "event_type")
       .groupBy("event_type").agg(count(lit(1)), sum("cents")).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // tier, commit n, compact into v3, the dir the compaction lands
-    val tiers: Seq[(String, (String, Int) => Unit, String => Unit, String)] =
+    // the position-delete tier lands batches 1, 2 and 9 with row ids,
+    // then deletes batch 9's rows by position
+    def withPositions(t: String, n: Int): Unit =
+      if (n == 1) ManifestTable.appendPartitionedDelta(ManifestTable
+          .withRowIds(batch(1).union(batch(2)).union(batch(9))), t, 1L,
+        "event_type", statCol = Some("cents"))
+      else ManifestTable.appendPositionDeletes(ManifestTable
+          .readPartitionedMoR(spark, t, "event_type", 1L, rowIds = true)
+          .filter(col("cents") === 9L)
+          .select("event_type", "_src_version", "_pos", "cents"),
+        t, 2L, "event_type", statCol = Some("cents"))
+    // tier, commit n, compact into v3, the dir the compaction lands,
+    // whether the commits keep stats
+    val tiers: Seq[(String, (String, Int) => Unit, String => Unit, String,
+        Boolean)] =
       Seq(
         ("MoR", (t, n) => ManifestTable.appendPartitionedDelta(batch(n), t,
-            n.toLong, "event_type"),
+            n.toLong, "event_type", statCol = Some("cents")),
           t => ManifestTable.compactPartitionedMoR(spark, t, 3L, "event_type"),
-          "v3"),
+          "v3", true),
         ("COW", (t, n) => ManifestTable.appendPartitionedIdempotent(batch(n),
             t, n.toLong, "event_type"),
           t => ManifestTable.compactPartitionedMoR(spark, t, 3L, "event_type"),
-          "v3"),
+          "v3", false),
         ("txn", (t, n) => ManifestTable.appendDeltaTxn(batch(n), t, "app",
             n.toLong, "event_type"),
           t => ManifestTable.compactPartitionedTxn(spark, t, "event_type"),
-          "c_v2"))
-    for ((tier, append, compact, folded) <- tiers) {
+          "c_v2", false),
+        ("position-delete", withPositions,
+          t => ManifestTable.compactPartitionedMoR(spark, t, 3L, "event_type"),
+          "v3", true))
+    for ((tier, append, compact, folded, stats) <- tiers) {
       val out = java.nio.file.Files.createTempDirectory("graft-hostile")
       try {
         val tbl = s"$out/tbl"
         append(tbl, 1)
         append(tbl, 2)
-        val both = values.map(_ -> (2L, 3L)).toMap
+        val both = values.map(_ -> (2L, 3L)).toMap + ((null: String) -> (4L, 6L))
+        def check(v: Long, at: String): Unit = {
+          assert(served(tbl) == both, s"$tier $at")
+          if (stats) {
+            assert(ManifestTable.statsAt(spark, tbl, v) == both, s"$tier $at")
+            assert(ManifestTable.metadataAggregate(spark, tbl, v).collect()
+              .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+              .toMap == both, s"$tier $at")
+          }
+        }
         assert(ManifestTable.readManifest(spark, tbl, 2L).parts.keySet
-          == values.toSet, tier)
-        assert(served(tbl) == both, tier)
+          == values.toSet + null, tier)
+        check(2L, "after the commits")
         compact(tbl)
         assert(ManifestTable.readManifest(spark, tbl, 3L).parts.values
           .forall(_.dirs == Seq(folded)), tier)
-        assert(served(tbl) == both, tier)
+        check(3L, "after the compaction")
         ManifestTable.vacuumPartitionedMoR(spark, tbl, keep = 1)
         assert(new java.io.File(s"$tbl/data").list().toSet == Set(folded),
           s"$tier: only the compacted dir may survive the vacuum")
-        assert(served(tbl) == both, tier)
+        check(3L, "after the vacuum")
       } finally graft.Scratch.rmTree(out.toFile)
     }
   }

@@ -39,6 +39,10 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        sys.exit(2)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
