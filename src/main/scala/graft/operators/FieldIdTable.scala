@@ -48,16 +48,8 @@ object FieldIdTable {
       }.toSeq
 
   def schemaManifestVersions(spark: SparkSession,
-      tableDir: String): Seq[Long] = {
-    val fs = new Path(tableDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$tableDir/smanifest")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.startsWith("v"))
-      .flatMap(n => scala.util.Try(n.stripPrefix("v").toLong).toOption)
-      .sorted
-  }
+      tableDir: String): Seq[Long] =
+    ManifestTable.listVersions(spark, tableDir, "smanifest")
 
   /** Commit one batch under an explicit field mapping. `df`'s columns
     * must be exactly the mapping's names — the files ARE the physical

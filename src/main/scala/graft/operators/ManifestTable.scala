@@ -63,10 +63,10 @@ object ManifestTable {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Versions named `v<N>…` directly under `tableDir/sub` (`data`,
-    * `manifest`, `commits`, `leases`), ascending; empty when the dir is
-    * absent.
+    * `manifest`, `commits`, `leases`, `smanifest`), ascending; empty when
+    * the dir is absent.
     */
-  private def listVersions(spark: SparkSession, tableDir: String,
+  private[operators] def listVersions(spark: SparkSession, tableDir: String,
       sub: String): Seq[Long] = {
     val fs = fileSystem(spark, tableDir)
     val dir = new Path(s"$tableDir/$sub")
@@ -82,18 +82,29 @@ object ManifestTable {
     * a reader that holds the returned version is PINNED to that snapshot
     * whatever publishes happen after.
     */
-  def currentVersion(spark: SparkSession, tableDir: String): Option[Long] = {
-    val ctx = fc(spark, tableDir)
-    val ptr = new Path(s"$tableDir/CURRENT")
-    if (!ctx.util.exists(ptr)) None
-    else {
-      val in = ctx.open(ptr)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
+  def currentVersion(spark: SparkSession, tableDir: String): Option[Long] =
+    readPointer(spark, s"$tableDir/CURRENT").map(_.trim.toLong)
+
+  /** Replace the small pointer file `path` with `text`: write `path.tmp`,
+    * then one atomic rename over `path` — readers see the old or the new
+    * content, never a torn write.
+    */
+  private def writePointer(spark: SparkSession, path: String,
+      text: String): Unit = {
+    val ctx = fc(spark, path)
+    val tmp = new Path(s"$path.tmp")
+    val out = ctx.create(tmp,
+      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+      CreateOpts.createParent())
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    ctx.rename(tmp, new Path(path), Options.Rename.OVERWRITE)
+  }
+
+  /** The content of the small pointer file `path`, or None if absent. */
+  private def readPointer(spark: SparkSession, path: String): Option[String] = {
+    val ctx = fc(spark, path)
+    val p = new Path(path)
+    if (!ctx.util.exists(p)) None else Some(readFully(ctx, p))
   }
 
   /** [[currentVersion]] of a table that must already be published. */
@@ -132,13 +143,7 @@ object ManifestTable {
   def swapPointer(spark: SparkSession, tableDir: String,
       version: Long): Unit = {
     commitCount.incrementAndGet()
-    val ctx = fc(spark, tableDir)
-    val tmp = new Path(s"$tableDir/CURRENT.tmp")
-    val out = ctx.create(tmp,
-      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      CreateOpts.createParent())
-    try out.write(s"$version\n".getBytes("UTF-8")) finally out.close()
-    ctx.rename(tmp, new Path(s"$tableDir/CURRENT"), Options.Rename.OVERWRITE)
+    writePointer(spark, s"$tableDir/CURRENT", s"$version\n")
   }
 
   /** Read the live snapshot through the pointer. The version is resolved
@@ -1047,25 +1052,11 @@ object ManifestTable {
       .agg(count(lit(1)).as("rn"), sum("cents").as("rcents"))
     def writeTable(df: DataFrame, table: String, v: Long): Unit =
       df.write.mode(SaveMode.Overwrite).parquet(s"$txDir/$table/v$v")
-    def commitTx(v: Long): Unit = {
-      val ctx = fc(spark, txDir)
-      val tmp = new Path(s"$txDir/TX.tmp")
-      val out = ctx.create(tmp,
-        EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-        CreateOpts.createParent())
-      // the manifest: every table pinned to the transaction's version
-      try out.write(s"fact:$v\nrollup:$v\n".getBytes("UTF-8"))
-      finally out.close()
-      ctx.rename(tmp, new Path(s"$txDir/TX"), Options.Rename.OVERWRITE)
-    }
+    // the manifest: every table pinned to the transaction's version
+    def commitTx(v: Long): Unit =
+      writePointer(spark, s"$txDir/TX", s"fact:$v\nrollup:$v\n")
     def resolve(): Map[String, Long] = {
-      val ctx = fc(spark, txDir)
-      val in = ctx.open(new Path(s"$txDir/TX"))
-      val text = try {
-        val buf = new Array[Byte](256)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), "UTF-8")
-      } finally in.close()
+      val text = readFully(fc(spark, txDir), new Path(s"$txDir/TX"))
       text.linesIterator.filter(_.nonEmpty).map { l =>
         val Array(t, v) = l.split(":"); t -> v.toLong
       }.toMap
@@ -1377,20 +1368,12 @@ object ManifestTable {
     * deployment schedules beside vacuum: vacuum reclaims COMMITTED
     * history, orphan GC reclaims what was NEVER committed.
     *
-    * TEST-ONLY (deprecated): this classification alone cannot tell a
-    * LIVE writer inside the q241 window from crash debris. Production
-    * callers use [[safeOrphanVersions]] with a real grace window.
+    * This is the q298 frontier/ref classification alone: it cannot tell
+    * a LIVE writer inside the q241 window from crash debris, so never
+    * delete from this set directly — [[safeOrphanVersions]] layers its
+    * intent + grace clauses on it.
     */
-  @deprecated("test-only: use safeOrphanVersions with a grace window — " +
-    "this classification alone cannot see an in-flight publish", "r15")
-  def orphanVersions(spark: SparkSession, tableDir: String): Seq[Long] =
-    rawOrphanVersions(spark, tableDir)
-
-  /** The q298 frontier/ref classification [[safeOrphanVersions]] layers
-    * its intent + grace clauses on. Internal: never delete from this
-    * set directly.
-    */
-  private def rawOrphanVersions(spark: SparkSession,
+  private[operators] def orphanVersions(spark: SparkSession,
       tableDir: String): Seq[Long] = {
     // an unborn table (no pointer yet) has no committed frontier to
     // judge against — GC nothing rather than eat an in-flight bootstrap
@@ -1416,26 +1399,11 @@ object ManifestTable {
       .filter(v => v > live && !committed(v) && !referenced(v))
   }
 
-  /** Delete orphan version dirs. Returns the versions reclaimed.
-    *
-    * TEST-ONLY (deprecated): delegates to [[gcOrphansSafe]] with
-    * `graceMs = 0` — the deterministic "every writer crashed long ago"
-    * the q298 single-writer spec wants, and EXACTLY the setting that is
-    * unsafe beside a live publish (a zero grace window declares an
-    * in-flight writer dead). A deployment that schedules GC beside
-    * live writers calls [[gcOrphansSafe]] (q302) with a real grace
-    * window directly; no other production path reaches this.
-    */
-  @deprecated("test-only: delegates to gcOrphansSafe(graceMs = 0) — " +
-    "use gcOrphansSafe with a real grace window beside live writers", "r15")
-  def gcOrphans(spark: SparkSession, tableDir: String): Seq[Long] =
-    gcOrphansSafe(spark, tableDir, graceMs = 0L)
-
   /** q298 — ORPHAN GC end to end, the maintenance op beside vacuum:
     * publish v1, then a v2 publish DIES in the q241 crash window (data
     * landed, pointer never swapped, no commit slot claimed) — the table
     * still serves v1, but the dead writer's snapshot dir sits on disk
-    * as unaccounted storage. [[gcOrphans]] reclaims exactly that dir
+    * as unaccounted storage. [[gcOrphansSafe]] reclaims exactly that dir
     * (the pointer's target and CAS-committed versions are never
     * candidates), after which the retried v2 publish commits cleanly —
     * GC is the OTHER recovery from the crash q241 recovers by re-run,
@@ -1467,7 +1435,7 @@ object ManifestTable {
       try { publish(v2, tableDir, 2L, crashBeforeSwap = true); false }
       catch { case _: InjectedCrash => true }
     require(crashed, "the injected crash must fire inside the window")
-    val orphans = rawOrphanVersions(spark, tableDir)
+    val orphans = orphanVersions(spark, tableDir)
     require(orphans == Seq(2L), s"exactly the dead v2 is orphaned: $orphans")
     val s2 = stage("b_crash_debris", orphans.size.toLong)
     val reclaimed = gcOrphansSafe(spark, tableDir, graceMs = 0L)
@@ -1522,34 +1490,15 @@ object ManifestTable {
     * pointer into the shared version history.
     */
   def setBranch(spark: SparkSession, tableDir: String, name: String,
-      version: Long): Unit = {
-    val ctx = fc(spark, tableDir)
-    val tmp = new Path(s"$tableDir/refs/branch_$name.tmp")
-    val out = ctx.create(tmp,
-      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      CreateOpts.createParent())
-    try out.write(s"$version\n".getBytes("UTF-8")) finally out.close()
-    ctx.rename(tmp, new Path(s"$tableDir/refs/branch_$name"),
-      Options.Rename.OVERWRITE)
-  }
+      version: Long): Unit =
+    writePointer(spark, s"$tableDir/refs/branch_$name", s"$version\n")
 
   /** Resolve a ref file (`tag_<name>` or `branch_<name>`) to its
     * version, or None if the ref does not exist.
     */
   def refVersion(spark: SparkSession, tableDir: String,
-      refFile: String): Option[Long] = {
-    val ctx = fc(spark, tableDir)
-    val p = new Path(s"$tableDir/refs/$refFile")
-    if (!ctx.util.exists(p)) None
-    else {
-      val in = ctx.open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
+      refFile: String): Option[Long] =
+    readPointer(spark, s"$tableDir/refs/$refFile").map(_.trim.toLong)
 
   /** Fast-forward branch `name` to `toVersion`: allowed only when the
     * move is FORWARD along the (linear) version history — a backward or
@@ -1675,7 +1624,7 @@ object ManifestTable {
     * writer. The intent is what lets orphan GC tell a LIVE mid-publish
     * writer from crash debris — without it a staged-but-uncommitted
     * snapshot looks exactly like q298's crash case, and a racing
-    * [[gcOrphans]] would delete the data out from under the publish
+    * orphan GC would delete the data out from under the publish
     * (then the pointer swap would land CURRENT on a deleted snapshot).
     * Exactly one writer per version can hold the intent (the same
     * put-if-absent CAS as commit slots); [[releaseIntent]] retires it
@@ -1729,7 +1678,7 @@ object ManifestTable {
     val live = liveIntentVersions(spark, tableDir, graceMs)
     val fs = fileSystem(spark, tableDir)
     val now = System.currentTimeMillis()
-    rawOrphanVersions(spark, tableDir).filterNot { v =>
+    orphanVersions(spark, tableDir).filterNot { v =>
       live(v) || {
         val p = new Path(s"$tableDir/data/v$v")
         fs.exists(p) && now - fs.getFileStatus(p).getModificationTime < graceMs
@@ -1827,7 +1776,7 @@ object ManifestTable {
     v2.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v2")
     // the naive classifier WOULD call the live writer's snapshot debris —
     // the exact race this operator closes
-    require(rawOrphanVersions(spark, tableDir) == Seq(2L),
+    require(orphanVersions(spark, tableDir) == Seq(2L),
       "naive GC must (wrongly) see the in-flight v2 as debris")
     val gcDuring = gcOrphansSafe(spark, tableDir, IntentGraceMs)
     require(gcDuring.isEmpty,
@@ -1914,12 +1863,8 @@ object ManifestTable {
   }
 
   /** Newest checkpoint sequence number, via the O(1) LAST locator. */
-  def lastCheckpointSeq(spark: SparkSession, tableDir: String): Option[Long] = {
-    val ctx = fc(spark, tableDir)
-    val p = new Path(s"$tableDir/checkpoints/LAST")
-    if (!ctx.util.exists(p)) None
-    else Some(readFully(ctx, p).trim.toLong)
-  }
+  def lastCheckpointSeq(spark: SparkSession, tableDir: String): Option[Long] =
+    readPointer(spark, s"$tableDir/checkpoints/LAST").map(_.trim.toLong)
 
   /** Write a MANIFEST CHECKPOINT: one metadata file naming the covered
     * head and every version dir on disk at write time — the compaction
@@ -1947,14 +1892,7 @@ object ManifestTable {
     if (!putIfAbsent(spark, new Path(s"$tableDir/checkpoints/cp_$seq"),
         body)) None
     else {
-      val ctx = fc(spark, tableDir)
-      val tmp = new Path(s"$tableDir/checkpoints/LAST.tmp")
-      val out = ctx.create(tmp,
-        EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-        CreateOpts.createParent())
-      try out.write(s"$seq\n".getBytes("UTF-8")) finally out.close()
-      ctx.rename(tmp, new Path(s"$tableDir/checkpoints/LAST"),
-        Options.Rename.OVERWRITE)
+      writePointer(spark, s"$tableDir/checkpoints/LAST", s"$seq\n")
       Some((seq, head))
     }
   }

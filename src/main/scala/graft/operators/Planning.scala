@@ -2132,13 +2132,11 @@ object Planning {
     * caps (8 GB / 512 M rows) and driver memory at the 100 TB target;
     * above the ceiling the serve path falls back to the shuffled join,
     * which has no such ceiling (the same pattern as the position-delete
-    * read's manifest-byte gate). The default keeps the broadcast at
+    * read's manifest-byte gate). The ceiling keeps the broadcast at
     * harness scale (~75 k candidate rows at sf0.1 vs the 8 M ceiling,
-    * ~400 MB framed) and is env-tunable for cluster deployments.
+    * ~400 MB framed).
     */
-  private[graft] def bloomCandidateBroadcastMaxRows: Long =
-    sys.env.get("SPARK_GRAFT_BLOOM_BCAST_MAX_ROWS").map(_.toLong)
-      .getOrElse(8L << 20)
+  private[graft] val bloomCandidateBroadcastMaxRows: Long = 8L << 20
 
   /** Build half of [[bloomIndexedLookup]]: date-clustered fact + per-zone
     * bit sizes (`meta` — FROZEN at build time, the [[appendBloomIndexDelta]]

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryException, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.OracleSafe.money
 import graft.sources.EventEncoding
@@ -17,6 +19,24 @@ import graft.sources.EventEncoding
   * correctness-checked against the batch oracle: the windowed aggregation,
   * watermark wiring, and sink round-trip all execute. On a cluster the same
   * code tails a directory/Kafka source continuously.
+  *
+  * Every query runs on one harness, written once below:
+  *  - '''Drain''' ([[runAvailable]], [[drain]]): the plan runs under
+  *    `Trigger.AvailableNow` until its source is exhausted, then stops;
+  *    a memory-sink result is read back as a batch frame.
+  *  - '''Ordered feed''' ([[OrderedFeed]], [[stampChunkDir]]): a staged
+  *    feed is one parquet file per chunk, chunk `i` stamped `i` seconds
+  *    after the feed's start, so a `maxFilesPerTrigger = 1` file source
+  *    replays it one chunk per micro-batch in chunk order. A failed mtime
+  *    stamp fails the query: the replay order would be undefined.
+  *  - '''Crash replay''' ([[crashReplay]]): a `foreachBatch` stream over an
+  *    ordered feed runs twice against one checkpoint. Each batch entry
+  *    first writes an attempt marker (the attempt ledger), then runs the
+  *    query's commit body. In the first run the chosen batch throws after
+  *    its body reports a commit and before the stream's checkpoint commit
+  *    (the crash window); the second run resumes and replays that batch.
+  *    The ledger then holds the crashed batch twice and every other batch
+  *    once, and exact results prove the commit body idempotent per batch.
   */
 object EventStream {
 
@@ -46,6 +66,122 @@ object EventStream {
     try body finally spark.conf.set(key, prev)
   }
 
+  /** Run `w` under `Trigger.AvailableNow` until its source is exhausted,
+    * then stop it. The stopped query still answers `recentProgress` and
+    * `lastProgress`.
+    */
+  private def runAvailable(w: DataStreamWriter[Row]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
+    try q.processAllAvailable()
+    finally q.stop()
+    q
+  }
+
+  /** Drain `df` in output mode `mode` into a fresh memory-sink table;
+    * returns the table and the stopped query.
+    */
+  private def drain(df: DataFrame, mode: String): (DataFrame, StreamingQuery) = {
+    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
+    val q = runAvailable(
+      df.writeStream.outputMode(mode).format("memory").queryName(name))
+    (df.sparkSession.table(name), q)
+  }
+
+  /** Stamp `files` with modification time `t`, failing loudly: the file
+    * source replays in mtime order under `maxFilesPerTrigger`.
+    */
+  private def stamp(t: Long, files: Iterable[java.io.File]): Unit =
+    files.foreach(f => require(f.setLastModified(t),
+      s"setLastModified failed for $f — replay order would be undefined"))
+
+  /** Start of a feed's clock: the current whole minute. */
+  private def feedStart(): Long = (System.currentTimeMillis() / 60000L) * 60000L
+
+  /** Stamp the chunk dir `d` and its files as chunk `i` of a feed started
+    * at `t0`.
+    */
+  private def stampChunkDir(d: java.io.File, i: Int, t0: Long): Unit =
+    stamp(t0 + i * 1000L, d.listFiles().toSeq :+ d)
+
+  /** An ordered feed appended to the flat dir `dir`: each `append` lands
+    * one `coalesce(1)` parquet file stamped one second after the previous
+    * chunk's.
+    */
+  private[streaming] final class OrderedFeed(dir: String) {
+    private val t0 = feedStart()
+    private var chunks = 0
+    def append(df: DataFrame): Unit = {
+      val d = new java.io.File(dir)
+      val before = Option(d.listFiles())
+        .map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
+      df.coalesce(1).write.mode("append").parquet(dir)
+      chunks += 1
+      stamp(t0 + chunks * 1000L, d.listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName)))
+    }
+  }
+
+  /** The three-chunk feed of the crash-replay queries: `ev` cut at one and
+    * two thirds of its `ts_ns` range, appended to `src` in time order.
+    */
+  private def feedThirds(ev: DataFrame, src: String): Unit = {
+    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
+    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val cut1 = lo + (hi - lo) / 3
+    val cut2 = lo + 2 * ((hi - lo) / 3)
+    val feed = new OrderedFeed(src)
+    feed.append(ev.filter(col("ts_ns") <= cut1))
+    feed.append(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
+    feed.append(ev.filter(col("ts_ns") > cut2))
+  }
+
+  /** Thrown inside the crash window: after a batch's commit, before the
+    * stream's checkpoint commit.
+    */
+  private final class InjectedCrash(batchId: Long) extends RuntimeException(
+    s"injected crash: batch $batchId committed, checkpoint commit never reached")
+
+  /** The crash-replay harness over the ordered feed in `src` (the feed's
+    * own schema unless `schema` is given), checkpointed under `base/ck`
+    * with its attempt markers in `base/attempts`. `commit` is the query's
+    * per-batch body and returns whether it committed the batch; run 1
+    * crashes at batch `crashAt` only then. Returns the attempt ledger:
+    * batch ids in attempt order.
+    */
+  private[streaming] def crashReplay(spark: SparkSession, src: String,
+      base: String, crashAt: Long, schema: Option[StructType] = None)(
+      commit: (DataFrame, Long) => Boolean): Seq[Long] = {
+    val att = new java.io.File(s"$base/attempts")
+    require(att.mkdirs(), s"cannot create $att")
+    var attempts = 0
+    def injected(e: Throwable): Boolean = Iterator.iterate(e)(_.getCause)
+      .takeWhile(_ != null).exists(_.isInstanceOf[InjectedCrash])
+    def run(crashBatch: Long): Unit = {
+      val q = spark.readStream
+        .schema(schema.getOrElse(spark.read.parquet(src).schema))
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+        .writeStream
+        .foreachBatch { (df: DataFrame, batchId: Long) =>
+          // marker FIRST: a crash mid-commit still counts as an attempt
+          attempts += 1
+          val marker = new java.io.File(att, f"a$attempts%04d-b$batchId")
+          require(marker.createNewFile(), s"cannot create $marker")
+          if (commit(df, batchId) && batchId == crashBatch)
+            throw new InjectedCrash(batchId)
+        }
+        .option("checkpointLocation", s"$base/ck")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try { q.processAllAvailable(); q.awaitTermination() }
+      catch { case e: StreamingQueryException if injected(e) => }
+      finally q.stop()
+    }
+    run(crashAt) // dies inside batch crashAt's crash window
+    run(-1L) // resumes from the checkpoint: replays it, finishes the feed
+    att.list().sorted.toSeq.map(n => n.substring(n.indexOf("-b") + 2).toLong)
+  }
+
   /** Hourly tumbling-window counts/sums per event type, computed BY THE
     * STREAMING ENGINE and returned as a batch DataFrame once the source is
     * exhausted.
@@ -57,7 +193,6 @@ object EventStream {
     // The source takes a glob (its basePath must be the directory, not a
     // bare file).
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
 
     val agg = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
       .withColumn("tstamp", EventEncoding.tsMicros(rawSchema("ts").dataType))
@@ -66,16 +201,7 @@ object EventStream {
       .agg(count(lit(1)).as("n"),
         sum(money(col("value"))).cast("decimal(18,2)").cast("double").as("total_value"))
       .select(col("w.start").as("hour"), col("event_type"), col("n"), col("total_value"))
-
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("hour", "event_type")
+    drain(agg, "complete")._1.orderBy("hour", "event_type")
   }
 
   /** Sliding-window variant of [[tumblingHourly]]: 2-hour windows every
@@ -87,7 +213,6 @@ object EventStream {
   def slidingHourly(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark, 4) {
     val path = s"$dir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
 
     val agg = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
       .withColumn("tstamp", EventEncoding.tsMicros(rawSchema("ts").dataType))
@@ -97,16 +222,7 @@ object EventStream {
         sum(money(col("value"))).cast("decimal(18,2)").cast("double").as("total_value"))
       .select(unix_millis(col("w.start")).as("start_ms"),
         col("event_type"), col("n"), col("total_value"))
-
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("start_ms", "event_type")
+    drain(agg, "complete")._1.orderBy("start_ms", "event_type")
   }
 
   /** Idempotent streaming ingest: exactly-once semantics over an
@@ -117,22 +233,13 @@ object EventStream {
     */
   def dedupedCount(spark: SparkSession, dir: String, glob: String = "*.parquet"): Long = withStatePartitions(spark, 4) {
     val sample = spark.read.parquet(dir)
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream.schema(sample.schema).parquet(s"$dir/$glob")
+    val counted = spark.readStream.schema(sample.schema).parquet(s"$dir/$glob")
       .withColumn("tstamp", EventEncoding.tsMicros(sample.schema("ts").dataType))
       .withWatermark("tstamp", "2 hours")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy()
       .count()
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).head().getLong(0)
+    drain(counted, "complete")._1.head().getLong(0)
   }
 
   /** Stream-static join: a streaming fact enriched against a static
@@ -145,20 +252,11 @@ object EventStream {
       withStatePartitions(spark, 4) {
     val path = s"$dir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
+    val totals = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
       .join(org.apache.spark.sql.functions.broadcast(userDim), Seq("user_id"))
       .groupBy("cohort", "event_type")
       .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("cohort", "event_type")
+    drain(totals, "complete")._1.orderBy("cohort", "event_type")
   }
 
   final case class RawEvent(event_id: Long, user_id: Long, ts_ms: Long, value: Double)
@@ -179,7 +277,6 @@ object EventStream {
     val gapMs = gapMinutes * 60000L
     val path = s"$dir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
 
     def close(userId: Long, events: Iterator[RawEvent],
         state: GroupState[List[RawEvent]]): Iterator[Session] = {
@@ -206,21 +303,14 @@ object EventStream {
       }
     }
 
-    val q = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
+    val sessions = spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
       .select(col("event_id"), col("user_id"),
         EventEncoding.tsMillis(rawSchema("ts").dataType).as("ts_ms"), col("value"))
       .as[RawEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(close)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name).orderBy("user_id", "session_seq")
+      .toDF()
+    drain(sessions, "append")._1.orderBy("user_id", "session_seq")
   }
 
   /** Stream-stream interval join — the last streaming join shape ([[enrichedTypeTotals]]
@@ -239,26 +329,17 @@ object EventStream {
       withStatePartitions(spark, 4) {
     val path = s"$dir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     def side(eventType: String, prefix: String) =
       spark.readStream.schema(rawSchema).parquet(s"$dir/events*.parquet")
         .filter(col("event_type") === eventType)
         .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
           EventEncoding.tsMicros(rawSchema("ts").dataType).as(s"${prefix}_ts"))
         .withWatermark(s"${prefix}_ts", s"$windowMinutes minutes")
-    val q = side("click", "click").join(side("view", "view"),
+    val pairs = side("click", "click").join(side("view", "view"),
         col("click_user") === col("view_user") &&
           col("view_ts") >= col("click_ts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
           col("view_ts") <= col("click_ts"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    drain(pairs, "append")._1
       .groupBy(col("click_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
@@ -299,7 +380,7 @@ object EventStream {
 
   def watermarkClosureWithMetrics(spark: SparkSession, dir: String,
       jitterMaxMs: Long = 1800000L, chunks: Int = 12)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
+      : (DataFrame, Seq[StreamingQueryProgress]) =
       withStatePartitions(spark, 4) {
     require(jitterMaxMs >= 1, s"jitterMaxMs must be >= 1, got $jitterMaxMs")
     require(chunks >= 2, s"need >= 2 chunks for a multi-batch replay, got $chunks")
@@ -336,29 +417,19 @@ object EventStream {
     chunked.select("event_id", "event_type", "tstamp", "chunk")
       .repartition(chunks, col("chunk"))
       .write.partitionBy("chunk").parquet(tmp)
-    val t0 = (System.currentTimeMillis() / 60000L) * 60000L
+    val t0 = feedStart()
     for (i <- 0 until chunks) {
       val d = new java.io.File(s"$tmp/chunk=$i")
-      if (d.isDirectory)
-        d.listFiles().foreach(f => { f.setLastModified(t0 + i * 1000L); () })
+      if (d.isDirectory) stampChunkDir(d, i, t0)
     }
 
     val schema = spark.read.parquet(tmp).schema // includes the chunk partition col
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
-    val q = spark.readStream.schema(schema)
+    val (deduped, q) = drain(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(tmp)
       .withWatermark("tstamp", s"$delaySec seconds")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val result = spark.table(name)
+      .dropDuplicatesWithinWatermark("event_id"), "append")
+    val result = deduped
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique"))
       .withColumn("wm_sec", lit(delaySec))
@@ -395,7 +466,7 @@ object EventStream {
 
   def multiSourceWatermarkWithMetrics(spark: SparkSession, dir: String,
       lagChunks: Int = 6)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
+      : (DataFrame, Seq[StreamingQueryProgress]) =
       withStatePartitions(spark, 4) {
     require(lagChunks >= 2, s"need >= 2 lag chunks for a skewed replay, got $lagChunks")
     val ev = graft.sources.TestData.events(spark, dir)
@@ -457,43 +528,24 @@ object EventStream {
       }
       sentinel(-1L).coalesce(1)
         .write.parquet(f"$lagDir/chunk_$lagChunks%03d")
-      val t0 = (System.currentTimeMillis() / 60000L) * 60000L
+      // results stay correct under the min-watermark rule whatever the
+      // order, but the spec's batch-interleaving assertions need it
+      val t0 = feedStart()
       for (d <- new java.io.File(fastDir).listFiles() ++
-          new java.io.File(lagDir).listFiles(); if d.isDirectory) {
-        val i = d.getName.stripPrefix("chunk_").toInt
-        // the chunk-ordered mtimes ARE the replay order (the file source
-        // sorts by modification time under maxFilesPerTrigger); a silently
-        // failed setLastModified would leave the order undefined — results
-        // stay correct under the min-watermark rule, but the spec's
-        // batch-interleaving assertions would flake, so fail loudly here
-        d.listFiles().foreach { f =>
-          require(f.setLastModified(t0 + i * 1000L),
-            s"setLastModified failed for $f — replay order would be undefined")
-        }
-        require(d.setLastModified(t0 + i * 1000L),
-          s"setLastModified failed for $d — replay order would be undefined")
-      }
+          new java.io.File(lagDir).listFiles(); if d.isDirectory)
+        stampChunkDir(d, d.getName.stripPrefix("chunk_").toInt, t0)
       val schema = spark.read.parquet(s"$fastDir/chunk_000").schema
-      val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
       def side(path: String, src: String) =
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$path/chunk_*")
           .withColumn("src", lit(src))
           .withWatermark("tstamp", "1 minute") // per-source: union takes the MIN
-      val q = side(fastDir, "fast").unionByName(side(lagDir, "lag"))
+      val (windows, q) = drain(side(fastDir, "fast").unionByName(side(lagDir, "lag"))
         .groupBy(window(col("tstamp"), "1 day").as("w"),
           col("event_type"), col("src"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val result = spark.table(name)
+        .agg(count(lit(1)).as("n")), "append")
+      val result = windows
         .filter(col("event_type") =!= "zz_sentinel")
         .groupBy("event_type", "src")
         .agg(count(lit(1)).as("n_windows"), sum(col("n")).as("n_events"))
@@ -557,14 +609,9 @@ object EventStream {
     ev.coalesce(1).write.parquet(s"$tmp/chunk_000")
     sentinels(24).coalesce(1).write.parquet(s"$tmp/chunk_001")
     sentinels(48).coalesce(1).write.parquet(s"$tmp/chunk_002")
-    val t0 = (System.currentTimeMillis() / 60000L) * 60000L
-    for (i <- 0 until 3) {
-      val d = new java.io.File(f"$tmp/chunk_$i%03d")
-      d.listFiles().foreach(f => { f.setLastModified(t0 + i * 1000L); () })
-      d.setLastModified(t0 + i * 1000L)
-    }
+    val t0 = feedStart()
+    for (i <- 0 until 3) stampChunkDir(new java.io.File(f"$tmp/chunk_$i%03d"), i, t0)
     val schema = spark.read.parquet(s"$tmp/chunk_000").schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     def side(eventType: String, prefix: String) =
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -574,20 +621,12 @@ object EventStream {
           col("user_id").as(s"${prefix}_user"),
           col("tstamp").as(s"${prefix}_ts"))
         .withWatermark(s"${prefix}_ts", s"$windowMinutes minutes")
-    val q = side("click", "click").join(side("view", "view"),
+    val joined = side("click", "click").join(side("view", "view"),
         col("click_user") === col("view_user") &&
           col("view_ts") >= col("click_ts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
           col("view_ts") <= col("click_ts"),
         "left_outer")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    spark.table(name)
+    drain(joined, "append")._1
       .filter(col("click_user") >= 0L)
       .groupBy(col("click_user").as("user_id"))
       .agg(sum(when(col("view_id").isNotNull, 1L).otherwise(0L)).as("n_pairs"),
@@ -678,7 +717,7 @@ object EventStream {
     checkpointResumeWithMetrics(spark, dir)._1
 
   def checkpointResumeWithMetrics(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) =
+      : (DataFrame, Seq[StreamingQueryProgress]) =
       withStatePartitions(spark, 4) {
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("ts").as("tstamp"),
@@ -688,21 +727,10 @@ object EventStream {
     val base = exitScratch("graft-ckresume")
     val (src, sink, ck) = (s"$base/src", s"$base/sink", s"$base/ck")
 
-    // one file per write, mtimes strictly increasing → deterministic
-    // single-file micro-batches in arrival order
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => { f.setLastModified(mtime); () })
-    }
+    val feed = new OrderedFeed(src)
 
     val allProgress = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
+      .empty[StreamingQueryProgress]
     def runOnce(): Unit = {
       val schema = spark.read.parquet(src).schema
       // no pre-aggregation filter: a predicate on a non-event-time column
@@ -711,7 +739,7 @@ object EventStream {
       // watermark stuck at real-max − 1 h). The sentinels therefore flow
       // into the aggregation as their own far-future 'sentinel' groups and
       // are dropped batch-side when the sink is read.
-      val q = spark.readStream.schema(schema)
+      val q = runAvailable(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
         .withWatermark("tstamp", "1 hour")
@@ -725,18 +753,14 @@ object EventStream {
         .outputMode("append")
         .format("parquet")
         .option("path", sink)
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+        .option("checkpointLocation", ck))
       allProgress ++= q.recentProgress
     }
 
-    writeChunk(ev.filter(col("ts_ns") <= midNs))
+    feed.append(ev.filter(col("ts_ns") <= midNs))
     runOnce() // run 1: early half only, then the "process dies"
 
-    writeChunk(ev.filter(col("ts_ns") > midNs))
+    feed.append(ev.filter(col("ts_ns") > midNs))
     // the sentinel's tstamp must carry the SAME parquet type as the real
     // rows (TIMESTAMP vs TIMESTAMP_NTZ differ at the file level, and a
     // mixed directory breaks the stream's schema resolution)
@@ -744,8 +768,8 @@ object EventStream {
       lit(-1L).as("event_id"), lit("sentinel").as("event_type"),
       lit(tsLit).cast(ev.schema("tstamp").dataType).as("tstamp"),
       lit(Long.MaxValue).as("ts_ns"), lit(0.0).as("value"))
-    writeChunk(sentinel("2030-01-01 00:00:00"))
-    writeChunk(sentinel("2030-01-02 00:00:00"))
+    feed.append(sentinel("2030-01-01 00:00:00"))
+    feed.append(sentinel("2030-01-02 00:00:00"))
     runOnce() // run 2: resumed from the checkpoint, new files only
 
     (spark.read.parquet(sink)
@@ -792,27 +816,17 @@ object EventStream {
     val base = exitScratch("graft-sesswin")
     val (src, sink, ck) = (s"$base/src", s"$base/sink", s"$base/ck")
 
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
     def sentinel(tsLit: String, id: Long) = ev.limit(1).select(
       lit(id).as("event_id"), lit(-1L).as("user_id"),
       lit(tsLit).cast(ev.schema("tstamp").dataType).as("tstamp"),
       lit(Long.MaxValue).as("ts_ns"), lit(0.0).as("value"))
     // mid-timeline split: users active across the cut get their open
     // sessions MERGED in state when chunk 2 arrives
-    writeChunk(ev.filter(col("ts_ns") <= midNs))
-    writeChunk(ev.filter(col("ts_ns") > midNs))
-    writeChunk(sentinel("2030-01-01 00:00:00", -1L))
-    writeChunk(sentinel("2030-01-02 00:00:00", -2L))
+    val feed = new OrderedFeed(src)
+    feed.append(ev.filter(col("ts_ns") <= midNs))
+    feed.append(ev.filter(col("ts_ns") > midNs))
+    feed.append(sentinel("2030-01-01 00:00:00", -1L))
+    feed.append(sentinel("2030-01-02 00:00:00", -2L))
 
     val schema = spark.read.parquet(src).schema
     // the session CLOCK is the ms-truncated time (timestamp_millis of
@@ -820,7 +834,7 @@ object EventStream {
     // comparison on the micros grid could break a session the ms grid
     // merges (sub-ms components straddling the boundary) — same grid on
     // both sides, no edge
-    val q = spark.readStream.schema(schema)
+    runAvailable(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(src)
       .withColumn("sess_ts", timestamp_millis(expr("ts_ns DIV 1000000")))
@@ -838,11 +852,7 @@ object EventStream {
       .outputMode("append")
       .format("parquet")
       .option("path", sink)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      .option("checkpointLocation", ck))
 
     spark.read.parquet(sink)
       .filter(col("user_id") >= 0L)
@@ -882,8 +892,8 @@ object EventStream {
        |  FROM sws_seq GROUP BY user_id, session_seq)""".stripMargin
   }
 
-  /** Exactly-once delivery to an EXTERNAL sink via idempotent
-    * `foreachBatch` — the production pattern for sinks without
+  /** Exactly-once delivery to an EXTERNAL sink via an idempotent
+    * per-batch write — the production pattern for sinks without
     * transactional integration (JDBC upserts, object stores): Structured
     * Streaming guarantees each micro-batch is delivered AT LEAST once
     * (a crash between the sink write and the checkpoint commit replays
@@ -891,15 +901,11 @@ object EventStream {
     * write a pure function of `batchId` (here: overwrite of a
     * batch-keyed directory) and replays become no-ops.
     *
-    * This query EXECUTES the failure: the source replays in three
-    * single-file micro-batches; run 1's `foreachBatch` crashes AFTER
-    * batch 1's sink write but BEFORE its checkpoint commit (the
-    * uncovered window); run 2 resumes from the checkpoint and replays
-    * batch 1 — the attempt ledger (one marker per foreachBatch entry)
-    * records 4 attempts over 3 batches, and the read-back totals still
-    * equal the batch oracle. The oracle pins those verdicts: a
-    * naive append-mode sink would double batch 1 and fail the
-    * hash-match.
+    * The crash-replay harness runs three chunks and crashes batch 1
+    * after its sink write: the ledger records 4 attempts over 3 batches,
+    * and the read-back totals still equal the batch oracle. The oracle
+    * pins those verdicts: a naive append-mode sink would double batch 1
+    * and fail the hash-match.
     *
     * Scale shape: pass-through stream (no state, no watermark); the
     * per-batch overwrite is the idempotence contract, not a size cost;
@@ -908,61 +914,18 @@ object EventStream {
   def exactlyOnceSink(spark: SparkSession, dir: String): DataFrame = {
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("ts_ns"), col("value"))
-    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
     val base = exitScratch("graft-e1sink")
-    val (src, sink, ck, att) =
-      (s"$base/src", s"$base/sink", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
-
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(ev.filter(col("ts_ns") <= cut1))
-    writeChunk(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
-    writeChunk(ev.filter(col("ts_ns") > cut2))
-
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // attempt marker FIRST: even a crash mid-write counts as an
-          // attempt (at-least-once is about entries, not successes)
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          // the idempotent write: a pure function of batchId
-          df.write.mode("overwrite").parquet(s"$sink/b$batchId")
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: sink written, checkpoint commit never reached")
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // run 1 dies inside batch 1's uncovered window
-    runOnce(injectCrashAt = -1L) // run 2 replays batch 1, finishes batch 2
+    val (src, sink) = (s"$base/src", s"$base/sink")
+    feedThirds(ev, src)
+    val attempts = crashReplay(spark, src, base, crashAt = 1L) {
+      (df, batchId) =>
+        // the idempotent write: a pure function of batchId
+        df.write.mode("overwrite").parquet(s"$sink/b$batchId")
+        true
+    }.size
 
     val batchDirs = Option(new java.io.File(sink).listFiles())
       .map(_.count(d => d.isDirectory && d.getName.startsWith("b"))).getOrElse(0)
-    val attempts = new java.io.File(att).listFiles().length
     spark.read.parquet(s"$sink/b*")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -1016,7 +979,7 @@ object EventStream {
     *
     * Scale shape: per micro-batch work is one batch-sized aggregate plus
     * one key-grain outer merge join against the state table — the same
-    * per-batch cost a foreachBatch MERGE INTO carries on a cluster; state
+    * per-batch cost a streamed MERGE INTO carries on a cluster; state
     * is key-grain (bounded by the user population), never event-grain.
     */
   def streamingCdcUpsert(spark: SparkSession, dir: String): DataFrame = {
@@ -1025,29 +988,9 @@ object EventStream {
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts"), col("ts_ns"), col("value"))
-    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
     val base = exitScratch("graft-cdcup")
-    val (src, tbl, ck, att) =
-      (s"$base/src", s"$base/table", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
-
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(ev.filter(col("ts_ns") <= cut1))
-    writeChunk(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
-    writeChunk(ev.filter(col("ts_ns") > cut2))
+    val (src, tbl) = (s"$base/src", s"$base/table")
+    feedThirds(ev, src)
 
     // v1 = the empty state snapshot; batch b reads v(b+1), writes v(b+2)
     // `ts` (not ts_ns) in the ordering struct — the exact cdcApply
@@ -1059,46 +1002,25 @@ object EventStream {
         org.apache.spark.sql.types.StructType.fromDDL(stateSchema)),
       tbl, 1L)
 
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          val bAgg = df.select(col("user_id"),
-              struct(col("ts"), col("event_id"),
-                when(col("event_type") === "signup", lit("I"))
-                  .when(col("event_type") === "error", lit("D"))
-                  .otherwise(lit("U")).as("op"),
-                money(col("value")).as("val")).as("l"))
-            .groupBy("user_id")
-            .agg(count(lit(1)).as("bn"), max(col("l")).as("blast"))
-          val prev = spark.read.parquet(s"$tbl/data/v${batchId + 1}")
-          val merged = prev.join(bAgg, Seq("user_id"), "full")
-            .select(col("user_id"),
-              (coalesce(col("n_ops"), lit(0L)) +
-                coalesce(col("bn"), lit(0L))).as("n_ops"),
-              greatest(col("last"), col("blast")).as("last"))
-          ManifestTable.publish(merged, tbl, batchId + 2)
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: merge committed, checkpoint commit never reached")
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // dies in batch 1's uncovered window
-    runOnce(injectCrashAt = -1L) // replays batch 1, finishes batch 2
-
-    val attempts = new java.io.File(att).listFiles().length
+    val attempts = crashReplay(spark, src, base, crashAt = 1L) {
+      (df, batchId) =>
+        val bAgg = df.select(col("user_id"),
+            struct(col("ts"), col("event_id"),
+              when(col("event_type") === "signup", lit("I"))
+                .when(col("event_type") === "error", lit("D"))
+                .otherwise(lit("U")).as("op"),
+              money(col("value")).as("val")).as("l"))
+          .groupBy("user_id")
+          .agg(count(lit(1)).as("bn"), max(col("l")).as("blast"))
+        val prev = spark.read.parquet(s"$tbl/data/v${batchId + 1}")
+        val merged = prev.join(bAgg, Seq("user_id"), "full")
+          .select(col("user_id"),
+            (coalesce(col("n_ops"), lit(0L)) +
+              coalesce(col("bn"), lit(0L))).as("n_ops"),
+            greatest(col("last"), col("blast")).as("last"))
+        ManifestTable.publish(merged, tbl, batchId + 2)
+        true
+    }.size
     val versions = new java.io.File(s"$tbl/data").listFiles()
       .count(d => d.isDirectory && d.getName.startsWith("v"))
     ManifestTable.read(spark, tbl)
@@ -1137,59 +1059,17 @@ object EventStream {
     import graft.operators.ManifestTable
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"), col("ts_ns"))
-    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
     val base = exitScratch("graft-pstream")
-    val (src, tbl, ck, att) =
-      (s"$base/src", s"$base/table", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
-
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(ev.filter(col("ts_ns") <= cut1))
-    writeChunk(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
-    writeChunk(ev.filter(col("ts_ns") > cut2))
-
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          ManifestTable.appendPartitionedIdempotent(
-            df.select(col("event_id"), col("event_type"), col("value")),
-            tbl, batchId + 1, "event_type")
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: commit landed, checkpoint commit never reached")
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // dies after batch 1's table commit
-    runOnce(injectCrashAt = -1L) // replays batch 1 (skipped), finishes 2
-
-    val attempts = new java.io.File(att).listFiles().length
+    val (src, tbl) = (s"$base/src", s"$base/table")
+    feedThirds(ev, src)
+    // the replayed batch 1 finds its manifest and skips
+    val attempts = crashReplay(spark, src, base, crashAt = 1L) {
+      (df, batchId) =>
+        ManifestTable.appendPartitionedIdempotent(
+          df.select(col("event_id"), col("event_type"), col("value")),
+          tbl, batchId + 1, "event_type")
+        true
+    }.size
     val commits = ManifestTable.manifestVersions(spark, tbl).size
     ManifestTable.readPartitioned(spark, tbl, "event_type")
       .groupBy("event_type")
@@ -1232,59 +1112,16 @@ object EventStream {
     import graft.operators.ManifestTable
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"), col("ts_ns"))
-    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
     val base = exitScratch("graft-mstream")
-    val (src, tbl, ck, att) =
-      (s"$base/src", s"$base/table", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
-
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(ev.filter(col("ts_ns") <= cut1))
-    writeChunk(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
-    writeChunk(ev.filter(col("ts_ns") > cut2))
-
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          ManifestTable.appendPartitionedDelta(
-            df.select(col("event_id"), col("event_type"), col("value")),
-            tbl, batchId + 1, "event_type")
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: commit landed, checkpoint commit never reached")
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // dies after batch 1's delta commit
-    runOnce(injectCrashAt = -1L) // replays batch 1 (skipped), finishes 2
-
-    val attempts = new java.io.File(att).listFiles().length
+    val (src, tbl) = (s"$base/src", s"$base/table")
+    feedThirds(ev, src)
+    val attempts = crashReplay(spark, src, base, crashAt = 1L) {
+      (df, batchId) =>
+        ManifestTable.appendPartitionedDelta(
+          df.select(col("event_id"), col("event_type"), col("value")),
+          tbl, batchId + 1, "event_type")
+        true
+    }.size
     val commits = ManifestTable.manifestVersions(spark, tbl).size
 
     def stage(name: String): DataFrame = {
@@ -1343,28 +1180,16 @@ object EventStream {
     val cut = lo + (hi - lo) / 2
     val cutTail = lo + (hi - lo) * 3 / 4
     val base = exitScratch("graft-handoff")
-    val (src, tbl, ck, att) =
-      (s"$base/src", s"$base/table", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
+    val (src, tbl) = (s"$base/src", s"$base/table")
 
     val slim = ev.select(col("event_id"), col("event_type"), col("value"),
       unix_micros(col("ts")).as("us"))
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
     // the live tail is what the stream will see — staged BEFORE the
     // backfill commits, as in production (the stream's source exists
     // while history loads; it just hasn't been started yet)
-    writeChunk(slim.filter(col("us") > cut && col("us") <= cutTail))
-    writeChunk(slim.filter(col("us") > cutTail))
+    val feed = new OrderedFeed(src)
+    feed.append(slim.filter(col("us") > cut && col("us") <= cutTail))
+    feed.append(slim.filter(col("us") > cutTail))
 
     // the BACKFILL: one batch commit of all history, its own writer id
     val (bfV, bfNew) = ManifestTable.appendDeltaTxn(
@@ -1385,35 +1210,14 @@ object EventStream {
           lit(attempts > 2).as("replay_happened"))
     val s1 = stage("a_backfill_only", 1L, 0L)
 
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          val (_, committedNow) = ManifestTable.appendDeltaTxn(
-            df.select(col("event_id"), col("event_type"), col("value")),
-            tbl, "live", batchId, "event_type")
-          if (batchId == injectCrashAt && committedNow)
-            throw new RuntimeException(
-              "injected crash: seam batch committed, checkpoint never")
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 0L) // dies after the SEAM batch's commit
-    runOnce(injectCrashAt = -1L) // replays b0 (txn tag found → skip), b1
-
-    val attempts = new java.io.File(att).listFiles().length.toLong
+    // crashes after the SEAM batch's commit; the replay of b0 finds the
+    // (live, 0) txn tag and skips
+    val attempts = crashReplay(spark, src, base, crashAt = 0L) {
+      (df, batchId) =>
+        ManifestTable.appendDeltaTxn(
+          df.select(col("event_id"), col("event_type"), col("value")),
+          tbl, "live", batchId, "event_type")._2
+    }.size.toLong
     val versions = ManifestTable.manifestVersions(spark, tbl)
     require(versions == Seq(1L, 2L, 3L),
       s"expected backfill, live b0, live b1: $versions")
@@ -1452,65 +1256,25 @@ object EventStream {
     import graft.operators.ManifestTable
     val ev = graft.sources.TestData.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"), col("ts_ns"))
-    val mm = ev.agg(min("ts_ns").as("lo"), max("ts_ns").as("hi")).head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cut1 = lo + (hi - lo) / 3
-    val cut2 = lo + 2 * ((hi - lo) / 3)
     val base = exitScratch("graft-txstream")
-    val (src, tbl, ck, att) =
-      (s"$base/src", s"$base/table", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
-
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(ev.filter(col("ts_ns") <= cut1))
-    writeChunk(ev.filter(col("ts_ns") > cut1 && col("ts_ns") <= cut2))
-    writeChunk(ev.filter(col("ts_ns") > cut2))
-
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          val (_, committedNow) = ManifestTable.appendDeltaTxn(
-            df.select(col("event_id"), col("event_type"), col("value")),
-            tbl, "ingest", batchId, "event_type")
-          if (batchId == injectCrashAt && committedNow) {
-            // the CONCURRENT maintenance job: folds v1+v2 as v3 while
-            // the stream is mid-flight, then the crash window hits
-            val cv = ManifestTable.compactPartitionedTxn(
-              spark, tbl, "event_type")
-            require(cv == 3L, s"the compaction must land as v3: $cv")
-            throw new RuntimeException(
-              "injected crash: txn + compaction committed, checkpoint never")
-          }
-          ()
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // dies after b1's txn commit + compaction
-    runOnce(injectCrashAt = -1L) // replays b1 (txn tag found, skipped)
-
-    val attempts = new java.io.File(att).listFiles().length
+    val (src, tbl) = (s"$base/src", s"$base/table")
+    feedThirds(ev, src)
+    // crashes after b1's txn commit + compaction; the replay of b1 finds
+    // its txn tag and skips
+    val crashAt = 1L
+    val attempts = crashReplay(spark, src, base, crashAt) { (df, batchId) =>
+      val (_, committedNow) = ManifestTable.appendDeltaTxn(
+        df.select(col("event_id"), col("event_type"), col("value")),
+        tbl, "ingest", batchId, "event_type")
+      if (batchId == crashAt && committedNow) {
+        // the CONCURRENT maintenance job: folds v1+v2 as v3 while
+        // the stream is mid-flight, then the crash window hits
+        val cv = ManifestTable.compactPartitionedTxn(
+          spark, tbl, "event_type")
+        require(cv == 3L, s"the compaction must land as v3: $cv")
+      }
+      committedNow
+    }.size
     val versions = ManifestTable.manifestVersions(spark, tbl)
     require(versions == Seq(1L, 2L, 3L, 4L),
       s"expected b0, b1, compaction, b2 commits: $versions")
@@ -1535,15 +1299,14 @@ object EventStream {
   /** q281 — STREAMING maintenance of the persisted inverted index: the
     * q239 index is built from the base corpus, then document deltas
     * arrive as a file stream and each micro-batch maintains the
-    * PHYSICAL artifacts inside foreachBatch — batch postings land in a
+    * PHYSICAL artifacts in its commit body — batch postings land in a
     * per-batch dir (`postings_delta/b<id>`, an idempotent OVERWRITE, so
     * a replay cannot double-append the way a blind `mode(append)`
     * would), and the dictionary merges forward through versioned dirs
     * (`dict_v<id+2>` = `v<id+1>` + batch dfs), every write a pure
     * function of `batchId` — the q242 discipline applied to a serving
-    * index instead of a warehouse table. A crash is injected after
-    * batch 0's artifacts land but before its checkpoint commit; the
-    * restart replays batch 0 over itself and finishes batch 1.
+    * index instead of a warehouse table. The harness crashes batch 0
+    * after its artifacts land; the replay rewrites them over themselves.
     *
     * The serve path then answers the q239 workload from the maintained
     * artifacts (final dict version + base-and-delta posting dirs), and
@@ -1562,56 +1325,23 @@ object EventStream {
     val docs = graft.sources.TestData.documents(spark, dir)
       .select(col("doc_id"), col("text"))
     val base = baseDir.getOrElse(exitScratch("graft-stridx"))
-    val (src, idx, ck, att) = (s"$base/src", s"$base/idx", s"$base/ck",
-      s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
+    val (src, idx) = (s"$base/src", s"$base/idx")
 
     // base corpus builds the index; two delta chunks arrive as a stream
     TextAnalysis.buildInvertedIndex(
       docs.filter(col("doc_id") % 10 =!= 0L && col("doc_id") % 10 =!= 5L), idx)
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
-    def writeChunk(df: DataFrame): Unit = {
-      val before = Option(new java.io.File(src).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
-      df.coalesce(1).write.mode("append").parquet(src)
-      mtime += 1000L
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
-    }
-    writeChunk(docs.filter(col("doc_id") % 10 === 0L))
-    writeChunk(docs.filter(col("doc_id") % 10 === 5L))
+    val feed = new OrderedFeed(src)
+    feed.append(docs.filter(col("doc_id") % 10 === 0L))
+    feed.append(docs.filter(col("doc_id") % 10 === 5L))
 
     def dictName(v: Long): String = if (v == 1L) "dict" else s"dict_v$v"
-    def runOnce(injectCrashAt: Long): Unit = {
-      val schema = spark.read.parquet(src).schema
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          TextAnalysis.maintainIndexBatch(df, idx,
-            batchDir = s"postings_delta/b$batchId",
-            dictIn = dictName(batchId + 1), dictOut = dictName(batchId + 2))
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: index maintained, checkpoint commit never reached")
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 0L) // dies in batch 0's uncovered window
-    runOnce(injectCrashAt = -1L) // replays batch 0 idempotently, runs batch 1
-
-    val attempts = new java.io.File(att).listFiles().length
+    val attempts = crashReplay(spark, src, base, crashAt = 0L) {
+      (df, batchId) =>
+        TextAnalysis.maintainIndexBatch(df, idx,
+          batchDir = s"postings_delta/b$batchId",
+          dictIn = dictName(batchId + 1), dictOut = dictName(batchId + 2))
+        true
+    }.size
     val deltaDirs = new java.io.File(s"$idx/postings_delta").listFiles()
       .filter(d => d.isDirectory && d.getName.startsWith("b"))
       .map(_.getName).sorted
@@ -1654,25 +1384,15 @@ object EventStream {
     val ev = graft.sources.TestData.events(spark, dir)
     val slim = ev.select(col("event_id"), col("event_type"), col("value"))
     val base = exitScratch("graft-mtail")
-    val (tbl, log, sink, ck, att) = (s"$base/table", s"$base/log",
-      s"$base/sink", s"$base/ck", s"$base/attempts")
-    require(new java.io.File(att).mkdirs(), s"cannot create $att")
+    val (tbl, log, sink) = (s"$base/table", s"$base/log", s"$base/sink")
 
-    // publish + log: the one-row log entry is the stream's record of the
-    // publish; mtimes are forced monotone so replay order is defined
-    var mtime = (System.currentTimeMillis() / 60000L) * 60000L
+    // publish + log: the one-row log entry, an ordered-feed chunk, is the
+    // stream's record of the publish
+    val logFeed = new OrderedFeed(log)
     def publishLogged(df: DataFrame, version: Long): Unit = {
       ManifestTable.publish(df, tbl, version)
-      val before = Option(new java.io.File(log).listFiles())
-        .map(_.map(_.getName).toSet).getOrElse(Set.empty)
       import spark.implicits._
-      Seq(version).toDF("version").coalesce(1)
-        .write.mode("append").parquet(log)
-      mtime += 1000L
-      new java.io.File(log).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") && !before(f.getName))
-        .foreach(f => require(f.setLastModified(mtime),
-          s"setLastModified failed for $f — replay order would be undefined"))
+      logFeed.append(Seq(version).toDF("version"))
     }
     // the q249 publish sequence, so the oracle IS the batch change feed:
     // v1 raw; v2 deletes errors + doubles purchases; v3 inserts clones
@@ -1685,38 +1405,17 @@ object EventStream {
     publishLogged(v2.unionByName(v2.filter(col("event_type") === "click")
       .withColumn("event_id", col("event_id") + 1000000000L)), 3L)
 
-    def runOnce(injectCrashAt: Long): Unit = {
-      val q = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "version BIGINT"))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(log)
-        .writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val marker = new java.io.File(att,
-            s"b$batchId-${UUID.randomUUID().toString}")
-          require(marker.createNewFile(), s"cannot create $marker")
-          // one log row per batch — the bounded decision frame
-          val vs = df.select("version").collect().map(_.getLong(0))
-          vs.filter(_ >= 2L).foreach { v =>
-            ManifestTable.changeFeed(spark, tbl, v - 1, v)
-              .write.mode("overwrite").parquet(s"$sink/v$v")
-          }
-          if (batchId == injectCrashAt)
-            throw new RuntimeException(
-              "injected crash: feed landed, checkpoint commit never reached")
-        }
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable(); q.awaitTermination() }
-      catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => }
-      finally q.stop()
-    }
-    runOnce(injectCrashAt = 1L) // dies after v2's feed, before its commit
-    runOnce(injectCrashAt = -1L) // replays v2 idempotently, streams v3
-
-    val attempts = new java.io.File(att).listFiles().length
+    // batch 1 (v2) crashes after its feed lands; the replay overwrites it
+    val attempts = crashReplay(spark, log, base, crashAt = 1L,
+        schema = Some(StructType.fromDDL("version BIGINT"))) { (df, _) =>
+      // one log row per batch — the bounded decision frame
+      val vs = df.select("version").collect().map(_.getLong(0))
+      vs.filter(_ >= 2L).foreach { v =>
+        ManifestTable.changeFeed(spark, tbl, v - 1, v)
+          .write.mode("overwrite").parquet(s"$sink/v$v")
+      }
+      true
+    }.size
     val nLogged = new java.io.File(log).listFiles()
       .count(_.getName.endsWith(".parquet"))
     val served = new java.io.File(sink).listFiles()
@@ -1753,30 +1452,20 @@ object EventStream {
       minBatches: Int = 1): DataFrame = withStatePartitions(spark, 4) {
     val path = s"$dir/events.parquet"
     val rawSchema = spark.read.parquet(path).schema
-    val name = "stream_" + UUID.randomUUID().toString.replace("-", "")
     val grain = spark.readStream.schema(rawSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/events*.parquet")
       .select(col("event_type"),
         graft.functions.OracleSafe.quant(col("value"), 100).as("s"))
       .groupBy("event_type", "s").agg(count(lit(1)).as("pn"))
-    val q = grain.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val (table, q) = drain(grain, "complete")
     // count batches from the LAST progress's id, not recentProgress
     // (a ring buffer capped by numRecentProgressUpdates, default 100 —
     // a minBatches above the cap would spuriously fail on it)
-    val batches =
-      try {
-        q.processAllAvailable()
-        Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-      } finally q.stop()
+    val batches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
     require(batches >= minBatches,
       s"expected >= $minBatches micro-batches, saw $batches")
     graft.operators.Events
-      .evalReportFromGrain(spark.table(name).localCheckpoint())
+      .evalReportFromGrain(table.localCheckpoint())
   }
 }

@@ -514,7 +514,7 @@ class ManifestTableSpec extends SparkSpec {
       // true debris: landed data, no pointer/slot/ref names it
       base.write.parquet(s"$tbl/data/v7")
       assert(ManifestTable.orphanVersions(spark, tbl) == Seq(7L))
-      assert(ManifestTable.gcOrphans(spark, tbl) == Seq(7L))
+      assert(ManifestTable.gcOrphansSafe(spark, tbl, graceMs = 0L) == Seq(7L))
       assert(!new java.io.File(s"$tbl/data/v7").exists())
       for (v <- Seq(1L, 2L, 4L, 5L))
         assert(new java.io.File(s"$tbl/data/v$v").isDirectory, s"v$v ate")

@@ -270,6 +270,32 @@ class EventStreamSpec extends SparkSpec {
     assert(got.exceptAll(batch).count() == 0)
   }
 
+  test("crash replay: the crashed batch is attempted twice, the rest once, in feed order") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-replay-spec")
+    try {
+      val src = s"$out/src"
+      val feed = new EventStream.OrderedFeed(src)
+      for (chunk <- 0L until 4L) feed.append(Seq(chunk, chunk).toDF("chunk"))
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+      val ledger = EventStream.crashReplay(spark, src, s"$out/crash",
+          crashAt = 2L) { (df, batchId) =>
+        seen += batchId -> df.as[Long].collect().toSeq.distinct
+        true
+      }
+      assert(ledger == Seq(0L, 1L, 2L, 2L, 3L),
+        "feed order, with the crashed batch 2 replayed after its crash")
+      assert(ledger.groupBy(identity).map { case (b, n) => b -> n.size } ==
+        Map(0L -> 1, 1L -> 1, 2L -> 2, 3L -> 1))
+      // every attempt of batch b read exactly chunk b
+      assert(seen.toSeq == ledger.map(b => b -> Seq(b)))
+      // a body that reports no commit is never crashed: one clean pass
+      val uncommitted = EventStream.crashReplay(spark, src, s"$out/skip",
+        crashAt = 2L) { (_, _) => false }
+      assert(uncommitted == Seq(0L, 1L, 2L, 3L))
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
   test("streaming CDC upsert: final table equals the batch cdcApply fold across the restart") {
     import org.apache.spark.sql.functions._
     val res = EventStream.streamingCdcUpsert(spark, sf)

@@ -1,5 +1,7 @@
 #!/bin/bash
-# Run a graft main class directly against compiled classes (fast iteration).
+# Run a graft main class directly against this checkout's compiled classes
+# (fast iteration; `sbt compile` first) and the Spark jars under SPARK_HOME.
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 MAIN=$1; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -17,5 +19,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:${SPARK_HOME:?SPARK_HOME must name a Spark install}/jars/*" \
   "$MAIN" "$@"
