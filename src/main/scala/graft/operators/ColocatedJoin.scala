@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
@@ -49,11 +48,6 @@ object ColocatedJoin {
       part: String): DataFrame =
     spark.read.parquet(paths: _*).withColumn(partCol, lit(part))
 
-  private def sliceBytes(spark: SparkSession, paths: Seq[String]): Long = {
-    val fs = ManifestTable.fileSystem(spark, paths.head)
-    paths.map(p => fs.getContentSummary(new Path(p)).getLength).sum
-  }
-
   /** Inner-join two partition-mapped tables on `partCol` co-location
     * plus `keys`: one branch per common partition, `b`'s slice broadcast
     * when its manifest bytes fit under `broadcastMaxBytes`, in-branch
@@ -62,9 +56,10 @@ object ColocatedJoin {
   def colocatedJoin(spark: SparkSession, tableADir: String,
       tableBDir: String, partCol: String, keys: Seq[String],
       broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    def partsOf(dir: String) = ManifestTable.readManifest(spark, dir,
-      ManifestTable.live(spark, dir)).parts
-    val (mapA, mapB) = (partsOf(tableADir), partsOf(tableBDir))
+    def manifestOf(dir: String) = ManifestTable.readManifest(spark, dir,
+      ManifestTable.live(spark, dir))
+    val mB = manifestOf(tableBDir)
+    val (mapA, mapB) = (manifestOf(tableADir).parts, mB.parts)
     // an equi-join never matches the NULL partition (keyed `null`)
     val common = (mapA.keySet intersect mapB.keySet).toSeq
       .filter(_ != null).sorted
@@ -76,8 +71,7 @@ object ColocatedJoin {
         partCol, p)
       val b = slice(spark, pathsB, partCol, p).drop(partCol)
       val build =
-        if (sliceBytes(spark, pathsB) <= broadcastMaxBytes) broadcast(b)
-        else b
+        if (mB.bytes(p, mapB(p).dirs) <= broadcastMaxBytes) broadcast(b) else b
       a.join(build, keys)
     }.reduce(_ unionByName _)
   }

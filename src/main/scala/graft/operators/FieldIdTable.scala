@@ -30,9 +30,9 @@ import graft.functions.OracleSafe
   *
   * Scale: commits append one batch dir + one tiny metadata file; the
   * head read is one per-version projection (alias/cast/null-fill —
-  * all codegen'd, zero shuffle) unioned across committed versions, the
-  * same splice [[ManifestTable.readPartitionedMoR]] does, and compaction
-  * (not repeated here — q309/q329 own it) bounds the version count.
+  * all codegen'd, zero shuffle) unioned across committed versions, and
+  * compaction (not repeated here — q309/q329 own it) bounds the version
+  * count.
   */
 object FieldIdTable {
 

@@ -2,11 +2,16 @@ package graft.operators
 
 import java.util.EnumSet
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path}
 import org.apache.hadoop.fs.Options.CreateOpts
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{DEFAULT_PARTITION_NAME, escapePathName, unescapePathName}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.functions.OracleSafe
 
@@ -25,8 +30,21 @@ import graft.functions.OracleSafe
   *                        [\tstats:<rows>,<sum>]`, under an optional
   *                        `#txn\t<app>\t<batch>` header; dirs are under
   *                        `data/` (`v<N>`, or `t_<app>_b<batch>` and
-  *                        `c_v<N>` for txn-tagged commits)
+  *                        `c_v<N>` for txn-tagged commits). Then the
+  *                        record of every data or delete dir the lines
+  *                        name: `#dir\t<dir>\t<schema json>` (the schema
+  *                        of the frame the dir was landed from) and one
+  *                        `#file\t<dir>\t<escaped value>\t<bytes>\t<name>`
+  *                        per data file. A dir's record is made once, by
+  *                        the one recursive listing of the commit that
+  *                        lands it, and later manifests carry it forward
+  *                        while they name the dir
   * }}}
+  *
+  * Partitioned reads are planned from one manifest read alone: the
+  * records become a [[FileIndex]] behind one relation per read, so no
+  * directory is listed, no footer is read for schema inference and no
+  * Spark job runs until the frame is executed.
   *
   * Protocol: (1) land the new snapshot's data files under `data/v<N>` —
   * an idempotent overwrite of a dir NO reader resolves yet; (2) commit by
@@ -1998,11 +2016,36 @@ object ManifestTable {
   final case class Entry(dirs: Seq[String], dels: Seq[String] = Nil,
       stats: Option[(Long, Long)] = None)
 
-  /** A partitioned-tier snapshot: partition value → [[Entry]], plus the
-    * `(appId, batchId)` tag of the txn commit that wrote it, if any.
+  /** One data file of a landed dir: its name inside the partition's
+    * Hive-style dir, and its size in bytes.
+    */
+  final case class DataFile(name: String, bytes: Long)
+
+  /** The record of one landed dir, made once when it lands: the schema
+    * of the frame it was written from, and each partition's data files.
+    */
+  final case class DirRecord(schema: StructType,
+      files: Map[String, Seq[DataFile]]) {
+    def partitions: Seq[String] = files.keys.toSeq.sorted(keyOrder)
+  }
+
+  /** A partitioned-tier snapshot: partition value → [[Entry]], the
+    * `(appId, batchId)` tag of the txn commit that wrote it, if any, and
+    * the [[DirRecord]] of every dir the entries name (a commit may carry
+    * more; [[encode]] keeps only the named ones).
     */
   final case class Manifest(parts: Map[String, Entry],
-      txn: Option[(String, Long)] = None)
+      txn: Option[(String, Long)] = None,
+      catalog: Map[String, DirRecord] = Map.empty) {
+
+    /** Partition `p`'s data files in `dirs`, each with its dir. */
+    def files(p: String, dirs: Seq[String]): Seq[(String, DataFile)] =
+      dirs.flatMap(d => catalog(d).files.getOrElse(p, Nil).map(d -> _))
+
+    /** Total bytes of partition `p`'s data files in `dirs`. */
+    def bytes(p: String, dirs: Seq[String]): Long =
+      files(p, dirs).map(_._2.bytes).sum
+  }
 
   /** Where an injected crash fires inside a partitioned commit: after its
     * data landed but before its manifest is published, or after the
@@ -2017,7 +2060,7 @@ object ManifestTable {
 
   private def versionOf(dir: String): Long = dir.stripPrefix("v").toLong
 
-  /** Serving-dir order for splices: `v2` before `v10`. */
+  /** Serving-dir order: `v2` before `v10`. */
   private val dirOrder: Ordering[String] = Ordering.by(d => (d.length, d))
 
   /** A partition value as its Hive-style dir name, escaped the way Spark
@@ -2051,15 +2094,27 @@ object ManifestTable {
   /** The manifest codec (layout in the object doc). A partition value is
     * stored as its [[partitionDir]] name — the raw bytes for plain
     * values, and never a tab, newline or `#` — and decoded on read, so
-    * callers and filters only ever see raw values or the NULL key.
+    * callers and filters only ever see raw values or the NULL key. Only
+    * the records of the dirs the entries name are written, and every
+    * named dir must have one.
     */
-  private def encode(m: Manifest): String =
+  private def encode(m: Manifest): String = {
+    val named = m.parts.values.flatMap(e => e.dirs ++ e.dels).toSeq.distinct
+      .sorted(dirOrder)
+    val unrecorded = named.filterNot(m.catalog.contains)
+    require(unrecorded.isEmpty, s"no record of ${unrecorded.mkString(", ")}")
     (m.txn.map { case (app, b) => s"#txn\t$app\t$b" } ++
       m.parts.toSeq.sortBy(_._1)(keyOrder).map { case (p, e) =>
         (Seq(partitionDir(p), e.dirs.mkString(",")) ++
           (if (e.dels.isEmpty) None else Some(e.dels.mkString("del:", ",", ""))) ++
           e.stats.map { case (n, s) => s"stats:$n,$s" }).mkString("\t")
+      } ++
+      named.flatMap { d =>
+        val r = m.catalog(d)
+        s"#dir\t$d\t${r.schema.json}" +: r.partitions.flatMap(p => r.files(p)
+          .map(f => s"#file\t$d\t${partitionDir(p)}\t${f.bytes}\t${f.name}"))
       }).mkString("", "\n", "\n")
+  }
 
   /** The manifest of `version`, decoded from [[encode]]'s layout. */
   def readManifest(spark: SparkSession, tableDir: String,
@@ -2068,6 +2123,11 @@ object ManifestTable {
       .split("\n").toSeq.filter(_.nonEmpty)
     def list(s: String): Seq[String] =
       if (s.isEmpty) Nil else s.split(",").toSeq
+    def records(tag: String): Seq[Array[String]] =
+      lines.filter(_.startsWith(s"#$tag\t")).map(_.split("\t", -1).drop(1))
+    val files = records("file").groupMap(_(0)) { f =>
+      partitionKey(f(1)) -> DataFile(f(3), f(2).toLong)
+    }
     Manifest(
       lines.filterNot(_.startsWith("#")).map { line =>
         val f = line.split("\t", -1)
@@ -2079,10 +2139,11 @@ object ManifestTable {
             (n.toLong, sum.toLong)
           })
       }.toMap,
-      lines.collectFirst { case l if l.startsWith("#txn\t") =>
-        val Array(_, app, b) = l.split("\t")
-        (app, b.toLong)
-      })
+      records("txn").headOption.map { case Array(app, b) => (app, b.toLong) },
+      records("dir").map { case Array(d, json) =>
+        d -> DirRecord(DataType.fromJson(json).asInstanceOf[StructType],
+          files.getOrElse(d, Nil).groupMap(_._1)(_._2))
+      }.toMap)
   }
 
   /** The commit log of a partitioned table: the versions with a manifest
@@ -2097,16 +2158,17 @@ object ManifestTable {
     readManifest(spark, tableDir, version).parts
       .map { case (p, e) => p -> e.dirs.map(versionOf) }
 
-  private def partsAt(spark: SparkSession, tableDir: String,
-      version: Long): Map[String, Entry] =
-    if (version == 0L) Map.empty
-    else readManifest(spark, tableDir, version).parts
+  /** The manifest of `version`, or the empty one before the first. */
+  private def manifestAt(spark: SparkSession, tableDir: String,
+      version: Long): Manifest =
+    if (version == 0L) Manifest(Map.empty)
+    else readManifest(spark, tableDir, version)
 
   /** Partition keys landed under `data/<dir>`: its `partCol=` dir
-    * names, decoded.
+    * names, decoded — a listing, for checks of what a commit wrote.
     */
-  def partitionValues(spark: SparkSession, tableDir: String, dir: String,
-      partCol: String): Seq[String] = {
+  private[operators] def partitionValues(spark: SparkSession,
+      tableDir: String, dir: String, partCol: String): Seq[String] = {
     val fs = fileSystem(spark, tableDir)
     val path = new Path(s"$tableDir/data/$dir")
     val prefix = s"${escapePathName(partCol)}="
@@ -2118,13 +2180,38 @@ object ManifestTable {
 
   /** Land `df` under `data/<dir>` partitioned by `partCol` — an
     * idempotent overwrite of a dir no published manifest names yet — and
-    * return the partition values it wrote.
+    * return its record.
     */
   private def land(df: DataFrame, tableDir: String, dir: String,
-      partCol: String): Seq[String] = {
+      partCol: String): DirRecord = {
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(s"$tableDir/data/$dir")
-    partitionValues(df.sparkSession, tableDir, dir, partCol)
+    recordDir(df.sparkSession, tableDir, dir, partCol, df.schema)
+  }
+
+  /** The record of the just-written `data/<dir>`, from its one recursive
+    * listing: every file one `partCol=` dir deep. Names starting with `_`
+    * or `.` (job markers, checksums, sidecars) are not data, as for
+    * Spark's own file index.
+    */
+  private def recordDir(spark: SparkSession, tableDir: String, dir: String,
+      partCol: String, schema: StructType): DirRecord = {
+    val fs = fileSystem(spark, tableDir)
+    val root = fs.makeQualified(new Path(s"$tableDir/data/$dir"))
+    val prefix = s"${escapePathName(partCol)}="
+    val listed = fs.listFiles(root, true)
+    val files = Seq.newBuilder[(String, DataFile)]
+    while (listed.hasNext) {
+      val f = listed.next()
+      val (part, name) = (f.getPath.getParent, f.getPath.getName)
+      if (part.getParent.toUri.getPath == root.toUri.getPath &&
+          part.getName.startsWith(prefix) && !name.startsWith("_") &&
+          !name.startsWith("."))
+        files += partitionKey(part.getName.stripPrefix(prefix)) ->
+          DataFile(name, f.getLen)
+    }
+    DirRecord(schema, files.result().groupMap(_._1)(_._2)
+      .map { case (p, fs) => p -> fs.sortBy(_.name) })
   }
 
   /** Per-partition `(rows, sum(statCol))` of `df`: one aggregate job,
@@ -2214,62 +2301,115 @@ object ManifestTable {
     sys.error(s"no commit slot won in $maxTries tries under contention: $tableDir")
   }
 
-  /** The one splice read: each serving dir is read once, pruned to the
-    * partitions that list it, and the reads are unioned — the splice
-    * count is |distinct dirs|, which compaction exists to bound. `tag`
-    * adds a column carrying each dir's version (`v<N>` dirs only).
+  /** A manifest's files as Spark's file index: each
+    * [[PartitionDirectory]] holds exactly the files the manifest records
+    * for its partition values, and [[listFiles]] prunes on partition
+    * filters the way `PartitioningAwareFileIndex.prunePartitions` does.
+    * Nothing is listed.
     */
-  private def splice(spark: SparkSession, tableDir: String, partCol: String,
-      parts: Seq[(String, Entry)], tag: Option[String]): DataFrame =
-    parts.flatMap { case (p, e) => e.dirs.map(_ -> p) }.groupBy(_._1).toSeq
-      .sortBy(_._1)(dirOrder)
-      .map { case (d, ps) =>
-        val df = spark.read.parquet(s"$tableDir/data/$d")
-          .filter(inPartitions(partCol, ps.map(_._2)))
-        tag.fold(df)(t => df.withColumn(t, lit(versionOf(d))))
-      }.reduce(_ unionByName _)
+  private final class ManifestFileIndex(root: Path,
+      override val partitionSchema: StructType,
+      partitions: Seq[PartitionDirectory]) extends FileIndex {
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val names = partitionSchema.fieldNames
+      val pruning = partitionFilters
+        .filter(_.references.forall(a => names.contains(a.name)))
+      if (pruning.isEmpty) partitions
+      else {
+        val keep = Predicate.createInterpreted(pruning.reduce(And).transform {
+          case a: AttributeReference =>
+            val i = names.indexOf(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        partitions.filter(d => keep.eval(d.values))
+      }
+    }
+    override def inputFiles: Array[String] =
+      partitions.flatMap(_.files.map(_.getPath.toString)).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = partitions.flatMap(_.files).map(_.getLen).sum
+  }
+
+  /** The files `dirsOf` picks from each partition of `m`, as ONE
+    * relation over a [[ManifestFileIndex]] built from `m` alone. The data
+    * schema is the dirs' recorded one, read as nullable the way Spark
+    * reads files (the dirs must agree on it); the partition column's
+    * type comes from the same record; and `tag` adds a second partition
+    * column holding each file's dir version (`v<N>` dirs only), which
+    * filters prune like the partition value.
+    */
+  private def scan(spark: SparkSession, tableDir: String, partCol: String,
+      m: Manifest, dirsOf: Entry => Seq[String],
+      tag: Option[String]): DataFrame = {
+    val dirs = m.parts.values.flatMap(dirsOf).toSeq.distinct.sorted(dirOrder)
+    val schemas = dirs.map(d =>
+      StructType(m.catalog(d).schema.fields.map(_.copy(nullable = true))))
+    require(schemas.forall(_.fields.toSet == schemas.head.fields.toSet),
+      s"dirs ${dirs.mkString(",")} under $tableDir disagree on their schema")
+    val (keyField, data) = schemas.head.fields.partition(_.name == partCol)
+    require(keyField.nonEmpty, s"no $partCol column in ${schemas.head}")
+    val partSchema = StructType(keyField ++ tag.map(StructField(_, LongType)))
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    def value(p: String): Any =
+      if (p == null) null else Cast(Literal(p), keyField.head.dataType, tz).eval()
+    val root = fileSystem(spark, tableDir)
+      .makeQualified(new Path(s"$tableDir/data"))
+    val partDir = escapePathName(partCol)
+    val partitions = m.parts.toSeq.sortBy(_._1)(keyOrder).flatMap { case (p, e) =>
+      val files = m.files(p, dirsOf(e)).map { case (d, f) =>
+        d -> FileStatusWithMetadata(new FileStatus(f.bytes, false, 0, 0, 0,
+          new Path(s"$root/$d/$partDir=${partitionDir(p)}/${f.name}")), Map.empty)
+      }
+      if (tag.isEmpty) Seq(PartitionDirectory(InternalRow(value(p)), files.map(_._2)))
+      else files.groupMap(_._1)(_._2).toSeq.sortBy(_._1)(dirOrder).map {
+        case (d, fs) => PartitionDirectory(InternalRow(value(p), versionOf(d)), fs)
+      }
+    }
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(root, partSchema, partitions), partSchema,
+      StructType(data), None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Resolve snapshot `version` of a partitioned table, whichever
     * commits built it; the manifest is read now, so the lazy frame is
-    * pinned to that snapshot. Partitions without position deletes are a
-    * plain [[splice]]. The rest are spliced with their row ids and
-    * anti-joined against their delete triples `(partCol, _src_version,
-    * _pos)`, so the join's probe side is ∝ touched partitions and its
+    * pinned to that snapshot. The rows are one [[scan]] of the data
+    * files. The partitions with position deletes are taken from it with
+    * their `_src_version` tags and anti-joined against their delete
+    * triples `(partCol, _src_version, _pos)`, one scan of the delete
+    * files, so the join's probe side is ∝ touched partitions and its
     * build side ∝ |deleted rows since the last compaction|. The build is
-    * broadcast only while its bytes fit `broadcastMaxBytes` (the
-    * [[ColocatedJoin]] discipline): past the gate Catalyst picks the
-    * strategy, with identical rows. `rowIds` keeps `_src_version` on
-    * every row — the form a DELETE-WHERE scans to turn its predicate
-    * into positions.
+    * broadcast only while the bytes the manifest records for it fit
+    * `broadcastMaxBytes` (the [[ColocatedJoin]] discipline): past the
+    * gate Catalyst picks the strategy, with identical rows. `rowIds`
+    * keeps `_src_version` on every row — the form a DELETE-WHERE scans
+    * to turn its predicate into positions.
     */
   def readPartitionedMoR(spark: SparkSession, tableDir: String,
       partCol: String, version: Long, rowIds: Boolean = false,
       broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    val tag = if (rowIds) Some("_src_version") else None
-    val (touched, clean) = readManifest(spark, tableDir, version).parts.toSeq
-      .partition(_._2.dels.nonEmpty)
-    val merged = if (touched.isEmpty) None else {
-      val delDirs = touched.flatMap(_._2.dels).distinct.sorted(dirOrder)
-      val fs = fileSystem(spark, tableDir)
-      val delBytes = delDirs.map(d => fs.getContentSummary(
-        new Path(s"$tableDir/data/$d")).getLength).sum
-      val dels = delDirs.map { d =>
-        spark.read.parquet(s"$tableDir/data/$d")
-          .select(col(partCol), col("_src_version"), col("_pos"))
-      }.reduce(_ unionByName _)
-      val spliced = splice(spark, tableDir, partCol, touched,
-        Some("_src_version"))
+    val m = readManifest(spark, tableDir, version)
+    require(m.parts.nonEmpty, s"empty manifest v$version under $tableDir")
+    val (touched, clean) = m.parts.keys.toSeq.partition(m.parts(_).dels.nonEmpty)
+    val rows = scan(spark, tableDir, partCol, m, _.dirs,
+      Option.when(rowIds || touched.nonEmpty)("_src_version"))
+    if (touched.isEmpty) rows
+    else {
+      val dels = scan(spark, tableDir, partCol, m, _.dels, None)
+        .select(col(partCol), col("_src_version"), col("_pos"))
+      val delBytes = touched.map(p => m.bytes(p, m.parts(p).dels)).sum
       val build = if (delBytes <= broadcastMaxBytes) broadcast(dels) else dels
+      val probe = rows.filter(inPartitions(partCol, touched))
       // `<=>` on the partition, so deletes in the NULL partition match
-      val kept = spliced.join(build,
-        spliced(partCol) <=> build(partCol) &&
-          spliced("_src_version") === build("_src_version") &&
-          spliced("_pos") === build("_pos"), "left_anti")
-      Some(if (rowIds) kept else kept.drop("_src_version"))
+      val kept = probe.join(build,
+        probe(partCol) <=> build(partCol) &&
+          probe("_src_version") === build("_src_version") &&
+          probe("_pos") === build("_pos"), "left_anti")
+      val all = if (clean.isEmpty) kept
+        else rows.filter(inPartitions(partCol, clean)).unionByName(kept)
+      if (rowIds) all else all.drop("_src_version")
     }
-    (Option.when(clean.nonEmpty)(splice(spark, tableDir, partCol, clean, tag))
-      ++ merged).reduceOption(_ unionByName _)
-      .getOrElse(sys.error(s"empty manifest v$version under $tableDir"))
   }
 
   /** [[readPartitionedMoR]] of the live snapshot. */
@@ -2315,9 +2455,20 @@ object ManifestTable {
     val prev = readManifest(resolved.sparkSession, tableDir, from).parts
     val rows = if (resolved.columns.contains("_pos")) withRowIds(resolved)
       else resolved
-    Manifest(land(rows, tableDir, dir, partCol).map(p =>
-      p -> Entry(Seq(dir), stats = prev.get(p).flatMap(_.stats))).toMap)
+    val rec = land(rows, tableDir, dir, partCol)
+    Manifest(rec.partitions.map(p =>
+      p -> Entry(Seq(dir), stats = prev.get(p).flatMap(_.stats))).toMap,
+      catalog = Map(dir -> rec))
   }
+
+  /** `prev` after a commit that lands `dir` (recorded as `rec`) as the one
+    * dir of every partition it wrote, and drops the other `replaced`
+    * partitions.
+    */
+  private def replace(prev: Manifest, replaced: Seq[String], dir: String,
+      rec: DirRecord): Manifest =
+    Manifest((prev.parts -- replaced) ++ rec.partitions.map(_ -> Entry(Seq(dir))),
+      catalog = prev.catalog + (dir -> rec))
 
   /** Compact the live snapshot into `version`: after it, reads open one
     * dir per partition and [[vacuumPartitionedMoR]] can reclaim the
@@ -2363,13 +2514,14 @@ object ManifestTable {
   def overwritePartitions(df: DataFrame, tableDir: String, version: Long,
       partCol: String, replaced: Seq[String]): Unit = {
     val spark = df.sparkSession
-    val prev = partsAt(spark, tableDir, live(spark, tableDir))
+    val prev = manifestAt(spark, tableDir, live(spark, tableDir))
     commitAt(spark, tableDir, version, None) {
       val dir = s"v$version"
-      val landed = land(df, tableDir, dir, partCol)
+      val rec = land(df, tableDir, dir, partCol)
+      val landed = rec.partitions
       require(landed.forall(replaced.contains),
         s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-      Manifest((prev -- replaced) ++ landed.map(_ -> Entry(Seq(dir))))
+      replace(prev, replaced, dir, rec)
     }
   }
 
@@ -2392,17 +2544,16 @@ object ManifestTable {
       crash: Option[CrashPoint] = None): Boolean = {
     val spark = df.sparkSession
     commitAt(spark, tableDir, version, crash) {
-      val prev = partsAt(spark, tableDir, version - 1)
+      val prev = manifestAt(spark, tableDir, version - 1)
       val touched = df.select(partCol).distinct().collect()
         .map(r => partitionKeyOf(r.get(0))).toSeq.distinct
         .sorted(keyOrder) // bounded by |partitions|
-      val merged = if (prev.isEmpty) df
+      val merged = if (prev.parts.isEmpty) df
         else readPartitionedMoR(spark, tableDir, partCol, version - 1)
           .filter(inPartitions(partCol, touched))
           .unionByName(df)
       val dir = s"v$version"
-      Manifest((prev -- touched) ++
-        land(merged, tableDir, dir, partCol).map(_ -> Entry(Seq(dir))))
+      replace(prev, touched, dir, land(merged, tableDir, dir, partCol))
     }
   }
 
@@ -2986,13 +3137,14 @@ object ManifestTable {
       deletes: Boolean): Boolean = {
     val spark = rows.sparkSession
     commitAt(spark, tableDir, version, crash) {
-      val prev = partsAt(spark, tableDir, version - 1)
+      val prev = manifestAt(spark, tableDir, version - 1)
       val delta = statCol.map(statsBy(rows, partCol, _))
       val dir = s"v$version"
       val data = if (!deletes) rows
         else rows.select(col(partCol), col("_src_version"), col("_pos"))
-      Manifest(extend(prev, land(data, tableDir, dir, partCol), dir,
-        deletes, delta))
+      val rec = land(data, tableDir, dir, partCol)
+      Manifest(extend(prev.parts, rec.partitions, dir, deletes, delta),
+        catalog = prev.catalog + (dir -> rec))
     }
   }
 
@@ -3006,12 +3158,17 @@ object ManifestTable {
   /** Stage a writer's replacement files under a WRITER-UNIQUE dir —
     * data lands exactly once however many times the metadata commit
     * retries (Iceberg writes data files first; only the metadata swap
-    * is optimistic). Overwrite mode keeps a re-stage idempotent.
+    * is optimistic). Overwrite mode keeps a re-stage idempotent. The
+    * frame's schema rides along as the `_schema` sidecar, for the
+    * commit's dir record.
     */
   def stagePartitions(df: DataFrame, tableDir: String, partCol: String,
-      writer: String): Unit =
+      writer: String): Unit = {
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(s"$tableDir/stage/$writer")
+    writePointer(df.sparkSession, s"$tableDir/stage/$writer/_schema",
+      df.schema.json)
+  }
 
   /** Partitions MODIFIED by the commits in `(baseVersion, headVersion]`:
     * entries a manifest serves from its own version's dir (freshly
@@ -3023,9 +3180,9 @@ object ManifestTable {
   def partitionsModifiedSince(spark: SparkSession, tableDir: String,
       baseVersion: Long, headVersion: Long): Set[String] =
     ((baseVersion + 1) to headVersion).iterator.flatMap { v =>
-      val cur = partsAt(spark, tableDir, v)
+      val cur = manifestAt(spark, tableDir, v).parts
       cur.collect { case (p, e) if e.dirs.contains(s"v$v") => p } ++
-        (partsAt(spark, tableDir, v - 1).keySet -- cur.keySet)
+        (manifestAt(spark, tableDir, v - 1).parts.keySet -- cur.keySet)
     }.toSet
 
   /** Commit a writer's staged partition overwrite OPTIMISTICALLY from
@@ -3057,14 +3214,17 @@ object ManifestTable {
       val target = head + 1
       if (claimCommit(spark, tableDir, target, writer)) {
         commitAt(spark, tableDir, target, None) {
-          val prev = partsAt(spark, tableDir, head)
+          val prev = manifestAt(spark, tableDir, head)
           val dir = s"v$target"
           ctx.rename(new Path(s"$tableDir/stage/$writer"),
             new Path(s"$tableDir/data/$dir"), Options.Rename.OVERWRITE)
-          val landed = partitionValues(spark, tableDir, dir, partCol)
+          val rec = recordDir(spark, tableDir, dir, partCol,
+            DataType.fromJson(readFully(ctx, new Path(s"$tableDir/data/$dir/_schema")))
+              .asInstanceOf[StructType])
+          val landed = rec.partitions
           require(landed.forall(replaced.contains),
             s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-          Manifest((prev -- replaced) ++ landed.map(_ -> Entry(Seq(dir))))
+          replace(prev, replaced, dir, rec)
         }
         return Some(PartitionCommit(target, losses))
       }
@@ -3228,8 +3388,8 @@ object ManifestTable {
 
   // ---------------------------------------------------------------- q329
 
-  /** Resolve a KEYED merge-on-read snapshot: splice the delta files
-    * ([[readPartitionedMoR]]'s union) with each row tagged by the
+  /** Resolve a KEYED merge-on-read snapshot: scan the delta files
+    * ([[readPartitionedMoR]]'s relation) with each row tagged by the
     * version that committed it, keep the LATEST row per key
     * (`max_by(row, commit_version)` — upsert-wins, the Hudi MoR /
     * Iceberg equality-delete read), then drop rows whose latest image
@@ -3245,9 +3405,8 @@ object ManifestTable {
     */
   def readPartitionedMoRKeyed(spark: SparkSession, tableDir: String,
       partCol: String, keyCol: String, version: Long): DataFrame = {
-    val tagged = splice(spark, tableDir, partCol,
-      readManifest(spark, tableDir, version).parts.toSeq,
-      Some("_commit_version"))
+    val tagged = scan(spark, tableDir, partCol,
+      readManifest(spark, tableDir, version), _.dirs, Some("_commit_version"))
     val cols = tagged.columns.filter(_ != "_commit_version")
     tagged
       .groupBy(col(keyCol).as("_k"))
@@ -3289,10 +3448,11 @@ object ManifestTable {
         (v, false)
       case None =>
         val dir = s"t_${appId}_b$batchId"
-        val landed = land(df, tableDir, dir, partCol)
+        val rec = land(df, tableDir, dir, partCol)
         (commitNext(spark, tableDir, crash, Int.MaxValue) { head =>
-          Manifest(extend(partsAt(spark, tableDir, head), landed, dir),
-            Some((appId, batchId)))
+          val prev = manifestAt(spark, tableDir, head)
+          Manifest(extend(prev.parts, rec.partitions, dir),
+            Some((appId, batchId)), prev.catalog + (dir -> rec))
         }, true)
     }
   }

@@ -1112,8 +1112,19 @@ class ManifestTableSpec extends SparkSpec {
           .select("event_id").collect().map(_.getLong(0)).toSet
         def live(v: Long): Boolean =
           ManifestTable.currentVersion(spark, tbl).contains(v)
+        // every file a published manifest records exists, at its size
+        def recordedFilesExist(): Unit =
+          ManifestTable.manifestVersions(spark, tbl).foreach { v =>
+            for ((d, r) <- ManifestTable.readManifest(spark, tbl, v).catalog;
+                 (p, files) <- r.files; f <- files) {
+              val file = new java.io.File(s"$tbl/data/$d/event_type=" +
+                s"${ManifestTable.partitionDir(p)}/${f.name}")
+              assert(file.isFile && file.length == f.bytes, s"$at: v$v records $file")
+            }
+          }
         assert(commit(tbl, 1, None), at)
         intercept[ManifestTable.InjectedCrash](commit(tbl, 2, Some(point)))
+        recordedFilesExist()
         // readers still resolve the last acknowledged commit
         assert(live(1L) && ids(1L) == served(1), at)
         // past the commit point the data is complete before the pointer
@@ -1122,6 +1133,7 @@ class ManifestTableSpec extends SparkSpec {
         // the replay completes the commit: a fresh commit when the crash
         // hit before the manifest, the pointer swap alone after it
         assert(commit(tbl, 2, None) == (point == BeforeManifest), at)
+        recordedFilesExist()
         assert(live(2L) && ids(2L) == served(2), at)
         assert(ManifestTable.readManifest(spark, tbl, 2L).parts == v2, at)
         // a second replay is a no-op, and a late one never moves the
