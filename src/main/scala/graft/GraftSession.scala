@@ -11,7 +11,11 @@ import org.apache.spark.sql.SparkSession
   * default.
   */
 object GraftSession {
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+  /** Local parallelism: `SPARK_GRAFT_CPUS` when set, else this machine's
+    * cores.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   def builder(appName: String, master: Option[String] = None): SparkSession.Builder = {
     val b = SparkSession

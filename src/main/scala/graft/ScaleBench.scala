@@ -358,9 +358,9 @@ object ScaleBench {
           ((System.nanoTime() - t0) / 1e9, -1, -1L, false)
       }
     }
-    // warm the 30× memoized intermediates before timing: the 10× loop
-    // above already warmed `base`, so timing a first-touch 30× run against
-    // a memo-warm 1× run would mix cache effects into the scale ratio
+    // warm the 30× corpus before timing: the 10× loop above already
+    // warmed `base`, so timing a first-touch 30× run against a warm 1× run
+    // would mix warm-up effects into the scale ratio
     ccStats(ccDir)
     val (cs1, cr1, cn1, cok1) = ccStats(base)
     val (csN, crN, cnN, cokN) = ccStats(ccDir)

@@ -208,11 +208,9 @@ object BankEtl {
     */
   final class Warehouse(bankSrc: () => Bank, asOf: Date, cache: Boolean) {
     private lazy val bank = bankSrc()
-    lazy val cleanAccounts: DataFrame = {
-      // feeds Dim_Account, the customer semi-join AND two fact joins
-      val c = BankEtl.cleanAccounts(bank.accounts, bank.customers)
-      if (cache) c.cache() else c
-    }
+    // feeds Dim_Account, the customer semi-join AND two fact joins
+    lazy val cleanAccounts: DataFrame =
+      cached(BankEtl.cleanAccounts(bank.accounts, bank.customers))
     lazy val cleanCustomers: DataFrame = BankEtl.cleanCustomers(bank.customers, cleanAccounts)
     lazy val cleanTransactions: DataFrame =
       BankEtl.cleanTransactions(bank.transactions, cleanAccounts)
@@ -224,20 +222,20 @@ object BankEtl {
     // boundary query) and measured SLOWER than pruned parquet recomputes
     // (3.1 s fill + 1.8 s per read vs 0.6 s per recompute at sf0.1); the
     // 7-column slice keeps the reuse without the width.
-    private lazy val classifiedSlim: DataFrame = memoized(classifiedTx.select(
+    private lazy val classifiedSlim: DataFrame = cached(classifiedTx.select(
       "TransactionID", "AccountID", "Amount", "TransactionTimestamp",
       "TransactionCountry", "Final_Name", "Category_Final"))
     // Dims and fact are cached too (when `cache`): surrogate-key assignment
     // is an RDD zipWithIndex round-trip that exits Tungsten — recomputing it
     // per dashboard query re-runs that job AND the 5-way fact join each time
     // (measured: q30/q31 were 3.4 s/4.5 s uncached, dominated by re-assembly).
-    private def memoized(df: => DataFrame): DataFrame = if (cache) df.cache() else df
-    lazy val dimDate: DataFrame = memoized(BankEtl.dimDate(classifiedSlim))
-    lazy val dimCustomer: DataFrame = memoized(BankEtl.dimCustomer(cleanCustomers, asOf))
-    lazy val dimAccount: DataFrame = memoized(BankEtl.dimAccount(cleanAccounts))
-    lazy val dimMerchant: DataFrame = memoized(BankEtl.dimMerchant(classifiedSlim))
-    lazy val dimLocation: DataFrame = memoized(BankEtl.dimLocation(classifiedSlim))
-    lazy val fact: DataFrame = memoized(
+    private def cached(df: => DataFrame): DataFrame = if (cache) df.cache() else df
+    lazy val dimDate: DataFrame = cached(BankEtl.dimDate(classifiedSlim))
+    lazy val dimCustomer: DataFrame = cached(BankEtl.dimCustomer(cleanCustomers, asOf))
+    lazy val dimAccount: DataFrame = cached(BankEtl.dimAccount(cleanAccounts))
+    lazy val dimMerchant: DataFrame = cached(BankEtl.dimMerchant(classifiedSlim))
+    lazy val dimLocation: DataFrame = cached(BankEtl.dimLocation(classifiedSlim))
+    lazy val fact: DataFrame = cached(
       factSpending(classifiedSlim, cleanAccounts, dimCustomer, dimAccount, dimMerchant, dimLocation))
 
     /** The star schema by warehouse table name — single source of truth

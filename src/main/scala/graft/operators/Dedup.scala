@@ -126,7 +126,7 @@ object Dedup {
       .select(col("doc_id"), col("band"),
         md5(array_join(transform(array_sort(col("hs")), s => s.getField("mh").cast("string")), ","))
           .as("bh"))
-      .cache() // both sides of the self-join read this — compute signatures once
+      .localCheckpoint() // both sides of the self-join read this — compute signatures once
     val a = bands.as("a")
     val b = bands.as("b")
     a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh")
@@ -343,10 +343,8 @@ object Dedup {
     val pairs = lshCandidates(docs, numHashes, rowsPerBand).select("doc_a", "doc_b")
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache() // re-read every round
-    val (labels, rounds) =
-      try propagateLabelsWithRounds(edges, maxIters)
-      finally edges.unpersist() // also on the non-convergence throw
+      .localCheckpoint() // re-read every round
+    val (labels, rounds) = propagateLabelsWithRounds(edges, maxIters)
     (labels.select(col("v").as("doc_id"), col("label").as("cluster_id"),
       (col("v") === col("label")).cast("int").as("is_survivor")), rounds)
   }
@@ -573,69 +571,11 @@ object Dedup {
        |         MAX(n_chars) AS best_n_chars
        |  FROM canon_in GROUP BY cluster_id)""".stripMargin
 
-  /** Word n-gram shingles, distinct per document. Memoized per (session,
-    * plan, n): the jaccard, minhash, and LSH queries all start from the
-    * same shingle set — materialize it once per session like a shared
-    * intermediate view.
-    *
-    * The memo is BOUNDED: cached DataFrames pin executor memory for the
-    * session; past [[MaxShingleMemo]] entries the whole map is unpersisted
-    * and dropped, so a long-lived session that shingles many distinct
-    * corpora cannot accumulate unbounded cache blocks. Keys come from
-    * [[corpusKey]] — see there for why a raw plan string is NOT a safe
-    * identity.
+  /** Word n-gram shingles, distinct per document. A plain frame: a
+    * caller that reads it more than once materializes its own derived
+    * frame (see [[cappedShingles]]), so nothing outlives the query.
     */
   def shingles(docs: DataFrame, n: Int): DataFrame =
-    memoized(docs.sparkSession, s"shingles:$n:${corpusKey(docs)}")(
-      shinglesUncached(docs, n))
-
-  /** Memo key that actually identifies the CORPUS. The unresolved logical
-    * plan of `spark.read.parquet(path)` prints as `UnresolvedDataSource
-    * format: parquet, …, paths: 1 provided` — no path at all — so a raw
-    * plan-string key silently collides across DIFFERENT corpora of the
-    * same shape, and the cached shingles of corpus A get served for
-    * corpus B (wrong answers in any session that touches two corpora,
-    * e.g. a warm-up pass at one scale factor followed by real work at
-    * another). Key on the CANONICALIZED analyzed plan (expression ids
-    * normalized, so re-reading the same corpus still hits) plus the
-    * resolved scan identities the plan string omits: file-source root
-    * paths, v2 table names, and local relations' data hash.
-    */
-  private def corpusKey(df: DataFrame): String = {
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-    val plan = df.queryExecution.analyzed
-    val srcs = plan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.mkString(",")
-        case r => String.valueOf(r)
-      }
-      case v2: DataSourceV2Relation => v2.table.name()
-      case l: LocalRelation => s"local:${l.data.hashCode}"
-    }
-    s"${plan.canonicalized.toString}|${srcs.mkString(";")}"
-  }
-
-  private val MaxShingleMemo = 16
-  private val shingleMemo = new java.util.HashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  /** Bounded memo of cached intermediates. The evict-then-insert sequence
-    * is one critical section (a coarse lock — the memo is tiny and builds
-    * are plan construction, not jobs), so a concurrent clear can never
-    * orphan a freshly cached plan's executor blocks.
-    */
-  private def memoized(session: org.apache.spark.sql.SparkSession, key: String)(
-      build: => DataFrame): DataFrame = shingleMemo.synchronized {
-    if (shingleMemo.size > MaxShingleMemo) {
-      shingleMemo.values.forEach(df => { df.unpersist(); () })
-      shingleMemo.clear()
-    }
-    shingleMemo.computeIfAbsent((session, key), _ => build.cache())
-  }
-
-  private def shinglesUncached(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"),
@@ -669,20 +609,20 @@ object Dedup {
   /** Shingle sets with the hot-shingle df cap applied — shared by the
     * Jaccard and SimHash paths (both need boilerplate shingles gone: for
     * Jaccard they blow up the inverted-index join, for SimHash they
-    * correlate unrelated documents' signatures). Cached via the bounded
-    * memo: probe + build + counts sides all read one copy.
+    * correlate unrelated documents' signatures). Materialized with
+    * `localCheckpoint`: probe, build and counts sides all read one copy,
+    * released with the result.
     */
   def cappedShingles(docs: DataFrame, n: Int): DataFrame = {
     val cap = docs.agg(count(lit(1)).as("n_docs"))
       .select(greatest(lit(64L), floor(col("n_docs").cast("double") / 20).cast("long"))
         .as("df_cap"))
     val sh = shingles(docs, n)
-    memoized(docs.sparkSession, s"jaccardKept:$n:${corpusKey(docs)}") {
-      sh.join(sh.groupBy("sh").agg(count(lit(1)).as("df")), Seq("sh"))
-        .crossJoin(broadcast(cap))
-        .filter(col("df") <= col("df_cap"))
-        .select("doc_id", "sh")
-    }
+    sh.join(sh.groupBy("sh").agg(count(lit(1)).as("df")), Seq("sh"))
+      .crossJoin(broadcast(cap))
+      .filter(col("df") <= col("df_cap"))
+      .select("doc_id", "sh")
+      .localCheckpoint()
   }
 
   /** The df_cap/sh_freq/kept CTE chain given `shingles` is in scope. */
@@ -1045,7 +985,7 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
     // integer threshold t = num/den for the exact comparison
     val (tNum, tDen) = prefixThresholdFraction(threshold)
-    val posts = docShingles(docs, shingleN).cache() // df, prefix, and sets
+    val posts = docShingles(docs, shingleN).localCheckpoint() // df, prefix, and sets
     val cand = prefixCandidatesFromPosts(posts, tNum, tDen, positional = true)
     val sets = posts.groupBy("doc_id")
       .agg(collect_set(col("sid")).as("sids"), count(lit(1)).as("n"))
@@ -1114,7 +1054,7 @@ object Dedup {
       threshold: Double = 0.6, shingleN: Int = 3,
       positional: Boolean = true): DataFrame = {
     val (tNum, tDen) = prefixThresholdFraction(threshold)
-    prefixCandidatesFromPosts(docShingles(docs, shingleN).cache(),
+    prefixCandidatesFromPosts(docShingles(docs, shingleN).localCheckpoint(),
       tNum, tDen, positional)
   }
 
@@ -1211,7 +1151,7 @@ object Dedup {
       benchmarkSource: String = "src0", shingleN: Int = 3): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1]: $threshold")
     val (tNum, tDen) = prefixThresholdFraction(threshold)
-    val posts = docShingles(docs, shingleN).cache()
+    val posts = docShingles(docs, shingleN).localCheckpoint()
     val benchIds = docs.filter(col("source") === benchmarkSource).select("doc_id")
     val corpusIds = docs.filter(col("source") =!= benchmarkSource).select("doc_id")
     val df = posts.groupBy("sid").agg(count(lit(1)).as("df"))

@@ -20,7 +20,7 @@ import graft.functions.OracleSafe.{intDiv, intDivSql}
   * boundary from an exactly-representable BIGINT (< 2⁵³).
   *
   * Scale shape: `iters` shuffle rounds over the degree-annotated edge list
-  * (cached once), each a co-partitioned join + map-side-combinable sum —
+  * (materialized once), each a co-partitioned join + map-side-combinable sum —
   * the same O(iters · |E|) profile as label propagation, with nothing
   * data-sized on the driver or broadcast. The vertex-count normalizer
   * rides a broadcast 1-row aggregate, so damping constants are derived
@@ -55,13 +55,14 @@ object Graph {
       (col("r").cast("double") / lit(Scale.toDouble)).as("score"))
   }
 
-  /** The shared PageRank prelude: cached symmetric edge list (banding runs
-    * ONCE — `deg`, `nV`, and `pr0` all derive from the cached edges, so
-    * each costs one cheap re-aggregation instead of re-running the LSH
-    * banding join), cached degree frame, and the one-round transition.
+  /** The shared PageRank prelude: the initial ranks and the one-round
+    * transition. The symmetric edge list, its degree frame and the
+    * degree-annotated edges are each `localCheckpoint`ed: the LSH banding
+    * join runs once, `deg`, `nV` and `pr0` are cheap re-aggregations of
+    * the materialized edges, and every round re-reads the annotated edges.
+    * The blocks are released with the query's result.
     */
-  private case class PrState(edges: DataFrame, deg: DataFrame,
-      pr0: DataFrame, step: DataFrame => DataFrame)
+  private case class PrState(pr0: DataFrame, step: DataFrame => DataFrame)
 
   private def prSetup(docs: DataFrame, iters: Int,
       numHashes: Int, rowsPerBand: Int): PrState = {
@@ -70,10 +71,10 @@ object Graph {
       .select("doc_a", "doc_b")
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .cache()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).cache()
+      .localCheckpoint()
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
     // (src, dst, deg) — re-read every round
-    val edgesW = edges.join(deg, Seq("src")).cache()
+    val edgesW = edges.join(deg, Seq("src")).localCheckpoint()
     val nV = deg.agg(count(lit(1)).as("n_v"))
     val init = intDiv(lit(Scale), col("n_v"))
     val base = intDiv(lit(15L) * init, lit(100L))
@@ -86,7 +87,7 @@ object Graph {
         .crossJoin(broadcast(nV))
         .select(col("v"),
           (base + intDiv(lit(85L) * col("contrib"), lit(100L))).as("r"))
-    PrState(edges, deg, pr0, step)
+    PrState(pr0, step)
   }
 
   /** Convergence audit for [[pagerank]]: the exact integer L1 residual
@@ -170,14 +171,14 @@ object Graph {
   private[graft] def triangleStatsFromEdges(edges: DataFrame,
       maxDegree: Int): DataFrame = {
     require(maxDegree >= 2, s"maxDegree must be >= 2, got $maxDegree")
-    val e0 = edges.cache()
+    val e0 = edges.localCheckpoint()
     val deg = e0.select(col("a").as("v")).union(e0.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("degree")).cache()
+      .groupBy("v").agg(count(lit(1)).as("degree")).localCheckpoint()
     val hubs = deg.filter(col("degree") > maxDegree).select("v")
     val e = e0
       .join(hubs.select(col("v").as("a")), Seq("a"), "left_anti")
       .join(hubs.select(col("v").as("b")), Seq("b"), "left_anti")
-      .select("a", "b").cache()
+      .select("a", "b").localCheckpoint()
     val wedges = e.as("e1")
       .join(e.select(col("a").as("wb"), col("b").as("wc")).as("e2"),
         col("e1.b") === col("e2.wb"))

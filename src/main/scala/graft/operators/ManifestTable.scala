@@ -2445,17 +2445,19 @@ object ManifestTable {
   }
 
   /** Fold `resolved` — snapshot `from`'s rows, however resolved — into
-    * ONE dir per partition under `data/<dir>`: every serving list
-    * collapses to it, row ids are re-assigned (they need only be unique
-    * within a dir), and stats carry over, since compaction changes
-    * layout, never rows (the q88/q287/q309 invariant).
+    * ONE dir per partition under `data/<dir>`, holding one file per
+    * partition (the rows are hash-partitioned on `partCol` first, so the
+    * file count follows the partitions, not the read's split packing):
+    * every serving list collapses to it, row ids are re-assigned (they
+    * need only be unique within a dir), and stats carry over, since
+    * compaction changes layout, never rows (the q88/q287/q309 invariant).
     */
   private def fold(resolved: DataFrame, tableDir: String, from: Long,
       dir: String, partCol: String): Manifest = {
     val prev = readManifest(resolved.sparkSession, tableDir, from).parts
     val rows = if (resolved.columns.contains("_pos")) withRowIds(resolved)
       else resolved
-    val rec = land(rows, tableDir, dir, partCol)
+    val rec = land(rows.repartition(col(partCol)), tableDir, dir, partCol)
     Manifest(rec.partitions.map(p =>
       p -> Entry(Seq(dir), stats = prev.get(p).flatMap(_.stats))).toMap,
       catalog = Map(dir -> rec))

@@ -158,7 +158,7 @@ object Planning {
     val ha = a.select(h48(col(key)).as("h")).distinct()
     val hb = b.select(h48(col(key)).as("h")).distinct()
     // k-row sketches are read twice each (merge + flag joins). Materialize
-    // via localCheckpoint, NOT .cache(): catalog-pinned cache entries are
+    // via localCheckpoint, NOT the session cache: catalog-pinned entries are
     // never GC-cleaned, so a long-lived session running many planning
     // pre-passes would accumulate sketch frames; checkpoint blocks are
     // released by the ContextCleaner once the result frame is dropped.
@@ -562,7 +562,7 @@ object Planning {
   def bloomSemiAudit(build: DataFrame, probe: DataFrame, key: String,
       bitsPerKey: Int = 8, kHash: Int = 3): DataFrame = {
     require(bitsPerKey >= 1 && kHash >= 1, s"bad bloom params: $bitsPerKey/$kHash")
-    // localCheckpoint, not .cache(): see kmvJoinOverlap — keysA is read
+    // localCheckpoint, not the session cache: see kmvJoinOverlap — keysA is read
     // three times (bit set, key audit, row audit) but must not pin a
     // session-lifetime cache entry per planning call
     val keysA = build.select(h48(col(key)).as("hk")).distinct().localCheckpoint()

@@ -221,7 +221,7 @@ object Similarity {
     * bucket value, so the shuffle is balanced by construction.
     */
   def lshTopK(embeddings: DataFrame, k: Int = 5, queryMod: Int = 10): DataFrame = {
-    val qv = quantized(embeddings).join(lshBuckets(embeddings), Seq("vec_id")).cache()
+    val qv = quantized(embeddings).join(lshBuckets(embeddings), Seq("vec_id")).localCheckpoint()
     val queries = probed(
       qv.filter(col("vec_id") % queryMod === 0)
         .select(col("vec_id").as("qid"), col("q").as("qa"), col("n2").as("n2a"), col("bucket")),
@@ -274,8 +274,8 @@ object Similarity {
   def negativeSamples(embeddings: DataFrame, k: Int = 3, probes: Int = 4,
       queryMod: Int = 10): DataFrame = {
     // both the query side and the candidate side read the bucket index;
-    // cache it so the planes-wide projection runs once, not twice
-    val withB = lshBuckets(embeddings).cache()
+    // materialize it so the planes-wide projection runs once, not twice
+    val withB = lshBuckets(embeddings).localCheckpoint()
     val queries = withB.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("qid"), col("bucket").as("qbucket"))
       .crossJoin(broadcast(params(embeddings).select("planes")))
@@ -340,7 +340,7 @@ object Similarity {
       .select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
 
   def ivfAssign(embeddings: DataFrame): DataFrame = {
-    val qv = quantized(embeddings).cache()
+    val qv = quantized(embeddings).localCheckpoint()
     val cents = seedCentroids(embeddings, qv)
     val scores = qv.join(broadcast(cents))
       .select(col("vec_id"), col("cid"),
@@ -370,7 +370,7 @@ object Similarity {
   def ivfTopK(embeddings: DataFrame, k: Int = 5, queryMod: Int = 10): DataFrame = {
     val qv = quantized(embeddings)
       .join(ivfAssign(embeddings).select("vec_id", "cell"), Seq("vec_id"))
-      .cache()
+      .localCheckpoint()
     val queries = qv.filter(col("vec_id") % queryMod === 0)
       .select(col("vec_id").as("qid"), col("q").as("qa"), col("n2").as("n2a"), col("cell"))
     val scored = qv.select(col("vec_id").as("nid"), col("q").as("qb"), col("n2").as("n2b"), col("cell"))
@@ -582,7 +582,7 @@ object Similarity {
     * once; exact cosine within the candidate set).
     */
   def embeddingNearDups(embeddings: DataFrame, threshold: Double = 0.95): DataFrame = {
-    val qv = quantized(embeddings).join(lshBuckets(embeddings), Seq("vec_id")).cache()
+    val qv = quantized(embeddings).join(lshBuckets(embeddings), Seq("vec_id")).localCheckpoint()
     val probes = probed(qv, probesOf(embeddings))
     probes.as("a").join(qv.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
@@ -629,7 +629,7 @@ object Similarity {
   def semanticDedup(embeddings: DataFrame, threshold: Double = 0.92): DataFrame = {
     val sd = quantized(embeddings)
       .join(ivfAssign(embeddings).select("vec_id", "cell"), Seq("vec_id"))
-      .cache()
+      .localCheckpoint()
     val dominated = sd.as("a").join(sd.as("b"),
         col("a.cell") === col("b.cell") && col("a.vec_id") < col("b.vec_id"))
       .filter(cosine(dot(col("a.q"), col("b.q")), col("a.n2"), col("b.n2")) >= threshold)
@@ -682,7 +682,7 @@ object Similarity {
       .select(col("vec_id"), transform(col("q"), x => x + off).as("q"))
       .withColumn("n2",
         aggregate(transform(col("q"), x => x * x), lit(0L), (a, x) => a + x))
-      .cache() // five readers: seeds + two assignment and two mean passes
+      .localCheckpoint() // five readers: seeds + two assignment and two mean passes
     val seeds = seedCentroids(embeddings, pts)
 
     def assign(cents: DataFrame): DataFrame = {
@@ -803,10 +803,9 @@ object Similarity {
     * computed ONCE at the deepest probe level — each shallower level is
     * a `cellrank <= p` filter, so a curve costs one candidate pass plus
     * one bounded-heap top-k per depth, never |probes| index probes.
-    * localCheckpoint, not .cache(), for the frames re-read per probe
-    * depth: cache entries are catalog-pinned for the session's
-    * lifetime, checkpoint blocks are GC-released with the result (see
-    * Planning).
+    * The frames re-read per probe depth are `localCheckpoint`ed, as
+    * everywhere in the operators: the blocks are released with the
+    * result, never pinned in the session's cache (see Planning).
     */
   private def probeCandidates(embeddings: DataFrame, queryMod: Int,
       maxP: Int): DataFrame = {
@@ -936,7 +935,7 @@ object Similarity {
   def matryoshkaRankAudit(embeddings: DataFrame, k: Int = 20, queryMod: Int = 50,
       dims: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qv = quantized(embeddings).cache()
+    val qv = quantized(embeddings).localCheckpoint()
     val exact = bruteForceTopK(embeddings, k, queryMod)
       .select(col("qid"), col("nid"), col("rank").as("rank_full"))
     val qa = qv.select(col("vec_id").as("qid"), slice(col("q"), 1, dims).as("ta"))
@@ -1297,11 +1296,11 @@ object Similarity {
     * broadcast (the new center) into a running min-distance frame plus a
     * global max aggregate — O(k·n) total work, no driver-side loop over
     * data, no collect. At 100 TB the k rounds are k linear passes over a
-    * cached quantized frame; k is small (≤ 16) by construction.
+    * materialized quantized frame; k is small (≤ 16) by construction.
     */
   def kcenterCoreset(embeddings: DataFrame, k: Int = 6): DataFrame = {
     require(k >= 1 && k <= 16, s"k must be in [1,16], got $k")
-    val qv = quantized(embeddings).cache()
+    val qv = quantized(embeddings).localCheckpoint()
     def asCenter(row: DataFrame): DataFrame =
       row.select(col("vec_id").as("cid"), col("q").as("cq"), col("n2").as("cn2"))
     def dist = col("n2") + col("cn2") - dot(col("q"), col("cq")) * 2L

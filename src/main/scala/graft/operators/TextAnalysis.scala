@@ -798,7 +798,7 @@ object TextAnalysis {
     val counts = docs.select(explode(tokens(col("text"))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .localCheckpoint()
     def bucket(tok: Column, i: Column): Column =
       conv(substring(md5(concat(tok, lit(":"), i.cast("string"))), 1, 12), 16, 10)
         .cast("long") % width
