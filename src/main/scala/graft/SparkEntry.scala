@@ -35,14 +35,14 @@ object SparkEntry {
     all
   }
 
-  /** Every query bootstraps the session first ([[graft.plans.GraftRuntime]])
-    * so the custom operators plan on a caller-provided session that was
-    * built without GraftExtensions.
+  /** Every query first sets `nanosAsLong` on the session it is given:
+    * events.parquet may carry TIMESTAMP(NANOS), and without that setting
+    * the scan fails on a caller-provided session that did not preset it.
     */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { q =>
       q.name -> { (s: SparkSession, dir: String) =>
-        graft.plans.GraftRuntime.ensure(s)
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         q.build(s, dir)
       }
     }.toMap

@@ -1239,9 +1239,9 @@ object Dedup {
     * rounded on identical inputs — so the estimate, the exact count, and
     * the relative error are all hash-checked, not just a boolean.
     *
-    * Scale shape: the per-source bottom-k rides the bounded-heap
-    * [[graft.plans.TopK.perKey]] custom operator (map-side partial heaps,
-    * no global sort); sketch size is k·8 bytes per source regardless of
+    * Scale shape: the per-source bottom-k rides [[graft.plans.TopK.perKey]]'s
+    * bounded window (a map-side partial group limit, no global sort);
+    * sketch size is k·8 bytes per source regardless of
     * corpus size, and sketches of shards/sources MERGE by taking the
     * bottom-k of the union — the property that makes KMV the right
     * distinct-counter for a 100 TB corpus profile.

@@ -1110,7 +1110,7 @@ object Events {
   private def perClassFromConf(conf: DataFrame): DataFrame = {
     val spark = conf.sparkSession
     import spark.implicits._
-    val classes = broadcast(evalClasses.toDF("cls"))
+    val classes = evalClasses.toDF("cls")
     val tp = conf.filter(col("label") === col("pred"))
       .select(col("label").as("cls"), col("m").as("tp"))
     val predTot = conf.groupBy(col("pred").as("cls"))
@@ -1287,7 +1287,7 @@ object Events {
       .localCheckpoint()
     val glob = broadcast(perType.agg(sum("tn").as("n_all"),
       sum("sc2").as("sum_c2"), max("mx").as("max_c")))
-    val classes = broadcast(evalClasses.toDF("cls"))
+    val classes = evalClasses.toDF("cls")
     classes
       .join(perType.withColumnRenamed("event_type", "cls"), Seq("cls"),
         "left")

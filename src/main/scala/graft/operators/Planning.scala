@@ -81,9 +81,7 @@ object Planning {
     conv(substring(md5(c.cast("string")), 1, 12), 16, 10).cast("long")
 
   private def bottomK(keys: DataFrame, k: Int): DataFrame =
-    graft.plans.TopK.perKey(keys.withColumn("g", lit(1)), Seq("g"),
-      Seq(graft.plans.TopK.asc("h")), k = k, rankName = "rk")
-      .select("h")
+    keys.orderBy("h").limit(k).select("h")
 
   /** One-row KMV cardinality estimate of `key`'s distinct values as a
     * double column `name` — the shared estimator behind the sketch
@@ -3332,8 +3330,7 @@ object Planning {
     * Scale: this is the single-pass form — one scan, constant 512 B of
     * state per group whatever the fan-in, merge in any order (register
     * max is associative/commutative). The custom-expression ladder's
-    * aggregate rung, beside LongArrayDot (scalar) and TopKPerKey
-    * (operator).
+    * aggregate rung, beside LongArrayDot (scalar).
     */
   def hllNativeDistinct(events: DataFrame): DataFrame = {
     import graft.plans.HllRegistersAgg.hll_registers

@@ -40,9 +40,9 @@ object Sampling {
     * percentage coin only hits its rate in expectation. This is the
     * "exactly 10k eval docs per source" contract an eval-set build needs;
     * selection by hash coin (not by any data attribute) keeps it an
-    * unbiased uniform draw. Runs on the bounded-heap
-    * [[graft.plans.TopK.perKey]] operator — per-partition quota-sized
-    * heaps, one source-keyed shuffle, never a per-group full sort.
+    * unbiased uniform draw. Runs on [[graft.plans.TopK.perKey]]'s bounded
+    * window — a partial group limit keeps at most `quota` rows per source
+    * and map task before the one source-keyed shuffle.
     */
   def quotaSample(docs: DataFrame, quota: Int): DataFrame = {
     require(quota >= 1, s"quota must be >= 1, got $quota")
@@ -82,9 +82,9 @@ object Sampling {
     * ONE division of agreed integers.
     *
     * Scale shape: counts are a map-side-combinable aggregate; the plan is
-    * a |strata|-row broadcast; picking is the bounded-heap top-k per
-    * stratum (budget-sized heaps); no row-level shuffle beyond the one
-    * stratum-keyed exchange the top-k needs.
+    * a |strata|-row broadcast; picking is the bounded per-key top-k
+    * window (budget rows per stratum and map task); no row-level shuffle
+    * beyond the one stratum-keyed exchange the top-k needs.
     */
   def temperatureMix(docs: DataFrame, budget: Long = 200L,
       stratum: String = "lang"): DataFrame = {
@@ -381,9 +381,9 @@ object Sampling {
     * function of row identity — identical across runs, retries, and
     * cluster layouts, which is what a reproducible training-mix needs.
     *
-    * Selection runs on the bounded-heap [[graft.plans.TopK]] operator —
-    * one shuffle on the stratum, no global sort, no per-group
-    * row_number window. Weight = o_totalprice quantized to an exact
+    * Selection runs on [[graft.plans.TopK.perKey]]'s bounded window —
+    * one shuffle on the stratum, k rows per stratum and map task crossing
+    * it, no global sort. Weight = o_totalprice quantized to an exact
     * integer cent grid (clamped ≥ 1 so zero/negative weights can't
     * divide by zero or invert the ordering).
     */
@@ -401,7 +401,7 @@ object Sampling {
   }
 
   /** DuckDB twin of [[weightedSample]] — same coin, same integer
-    * priority, ROW_NUMBER in place of the bounded heap.
+    * priority, the same ROW_NUMBER ranking.
     */
   def weightedSampleSql(k: Int = 5): String = {
     val u = s"('0x' || substring(md5(CAST(o_orderkey AS VARCHAR)), 1, 12))::BIGINT"
@@ -579,13 +579,12 @@ object Sampling {
     * per-key TOP-K: the selection depends on the in-source ranking, not
     * on each row alone.
     *
-    * Scale shape: the ranking runs on the custom
-    * [[graft.plans.TopKPerKey]] physical operator — one hash exchange on
-    * `source`, then a bounded k-element heap per key, never a full
-    * per-source sort (a hot domain with 10⁹ pages costs O(n log k), not
-    * O(n log n)). Both report aggregates are map-side combinable on the
-    * same `source` key; the kept-side aggregate is sources × 1 rows, so
-    * the final join broadcasts.
+    * Scale shape: the ranking is [[graft.plans.TopK.perKey]]'s bounded
+    * window — a partial group limit keeps k rows per source and map task,
+    * so a hot domain with 10⁹ pages ships only k of them through the one
+    * hash exchange on `source`. Both report aggregates are map-side
+    * combinable on the same `source` key; the kept-side aggregate is
+    * sources × 1 rows, so the final join broadcasts.
     */
   def sourceCap(docs: DataFrame, k: Int = 10): DataFrame = {
     require(k >= 1, s"cap must be >= 1, got $k")

@@ -111,9 +111,8 @@ object Similarity {
     dotCol.cast("double") / (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double")))
 
   /** Exact top-k cosine neighbours for every vec with `vec_id % queryMod == 0`.
-    * Top-k selection runs on the custom [[graft.plans.TopKPerKey]] operator
-    * (bounded heap per key) instead of a row_number window (full sort per
-    * key group).
+    * Top-k selection is [[graft.plans.TopK.perKey]]'s bounded window: a
+    * partial group limit keeps k rows per query before the shuffle.
     */
   def bruteForceTopK(embeddings: DataFrame, k: Int = 5, queryMod: Int = 10): DataFrame = {
     val qv = quantized(embeddings)
@@ -325,8 +324,8 @@ object Similarity {
     * 1/cent_mod(n) sample of the corpus (a real build would k-means them —
     * the sampling stands in so assignment stays engine-exact), every vector
     * joins its nearest centroid's inverted list, and search probes only the
-    * query's cell. Assignment reuses the custom [[graft.plans.TopKPerKey]]
-    * operator with k=1 (argmax-by-key). `cent_mod` is derived in-plan so the
+    * query's cell. Assignment reuses [[graft.plans.TopK.perKey]] with k=1
+    * (argmax-by-key). `cent_mod` is derived in-plan so the
     * centroid count tracks √n — see the sizing rules above.
     */
   /** The IVF seeding rule — ONE definition shared by [[ivfAssign]] and the
@@ -802,7 +801,7 @@ object Similarity {
     * [[multiProbeEvalFromGroundTruth]]: (qid, nid, cellrank, score)
     * computed ONCE at the deepest probe level — each shallower level is
     * a `cellrank <= p` filter, so a curve costs one candidate pass plus
-    * one bounded-heap top-k per depth, never |probes| index probes.
+    * one bounded per-key top-k per depth, never |probes| index probes.
     * The frames re-read per probe depth are `localCheckpoint`ed, as
     * everywhere in the operators: the blocks are released with the
     * result, never pinned in the session's cache (see Planning).
@@ -845,7 +844,7 @@ object Similarity {
     * √n-capped frame); the candidate score frame is computed ONCE at the
     * deepest probe level and each shallower level is a filter on
     * `cellrank` — so the curve costs one candidate pass plus `|probes|`
-    * bounded-heap top-k's, not `|probes|` index probes. Since every data
+    * bounded per-key top-k's, not `|probes|` index probes. Since every data
     * vector lives in exactly one cell, (query, candidate) pairs are unique
     * by construction — no dedup stage.
     */
@@ -1770,7 +1769,7 @@ object Similarity {
     * also one division. No aggregate ever sums doubles.
     *
     * Scale: the candidate frame is computed once at the deepest probe
-    * (the q155 shape) and each config is a filter + bounded-heap top-k;
+    * (the q155 shape) and each config is a filter + bounded per-key top-k;
     * the eval joins |probes|·|queries|·k rows against the loaded
     * artifact — independent of corpus size.
     */

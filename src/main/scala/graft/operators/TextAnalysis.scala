@@ -198,8 +198,8 @@ object TextAnalysis {
     * is the floor-log₂ `length(bin((2N+2)/(2df+1))) − 1` (ln is not
     * bit-identical across engines; see [[bm25]]), so score = tf·idf has
     * zero float risk. Two corpus-wide aggregates (token df, doc count)
-    * then a per-doc bounded top-k on the custom TopKPerKey operator —
-    * one shuffle on doc_id, O(tokens·log k) per partition.
+    * then a per-doc top-k on [[graft.plans.TopK.perKey]]'s bounded window —
+    * one shuffle on doc_id, at most k rows per doc and map task crossing it.
     */
   def tfidfTopTerms(docs: DataFrame, k: Int = 3): DataFrame = {
     val tokenized = docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -444,8 +444,8 @@ object TextAnalysis {
     * one mega-document; score = tf · n_sources / df, the log-free IDF
     * ranking — same order as tf·log-idf for fixed tf ordering within a
     * df, and one exact-integer-ratio double instead of a libm log). Top-k
-    * per source through the custom [[graft.plans.TopKPerKey]] physical
-    * operator — a bounded heap per group, never a full per-source sort.
+    * per source through [[graft.plans.TopK.perKey]]'s bounded window — a
+    * partial group limit before the source-keyed shuffle.
     *
     * Scale shape: token fan-out is linear; both aggregates key on terms
     * (bounded vocabulary); the source-count normalizer is a broadcast
@@ -807,8 +807,7 @@ object TextAnalysis {
         col("token"))
       .groupBy(col("i"), bucket(col("token"), col("i")).as("b"))
       .agg(sum("cnt").as("cell"))
-    val top = graft.plans.TopK.perKey(counts.withColumn("g", lit(1)), Seq("g"),
-        Seq(graft.plans.TopK.desc("cnt"), graft.plans.TopK.asc("token")), k = topK)
+    val top = counts.orderBy(col("cnt").desc, col("token")).limit(topK)
       .select(col("token"), col("cnt").as("exact_cnt"))
     top
       .select(col("token"), col("exact_cnt"),

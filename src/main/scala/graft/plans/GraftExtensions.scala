@@ -8,14 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * mechanism (`.withExtensions(new GraftExtensions)` in [[graft.GraftSession]],
   * or `spark.sql.extensions=graft.plans.GraftExtensions` on any cluster).
   *
-  * Registers the custom Catalyst expressions so SQL users get them too:
-  * `SELECT long_dot(a, b) FROM vectors` — same codegen'd kernel as the
+  * Registers the custom Catalyst expression `long_dot` so SQL users get it
+  * too: `SELECT long_dot(a, b) FROM vectors` — same codegen'd kernel as the
   * Column API.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
-    e.injectOptimizerRule(_ => TopKRewriteRule)
     e.injectFunction((
       new FunctionIdentifier("long_dot"),
       new ExpressionInfo(classOf[LongArrayDot].getName, "long_dot"),

@@ -1,112 +1,19 @@
 package graft.plans
 
-import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
-import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.IntegerType
-
-/** Per-key top-k as a first-class operator: logical node → strategy →
-  * physical plan (the (c)-path of SURVEY.md's custom-operator ladder).
+/** Per-key top-k as Spark's own bounded window.
   *
-  * The composable formulation —
-  * `row_number().over(Window.partitionBy(key).orderBy(ord)) <= k` —
-  * must SORT every key group in full before discarding all but k rows;
-  * at scale that is a sort of the whole relation. This operator keeps a
-  * bounded k-element heap per key after the same hash repartitioning, so
-  * per-partition work is O(n log k) with O(keys·k) memory and nothing is
-  * ever fully sorted.
-  *
-  * Correctness contract: emits exactly the rows the window formulation
-  * keeps, with an identical rank column — callers give a total ordering
-  * (tie-break columns), as they must for the window version too.
+  * `row_number().over(partitionBy(keys).orderBy(order)) <= k` is planned by
+  * Catalyst's `InferWindowGroupLimit` (any k up to
+  * `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by default): a
+  * partial `WindowGroupLimit` keeps k rows per key before the hash exchange
+  * and a final one after it, so only k rows per key and map task cross the
+  * shuffle. Callers give a total ordering (tie-break columns), so the
+  * kept rows and their ranks are deterministic.
   */
-case class TopKPerKeyNode(
-    k: Int,
-    keys: Seq[Expression],
-    ordering: Seq[SortOrder],
-    rankAttr: AttributeReference,
-    child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ rankAttr
-  override def producedAttributes: AttributeSet = AttributeSet(rankAttr)
-  override protected def withNewChildInternal(newChild: LogicalPlan): LogicalPlan =
-    copy(child = newChild)
-}
-
-case class TopKPerKeyExec(
-    k: Int,
-    keys: Seq[Expression],
-    ordering: Seq[SortOrder],
-    rankAttr: Attribute,
-    child: SparkPlan) extends UnaryExecNode {
-
-  override def output: Seq[Attribute] = child.output :+ rankAttr
-
-  /** Hash-cluster rows by key — same shuffle the window operator needs,
-    * but the only one: no sort follows.
-    */
-  override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(keys) :: Nil
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val kLocal = k
-    val keyExprs = keys
-    val sortExprs = ordering
-    val childOutput = child.output
-    val outAttrs = output
-    child.execute().mapPartitions { iter =>
-      val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      val ord = org.apache.spark.sql.catalyst.expressions.RowOrdering
-        .create(sortExprs, childOutput)
-      // max-heap of the kept k: peek() is the WORST kept row
-      val heaps = mutable.HashMap.empty[UnsafeRow, java.util.PriorityQueue[InternalRow]]
-      while (iter.hasNext) {
-        val row = iter.next()
-        val key = keyProj(row)
-        val heap = heaps.get(key) match {
-          case Some(h) => h
-          case None =>
-            val h = new java.util.PriorityQueue[InternalRow](kLocal + 1, ord.reverse)
-            heaps.put(key.copy(), h)
-            h
-        }
-        if (heap.size < kLocal) heap.add(row.copy())
-        else if (ord.compare(row, heap.peek()) < 0) {
-          heap.poll()
-          heap.add(row.copy())
-        }
-      }
-      val outProj = UnsafeProjection.create(outAttrs, outAttrs)
-      val joined = new JoinedRow
-      heaps.iterator.flatMap { case (_, heap) =>
-        val rows = new Array[InternalRow](heap.size)
-        var i = rows.length - 1
-        while (i >= 0) { rows(i) = heap.poll(); i -= 1 } // heap drains worst-first
-        rows.iterator.zipWithIndex.map { case (r, rank) =>
-          outProj(joined(r, new GenericInternalRow(Array[Any](rank + 1))))
-        }
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =
-    copy(child = newChild)
-}
-
-object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKeyNode(k, keys, ordering, rankAttr, child) =>
-      TopKPerKeyExec(k, keys, ordering, rankAttr, planLater(child)) :: Nil
-    case _ => Nil
-  }
-}
-
 object TopK {
   /** Sort key for [[perKey]]: column name + direction. */
   final case class Sort(name: String, ascending: Boolean = true)
@@ -115,25 +22,13 @@ object TopK {
 
   /** First k rows per key under `order` (give a total order — include
     * tie-break columns), with a 1-based rank column appended.
-    *
-    * Column references are resolved here against the analyzed child plan
-    * (Spark 4's ColumnNode wrappers only resolve inside built-in
-    * operators, not custom logical nodes).
     */
   def perKey(df: DataFrame, keys: Seq[String], order: Seq[Sort], k: Int,
       rankName: String = "rank"): DataFrame = {
     require(keys.nonEmpty, "TopK.perKey needs at least one key (global top-k: use orderBy().limit())")
     require(order.nonEmpty, "TopK.perKey needs a total order (include tie-break columns)")
-    val child = df.queryExecution.analyzed
-    def attr(name: String): Attribute =
-      child.output.find(_.name.equalsIgnoreCase(name)).getOrElse(
-        throw new IllegalArgumentException(
-          s"column '$name' not in ${child.output.map(_.name).mkString(", ")}"))
-    val sorts = order.map(s =>
-      SortOrder(attr(s.name),
-        if (s.ascending) Ascending else org.apache.spark.sql.catalyst.expressions.Descending))
-    val rankAttr = AttributeReference(rankName, IntegerType, nullable = false)()
-    ColumnBridge.ofRows(df.sparkSession,
-      TopKPerKeyNode(k, keys.map(attr), sorts, rankAttr, child))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(s =>
+      if (s.ascending) col(s.name).asc else col(s.name).desc): _*)
+    df.withColumn(rankName, row_number().over(w)).filter(col(rankName) <= k)
   }
 }

@@ -125,7 +125,7 @@ object Compute {
           ORDER BY doc_id"""),
 
     // Keyword extraction: per-doc top TF-IDF terms, all-integer scoring,
-    // bounded top-k on the custom TopKPerKey operator.
+    // bounded per-key top-k window.
     Query("q86_tfidf_terms", scale = true, build = { (s, dir) =>
       TextAnalysis.tfidfTopTerms(TestData.documents(s, dir))
         .orderBy("doc_id", "rank")
@@ -333,7 +333,7 @@ object Compute {
           SELECT doc_id, degree, triangles, clustering FROM triangle_stats
           ORDER BY doc_id"""),
 
-    // Source-level TF-IDF top-k via the custom TopKPerKey operator.
+    // Source-level TF-IDF top-k via the bounded per-key top-k window.
     Query("q135_source_keywords", scale = false, build = { (s, dir) =>
       TextAnalysis.sourceKeywords(TestData.documents(s, dir))
         .orderBy("source", "rank")
@@ -529,8 +529,8 @@ object Compute {
           FROM incremental_near_dup ORDER BY doc_id"""),
 
     // Per-source quota cap (the training-mix "domain cap"): keep the
-    // best k docs per source by vocabulary richness on the bounded-heap
-    // TopKPerKey operator — a per-key top-k, not a rate downsample.
+    // best k docs per source by vocabulary richness with the bounded
+    // per-key top-k window — a per-key top-k, not a rate downsample.
     Query("q226_source_cap", scale = true, build = { (s, dir) =>
       Sampling.sourceCap(TestData.documents(s, dir)).orderBy("source")
     }, oracle =

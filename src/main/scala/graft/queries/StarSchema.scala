@@ -2805,7 +2805,7 @@ object StarSchema {
       s"""${Funnel.retentionSql}
           ORDER BY cohort_week, week_offset"""),
 
-    // Deterministic weighted sampling (integer A-Res) on the bounded heap.
+    // Deterministic weighted sampling (integer A-Res), a bounded per-key top-k.
     Query("q111_weighted_sample", scale = false, build = { (s, dir) =>
       Sampling.weightedSample(TestData.orders(s, dir)).orderBy("stratum", "o_orderkey")
     }, oracle =

@@ -756,8 +756,8 @@ object Writers {
         TestData.customer(s, dir).select("c_custkey", "c_acctbal")
           .withColumnRenamed("c_custkey", "o_custkey"),
         "b83_customer", "o_custkey", 8)
-      s.table("b83_orders").join(s.table("b83_customer"), Seq("o_custkey"))
-        .hint("merge")
+      s.table("b83_orders").hint("merge")
+        .join(s.table("b83_customer"), Seq("o_custkey"))
         .groupBy("o_custkey")
         .agg(count(lit(1)).as("n"),
           moneyOut(sum(money(col("o_totalprice"))).cast("decimal(18,2)")).as("total"))

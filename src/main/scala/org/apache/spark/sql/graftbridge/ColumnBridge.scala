@@ -16,15 +16,6 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
-  /** Build a DataFrame from a (possibly custom) logical plan — the
-    * `Dataset.ofRows` constructor custom operators need, also
-    * `private[sql]` in Spark 4.
-    */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** Wrap an `RDD[InternalRow]` back into a DataFrame WITHOUT a
     * Row-encoder round-trip (`internalCreateDataFrame` is `private[sql]`).
     * The rows must already match `schema` physically (e.g. UnsafeRow from

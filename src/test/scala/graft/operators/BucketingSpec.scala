@@ -14,10 +14,12 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(
       lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", 4)
 
-    val joined = spark.table("b_orders").join(spark.table("b_lineitem"), Seq("o_orderkey"))
-      // disable broadcast so the join strategy actually exercises bucketing
-      .hint("merge")
+    // the merge hint sits on a join relation, so Spark honours it: no
+    // broadcast, and the sort-merge join exercises the bucketing
+    val joined = spark.table("b_orders").hint("merge")
+      .join(spark.table("b_lineitem"), Seq("o_orderkey"))
     val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join in:\n$plan")
     assert(!plan.contains("Exchange hashpartitioning"),
       s"expected no shuffle exchange in:\n$plan")
     // and it still computes the right thing

@@ -10,7 +10,7 @@ import graft.SparkSpec
 class SqlSurfaceSpec extends SparkSpec {
 
   private lazy val w = {
-    val wh = BankEtl.build(spark, sf, cache = true)
+    val wh = BankEtl.buildCached(spark, sf)
     BankEtl.registerViews(wh)
     wh
   }

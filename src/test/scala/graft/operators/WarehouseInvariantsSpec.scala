@@ -10,7 +10,7 @@ import graft.SparkSpec
   */
 class WarehouseInvariantsSpec extends SparkSpec {
 
-  private lazy val w = BankEtl.build(spark, sf, cache = true)
+  private lazy val w = BankEtl.buildCached(spark, sf)
   private lazy val b = BankEtl.read(spark, sf)
   private lazy val cleanTx = BankEtl.cleanTransactions(
     b.transactions, BankEtl.cleanAccounts(b.accounts, b.customers))

@@ -8,7 +8,7 @@ class WarehouseSinkSpec extends SparkSpec {
 
   test("S4: warehouse writes round-trip; fact is partitioned by year-month") {
     val out = Files.createTempDirectory("wh").toString
-    val w = BankEtl.build(spark, sf, cache = true)
+    val w = BankEtl.buildCached(spark, sf)
     WarehouseSink.write(w, out)
 
     val factBack = spark.read.parquet(s"$out/Fact_Spending")

@@ -141,13 +141,18 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
-  test("per-key top-k queries plan on the custom bounded-heap operator") {
-    for (q <- Seq("q86_tfidf_terms", "q45_ann_brute", "q160_quota_sample",
-        "q159_cm_sketch_audit")) {
+  test("per-key top-k queries plan a bounded WindowGroupLimit") {
+    for (q <- Seq("q86_tfidf_terms", "q45_ann_brute", "q160_quota_sample")) {
       val p = finalPlan(q)
-      assert(p.contains("TopKPerKey"),
-        s"$q must use TopKPerKeyExec, not a row_number window")
+      assert(p.contains("WindowGroupLimit"),
+        s"$q must bound its row_number window with a group limit")
     }
+  }
+
+  test("q159 cm sketch: the global top-k is a bounded heap, never a one-partition window") {
+    val p = finalPlan("q159_cm_sketch_audit")
+    assert(p.contains("TakeOrderedAndProject"), "the top-k must be a bounded heap")
+    assert(!p.contains("row_number()"), "the top-k must not rank in a window")
   }
 
   test("q89 grouping sets: one Expand, one aggregate shuffle, map-side partials") {
@@ -184,7 +189,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q154 kmv estimate: sketch flags and stats join as broadcasts") {
     val p = finalPlan("q154_kmv_join_estimate")
-    assert(p.contains("TopKPerKey"), "bottom-k must be the bounded-heap operator")
+    assert(p.contains("TakeOrderedAndProject"), "bottom-k must be a bounded heap")
+    assert(!p.contains("row_number()"), "bottom-k must not rank in a window")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       "k-row sketches and the 1-row stats frame must broadcast")
   }
@@ -266,8 +272,8 @@ class PlanShapeSpec extends SparkSpec {
     val p = finalPlan("q180_pq_audit")
     assert(p.contains("BroadcastHashJoin"),
       "the O(sqrt n) per-subspace codebook must broadcast into the encode pass")
-    assert(p.contains("TopKPerKey"),
-      "the per-(vector, subspace) argmin must be the bounded-heap operator")
+    assert(p.contains("WindowGroupLimit"),
+      "the per-(vector, subspace) argmin must be a bounded group limit")
   }
 
   test("q182: the unigram model joins on the token key, never a cartesian") {
@@ -377,8 +383,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q200: assignment argmax is the bounded-heap operator; the total broadcasts") {
     val p = finalPlan("q200_index_shard_plan")
-    assert(p.contains("TopKPerKey"),
-      "the per-vector cell argmax must be the bounded-heap operator")
+    assert(p.contains("WindowGroupLimit"),
+      "the per-vector cell argmax must be a bounded group limit")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       "the centroid set and the 1-row total must broadcast")
   }
@@ -481,7 +487,7 @@ class PlanShapeSpec extends SparkSpec {
   test("a ym filter on the warehouse fact prunes partitions at the scan") {
     import org.apache.spark.sql.functions.col
     val out = java.nio.file.Files.createTempDirectory("wh-prune").toString
-    val w = graft.operators.BankEtl.build(spark, sf, cache = true)
+    val w = graft.operators.BankEtl.buildCached(spark, sf)
     graft.operators.WarehouseSink.write(w, out)
     val fact = spark.read.parquet(s"$out/Fact_Spending")
     val total = new java.io.File(s"$out/Fact_Spending").listFiles()

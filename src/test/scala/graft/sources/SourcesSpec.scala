@@ -28,7 +28,7 @@ class SourcesSpec extends SparkSpec {
 
   test("fact output conforms to the warehouse fact schema (S5)") {
     import graft.operators.{BankEtl, DataQuality}
-    val w = BankEtl.build(spark, sf, cache = true)
+    val w = BankEtl.buildCached(spark, sf)
     assert(BankSchemas.conforms(w.fact, BankSchemas.factSpending))
     DataQuality.assertClean(w) // zero FK/PK violations
   }
