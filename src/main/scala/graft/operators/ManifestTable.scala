@@ -15,63 +15,65 @@ import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.functions.OracleSafe
 
-/** Manifest-pointer table commits (q241) — the write-audit-publish
-  * protocol that closes q88's documented non-atomic swap
-  * (`WarehouseSink.compact`: "front with a table format for that").
-  * This IS the minimal table format: the commit protocol of
-  * Delta/Iceberg reduced to its essential mechanism.
+/** Manifest table commits (q241) — the write-audit-publish protocol that
+  * closes q88's documented non-atomic swap (`WarehouseSink.compact`:
+  * "front with a table format for that"). This IS the minimal table
+  * format: the commit protocol of Delta/Iceberg reduced to its essential
+  * mechanism, with one commit point for every table.
   *
   * Layout under `tableDir`:
   * {{{
-  *   data/v<N>/…parquet   immutable snapshot dirs (write-once, never edited)
-  *   CURRENT              the pointer — one small file naming the live N
-  *   manifest/v<N>        partitioned tier only: one line per partition,
+  *   data/<dir>/…parquet  immutable dirs (write-once, never edited): `v<N>`,
+  *                        `t_<app>_b<batch>` and `c_v<N>` for txn-tagged
+  *                        commits, `w_<writer>_<id>` for racing writers
+  *   manifest/v<N>        the snapshot: one line per partition,
   *                        `<escaped value>\t<dir>,<dir>[\tdel:<dir>,…]
   *                        [\tstats:<rows>,<sum>]`, under an optional
-  *                        `#txn\t<app>\t<batch>` header; dirs are under
-  *                        `data/` (`v<N>`, or `t_<app>_b<batch>` and
-  *                        `c_v<N>` for txn-tagged commits). Then the
-  *                        record of every data or delete dir the lines
+  *                        `#txn\t<app>\t<batch>` header. An unpartitioned
+  *                        table has one line with an empty value. Then
+  *                        the record of every data or delete dir the lines
   *                        name: `#dir\t<dir>\t<schema json>` (the schema
   *                        of the frame the dir was landed from) and one
   *                        `#file\t<dir>\t<escaped value>\t<bytes>\t<name>`
-  *                        per data file. A dir's record is made once, by
-  *                        the one recursive listing of the commit that
+  *                        per data file (the value empty when the files
+  *                        sit directly in the dir). A dir's record is
+  *                        made once, by the one listing of the commit that
   *                        lands it, and later manifests carry it forward
   *                        while they name the dir
+  *   CURRENT              the pointer — one small file naming the live N;
+  *                        it only ever advances
   * }}}
   *
-  * Partitioned reads are planned from one manifest read alone: the
-  * records become a [[FileIndex]] behind one relation per read, so no
-  * directory is listed, no footer is read for schema inference and no
-  * Spark job runs until the frame is executed.
+  * Reads are planned from one manifest read alone: the records become a
+  * [[FileIndex]] behind one relation per read, so no directory is listed,
+  * no footer is read for schema inference and no Spark job runs until the
+  * frame is executed.
   *
-  * Protocol: (1) land the new snapshot's data files under `data/v<N>` —
-  * an idempotent overwrite of a dir NO reader resolves yet; (2) commit by
-  * swapping the pointer in ONE atomic rename
-  * (`FileContext.rename(…, Options.Rename.OVERWRITE)` — atomic on HDFS
-  * and on POSIX local filesystems). Readers resolve `CURRENT` first and
-  * then read only the named snapshot dir, so every reader sees exactly
-  * one complete snapshot at every instant: a crash anywhere before the
-  * swap leaves the OLD snapshot fully readable (the half-published data
-  * dir is invisible debris), and recovery is simply re-running the
-  * publish — step 1 overwrites the debris, step 2 commits.
+  * Protocol: (1) land the new snapshot's data files under `data/<dir>` —
+  * an idempotent overwrite of a dir no manifest names yet; (2) commit by
+  * a put-if-absent of `manifest/v<N>`, the one commit point; (3) advance
+  * the pointer. Readers resolve `CURRENT` first and then read only the
+  * files that version's manifest records, so every reader sees exactly
+  * one complete snapshot at every instant: a crash before the manifest
+  * leaves the old snapshot serving (the landed dir is invisible debris),
+  * and recovery is re-running the commit — it lands again and commits. A
+  * crash after the manifest is recovered by the re-run too: it finds the
+  * manifest and only completes the pointer, so re-running a committed
+  * version never rewrites it.
   *
-  * Scale: the commit cost is one tiny-file write + one metadata rename
+  * Scale: the commit cost is one small-file create + one pointer rename
   * regardless of data size — the data move itself is the normal
   * distributed parquet write. Snapshot reads pin their version at
   * resolve time (driver-side, once per query), which is snapshot
-  * isolation for free; old versions are reclaimable the moment no
-  * pinned reader remains (not automated here — a deployment would keep
-  * k versions, exactly like table formats' vacuum).
+  * isolation for free; old versions are reclaimed by [[vacuum]].
   */
 object ManifestTable {
 
-  /** Thrown by the fault-injection hook between data-write and pointer
-    * swap — the crash window the protocol must survive.
+  /** Thrown by the fault-injection hook at a [[CrashPoint]] inside a
+    * commit — the crash windows the protocol must survive.
     */
   final class InjectedCrash extends RuntimeException(
-    "injected crash: snapshot data written, pointer never swapped")
+    "injected crash: data landed, commit never completed")
 
   private[operators] def fc(spark: SparkSession, dir: String): FileContext =
     FileContext.getFileContext(new Path(dir).toUri,
@@ -81,8 +83,9 @@ object ManifestTable {
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Versions named `v<N>…` directly under `tableDir/sub` (`data`,
-    * `manifest`, `commits`, `leases`, `smanifest`), ascending; empty when
-    * the dir is absent.
+    * `manifest`, `leases`, `smanifest`), ascending; empty when the dir is
+    * absent. Dirs that are not `v<N>` (txn, compaction and writer dirs)
+    * are not versions.
     */
   private[operators] def listVersions(spark: SparkSession, tableDir: String,
       sub: String): Seq[Long] = {
@@ -130,18 +133,40 @@ object ManifestTable {
     currentVersion(spark, tableDir).getOrElse(
       sys.error(s"no published snapshot under $tableDir"))
 
-  /** Publish `df` as snapshot `version`: land the data, then commit with
-    * one atomic pointer rename. Re-running a crashed publish completes
-    * it (the data write is an idempotent overwrite). `crashBeforeSwap`
-    * injects a failure inside the crash window for the q241 proof.
+  /** Publish `df` as unpartitioned snapshot `version` through
+    * [[commitAt]]: land it under `data/v<version>`, put its manifest,
+    * advance the pointer. Re-running a crashed publish completes it, and
+    * re-running a committed one changes nothing. A `writer` racing others
+    * for the same version lands under a dir of its own instead and races
+    * the manifest put alone: the winner moves the pointer, and a loser
+    * deletes its dir, which no manifest can name. Returns whether this
+    * call committed.
     */
   def publish(df: DataFrame, tableDir: String, version: Long,
-      crashBeforeSwap: Boolean = false): Unit = {
+      crash: Option[CrashPoint] = None,
+      writer: Option[String] = None): Boolean = {
     val spark = df.sparkSession
-    df.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v$version")
-    if (crashBeforeSwap) throw new InjectedCrash
-    swapPointer(spark, tableDir, version)
+    writer.fold(commitAt(spark, tableDir, version, crash)(
+        landSnapshot(df, tableDir, s"v$version"))) { w =>
+      val dir = writerDir(w)
+      commit(spark, tableDir, version, landSnapshot(df, tableDir, dir), crash) || {
+        fileSystem(spark, tableDir).delete(new Path(s"$tableDir/data/$dir"), true)
+        false
+      }
+    }
   }
+
+  /** A dir under `data/` that only this call of `writer` lands in. */
+  private def writerDir(writer: String): String =
+    s"w_${writer}_${java.util.UUID.randomUUID()}"
+
+  /** Land `df` under `data/<dir>` as an unpartitioned snapshot's one dir,
+    * uncommitted, and return the manifest that commits it.
+    */
+  private[operators] def landSnapshot(df: DataFrame, tableDir: String,
+      dir: String): Manifest =
+    Manifest(Map(Whole -> Entry(Seq(dir))),
+      catalog = Map(dir -> land(df, tableDir, dir, None)))
 
   /** Monotone count of pointer swaps in this JVM — every commit path
     * (publish, partitioned, delta, rollback, …) funnels through
@@ -153,10 +178,8 @@ object ManifestTable {
   private val commitCount = new java.util.concurrent.atomic.AtomicLong(0L)
   def commitsSoFar: Long = commitCount.get()
 
-  /** Commit the pointer to `version` with the standard tmp-write +
-    * atomic rename — the second half of [[publish]], factored out so
-    * staged-publish flows (q302's in-flight writer) can land data and
-    * commit as separate observable steps.
+  /** Move the pointer to `version` with the standard tmp-write + atomic
+    * rename — the last step of every commit.
     */
   def swapPointer(spark: SparkSession, tableDir: String,
       version: Long): Unit = {
@@ -164,16 +187,17 @@ object ManifestTable {
     writePointer(spark, s"$tableDir/CURRENT", s"$version\n")
   }
 
-  /** Read the live snapshot through the pointer. The version is resolved
-    * NOW; the returned (lazy) frame reads only that snapshot's dir.
+  /** Read the live snapshot of an unpartitioned table through the
+    * pointer. The version is resolved NOW; the returned (lazy) frame reads
+    * only the files that version's manifest records.
     */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.parquet(s"$tableDir/data/v${live(spark, tableDir)}")
+    readVersion(spark, tableDir, live(spark, tableDir))
 
   /** q241 — the q88 compaction re-run under the manifest protocol, with
     * the crash injected in its window: publish the fragmented events as
     * v1, attempt the compacted v2 publish that DIES between data-write
-    * and pointer-swap, prove readers still resolve v1 with exact totals,
+    * and its manifest, prove readers still resolve v1 with exact totals,
     * then re-run the publish and prove v2 serves the same totals
     * (compaction invisible in the data — the q88 contract, now atomic).
     * Output: per-stage, per-type counts and cent totals plus the version
@@ -197,13 +221,11 @@ object ManifestTable {
           col("event_type"), col("n"), col("total_cents"))
     }
     val s1 = stageTotals("a_v1_published")
-    val fs = fileSystem(spark, tableDir)
-    val bytes = fs.getContentSummary(new Path(s"$tableDir/data/v1")).getLength
+    val bytes = readManifest(spark, tableDir, 1L).bytes(Whole, Seq("v1"))
     val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val compacted = spark.read.parquet(s"$tableDir/data/v1")
-      .repartition(nFiles)
+    val compacted = readVersion(spark, tableDir, 1L).repartition(nFiles)
     val crashed =
-      try { publish(compacted, tableDir, 2L, crashBeforeSwap = true); false }
+      try { publish(compacted, tableDir, 2L, Some(BeforeManifest)); false }
       catch { case _: InjectedCrash => true }
     require(crashed, "the injected crash must fire inside the window")
     val s2 = stageTotals("b_crash_window") // must still resolve v1
@@ -212,35 +234,18 @@ object ManifestTable {
     s1.unionByName(s2).unionByName(s3).orderBy("stage", "event_type")
   }
 
-  /** Read a specific historical snapshot — time travel. The caller is
+  /** Read a specific historical snapshot of an unpartitioned table —
+    * time travel — as one [[scan]] of its manifest. The caller is
     * responsible for the version still being retained (see [[vacuum]]).
     */
   def readVersion(spark: SparkSession, tableDir: String,
       version: Long): DataFrame =
-    spark.read.parquet(s"$tableDir/data/v$version")
+    scan(spark, tableDir, None, readManifest(spark, tableDir, version),
+      _.dirs, None)
 
-  /** List the snapshot versions physically present under the table. */
+  /** List the `v<N>` data dirs physically present under the table. */
   def versions(spark: SparkSession, tableDir: String): Seq[Long] =
     listVersions(spark, tableDir, "data")
-
-  /** Reclaim history: delete every snapshot older than the newest
-    * `keep`, never touching the pointer's target (the live version is
-    * always retained whatever `keep` says). Returns the versions
-    * deleted. The table-format vacuum: safe because publishes only ever
-    * ADD version dirs, so a concurrent reader can lose its snapshot only
-    * if it pinned a version older than the retention window — the same
-    * documented contract as Delta's VACUUM.
-    */
-  def vacuum(spark: SparkSession, tableDir: String, keep: Int = 2): Seq[Long] = {
-    require(keep >= 1, s"must keep at least the live snapshot: $keep")
-    val live = currentVersion(spark, tableDir)
-    val all = versions(spark, tableDir)
-    val retained = all.takeRight(keep).toSet ++ live
-    val fs = fileSystem(spark, tableDir)
-    val dropped = all.filterNot(retained)
-    dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
-    dropped
-  }
 
   /** q244 — version history end to end: publish the full events as v1,
     * publish a DELETE (drop every 'error' row) as v2, then (a) time-
@@ -299,26 +304,18 @@ object ManifestTable {
        |  SELECT 'c_post_vacuum', 2, 1, event_type, n, total_cents
        |  FROM tt_live)""".stripMargin
 
-  /** Atomically claim commit slot `version`: an EXCLUSIVE create of
-    * `commits/v<version>` naming the writer — the compare-and-swap every
-    * optimistic table-format committer serializes through (Delta's
-    * `N.json` put-if-absent, Iceberg's metadata swap). Exactly one
-    * caller per slot ever returns true, whatever the interleaving: the
-    * filesystem's create-no-overwrite is the arbiter.
-    */
-  def claimCommit(spark: SparkSession, tableDir: String, version: Long,
-      writer: String): Boolean =
-    putIfAbsent(spark, new Path(s"$tableDir/commits/v$version"),
-      s"$writer\n")
-
-  /** Atomic put-if-absent — the one primitive the commit protocol needs
-    * from storage, and (exactly as Delta's LogStore abstraction found)
-    * the one that needs a PER-FILESYSTEM implementation: HDFS's
-    * create-no-overwrite is arbitrated at the NameNode and is atomic,
-    * but Hadoop's LOCAL filesystem implements it as exists-then-create —
-    * two racing threads can both pass the check (observed in this spec's
-    * 8-thread race before this branch existed). Local paths therefore go
-    * through NIO's `CREATE_NEW` (O_CREAT|O_EXCL — atomic on POSIX).
+  /** Atomic put-if-absent — the compare-and-swap every optimistic
+    * table-format committer serializes through (Delta's `N.json`,
+    * Iceberg's metadata swap): exactly one caller per path ever returns
+    * true, whatever the interleaving. It is the one primitive the commit
+    * protocol needs from storage, and (exactly as Delta's LogStore
+    * abstraction found) the one that needs a PER-FILESYSTEM
+    * implementation: HDFS's create-no-overwrite is arbitrated at the
+    * NameNode and is atomic, but Hadoop's LOCAL filesystem implements it
+    * as exists-then-create — two racing threads can both pass the check
+    * (observed in an 8-thread race before this branch existed). Local
+    * paths therefore go through NIO's `CREATE_NEW` (O_CREAT|O_EXCL —
+    * atomic on POSIX).
     */
   private[operators] def putIfAbsent(spark: SparkSession, path: Path,
       content: String): Boolean = {
@@ -346,38 +343,16 @@ object ManifestTable {
     }
   }
 
-  /** One optimistic commit attempt: stage the candidate's data files
-    * (unpublished — no reader resolves the stage dir), CAS the commit
-    * slot, and only the winner promotes its staged dir to `data/v<N>`
-    * and swaps the pointer. A loser's staged files are deleted — debris,
-    * never published. Returns whether the CAS won.
-    */
-  def tryCommit(df: DataFrame, tableDir: String, version: Long,
-      writer: String): Boolean = {
-    val spark = df.sparkSession
-    val staged = s"$tableDir/stage/v$version-$writer"
-    df.write.mode(SaveMode.Overwrite).parquet(staged)
-    val won = claimCommit(spark, tableDir, version, writer)
-    val ctx = fc(spark, tableDir)
-    if (won) {
-      ctx.rename(new Path(staged), new Path(s"$tableDir/data/v$version"),
-        Options.Rename.OVERWRITE)
-      swapPointer(spark, tableDir, version)
-    } else {
-      ctx.delete(new Path(staged), true)
-    }
-    won
-  }
-
   /** q248 — optimistic concurrency on the manifest table: two writers
-    * race from the SAME pinned snapshot. Writer A (doubles every
-    * purchase's value) commits v2; writer B (drops every view) then
-    * attempts v2 with its now-stale candidate and the CAS REFUSES it —
-    * the exclusive-create actually fails, B's staged files are deleted
-    * unpublished; B rebases by re-reading CURRENT and re-applying its
-    * change on A's result, and commits v3. The final table is the SERIAL
-    * application f_B(f_A(base)) — write skew is impossible because every
-    * commit's base is certified by the slot it claims. Output: per-stage
+    * race from the SAME pinned snapshot, each landing under a dir of its
+    * own. Writer A (doubles every purchase's value) commits v2; writer B
+    * (drops every view) then attempts v2 with its now-stale candidate and
+    * the manifest put-if-absent REFUSES it — the exclusive-create
+    * actually fails, and B's own dir is deleted unpublished; B rebases by
+    * re-reading CURRENT and re-applying its change on A's result, and
+    * commits v3. The final table is the SERIAL application f_B(f_A(base))
+    * — write skew is impossible because every commit's base is certified
+    * by the version its manifest claims. Output: per-stage
     * per-type totals with the resolved version and a conflict flag; the
     * oracle pins versions (1, 2, 2, 3) and the single conflict, and
     * computes all three table states from the raw events. The refused
@@ -398,13 +373,13 @@ object ManifestTable {
     val baseV = currentVersion(spark, tableDir).get
     val candA = writerA(readVersion(spark, tableDir, baseV))
     val candB = writerB(readVersion(spark, tableDir, baseV))
-    require(tryCommit(candA, tableDir, baseV + 1, "writer_a"),
+    require(publish(candA, tableDir, baseV + 1, writer = Some("writer_a")),
       "writer A races alone for v2 and must win")
-    val bStaleWon = tryCommit(candB, tableDir, baseV + 1, "writer_b")
+    val bStaleWon = publish(candB, tableDir, baseV + 1, writer = Some("writer_b"))
     require(!bStaleWon, "writer B's stale v2 attempt must lose the CAS")
     val refusedStageV = currentVersion(spark, tableDir).get
-    require(tryCommit(writerB(read(spark, tableDir)), tableDir,
-        refusedStageV + 1, "writer_b"),
+    require(publish(writerB(read(spark, tableDir)), tableDir,
+        refusedStageV + 1, writer = Some("writer_b")),
       "writer B's rebased v3 attempt races alone and must win")
     def stage(name: String, v: Long, conflict: Int): DataFrame =
       readVersion(spark, tableDir, v)
@@ -576,9 +551,9 @@ object ManifestTable {
     * publish with q248's put-if-absent arbitration. A compactor rewrites
     * the base snapshot's rows into fewer files while an appender —
     * pinned to the SAME base — tries to commit new rows; both race for
-    * the same commit slot, the filesystem's exclusive-create picks
-    * exactly one winner (here: the compactor), the loser's staged files
-    * are deleted unpublished, and the loser REBASES against the new
+    * the same version's manifest, the filesystem's exclusive-create picks
+    * exactly one winner (here: the compactor), the loser's own dir is
+    * deleted unpublished, and the loser REBASES against the new
     * CURRENT and commits the next slot. The final table equals the
     * serial replay append∘compact(base) — which, because a compaction
     * is data-identical by contract, is just base ∪ delta whichever
@@ -588,8 +563,9 @@ object ManifestTable {
     * version and a conflict flag. The oracle pins versions (1, 2, 2, 3)
     * and the single conflict and computes every stage's totals from the
     * raw events — the compacted stage's totals EQUAL the base's (the
-    * rewrite is invisible in the data; the file-count shrink is asserted
-    * engine-side with a require and in `ManifestTableSpec`), and the
+    * rewrite is invisible in the data; the file-count shrink, counted in
+    * the manifests' file records, is asserted engine-side with a require
+    * and in `ManifestTableSpec`), and the
     * refused stage's equal them too (the loser was never visible).
     */
   def compactionVsAppend(events: DataFrame, tableDir: String): DataFrame = {
@@ -605,14 +581,15 @@ object ManifestTable {
     val appendCand = readVersion(spark, tableDir, baseV).unionByName(delta)
     // interleaving under test: the compactor's exclusive-create lands
     // first (the spec drives the mirrored order through the same API)
-    require(tryCommit(compactCand, tableDir, baseV + 1, "compactor"),
+    require(publish(compactCand, tableDir, baseV + 1, writer = Some("compactor")),
       "the compactor races alone for v2 and must win")
-    val appendStaleWon = tryCommit(appendCand, tableDir, baseV + 1, "appender")
+    val appendStaleWon =
+      publish(appendCand, tableDir, baseV + 1, writer = Some("appender"))
     require(!appendStaleWon, "the appender's stale v2 attempt must lose")
-    val fs = fileSystem(spark, tableDir)
-    def nDataFiles(v: Long): Int = fs
-      .listStatus(new Path(s"$tableDir/data/v$v"))
-      .count(_.getPath.getName.endsWith(".parquet"))
+    def nDataFiles(v: Long): Int = {
+      val m = readManifest(spark, tableDir, v)
+      m.files(Whole, m.parts(Whole).dirs).size
+    }
     require(nDataFiles(2L) < nDataFiles(1L),
       s"compaction must shrink the file count: " +
         s"${nDataFiles(1L)} -> ${nDataFiles(2L)}")
@@ -621,8 +598,8 @@ object ManifestTable {
     // snapshot — data-identical to the pinned base, so the delta
     // composes unchanged; a rebase after a data-changing commit would
     // re-derive it, the q248 path)
-    require(tryCommit(read(spark, tableDir).unionByName(delta), tableDir,
-        refusedV + 1, "appender"),
+    require(publish(read(spark, tableDir).unionByName(delta), tableDir,
+        refusedV + 1, writer = Some("appender")),
       "the appender's rebased v3 attempt races alone and must win")
     def stage(name: String, v: Long, conflict: Int): DataFrame =
       readVersion(spark, tableDir, v)
@@ -1206,25 +1183,11 @@ object ManifestTable {
     fc(spark, tableDir).delete(
       new Path(s"$tableDir/leases/v${version}_$owner"), false)
 
-  /** Versions currently under at least one reader lease. */
+  /** Versions currently under at least one reader lease — roots of
+    * [[vacuum]], so a leased version survives retention however old.
+    */
   def leasedVersions(spark: SparkSession, tableDir: String): Set[Long] =
     listVersions(spark, tableDir, "leases").toSet
-
-  /** [[vacuum]] that honors reader leases: a leased version survives
-    * retention no matter how old. Returns the versions deleted.
-    */
-  def vacuumLeased(spark: SparkSession, tableDir: String,
-      keep: Int = 2): Seq[Long] = {
-    require(keep >= 1, s"must keep at least the live snapshot: $keep")
-    val live = currentVersion(spark, tableDir)
-    val all = versions(spark, tableDir)
-    val retained = all.takeRight(keep).toSet ++ live ++
-      leasedVersions(spark, tableDir)
-    val fs = fileSystem(spark, tableDir)
-    val dropped = all.filterNot(retained)
-    dropped.foreach(v => fs.delete(new Path(s"$tableDir/data/v$v"), true))
-    dropped
-  }
 
   /** q280 — LEASE-PROTECTED VACUUM, the serving-side coordination the
     * q244 contract leaves open: three snapshots are published (full,
@@ -1247,7 +1210,7 @@ object ManifestTable {
     publish(slim.filter(col("event_type") =!= "error"
       && col("event_type") =!= "click"), tableDir, 3L)
     acquireLease(spark, tableDir, 1L, "reader_a")
-    val d1 = vacuumLeased(spark, tableDir, keep = 1)
+    val d1 = vacuum(spark, tableDir, keep = 1)
     require(d1 == Seq(2L), s"first vacuum must reclaim exactly v2: $d1")
     def totalsOf(df: DataFrame, stage: String, v: Long): DataFrame = df
       .groupBy("event_type")
@@ -1262,7 +1225,7 @@ object ManifestTable {
     val b = totalsOf(read(spark, tableDir), "b_current_v3", 3L)
       .localCheckpoint()
     releaseLease(spark, tableDir, 1L, "reader_a")
-    val d2 = vacuumLeased(spark, tableDir, keep = 1)
+    val d2 = vacuum(spark, tableDir, keep = 1)
     require(d2 == Seq(1L), s"post-release vacuum must reclaim v1: $d2")
     val c = totalsOf(read(spark, tableDir), "c_post_release", 3L)
     a.unionByName(b).unionByName(c).orderBy("stage", "event_type")
@@ -1379,12 +1342,13 @@ object ManifestTable {
        |  SELECT 'c_post_release', 3, 1, event_type, n, total_cents
        |  FROM lv_v3)""".stripMargin
 
-  /** Orphan snapshot dirs: version dirs on disk that no pointer, ref,
-    * or claimed commit slot names — the debris a writer leaves when it
-    * dies between data-write and pointer-swap (q241's crash window) or
-    * between staging and its CAS. Deleting them is the GC every
-    * deployment schedules beside vacuum: vacuum reclaims COMMITTED
-    * history, orphan GC reclaims what was NEVER committed.
+  /** Orphan snapshot dirs: version dirs on disk that no pointer or ref
+    * names and that have no manifest — the debris a writer leaves when it
+    * dies between data-write and its manifest (q241's crash window). A
+    * version with a manifest is committed even while the pointer lags.
+    * Deleting them is the GC every deployment schedules beside vacuum:
+    * vacuum reclaims COMMITTED history, orphan GC reclaims what was NEVER
+    * committed.
     *
     * This is the q298 frontier/ref classification alone: it cannot tell
     * a LIVE writer inside the q241 window from crash debris, so never
@@ -1403,7 +1367,7 @@ object ManifestTable {
     // versions <= live are committed history — the pointer advanced past
     // them, so they are vacuum's domain, never GC's. A crashed publish's
     // debris is always ABOVE the pointer (the swap never happened).
-    val committed = listVersions(spark, tableDir, "commits").toSet
+    val committed = manifestVersions(spark, tableDir).toSet
     // refs protect by CONTENT (the version a branch/tag file names),
     // since a dev branch may sit above the main pointer (q290)
     val referenced: Set[Long] = {
@@ -1419,10 +1383,10 @@ object ManifestTable {
 
   /** q298 — ORPHAN GC end to end, the maintenance op beside vacuum:
     * publish v1, then a v2 publish DIES in the q241 crash window (data
-    * landed, pointer never swapped, no commit slot claimed) — the table
+    * landed, no manifest put, pointer never swapped) — the table
     * still serves v1, but the dead writer's snapshot dir sits on disk
     * as unaccounted storage. [[gcOrphansSafe]] reclaims exactly that dir
-    * (the pointer's target and CAS-committed versions are never
+    * (the pointer's target and versions with a manifest are never
     * candidates), after which the retried v2 publish commits cleanly —
     * GC is the OTHER recovery from the crash q241 recovers by re-run,
     * and composing them proves neither path can eat a committed
@@ -1450,7 +1414,7 @@ object ManifestTable {
     val s1 = stage("a_v1_published", 0L)
     val v2 = slim.filter(col("event_type") =!= "error")
     val crashed =
-      try { publish(v2, tableDir, 2L, crashBeforeSwap = true); false }
+      try { publish(v2, tableDir, 2L, Some(BeforeManifest)); false }
       catch { case _: InjectedCrash => true }
     require(crashed, "the injected crash must fire inside the window")
     val orphans = orphanVersions(spark, tableDir)
@@ -1495,7 +1459,7 @@ object ManifestTable {
        |  FROM og_v2)""".stripMargin
 
   /** Create an IMMUTABLE tag naming `version`. Tags go through the same
-    * put-if-absent CAS as commit slots, so a tag can never be moved —
+    * put-if-absent CAS as manifests, so a tag can never be moved —
     * re-creating it returns false and leaves the original untouched
     * (Iceberg's tag semantics). Returns whether the tag was created.
     */
@@ -1536,11 +1500,12 @@ object ManifestTable {
     * multi-pointer surface (Iceberg refs / Delta's planned branch
     * semantics) that turns one linear snapshot history into isolated
     * lines of development. `main` and `dev` are both just named
-    * pointers; a TAG is a pointer created through the commit-slot CAS
+    * pointers; a TAG is a pointer created through the put-if-absent CAS
     * so it can never be moved. The scenario: v1 publishes, tag
     * `release_1` pins it, branch `dev` forks at it, a dev commit lands
-    * v2 (purchases re-priced) and advances ONLY the dev pointer — main
-    * still serves v1 (write isolation between branches is free because
+    * v2 (purchases re-priced), puts its manifest and advances ONLY the
+    * dev pointer — `CURRENT` and main
+    * still serve v1 (write isolation between branches is free because
     * snapshots are immutable and refs are independent pointers) — then
     * main FAST-FORWARDS to dev's head (a pure pointer move, no data
     * copied: the linear-ancestor check is what makes the merge trivial)
@@ -1563,11 +1528,13 @@ object ManifestTable {
     require(createTag(spark, tableDir, "release_1", 1L),
       "the tag must not pre-exist")
     setBranch(spark, tableDir, "dev", 1L) // fork: a pointer copy, no data
-    // the dev commit: land v2, advance ONLY the dev pointer
-    slim.withColumn("value",
+    // the dev commit: land v2 and put its manifest, advance ONLY the dev
+    // pointer
+    require(publishManifest(spark, tableDir, 2L, landSnapshot(
+      slim.withColumn("value",
         when(col("event_type") === "purchase", col("value") * 2)
-          .otherwise(col("value")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v2")
+          .otherwise(col("value"))), tableDir, "v2"), None),
+      "the dev commit races alone for v2")
     setBranch(spark, tableDir, "dev", 2L)
     def refTotals(stage: String, ref: String, refFile: String): DataFrame = {
       val v = refVersion(spark, tableDir, refFile).get
@@ -1643,10 +1610,9 @@ object ManifestTable {
     * writer from crash debris — without it a staged-but-uncommitted
     * snapshot looks exactly like q298's crash case, and a racing
     * orphan GC would delete the data out from under the publish
-    * (then the pointer swap would land CURRENT on a deleted snapshot).
-    * Exactly one writer per version can hold the intent (the same
-    * put-if-absent CAS as commit slots); [[releaseIntent]] retires it
-    * after the pointer swap. A crashed writer leaves its intent behind,
+    * (then the commit would name a deleted snapshot). Exactly one writer
+    * per version can hold the intent (the same put-if-absent CAS as
+    * manifests); [[releaseIntent]] retires it after the commit. A crashed writer leaves its intent behind,
     * and the file's AGE against the GC's grace window is what finally
     * declares it dead — Iceberg's `remove_orphan_files(older_than)`
     * contract, composed with the q280 lease idea on the writer side.
@@ -1685,7 +1651,7 @@ object ManifestTable {
 
   /** [[orphanVersions]] made safe against an IN-FLIGHT publish (the
     * ADVICE-r13 race): a version is a reclaim candidate only if, beyond
-    * the q298 rules (above the pointer, no CAS slot, no ref), it ALSO
+    * the q298 rules (above the pointer, no manifest, no ref), it ALSO
     * (a) carries no live intent, and (b) its data dir itself is older
     * than the grace window. Clause (b) is the pure age threshold that
     * protects even writers that never claimed an intent — the legacy
@@ -1722,17 +1688,15 @@ object ManifestTable {
     orphans
   }
 
-  /** Publish through the intent protocol: claim → stage data → swap
-    * pointer → release. Returns false (nothing written) when another
-    * writer holds the version's intent.
+  /** Publish through the intent protocol: claim → [[publish]] →
+    * release. Returns false (nothing written) when another writer holds
+    * the version's intent.
     */
   def publishWithIntent(df: DataFrame, tableDir: String, version: Long,
       writer: String): Boolean = {
     val spark = df.sparkSession
-    if (!claimIntent(spark, tableDir, version, writer)) false
-    else {
-      df.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v$version")
-      swapPointer(spark, tableDir, version)
+    claimIntent(spark, tableDir, version, writer) && {
+      publish(df, tableDir, version)
       releaseIntent(spark, tableDir, version)
       true
     }
@@ -1742,17 +1706,17 @@ object ManifestTable {
     * leaves open (its own scaladoc now says so): five stages drive BOTH
     * interleavings end to end.
     *
-    *  - v1 publishes through the intent protocol (claim/stage/swap/
+    *  - v1 publishes through the intent protocol (claim/publish/
     *    release);
     *  - writer W claims the v2 intent and lands v2's data but has NOT
-    *    yet swapped the pointer — the exact instant a naive GC would
+    *    yet put its manifest — the exact instant a naive GC would
     *    eat the snapshot ([[orphanVersions]] classifies it as debris;
     *    require-pinned in the flow) — and the SAFE GC under the grace
     *    window reclaims NOTHING;
-    *  - writer W completes its pointer swap: the publish it would have
-    *    lost under naive GC commits cleanly, v2 serves;
+    *  - writer W completes its commit: the publish it would have lost
+    *    under naive GC commits cleanly, v2 serves;
     *  - writer X claims the v3 intent, lands data, and CRASHES (no
-    *    swap, intent left behind); the safe GC with the grace expired
+    *    manifest, intent left behind); the safe GC with the grace expired
     *    reclaims EXACTLY the dead v3 — data dir and intent file both;
     *  - the retried v3 publish re-claims the purged intent (pinned: the
     *    claim must succeed again) and commits.
@@ -1786,12 +1750,12 @@ object ManifestTable {
     require(publishWithIntent(slim, tableDir, 1L, "writer_v1"),
       "v1 races alone and must claim its intent")
     val s1 = stage("a_v1_published", 0L)
-    // writer W, mid-publish: intent claimed, data landed, pointer NOT yet
-    // swapped — the crash-window instant, but the writer is ALIVE
+    // writer W, mid-publish: intent claimed, data landed, manifest NOT yet
+    // put — the crash-window instant, but the writer is ALIVE
     val v2 = slim.filter(col("event_type") =!= "error")
     require(claimIntent(spark, tableDir, 2L, "writer_w"),
       "writer W races alone for the v2 intent")
-    v2.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v2")
+    val landed = landSnapshot(v2, tableDir, "v2")
     // the naive classifier WOULD call the live writer's snapshot debris —
     // the exact race this operator closes
     require(orphanVersions(spark, tableDir) == Seq(2L),
@@ -1803,7 +1767,8 @@ object ManifestTable {
       "the in-flight snapshot's files must survive the GC")
     val s2 = stage("b_gc_during_publish", 0L)
     // writer W completes — the publish a naive GC would have corrupted
-    swapPointer(spark, tableDir, 2L)
+    require(commitAt(spark, tableDir, 2L, None)(landed),
+      "writer W's v2 commit must land")
     releaseIntent(spark, tableDir, 2L)
     val s3 = stage("c_publish_committed", 0L)
     // writer X crashes after staging: intent + data left behind
@@ -1811,7 +1776,7 @@ object ManifestTable {
       && col("event_type") =!= "click")
     require(claimIntent(spark, tableDir, 3L, "writer_x"),
       "writer X races alone for the v3 intent")
-    v3.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v3")
+    landSnapshot(v3, tableDir, "v3") // writer X dies before its manifest
     // grace 0 = the intent has expired (writer X declared dead)
     val reclaimed = gcOrphansSafe(spark, tableDir, graceMs = 0L)
     require(reclaimed == Seq(3L),
@@ -1890,7 +1855,7 @@ object ManifestTable {
     * `_last_checkpoint`, Iceberg's metadata snapshot list) that makes
     * resolve O(1) at extreme version counts instead of an O(versions)
     * directory listing per read. Checkpoint ids are a monotone sequence
-    * claimed through the same put-if-absent CAS as commit slots, so two
+    * claimed through the same put-if-absent CAS as manifests, so two
     * concurrent checkpointers can never tear one file (the loser
     * returns None and simply retries later — checkpoints are caches,
     * losing one race loses nothing); the LAST locator then moves with
@@ -2005,9 +1970,10 @@ object ManifestTable {
     s1.unionByName(s2).unionByName(s3).orderBy("stage", "event_type")
   }
 
-  // ------------------------------------------------ the partitioned tier
+  // ------------------------------------------------- manifests and commits
 
-  /** One partition of a partitioned-tier snapshot: the dirs under `data/`
+  /** One partition of a snapshot (or an unpartitioned table's one entry):
+    * the dirs under `data/`
     * whose files serve it, oldest first (one dir for a copy-on-write
     * table, base + deltas for merge-on-read); the dirs holding position
     * deletes against those files; and its cumulative `(rows, sum)` stats
@@ -2029,8 +1995,9 @@ object ManifestTable {
     def partitions: Seq[String] = files.keys.toSeq.sorted(keyOrder)
   }
 
-  /** A partitioned-tier snapshot: partition value → [[Entry]], the
-    * `(appId, batchId)` tag of the txn commit that wrote it, if any, and
+  /** A snapshot: partition value → [[Entry]] (the one key [[Whole]] for an
+    * unpartitioned table), the `(appId, batchId)` tag of the txn commit
+    * that wrote it, if any, and
     * the [[DirRecord]] of every dir the entries name (a commit may carry
     * more; [[encode]] keeps only the named ones).
     */
@@ -2047,9 +2014,9 @@ object ManifestTable {
       files(p, dirs).map(_._2.bytes).sum
   }
 
-  /** Where an injected crash fires inside a partitioned commit: after its
-    * data landed but before its manifest is published, or after the
-    * manifest (the commit point) but before the pointer moves.
+  /** Where an injected crash fires inside a commit: after its data
+    * landed but before its manifest is published, or after the manifest
+    * (the commit point) but before the pointer moves.
     */
   sealed trait CrashPoint
   case object BeforeManifest extends CrashPoint
@@ -2075,6 +2042,19 @@ object ManifestTable {
   /** The partition key a [[partitionDir]] name stands for. */
   private def partitionKey(dirName: String): String =
     if (dirName == DEFAULT_PARTITION_NAME) null else unescapePathName(dirName)
+
+  /** The key of an unpartitioned table's one entry. It is never a
+    * partition key, since `""` lands in the NULL partition.
+    */
+  private[operators] val Whole = ""
+
+  /** A key as the manifest stores it: its [[partitionDir]] name, or the
+    * empty text for [[Whole]].
+    */
+  private def keyText(p: String): String = if (p == Whole) "" else partitionDir(p)
+
+  /** The key a manifest's [[keyText]] stands for. */
+  private def textKey(s: String): String = if (s.isEmpty) Whole else partitionKey(s)
 
   /** The partition key a row's raw `partCol` value lands under. */
   private def partitionKeyOf(value: Any): String =
@@ -2105,14 +2085,14 @@ object ManifestTable {
     require(unrecorded.isEmpty, s"no record of ${unrecorded.mkString(", ")}")
     (m.txn.map { case (app, b) => s"#txn\t$app\t$b" } ++
       m.parts.toSeq.sortBy(_._1)(keyOrder).map { case (p, e) =>
-        (Seq(partitionDir(p), e.dirs.mkString(",")) ++
+        (Seq(keyText(p), e.dirs.mkString(",")) ++
           (if (e.dels.isEmpty) None else Some(e.dels.mkString("del:", ",", ""))) ++
           e.stats.map { case (n, s) => s"stats:$n,$s" }).mkString("\t")
       } ++
       named.flatMap { d =>
         val r = m.catalog(d)
         s"#dir\t$d\t${r.schema.json}" +: r.partitions.flatMap(p => r.files(p)
-          .map(f => s"#file\t$d\t${partitionDir(p)}\t${f.bytes}\t${f.name}"))
+          .map(f => s"#file\t$d\t${keyText(p)}\t${f.bytes}\t${f.name}"))
       }).mkString("", "\n", "\n")
   }
 
@@ -2126,13 +2106,13 @@ object ManifestTable {
     def records(tag: String): Seq[Array[String]] =
       lines.filter(_.startsWith(s"#$tag\t")).map(_.split("\t", -1).drop(1))
     val files = records("file").groupMap(_(0)) { f =>
-      partitionKey(f(1)) -> DataFile(f(3), f(2).toLong)
+      textKey(f(1)) -> DataFile(f(3), f(2).toLong)
     }
     Manifest(
       lines.filterNot(_.startsWith("#")).map { line =>
         val f = line.split("\t", -1)
         val tagged = f.drop(2).map(t => t.span(_ != ':')).toMap
-        partitionKey(f(0)) -> Entry(list(f(1)),
+        textKey(f(0)) -> Entry(list(f(1)),
           tagged.get("del").fold(Seq.empty[String])(d => list(d.drop(1))),
           tagged.get("stats").map { s =>
             val Array(n, sum) = s.drop(1).split(",")
@@ -2146,8 +2126,8 @@ object ManifestTable {
       }.toMap)
   }
 
-  /** The commit log of a partitioned table: the versions with a manifest
-    * (a metadata-only commit such as a rollback has no data dir).
+  /** The commit log of a table: the versions with a manifest (a
+    * metadata-only commit such as a rollback has no data dir).
     */
   def manifestVersions(spark: SparkSession, tableDir: String): Seq[Long] =
     listVersions(spark, tableDir, "manifest")
@@ -2178,37 +2158,38 @@ object ManifestTable {
       .map(n => partitionKey(n.stripPrefix(prefix))).sorted(keyOrder)
   }
 
-  /** Land `df` under `data/<dir>` partitioned by `partCol` — an
+  /** Land `df` under `data/<dir>`, partitioned by `partCol` if any — an
     * idempotent overwrite of a dir no published manifest names yet — and
     * return its record.
     */
   private def land(df: DataFrame, tableDir: String, dir: String,
-      partCol: String): DirRecord = {
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/data/$dir")
+      partCol: Option[String]): DirRecord = {
+    val w = df.write.mode(SaveMode.Overwrite)
+    partCol.fold(w)(w.partitionBy(_)).parquet(s"$tableDir/data/$dir")
     recordDir(df.sparkSession, tableDir, dir, partCol, df.schema)
   }
 
-  /** The record of the just-written `data/<dir>`, from its one recursive
-    * listing: every file one `partCol=` dir deep. Names starting with `_`
-    * or `.` (job markers, checksums, sidecars) are not data, as for
-    * Spark's own file index.
+  /** The record of the just-written `data/<dir>`, from its one listing:
+    * every file one `partCol=` dir deep, or, with no `partCol`, every file
+    * directly in the dir, under [[Whole]]. Names starting with `_` or `.`
+    * (job markers, checksums, sidecars) are not data, as for Spark's own
+    * file index.
     */
   private def recordDir(spark: SparkSession, tableDir: String, dir: String,
-      partCol: String, schema: StructType): DirRecord = {
+      partCol: Option[String], schema: StructType): DirRecord = {
     val fs = fileSystem(spark, tableDir)
     val root = fs.makeQualified(new Path(s"$tableDir/data/$dir"))
-    val prefix = s"${escapePathName(partCol)}="
-    val listed = fs.listFiles(root, true)
+    val prefix = partCol.map(c => s"${escapePathName(c)}=")
+    val listed = fs.listFiles(root, partCol.isDefined)
     val files = Seq.newBuilder[(String, DataFile)]
     while (listed.hasNext) {
       val f = listed.next()
       val (part, name) = (f.getPath.getParent, f.getPath.getName)
-      if (part.getParent.toUri.getPath == root.toUri.getPath &&
-          part.getName.startsWith(prefix) && !name.startsWith("_") &&
-          !name.startsWith("."))
-        files += partitionKey(part.getName.stripPrefix(prefix)) ->
-          DataFile(name, f.getLen)
+      val key = prefix.fold(Option(Whole))(pre => Option.when(
+        part.getParent.toUri.getPath == root.toUri.getPath &&
+          part.getName.startsWith(pre))(partitionKey(part.getName.stripPrefix(pre))))
+      if (!name.startsWith("_") && !name.startsWith("."))
+        key.foreach(k => files += k -> DataFile(name, f.getLen))
     }
     DirRecord(schema, files.result().groupMap(_._1)(_._2)
       .map { case (p, fs) => p -> fs.sortBy(_.name) })
@@ -2245,7 +2226,7 @@ object ManifestTable {
     }
 
   /** Put-if-absent `m` as `manifest/v<version>` — the commit point of
-    * every partitioned commit. Returns whether this call published.
+    * every commit. Returns whether this call published.
     */
   private def publishManifest(spark: SparkSession, tableDir: String,
       version: Long, m: Manifest, crash: Option[CrashPoint]): Boolean = {
@@ -2267,16 +2248,24 @@ object ManifestTable {
     * backwards — and returns false. Otherwise `stage` lands the data and
     * derives the manifest, which is published before the pointer swap. A
     * crash before the publish leaves debris no reader resolves, which
-    * the replay overwrites. Returns true when this call committed.
+    * the replay overwrites. A concurrent writer that puts the manifest
+    * first also leaves this call false, its landed data named by no
+    * manifest. Returns true when this call committed.
     */
-  private def commitAt(spark: SparkSession, tableDir: String, version: Long,
-      crash: Option[CrashPoint])(stage: => Manifest): Boolean =
+  private[operators] def commitAt(spark: SparkSession, tableDir: String,
+      version: Long, crash: Option[CrashPoint])(stage: => Manifest): Boolean =
     if (fileSystem(spark, tableDir).exists(manifestPath(tableDir, version))) {
       advancePointer(spark, tableDir, version)
       false
-    } else {
-      require(publishManifest(spark, tableDir, version, stage, crash),
-        s"manifest v$version under $tableDir already exists")
+    } else commit(spark, tableDir, version, stage, crash)
+
+  /** Put `m` as `manifest/v<version>`, then move the pointer to it — the
+    * end of every commit whose writer owns the pointer once it wins.
+    * Returns whether this call committed.
+    */
+  private def commit(spark: SparkSession, tableDir: String, version: Long,
+      m: Manifest, crash: Option[CrashPoint]): Boolean =
+    publishManifest(spark, tableDir, version, m, crash) && {
       swapPointer(spark, tableDir, version)
       true
     }
@@ -2336,35 +2325,40 @@ object ManifestTable {
     * relation over a [[ManifestFileIndex]] built from `m` alone. The data
     * schema is the dirs' recorded one, read as nullable the way Spark
     * reads files (the dirs must agree on it); the partition column's
-    * type comes from the same record; and `tag` adds a second partition
-    * column holding each file's dir version (`v<N>` dirs only), which
-    * filters prune like the partition value.
+    * type, if the table has one, comes from the same record; and `tag`
+    * adds a partition column holding each file's dir version (`v<N>`
+    * dirs only), which filters prune like the partition value. An
+    * unpartitioned table is one [[PartitionDirectory]].
     */
-  private def scan(spark: SparkSession, tableDir: String, partCol: String,
-      m: Manifest, dirsOf: Entry => Seq[String],
+  private def scan(spark: SparkSession, tableDir: String,
+      partCol: Option[String], m: Manifest, dirsOf: Entry => Seq[String],
       tag: Option[String]): DataFrame = {
     val dirs = m.parts.values.flatMap(dirsOf).toSeq.distinct.sorted(dirOrder)
     val schemas = dirs.map(d =>
       StructType(m.catalog(d).schema.fields.map(_.copy(nullable = true))))
     require(schemas.forall(_.fields.toSet == schemas.head.fields.toSet),
       s"dirs ${dirs.mkString(",")} under $tableDir disagree on their schema")
-    val (keyField, data) = schemas.head.fields.partition(_.name == partCol)
-    require(keyField.nonEmpty, s"no $partCol column in ${schemas.head}")
+    val (keyField, data) =
+      schemas.head.fields.partition(f => partCol.contains(f.name))
+    require(keyField.length == partCol.size,
+      s"no ${partCol.mkString} column in ${schemas.head}")
     val partSchema = StructType(keyField ++ tag.map(StructField(_, LongType)))
     val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
-    def value(p: String): Any =
-      if (p == null) null else Cast(Literal(p), keyField.head.dataType, tz).eval()
+    def key(p: String): Seq[Any] = keyField.toSeq.map(k =>
+      if (p == null) null else Cast(Literal(p), k.dataType, tz).eval())
     val root = fileSystem(spark, tableDir)
       .makeQualified(new Path(s"$tableDir/data"))
-    val partDir = escapePathName(partCol)
+    val partDir = partCol.map(escapePathName)
+    def path(d: String, p: String, name: String): Path = new Path(partDir.fold(
+      s"$root/$d/$name")(c => s"$root/$d/$c=${partitionDir(p)}/$name"))
     val partitions = m.parts.toSeq.sortBy(_._1)(keyOrder).flatMap { case (p, e) =>
       val files = m.files(p, dirsOf(e)).map { case (d, f) =>
         d -> FileStatusWithMetadata(new FileStatus(f.bytes, false, 0, 0, 0,
-          new Path(s"$root/$d/$partDir=${partitionDir(p)}/${f.name}")), Map.empty)
+          path(d, p, f.name)), Map.empty)
       }
-      if (tag.isEmpty) Seq(PartitionDirectory(InternalRow(value(p)), files.map(_._2)))
+      if (tag.isEmpty) Seq(PartitionDirectory(InternalRow.fromSeq(key(p)), files.map(_._2)))
       else files.groupMap(_._1)(_._2).toSeq.sortBy(_._1)(dirOrder).map {
-        case (d, fs) => PartitionDirectory(InternalRow(value(p), versionOf(d)), fs)
+        case (d, fs) => PartitionDirectory(InternalRow.fromSeq(key(p) :+ versionOf(d)), fs)
       }
     }
     spark.baseRelationToDataFrame(HadoopFsRelation(
@@ -2392,11 +2386,11 @@ object ManifestTable {
     val m = readManifest(spark, tableDir, version)
     require(m.parts.nonEmpty, s"empty manifest v$version under $tableDir")
     val (touched, clean) = m.parts.keys.toSeq.partition(m.parts(_).dels.nonEmpty)
-    val rows = scan(spark, tableDir, partCol, m, _.dirs,
+    val rows = scan(spark, tableDir, Some(partCol), m, _.dirs,
       Option.when(rowIds || touched.nonEmpty)("_src_version"))
     if (touched.isEmpty) rows
     else {
-      val dels = scan(spark, tableDir, partCol, m, _.dels, None)
+      val dels = scan(spark, tableDir, Some(partCol), m, _.dels, None)
         .select(col(partCol), col("_src_version"), col("_pos"))
       val delBytes = touched.map(p => m.bytes(p, m.parts(p).dels)).sum
       val build = if (delBytes <= broadcastMaxBytes) broadcast(dels) else dels
@@ -2417,23 +2411,24 @@ object ManifestTable {
       partCol: String): DataFrame =
     readPartitionedMoR(spark, tableDir, partCol, live(spark, tableDir))
 
-  /** The one vacuum of the partitioned tier — reachability-based snapshot
-    * expiry (Iceberg's expire-snapshots): the newest `keep` manifests and
-    * the live one are retained, and every data or delete dir they list
-    * is kept; every other dir an expired manifest listed, and an expired
-    * version's own `data/v<N>`, is deleted. Before a compaction the live
-    * manifest still lists the whole delta chain, so nothing goes; after
-    * one, the chain goes in one sweep. Expired snapshots stop resolving
-    * once their files go. Dirs no manifest ever listed — an in-flight or
-    * crashed writer's data — are orphan GC's domain, never this one's.
-    * Reads one manifest per version. Returns the versions of the
-    * reclaimed `v<N>` dirs; txn-named dirs go by the same rule.
+  /** The one vacuum — reachability-based snapshot expiry (Iceberg's
+    * expire-snapshots): the newest `keep` manifests, the live one and
+    * every leased one ([[leasedVersions]]) are retained, and every data
+    * or delete dir they list is kept; every other dir an expired manifest
+    * listed, and an expired version's own `data/v<N>`, is deleted. Before
+    * a compaction the live manifest still lists the whole delta chain, so
+    * nothing goes; after one, the chain goes in one sweep. Expired
+    * snapshots stop resolving once their files go. Dirs no manifest ever
+    * listed — an in-flight or crashed writer's data — are orphan GC's
+    * domain, never this one's. Reads one manifest per version. Returns
+    * the versions of the reclaimed `v<N>` dirs; txn and writer dirs go
+    * by the same rule.
     */
-  def vacuumPartitionedMoR(spark: SparkSession, tableDir: String,
-      keep: Int = 2): Seq[Long] = {
+  def vacuum(spark: SparkSession, tableDir: String, keep: Int = 2): Seq[Long] = {
     require(keep >= 1, s"must keep at least the live snapshot: $keep")
     val all = manifestVersions(spark, tableDir)
-    val retained = all.takeRight(keep).toSet ++ currentVersion(spark, tableDir)
+    val retained = (all.takeRight(keep) ++ currentVersion(spark, tableDir) ++
+      leasedVersions(spark, tableDir)).toSet & all.toSet
     def dirsOf(v: Long): Seq[String] = readManifest(spark, tableDir, v)
       .parts.values.flatMap(e => e.dirs ++ e.dels).toSeq
     val kept = retained.flatMap(dirsOf)
@@ -2443,6 +2438,11 @@ object ManifestTable {
       .filter(d => fs.delete(new Path(s"$tableDir/data/$d"), true)) // existed
       .collect { case d if d.matches("v\\d+") => versionOf(d) }.sorted
   }
+
+  /** [[vacuum]], under the name the benchmark harness calls. */
+  def vacuumPartitionedMoR(spark: SparkSession, tableDir: String,
+      keep: Int = 2): Seq[Long] =
+    vacuum(spark, tableDir, keep)
 
   /** Fold `resolved` — snapshot `from`'s rows, however resolved — into
     * ONE dir per partition under `data/<dir>`, holding one file per
@@ -2457,7 +2457,7 @@ object ManifestTable {
     val prev = readManifest(resolved.sparkSession, tableDir, from).parts
     val rows = if (resolved.columns.contains("_pos")) withRowIds(resolved)
       else resolved
-    val rec = land(rows.repartition(col(partCol)), tableDir, dir, partCol)
+    val rec = land(rows.repartition(col(partCol)), tableDir, dir, Some(partCol))
     Manifest(rec.partitions.map(p =>
       p -> Entry(Seq(dir), stats = prev.get(p).flatMap(_.stats))).toMap,
       catalog = Map(dir -> rec))
@@ -2473,7 +2473,7 @@ object ManifestTable {
       catalog = prev.catalog + (dir -> rec))
 
   /** Compact the live snapshot into `version`: after it, reads open one
-    * dir per partition and [[vacuumPartitionedMoR]] can reclaim the
+    * dir per partition and [[vacuum]] can reclaim the
     * sprawl. Totals are unchanged by contract. With `keyCol` the table is
     * keyed: the fold is the [[readPartitionedMoRKeyed]] resolution, so
     * upserts are applied and tombstones dropped physically (they have
@@ -2519,7 +2519,7 @@ object ManifestTable {
     val prev = manifestAt(spark, tableDir, live(spark, tableDir))
     commitAt(spark, tableDir, version, None) {
       val dir = s"v$version"
-      val rec = land(df, tableDir, dir, partCol)
+      val rec = land(df, tableDir, dir, Some(partCol))
       val landed = rec.partitions
       require(landed.forall(replaced.contains),
         s"rows outside the replaced partitions: ${landed.diff(replaced)}")
@@ -2555,7 +2555,7 @@ object ManifestTable {
           .filter(inPartitions(partCol, touched))
           .unionByName(df)
       val dir = s"v$version"
-      replace(prev, touched, dir, land(merged, tableDir, dir, partCol))
+      replace(prev, touched, dir, land(merged, tableDir, dir, Some(partCol)))
     }
   }
 
@@ -2565,7 +2565,7 @@ object ManifestTable {
     * other four served from v1's files BY REFERENCE, zero copies); v3
     * replaces the error partition with nothing (partition delete: the
     * new version writes no files for it and the manifest drops the
-    * entry); then a keep-1 [[vacuumPartitionedMoR]] runs and must retain
+    * entry); then a keep-1 [[vacuum]] runs and must retain
     * v1 and v2 — both referenced by the live manifest — reclaiming
     * NOTHING (the reachability contract), with the final read served
     * from three physical versions at once. Output: per-stage totals
@@ -2606,7 +2606,7 @@ object ManifestTable {
     val s3 = stage("c_error_deleted")
     // reachability: the live manifest references v1 AND v2 — a keep-1
     // vacuum must reclaim nothing
-    val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
+    val dropped = vacuum(spark, tableDir, keep = 1)
     require(dropped.isEmpty,
       s"vacuum must respect manifest references: dropped $dropped")
     val s4 = stage("d_post_vacuum")
@@ -2703,7 +2703,7 @@ object ManifestTable {
       Set(Seq(4L)), "the rewrite must self-contain every partition")
     val s2 = stage("b_compacted") // same data, one source version
     // the sprawl is now unreferenced: ONE vacuum reclaims all of it
-    val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
+    val dropped = vacuum(spark, tableDir, keep = 1)
     require(dropped == Seq(1L, 2L, 3L),
       s"vacuum must reclaim the whole sprawl: $dropped")
     val s3 = stage("c_post_vacuum")
@@ -2947,13 +2947,14 @@ object ManifestTable {
     fc(spark, tableDir).delete(
       new Path(s"$tableDir/refs/branch_$name"), false)
 
-  /** The q308 audit: a candidate snapshot passes iff it has no NULL
-    * event types, no negative values, and a row count within 2× either
-    * way of the serving snapshot. Returns (pass, n_bad_rows).
+  /** The q308 audit: a candidate snapshot — landed ([[landSnapshot]]),
+    * not yet committed, read from its landed record — passes iff it has
+    * no NULL event types, no negative values, and a row count within 2×
+    * either way of the serving snapshot. Returns (pass, n_bad_rows).
     */
   def auditSnapshot(spark: SparkSession, tableDir: String,
-      candidateVersion: Long): (Boolean, Long) = {
-    val cand = readVersion(spark, tableDir, candidateVersion)
+      candidate: Manifest): (Boolean, Long) = {
+    val cand = scan(spark, tableDir, None, candidate, _.dirs, None)
     val agg = cand.agg(count(lit(1)).as("n"),
       sum(when(col("event_type").isNull || col("value") < 0, 1L)
         .otherwise(0L)).as("bad")).head()
@@ -2964,12 +2965,13 @@ object ManifestTable {
 
   /** q308 — WRITE-AUDIT-PUBLISH, the Iceberg WAP pattern composed from
     * the suite's own parts (q290 branches + an expectation audit + the
-    * q302 GC): a candidate is STAGED on an `audit` branch — fully
-    * materialized, never serving — audited there, and only a PASSING
-    * audit promotes main (a pure fast-forward pointer move, the data
-    * already landed). A failing candidate leaves main untouched, its
-    * branch is dropped, and the q302-safe orphan GC sweeps the
-    * rejected snapshot once its grace expires. Four stages: publish,
+    * q302 GC): a candidate is LANDED on an `audit` branch — fully
+    * materialized, never serving, with no manifest yet — audited from its
+    * landed record, and only a PASSING audit promotes it: its manifest is
+    * put and main fast-forwards (the data already landed). A failing
+    * candidate leaves main untouched and never gets a manifest, its
+    * branch is dropped, and the q302-safe orphan GC sweeps the rejected
+    * snapshot once its grace expires. Four stages: publish,
     * a passing candidate promoted, a corrupt candidate (negated
     * values) rejected with main provably unmoved, and the rejected
     * snapshot reclaimed. Output: per-stage totals through main with
@@ -2978,8 +2980,9 @@ object ManifestTable {
     * pins the rest.
     *
     * Scale: the audit costs one aggregate over the candidate; the
-    * promotion costs two pointer writes regardless of data size — the
-    * quality gate adds ZERO data movement to the publish path.
+    * promotion costs one manifest put and two pointer writes regardless
+    * of data size — the quality gate adds ZERO data movement to the
+    * publish path.
     */
   def writeAuditPublish(events: DataFrame, tableDir: String): DataFrame = {
     val spark = events.sparkSession
@@ -3000,23 +3003,24 @@ object ManifestTable {
     publish(slim, tableDir, 1L)
     setBranch(spark, tableDir, "main", 1L)
     val s1 = stage("a_published", "none", 0L)
-    // candidate A: purchases re-priced — staged on the audit branch
-    slim.withColumn("value",
+    // candidate A: purchases re-priced — landed on the audit branch
+    val candA = landSnapshot(slim.withColumn("value",
         when(col("event_type") === "purchase", col("value") * 2)
-          .otherwise(col("value")))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v2")
+          .otherwise(col("value"))), tableDir, "v2")
     setBranch(spark, tableDir, "audit", 2L)
-    val (ok1, bad1) = auditSnapshot(spark, tableDir, 2L)
+    val (ok1, bad1) = auditSnapshot(spark, tableDir, candA)
     require(ok1 && bad1 == 0L, s"the clean candidate must pass: $bad1 bad")
-    // publish = promote the pointer; the data moved before the gate
+    // publish = commit the candidate and promote main; the data moved
+    // before the gate
+    require(commitAt(spark, tableDir, 2L, None)(candA),
+      "the promoted candidate races alone for v2")
     require(fastForwardBranch(spark, tableDir, "main", 2L))
-    swapPointer(spark, tableDir, 2L)
     val s2 = stage("b_audit_pass_promoted", "pass", 0L)
     // candidate B: corrupt (values negated) — the audit must refuse it
-    slim.withColumn("value", -col("value"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/data/v3")
+    val candB = landSnapshot(slim.withColumn("value", -col("value")),
+      tableDir, "v3")
     setBranch(spark, tableDir, "audit", 3L)
-    val (ok2, bad2) = auditSnapshot(spark, tableDir, 3L)
+    val (ok2, bad2) = auditSnapshot(spark, tableDir, candB)
     require(!ok2 && bad2 > 0L, "the corrupt candidate must fail")
     require(refVersion(spark, tableDir, "branch_main").contains(2L),
       "a failed audit must leave main untouched")
@@ -3144,7 +3148,7 @@ object ManifestTable {
       val dir = s"v$version"
       val data = if (!deletes) rows
         else rows.select(col(partCol), col("_src_version"), col("_pos"))
-      val rec = land(data, tableDir, dir, partCol)
+      val rec = land(data, tableDir, dir, Some(partCol))
       Manifest(extend(prev.parts, rec.partitions, dir, deletes, delta),
         catalog = prev.catalog + (dir -> rec))
     }
@@ -3153,94 +3157,91 @@ object ManifestTable {
   // ---------------------------------------------------------------- q327
 
   /** Outcome of one optimistic partitioned commit: the version that
-    * landed and how many CAS slots the writer lost on the way.
+    * landed and how many manifest put-if-absents the writer lost on the
+    * way.
     */
   final case class PartitionCommit(version: Long, casLosses: Int)
 
-  /** Stage a writer's replacement files under a WRITER-UNIQUE dir —
-    * data lands exactly once however many times the metadata commit
-    * retries (Iceberg writes data files first; only the metadata swap
-    * is optimistic). Overwrite mode keeps a re-stage idempotent. The
-    * frame's schema rides along as the `_schema` sidecar, for the
-    * commit's dir record.
+  /** A writer's landed replacement files: the dir under `data/` that only
+    * this staging lands in, and its record.
+    */
+  final case class Staged(dir: String, rec: DirRecord)
+
+  /** Land a writer's replacement files under a dir of its own — data
+    * lands exactly once however many times the metadata commit retries
+    * (Iceberg writes data files first; only the metadata put is
+    * optimistic) — and record them as they land.
     */
   def stagePartitions(df: DataFrame, tableDir: String, partCol: String,
-      writer: String): Unit = {
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
-      .parquet(s"$tableDir/stage/$writer")
-    writePointer(df.sparkSession, s"$tableDir/stage/$writer/_schema",
-      df.schema.json)
+      writer: String): Staged = {
+    val dir = writerDir(writer)
+    Staged(dir, land(df, tableDir, dir, Some(partCol)))
   }
 
   /** Partitions MODIFIED by the commits in `(baseVersion, headVersion]`:
-    * entries a manifest serves from its own version's dir (freshly
-    * landed files) plus entries the previous manifest had that this one
-    * dropped (partition deletes). This is the conflict-validation set
-    * Iceberg's `validateNoConflictingData` walks over intervening
-    * snapshots.
+    * entries a manifest changed from the previous manifest's (fresh
+    * files, deletes or stats) plus entries the previous manifest had
+    * that this one dropped (partition deletes). This is the
+    * conflict-validation set Iceberg's `validateNoConflictingData` walks
+    * over intervening snapshots.
     */
   def partitionsModifiedSince(spark: SparkSession, tableDir: String,
       baseVersion: Long, headVersion: Long): Set[String] =
     ((baseVersion + 1) to headVersion).iterator.flatMap { v =>
+      val prev = manifestAt(spark, tableDir, v - 1).parts
       val cur = manifestAt(spark, tableDir, v).parts
-      cur.collect { case (p, e) if e.dirs.contains(s"v$v") => p } ++
-        (manifestAt(spark, tableDir, v - 1).parts.keySet -- cur.keySet)
+      cur.collect { case (p, e) if !prev.get(p).contains(e) => p } ++
+        (prev.keySet -- cur.keySet)
     }.toSet
 
   /** Commit a writer's staged partition overwrite OPTIMISTICALLY from
     * its pinned `baseVersion` — the Iceberg concurrent-writer story on
     * the partition-mapped table. The loop: read the head; if any commit
     * since the writer's base modified one of its `replaced` partitions,
-    * return None — the writer's staged data was derived from a state
-    * another writer has since replaced, and publishing it would silently
-    * drop that writer's change (write skew); the caller must re-derive
-    * from the new head and try again — OVERLAPPING WRITERS SERIALIZE.
-    * Otherwise CAS the next slot: the winner renames its staged dir to
-    * the version dir (metadata-only move — the files were written once),
-    * commits prev-manifest − replaced + landed, and advances the
-    * pointer; a loser waits for the winner's pointer and retries the
+    * drop the staged files and return None — the writer's data was
+    * derived from a state another writer has since replaced, and
+    * publishing it would silently drop that writer's change (write
+    * skew); the caller must re-derive from the new head and try again —
+    * OVERLAPPING WRITERS SERIALIZE. Otherwise put the next manifest,
+    * prev-manifest − replaced + the staged dir, and advance the pointer;
+    * a loser of the put waits for the winner's pointer and retries the
     * validation at the new head — DISJOINT WRITERS BOTH COMMIT, each
-    * paying only a metadata rebase for the slots it lost.
+    * paying only a metadata rebase for the puts it lost. `beforePut`
+    * runs before every put with the losses so far: a fault-injection
+    * hook that lets a deterministic driver play a rival's commit there.
     */
   def commitStagedPartitions(spark: SparkSession, tableDir: String,
-      partCol: String, replaced: Seq[String], writer: String,
-      baseVersion: Long, maxRetries: Int = 8,
-      onLoss: () => Unit = () => ()): Option[PartitionCommit] = {
-    val ctx = fc(spark, tableDir)
+      staged: Staged, replaced: Seq[String], baseVersion: Long,
+      maxRetries: Int = 8,
+      beforePut: Int => Unit = _ => ()): Option[PartitionCommit] = {
+    val landed = staged.rec.partitions
+    require(landed.forall(replaced.contains),
+      s"rows outside the replaced partitions: ${landed.diff(replaced)}")
     var losses = 0
     while (losses <= maxRetries) {
       val head = currentVersion(spark, tableDir).getOrElse(0L)
-      val conflicts = partitionsModifiedSince(spark, tableDir,
-        baseVersion, head).intersect(replaced.toSet)
-      if (conflicts.nonEmpty) return None // serialize: re-derive from head
-      val target = head + 1
-      if (claimCommit(spark, tableDir, target, writer)) {
-        commitAt(spark, tableDir, target, None) {
-          val prev = manifestAt(spark, tableDir, head)
-          val dir = s"v$target"
-          ctx.rename(new Path(s"$tableDir/stage/$writer"),
-            new Path(s"$tableDir/data/$dir"), Options.Rename.OVERWRITE)
-          val rec = recordDir(spark, tableDir, dir, partCol,
-            DataType.fromJson(readFully(ctx, new Path(s"$tableDir/data/$dir/_schema")))
-              .asInstanceOf[StructType])
-          val landed = rec.partitions
-          require(landed.forall(replaced.contains),
-            s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-          replace(prev, replaced, dir, rec)
-        }
-        return Some(PartitionCommit(target, losses))
+      if (partitionsModifiedSince(spark, tableDir, baseVersion, head)
+          .exists(replaced.contains)) {
+        // serialize: the staged data is stale, and no manifest names it
+        fileSystem(spark, tableDir).delete(
+          new Path(s"$tableDir/data/${staged.dir}"), true)
+        return None
       }
+      val target = head + 1
+      beforePut(losses)
+      if (commit(spark, tableDir, target, replace(
+          manifestAt(spark, tableDir, head), replaced, staged.dir, staged.rec),
+          None))
+        return Some(PartitionCommit(target, losses))
       losses += 1
-      onLoss() // fault-injection hook (crashBeforeSwap's sibling): lets
-      //          a deterministic driver play the winner's next move here
-      // lost the slot: wait for the winner's pointer so the rebase reads
+      // lost the put: wait for the winner's pointer so the rebase reads
       // a COMPLETE head (manifest + pointer), bounded spin
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (currentVersion(spark, tableDir).getOrElse(0L) < target &&
           System.nanoTime() < deadline)
         Thread.sleep(10)
     }
-    sys.error(s"$writer exhausted $maxRetries commit retries under contention")
+    sys.error(s"${staged.dir} exhausted $maxRetries commit retries under contention")
   }
 
   /** q327 — CONCURRENT WRITERS on the partition-mapped table, closing
@@ -3248,24 +3249,24 @@ object ManifestTable {
     * whole-snapshot commits; this proves it where commits carry
     * partition manifests that must MERGE). Writers A (re-price
     * purchase ×2) and B (re-price view ×3) stage from the SAME pinned
-    * base and race for v2: A wins the slot, B loses the CAS, validates
-    * that no commit since its base touched `view`, and lands v3 as a
-    * METADATA-ONLY rebase — its staged files are renamed, never
-    * rewritten (require-pinned), and the v3 manifest merges both
-    * writers' partitions with the untouched three still served from v1
-    * by reference. Then writer C re-prices `purchase` ×5 from the STALE
+    * base: A commits v2; B loses its put to a rival commit, validates
+    * that no commit since its base touched `view`, and lands v4 as a
+    * METADATA-ONLY rebase — v4 names B's staged dir exactly as it landed
+    * (require-pinned), and the v4 manifest merges both writers'
+    * partitions with the untouched three still served from v1 by
+    * reference. Then writer C re-prices `purchase` ×5 from the STALE
     * v1 base: validation sees A's intervening purchase commit and
     * REFUSES (None — publishing would silently drop A's re-price);
-    * C re-derives from the live head and commits v4 — ×5 on top of ×2,
+    * C re-derives from the live head and commits v5 — ×5 on top of ×2,
     * the serial result. Output: per-stage totals with version,
-    * cas_losses, and conflict flags; the oracle pins versions (1,2,3,4),
+    * cas_losses, and conflict flags; the oracle pins versions (1,2,4,5),
     * B's single CAS loss, C's single conflict, and computes every
     * table state from the raw events.
     *
     * Scale: disjoint concurrent writers never rewrite data on conflict —
-    * a lost slot costs one manifest read + one rename, independent of
-    * data size; only a true partition overlap pays a re-derive, which
-    * is the minimum serializable isolation allows.
+    * a lost put costs one manifest read + one small-file create,
+    * independent of data size; only a true partition overlap pays a
+    * re-derive, which is the minimum serializable isolation allows.
     */
   def concurrentPartitionCommits(events: DataFrame,
       tableDir: String): DataFrame = {
@@ -3278,52 +3279,40 @@ object ManifestTable {
         .withColumn("value", col("value") * k)
     // both writers stage from the SAME pinned snapshot — the race
     val pinned = readPartitionedMoR(spark, tableDir, "event_type", base)
-    stagePartitions(repriced(pinned, "purchase", 2), tableDir,
+    val stagedA = stagePartitions(repriced(pinned, "purchase", 2), tableDir,
       "event_type", "writer_a")
-    stagePartitions(repriced(pinned, "view", 3), tableDir,
+    val stagedB = stagePartitions(repriced(pinned, "view", 3), tableDir,
       "event_type", "writer_b")
-    val a = commitStagedPartitions(spark, tableDir, "event_type",
-      Seq("purchase"), "writer_a", base)
+    val a = commitStagedPartitions(spark, tableDir, stagedA, Seq("purchase"),
+      base)
     require(a.contains(PartitionCommit(2L, 0)),
       s"writer A races alone for v2 and must win: $a")
-    // B's files were staged BEFORE A committed; the disjoint rebase must
-    // not touch them — pin the staged bytes across the commit
-    val bStagedFile = new java.io.File(
-      s"$tableDir/stage/writer_b/event_type=view")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    // exercise B's CAS-loss path deterministically: a third committer
-    // claims the v3 slot NOW; B races for v3, loses the slot, and the
-    // onLoss hook plays the winner's completion (a no-op commit: v2's
-    // manifest re-committed as v3) at exactly that point — B then waits
-    // out the (already satisfied) pointer, revalidates at the new head,
-    // and lands v4. This is the live-winner interleaving; the
-    // crashed-winner case is the spec's to drive.
-    require(claimCommit(spark, tableDir, 3L, "writer_noop"),
-      "pre-claiming the v3 slot must succeed")
-    val b = commitStagedPartitions(spark, tableDir, "event_type",
-      Seq("view"), "writer_b", base,
-      onLoss = () => rollbackPartitioned(spark, tableDir, 2L))
+    // exercise B's CAS-loss path deterministically: just before B's first
+    // put, a third committer lands v3 (a no-op commit: v2's manifest
+    // re-committed), so B's put of v3 loses; B waits out the (already
+    // satisfied) pointer, revalidates at the new head, and lands v4. This
+    // is the live-winner interleaving; the crashed-winner case is the
+    // spec's to drive.
+    val b = commitStagedPartitions(spark, tableDir, stagedB, Seq("view"), base,
+      beforePut = losses => if (losses == 0) rollbackPartitioned(spark, tableDir, 2L))
     require(b.contains(PartitionCommit(4L, 1)),
-      s"writer B must lose the pre-claimed slot once, then land v4: $b")
-    val bLandedFile = new java.io.File(
-      s"$tableDir/data/v4/event_type=view")
-      .listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    require(bLandedFile == bStagedFile,
-      "the disjoint rebase must rename B's staged files, never rewrite them")
+      s"writer B must lose the v3 put once, then land v4: $b")
+    require(readManifest(spark, tableDir, 4L).catalog.get(stagedB.dir)
+        .contains(stagedB.rec),
+      "the disjoint rebase must commit B's staged files as landed, never rewrite them")
     // writer C: OVERLAPPING overwrite from the stale base — must refuse
-    stagePartitions(repriced(pinned, "purchase", 5), tableDir,
-      "event_type", "writer_c")
-    val cStale = commitStagedPartitions(spark, tableDir, "event_type",
-      Seq("purchase"), "writer_c", base)
+    val cStale = commitStagedPartitions(spark, tableDir,
+      stagePartitions(repriced(pinned, "purchase", 5), tableDir,
+        "event_type", "writer_c"), Seq("purchase"), base)
     require(cStale.isEmpty,
       s"C's stale overwrite of A's partition must be refused: $cStale")
     // serialize: re-derive from the live head and commit on top
     val head = currentVersion(spark, tableDir).get
-    stagePartitions(
-      repriced(readPartitionedMoR(spark, tableDir, "event_type", head),
-        "purchase", 5), tableDir, "event_type", "writer_c")
-    val c = commitStagedPartitions(spark, tableDir, "event_type",
-      Seq("purchase"), "writer_c", head)
+    val c = commitStagedPartitions(spark, tableDir,
+      stagePartitions(
+        repriced(readPartitionedMoR(spark, tableDir, "event_type", head),
+          "purchase", 5), tableDir, "event_type", "writer_c"),
+      Seq("purchase"), head)
     require(c.contains(PartitionCommit(5L, 0)),
       s"C's rebased commit races alone and must land v5: $c")
     def stage(name: String, v: Long, losses: Int, conflict: Int): DataFrame =
@@ -3407,7 +3396,7 @@ object ManifestTable {
     */
   def readPartitionedMoRKeyed(spark: SparkSession, tableDir: String,
       partCol: String, keyCol: String, version: Long): DataFrame = {
-    val tagged = scan(spark, tableDir, partCol,
+    val tagged = scan(spark, tableDir, Some(partCol),
       readManifest(spark, tableDir, version), _.dirs, Some("_commit_version"))
     val cols = tagged.columns.filter(_ != "_commit_version")
     tagged
@@ -3450,7 +3439,7 @@ object ManifestTable {
         (v, false)
       case None =>
         val dir = s"t_${appId}_b$batchId"
-        val rec = land(df, tableDir, dir, partCol)
+        val rec = land(df, tableDir, dir, Some(partCol))
         (commitNext(spark, tableDir, crash, Int.MaxValue) { head =>
           val prev = manifestAt(spark, tableDir, head)
           Manifest(extend(prev.parts, rec.partitions, dir),
@@ -3530,14 +3519,14 @@ object ManifestTable {
     val s3 = stage("c_tombstoned", 0L)
     // reachability, pre-compaction: keep-1 must reclaim NOTHING — the
     // live manifest references v1..v3
-    val preDropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
+    val preDropped = vacuum(spark, tableDir, keep = 1)
     require(preDropped.isEmpty,
       s"pre-compaction vacuum must respect delta references: $preDropped")
     compactPartitionedMoR(spark, tableDir, 4L, "event_type",
       keyCol = Some("event_id"))
     val s4 = stage("d_compacted", 0L)
     // post-compaction: the chain unpins — keep-1 reclaims exactly v1..v3
-    val dropped = vacuumPartitionedMoR(spark, tableDir, keep = 1)
+    val dropped = vacuum(spark, tableDir, keep = 1)
     require(dropped == Seq(1L, 2L, 3L),
       s"post-compaction vacuum must reclaim exactly the delta chain: $dropped")
     val s5 = stage("e_post_vacuum", dropped.size.toLong)

@@ -965,14 +965,15 @@ object EventStream {
     * the consistency closer the judge's streaming tier still lacked: the
     * q186 change feed arrives as a STREAM (3 replayed chunks), each
     * micro-batch MERGEs into a durable per-key state table, the merge is
-    * committed through the [[graft.operators.ManifestTable]] atomic
-    * pointer protocol (q241), and a crash is injected after batch 1's
+    * committed through the [[graft.operators.ManifestTable]] manifest
+    * protocol (q241), and a crash is injected after batch 1's
     * commit but before its CHECKPOINT commit — the q231 uncovered
     * window. The restart replays batch 1; idempotence holds because each
     * batch's merge is a pure function of `batchId`: it reads snapshot
     * `v(batchId+1)` BY VERSION (never the pointer — after the crash the
     * pointer already names this batch's own output, and reading it would
-    * double-apply) and overwrites snapshot `v(batchId+2)`. The final
+    * double-apply) and commits snapshot `v(batchId+2)`, which the replay
+    * finds already committed and leaves untouched. The final
     * table, read through the pointer, must equal the batch
     * [[graft.operators.Scd.cdcApply]] fold exactly — streaming ingest →
     * warehouse consistency across a mid-stream restart.
@@ -1012,7 +1013,7 @@ object EventStream {
               money(col("value")).as("val")).as("l"))
           .groupBy("user_id")
           .agg(count(lit(1)).as("bn"), max(col("l")).as("blast"))
-        val prev = spark.read.parquet(s"$tbl/data/v${batchId + 1}")
+        val prev = ManifestTable.readVersion(spark, tbl, batchId + 1)
         val merged = prev.join(bAgg, Seq("user_id"), "full")
           .select(col("user_id"),
             (coalesce(col("n_ops"), lit(0L)) +
@@ -1021,8 +1022,7 @@ object EventStream {
         ManifestTable.publish(merged, tbl, batchId + 2)
         true
     }.size
-    val versions = new java.io.File(s"$tbl/data").listFiles()
-      .count(d => d.isDirectory && d.getName.startsWith("v"))
+    val versions = ManifestTable.manifestVersions(spark, tbl).size
     ManifestTable.read(spark, tbl)
       .select(col("user_id"), col("n_ops"),
         col("last.op").as("last_op"),

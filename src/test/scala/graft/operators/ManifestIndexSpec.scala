@@ -58,10 +58,10 @@ object CountingFileSystem {
 class CountingAbstractFileSystem(uri: URI, conf: Configuration)
   extends DelegateToFileSystem(uri, new CountingFileSystem, conf, "file", false)
 
-/** Partitioned reads are planned from the manifest alone: a constant
-  * number of filesystem calls whatever the partition count, no listing,
-  * no Spark job while the frame is built, and partition filters prune
-  * the manifest's files.
+/** Reads are planned from the manifest alone: a constant number of
+  * filesystem calls whatever the partition or file count, no listing, no
+  * Spark job while the frame is built, and partition filters prune the
+  * manifest's files.
   */
 class ManifestIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -121,27 +121,47 @@ class ManifestIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     tbl
   }
 
-  test("planning a partitioned read costs the same filesystem calls and no job at 10 and at 1,000 partitions") {
+  /** An unpartitioned table of `n` files, one row each. */
+  private def flat(dir: String, n: Int): String = {
+    val tbl = s"$dir/f$n"
+    ManifestTable.publish(spark.range(0L, n.toLong, 1L, n)
+      .select(col("id").as("event_id"), (col("id") * 10).as("cents")), tbl, 1L)
+    val files = ManifestTable.readManifest(spark, tbl, 1L).catalog.values
+      .map(_.files.values.map(_.size).sum).sum
+    assert(files == n, s"$n files landed")
+    tbl
+  }
+
+  test("planning a read costs the same filesystem calls and no job at 10 and at 1,000 partitions or files") {
     val out = java.nio.file.Files.createTempDirectory("graft-mplan")
     try {
-      val plans = Seq(10, 1000).map { n =>
-        val tbl = table(out.toString, n)
-        val ((df, nJobs), calls) = counted(jobs {
-          val df = ManifestTable.readPartitionedMoR(spark, tbl, "event_type", 3L)
-          df.queryExecution.executedPlan
-          df
-        })
-        // the frame serves the table: 3n ids, less the multiples of 7
-        assert(df.count() == (0L until 3L * n).count(_ % 7 != 0), s"$n partitions")
-        (n, calls, nJobs)
-      }
-      val Seq((_, small, _), (_, large, _)) = plans
-      assert(small == large,
-        s"filesystem calls grow with the partition count: $small vs $large")
-      plans.foreach { case (n, calls, nJobs) =>
-        val walks = calls.filter(c => c.startsWith("list") || c == "getContentSummary")
-        assert(walks.isEmpty, s"$n partitions: listings while planning: $walks")
-        assert(nJobs == 0, s"$n partitions: $nJobs Spark jobs while planning")
+      // what grows, the table at n, its read, and the rows it serves: 3n
+      // ids less the multiples of 7, or n ids
+      val inputs = Seq[(String, Int => String, String => DataFrame, Int => Long)](
+        ("partitions", table(out.toString, _),
+          ManifestTable.readPartitionedMoR(spark, _, "event_type", 3L),
+          n => (0L until 3L * n).count(_ % 7 != 0).toLong),
+        ("files", flat(out.toString, _), ManifestTable.readVersion(spark, _, 1L),
+          _.toLong))
+      for ((unit, build, read, rows) <- inputs) {
+        val plans = Seq(10, 1000).map { n =>
+          val tbl = build(n)
+          val ((df, nJobs), calls) = counted(jobs {
+            val df = read(tbl)
+            df.queryExecution.executedPlan
+            df
+          })
+          assert(df.count() == rows(n), s"$n $unit")
+          (n, calls, nJobs)
+        }
+        val Seq((_, small, _), (_, large, _)) = plans
+        assert(small == large,
+          s"filesystem calls grow with the $unit count: $small vs $large")
+        plans.foreach { case (n, calls, nJobs) =>
+          val walks = calls.filter(c => c.startsWith("list") || c == "getContentSummary")
+          assert(walks.isEmpty, s"$n $unit: listings while planning: $walks")
+          assert(nJobs == 0, s"$n $unit: $nJobs Spark jobs while planning")
+        }
       }
     } finally graft.Scratch.rmTree(out.toFile)
   }

@@ -26,7 +26,7 @@ class ManifestTableSpec extends SparkSpec {
       assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
       val v2 = v1.filter(col("event_id") =!= 2L)
       intercept[ManifestTable.InjectedCrash] {
-        ManifestTable.publish(v2, tbl, 2L, crashBeforeSwap = true)
+        ManifestTable.publish(v2, tbl, 2L, Some(ManifestTable.BeforeManifest))
       }
       // pointer untouched; reader resolves v1 with v1's exact content
       assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
@@ -35,11 +35,33 @@ class ManifestTableSpec extends SparkSpec {
       assert(new java.io.File(s"$tbl/data/v2").isDirectory,
         "crash window must leave the landed data dir behind")
       // recovery = re-run; the pointer flips and v2 serves
-      ManifestTable.publish(v2, tbl, 2L)
+      assert(ManifestTable.publish(v2, tbl, 2L))
       assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
       assert(totals(ManifestTable.read(spark, tbl)) == Map("a" -> 2L))
       // commit leaves no tmp pointer debris
       assert(!new java.io.File(s"$tbl/CURRENT.tmp").exists())
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
+  test("re-publishing a committed version is a no-op: its files and rows stay") {
+    val out = java.nio.file.Files.createTempDirectory("graft-mt-spec")
+    try {
+      val tbl = s"$out/tbl"
+      def files(): Map[String, Long] = new java.io.File(s"$tbl/data/v1")
+        .listFiles().filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.length).toMap
+      def rows() = ManifestTable.readVersion(spark, tbl, 1L).collect().toSet
+      assert(ManifestTable.publish(
+        Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("event_id", "event_type", "value")
+          .repartition(2), tbl, 1L))
+      val (files1, rows1) = (files(), rows())
+      // a different frame under the committed version: refused, untouched
+      assert(!ManifestTable.publish(
+        Seq((9L, "z", 9.0)).toDF("event_id", "event_type", "value"), tbl, 1L),
+        "a committed version must not be published again")
+      assert(files() == files1, "v1's files must keep their names and sizes")
+      assert(rows() == rows1 && rows1.size == 2, "v1 must keep its rows")
+      assert(ManifestTable.currentVersion(spark, tbl).contains(1L))
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
@@ -105,27 +127,26 @@ class ManifestTableSpec extends SparkSpec {
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0))
         .toDF("event_id", "event_type", "value")
       ManifestTable.publish(base, tbl, 1L)
-      // a REAL race: 8 threads stage + CAS the same v2 slot concurrently
+      // a REAL race: 8 threads land their own dirs and race the v2
+      // manifest put concurrently
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
       val attempts = Await.result(
         Future.sequence((0 until 8).map { i =>
-          Future(i -> ManifestTable.tryCommit(
+          Future(i -> ManifestTable.publish(
             base.withColumn("value", col("value") + i),
-            tbl, 2L, s"writer_$i"))
+            tbl, 2L, writer = Some(s"writer_$i")))
         }), 2.minutes)
       val winners = attempts.filter(_._2)
       assert(winners.size == 1, s"exactly one CAS winner, got $winners")
       // the pointer names v2, the winner's dir exists, and every loser's
-      // staged debris is gone
+      // dir is gone
       assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
-      assert(new java.io.File(s"$tbl/data/v2").isDirectory)
-      val stageDir = new java.io.File(s"$tbl/stage")
-      val leftover =
-        if (stageDir.isDirectory) stageDir.listFiles().map(_.getName).toSeq
-        else Seq.empty
-      assert(leftover.isEmpty, s"losers' staged dirs must be deleted: $leftover")
+      val winnerDirs = ManifestTable.readManifest(spark, tbl, 2L).catalog.keySet
+      assert(winnerDirs.forall(d => new java.io.File(s"$tbl/data/$d").isDirectory))
+      val leftover = new java.io.File(s"$tbl/data").list().toSet -- winnerDirs - "v1"
+      assert(leftover.isEmpty, s"losers' dirs must be deleted: $leftover")
       // the committed snapshot is the winner's candidate, complete
       val w = winners.head._1
       val got = ManifestTable.read(spark, tbl)
@@ -337,15 +358,15 @@ class ManifestTableSpec extends SparkSpec {
       // two readers lease v1 independently
       ManifestTable.acquireLease(spark, tbl, 1L, "r1")
       ManifestTable.acquireLease(spark, tbl, 1L, "r2")
-      assert(ManifestTable.vacuumLeased(spark, tbl, keep = 1) == Seq(2L))
+      assert(ManifestTable.vacuum(spark, tbl, keep = 1) == Seq(2L))
       assert(v1Exists, "leased v1 must survive a keep-1 vacuum")
       assert(ManifestTable.readVersion(spark, tbl, 1L).count() == 1L)
       // one release is not enough — r2 still holds it
       ManifestTable.releaseLease(spark, tbl, 1L, "r1")
-      assert(ManifestTable.vacuumLeased(spark, tbl, keep = 1).isEmpty)
+      assert(ManifestTable.vacuum(spark, tbl, keep = 1).isEmpty)
       assert(v1Exists, "v1 still leased by r2")
       ManifestTable.releaseLease(spark, tbl, 1L, "r2")
-      assert(ManifestTable.vacuumLeased(spark, tbl, keep = 1) == Seq(1L))
+      assert(ManifestTable.vacuum(spark, tbl, keep = 1) == Seq(1L))
       assert(!v1Exists, "fully released v1 must be reclaimed")
       // the live snapshot serves throughout
       assert(ManifestTable.read(spark, tbl).count() == 1L)
@@ -467,7 +488,7 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.setBranch(spark, tbl, "main", 1L)
       // tag immutability: the CAS refuses a re-create at another version
       assert(ManifestTable.createTag(spark, tbl, "rel", 1L))
-      base.write.parquet(s"$tbl/data/v2")
+      ManifestTable.landSnapshot(base, tbl, "v2")
       assert(!ManifestTable.createTag(spark, tbl, "rel", 2L),
         "a tag must never move")
       assert(ManifestTable.refVersion(spark, tbl, "tag_rel").contains(1L))
@@ -498,21 +519,22 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.publish(base, tbl, 2L)
       assert(ManifestTable.orphanVersions(spark, tbl).isEmpty,
         "time-travel history must never be GC candidates")
-      // a CAS-committed version above the pointer... cannot exist via
-      // tryCommit (it swaps the pointer), but a claimed slot alone must
-      // protect: simulate a committer that claimed v4 and wrote data but
-      // died before its swap — NOT debris, its slot says it owns v4
-      base.write.parquet(s"$tbl/data/v4")
-      assert(ManifestTable.claimCommit(spark, tbl, 4L, "w"))
+      // a committed version above the pointer: a committer that put v4's
+      // manifest and died before its swap — NOT debris, its manifest
+      // says it committed
+      intercept[ManifestTable.InjectedCrash] {
+        ManifestTable.publish(base, tbl, 4L, Some(ManifestTable.BeforePointer))
+      }
+      assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
       assert(ManifestTable.orphanVersions(spark, tbl).isEmpty,
-        "a claimed commit slot protects its version dir")
+        "a committed version whose pointer lags protects its version dir")
       // a branch above the pointer protects its snapshot (q290 dev)
-      base.write.parquet(s"$tbl/data/v5")
+      ManifestTable.landSnapshot(base, tbl, "v5")
       ManifestTable.setBranch(spark, tbl, "dev", 5L)
       assert(ManifestTable.orphanVersions(spark, tbl).isEmpty,
         "a ref'd version above the pointer is not debris")
-      // true debris: landed data, no pointer/slot/ref names it
-      base.write.parquet(s"$tbl/data/v7")
+      // true debris: landed data, no pointer/manifest/ref names it
+      ManifestTable.landSnapshot(base, tbl, "v7")
       assert(ManifestTable.orphanVersions(spark, tbl) == Seq(7L))
       assert(ManifestTable.gcOrphansSafe(spark, tbl, graceMs = 0L) == Seq(7L))
       assert(!new java.io.File(s"$tbl/data/v7").exists())
@@ -520,7 +542,7 @@ class ManifestTableSpec extends SparkSpec {
         assert(new java.io.File(s"$tbl/data/v$v").isDirectory, s"v$v ate")
       // an unborn table GCs nothing
       val fresh = s"$out/fresh"
-      base.write.parquet(s"$fresh/data/v1")
+      ManifestTable.landSnapshot(base, fresh, "v1")
       assert(ManifestTable.orphanVersions(spark, fresh).isEmpty,
         "no pointer -> no committed frontier -> GC nothing")
     } finally graft.Scratch.rmTree(out.toFile)
@@ -533,37 +555,35 @@ class ManifestTableSpec extends SparkSpec {
         (4L, "b", 4.0)).toDF("event_id", "event_type", "value")
       val delta = Seq((100L, "c", 9.0))
         .toDF("event_id", "event_type", "value")
+      // the data files version v's manifest records
       def nFiles(tbl: String, v: Long): Int =
-        new java.io.File(s"$tbl/data/v$v").listFiles()
-          .count(_.getName.endsWith(".parquet"))
+        ManifestTable.readManifest(spark, tbl, v).catalog.values
+          .map(_.files.values.map(_.size).sum).sum
+      def race(df: org.apache.spark.sql.DataFrame, tbl: String, v: Long,
+          writer: String): Boolean =
+        ManifestTable.publish(df, tbl, v, writer = Some(writer))
       // interleaving 1 (the operator's order): compactor claims v2 first
       val t1 = s"$out/compact_first"
       ManifestTable.publish(base.repartition(4), t1, 1L)
-      assert(ManifestTable.tryCommit(
-        ManifestTable.readVersion(spark, t1, 1L).repartition(1),
+      assert(race(ManifestTable.readVersion(spark, t1, 1L).repartition(1),
         t1, 2L, "compactor"), "compactor races alone, must win")
-      assert(!ManifestTable.tryCommit(
-        ManifestTable.readVersion(spark, t1, 1L).unionByName(delta),
+      assert(!race(ManifestTable.readVersion(spark, t1, 1L).unionByName(delta),
         t1, 2L, "appender"), "stale append must lose the CAS")
       // the refused append is invisible: CURRENT is the compacted base
       assert(ManifestTable.currentVersion(spark, t1).contains(2L))
       assert(ManifestTable.read(spark, t1).count() == 4L)
       assert(nFiles(t1, 2L) < nFiles(t1, 1L), "compaction must shrink v2")
-      assert(ManifestTable.tryCommit(
-        ManifestTable.read(spark, t1).unionByName(delta),
+      assert(race(ManifestTable.read(spark, t1).unionByName(delta),
         t1, 3L, "appender"), "rebased append races alone, must win")
       // interleaving 2 (mirrored): the appender claims v2 first
       val t2 = s"$out/append_first"
       ManifestTable.publish(base.repartition(4), t2, 1L)
-      assert(ManifestTable.tryCommit(
-        ManifestTable.readVersion(spark, t2, 1L).unionByName(delta),
+      assert(race(ManifestTable.readVersion(spark, t2, 1L).unionByName(delta),
         t2, 2L, "appender"), "appender races alone, must win")
-      assert(!ManifestTable.tryCommit(
-        ManifestTable.readVersion(spark, t2, 1L).repartition(1),
+      assert(!race(ManifestTable.readVersion(spark, t2, 1L).repartition(1),
         t2, 2L, "compactor"), "stale compaction must lose the CAS")
       // rebase = compact the NEW current (base + delta), not the pin
-      assert(ManifestTable.tryCommit(
-        ManifestTable.read(spark, t2).repartition(1),
+      assert(race(ManifestTable.read(spark, t2).repartition(1),
         t2, 3L, "compactor"), "rebased compaction races alone, must win")
       assert(nFiles(t2, 3L) == 1, "rebased compaction lands one file")
       // serial-replay equality: both interleavings end at v3 holding
@@ -585,10 +605,10 @@ class ManifestTableSpec extends SparkSpec {
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0))
         .toDF("event_id", "event_type", "value")
       assert(ManifestTable.publishWithIntent(base, tbl, 1L, "w1"))
-      // the writer is mid-publish: intent held, data landed, no swap yet
+      // the writer is mid-publish: intent held, data landed, no manifest yet
       val v2 = base.filter(col("event_id") =!= 2L)
       assert(ManifestTable.claimIntent(spark, tbl, 2L, "w2"))
-      v2.write.parquet(s"$tbl/data/v2")
+      val landed = ManifestTable.landSnapshot(v2, tbl, "v2")
       // the naive classifier calls it debris — the bug being closed
       assert(ManifestTable.orphanVersions(spark, tbl) == Seq(2L))
       // the safe GC under the grace window reclaims NOTHING
@@ -596,13 +616,13 @@ class ManifestTableSpec extends SparkSpec {
       assert(new java.io.File(s"$tbl/data/v2").isDirectory,
         "the live writer's staged files must survive the GC")
       // the writer commits; its snapshot serves exactly
-      ManifestTable.swapPointer(spark, tbl, 2L)
+      assert(ManifestTable.commitAt(spark, tbl, 2L, None)(landed))
       ManifestTable.releaseIntent(spark, tbl, 2L)
       assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
       assert(totals(ManifestTable.read(spark, tbl)) == Map("a" -> 2L))
       // second safety net, same window: a writer that never claimed an
       // intent (legacy publish path) is protected by data-dir AGE alone
-      base.write.parquet(s"$tbl/data/v3")
+      ManifestTable.landSnapshot(base, tbl, "v3")
       assert(ManifestTable.orphanVersions(spark, tbl) == Seq(3L))
       assert(ManifestTable.safeOrphanVersions(spark, tbl, hour).isEmpty,
         "a fresh no-intent dir is inside the grace window — protected")
@@ -616,9 +636,9 @@ class ManifestTableSpec extends SparkSpec {
       val base = Seq((1L, "a", 1.0), (2L, "b", 2.0))
         .toDF("event_id", "event_type", "value")
       assert(ManifestTable.publishWithIntent(base, tbl, 1L, "w1"))
-      // crashed writer: intent + data left, no swap ever comes
+      // crashed writer: intent + data left, no manifest ever comes
       assert(ManifestTable.claimIntent(spark, tbl, 2L, "dead"))
-      base.write.parquet(s"$tbl/data/v2")
+      ManifestTable.landSnapshot(base, tbl, "v2")
       // a second writer cannot steal the version while the intent stands
       assert(!ManifestTable.claimIntent(spark, tbl, 2L, "thief"),
         "the intent CAS must hold until purged")
@@ -762,11 +782,11 @@ class ManifestTableSpec extends SparkSpec {
         .toDF("event_id", "event_type", "value")
       ManifestTable.publish(base, tbl, 1L)
       ManifestTable.setBranch(spark, tbl, "main", 1L)
-      // corrupt candidate staged on the audit branch
-      base.withColumn("value", -col("value"))
-        .write.parquet(s"$tbl/data/v2")
+      // corrupt candidate landed on the audit branch, no manifest
+      val corrupt = ManifestTable.landSnapshot(
+        base.withColumn("value", -col("value")), tbl, "v2")
       ManifestTable.setBranch(spark, tbl, "audit", 2L)
-      val (ok, bad) = ManifestTable.auditSnapshot(spark, tbl, 2L)
+      val (ok, bad) = ManifestTable.auditSnapshot(spark, tbl, corrupt)
       assert(!ok && bad == 2L, s"negatives must fail the audit: $ok/$bad")
       // main untouched; the candidate never serves
       assert(ManifestTable.refVersion(spark, tbl, "branch_main")
@@ -780,12 +800,12 @@ class ManifestTableSpec extends SparkSpec {
       assert(ManifestTable.gcOrphansSafe(spark, tbl, 0L) == Seq(2L))
       assert(!new java.io.File(s"$tbl/data/v2").exists())
       // a clean candidate passes and promotes
-      base.write.parquet(s"$tbl/data/v2")
+      val clean = ManifestTable.landSnapshot(base, tbl, "v2")
       ManifestTable.setBranch(spark, tbl, "audit", 2L)
-      val (ok2, bad2) = ManifestTable.auditSnapshot(spark, tbl, 2L)
+      val (ok2, bad2) = ManifestTable.auditSnapshot(spark, tbl, clean)
       assert(ok2 && bad2 == 0L)
+      assert(ManifestTable.commitAt(spark, tbl, 2L, None)(clean))
       assert(ManifestTable.fastForwardBranch(spark, tbl, "main", 2L))
-      ManifestTable.swapPointer(spark, tbl, 2L)
       assert(ManifestTable.read(spark, tbl).count() == 2L)
     } finally graft.Scratch.rmTree(out.toFile)
   }
@@ -1060,7 +1080,7 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("every partitioned commit path survives an injected crash") {
-    import ManifestTable.{BeforeManifest, BeforePointer, CrashPoint, Entry}
+    import ManifestTable.{BeforeManifest, BeforePointer, CrashPoint, Entry, Whole}
     def rows(n: Int) = (n match {
       case 1 => Seq((1L, "a"), (2L, "b"))
       case 2 => Seq((3L, "a"))
@@ -1073,6 +1093,8 @@ class ManifestTableSpec extends SparkSpec {
       .filter(col("event_id") === (if (n == 2) 2L else 1L))
     val appended = Map(1 -> Set(1L, 2L), 2 -> Set(1L, 2L, 3L),
       3 -> Set(1L, 2L, 3L, 4L))
+    // an unpartitioned snapshot n holds every row of commits 1..n
+    def snapshot(n: Int) = (1 to n).map(rows).reduce(_ union _)
     // path, commit n (returns whether it committed now), the ids served
     // after commit n, and the manifest commit 2 publishes
     val paths: Seq[(String, (String, Int, Option[CrashPoint]) => Boolean,
@@ -1100,16 +1122,22 @@ class ManifestTableSpec extends SparkSpec {
         else ManifestTable.appendPositionDeletes(doomed(t, n), t, n.toLong,
           "event_type", c),
         Map(1 -> Set(1L, 2L), 2 -> Set(1L), 3 -> Set.empty[Long]),
-        Map("a" -> Entry(Seq("v1")), "b" -> Entry(Seq("v1"), Seq("v2")))))
+        Map("a" -> Entry(Seq("v1")), "b" -> Entry(Seq("v1"), Seq("v2")))),
+      // the unpartitioned table: one entry, no partition dirs
+      ("unpartitioned publish", (t, n, c) =>
+          ManifestTable.publish(snapshot(n), t, n.toLong, c),
+        appended, Map(Whole -> Entry(Seq("v2")))))
     for ((path, commit, served, v2) <- paths;
          point <- Seq(BeforeManifest, BeforePointer)) {
       val out = java.nio.file.Files.createTempDirectory("graft-crash")
       try {
         val tbl = s"$out/tbl"
         val at = s"$path, crash $point"
-        def ids(v: Long): Set[Long] = ManifestTable
-          .readPartitionedMoR(spark, tbl, "event_type", v)
-          .select("event_id").collect().map(_.getLong(0)).toSet
+        val flat = v2.contains(Whole)
+        def ids(v: Long): Set[Long] =
+          (if (flat) ManifestTable.readVersion(spark, tbl, v)
+           else ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v))
+            .select("event_id").collect().map(_.getLong(0)).toSet
         def live(v: Long): Boolean =
           ManifestTable.currentVersion(spark, tbl).contains(v)
         // every file a published manifest records exists, at its size
@@ -1117,8 +1145,9 @@ class ManifestTableSpec extends SparkSpec {
           ManifestTable.manifestVersions(spark, tbl).foreach { v =>
             for ((d, r) <- ManifestTable.readManifest(spark, tbl, v).catalog;
                  (p, files) <- r.files; f <- files) {
-              val file = new java.io.File(s"$tbl/data/$d/event_type=" +
-                s"${ManifestTable.partitionDir(p)}/${f.name}")
+              val part =
+                if (flat) "" else s"event_type=${ManifestTable.partitionDir(p)}/"
+              val file = new java.io.File(s"$tbl/data/$d/$part${f.name}")
               assert(file.isFile && file.length == f.bytes, s"$at: v$v records $file")
             }
           }
@@ -1230,18 +1259,19 @@ class ManifestTableSpec extends SparkSpec {
       // commit loop on real threads — whatever the interleaving, both
       // must land (disjoint partitions), one of them paying >=1 CAS loss
       // or arriving after the head moved (both are valid schedules)
-      ManifestTable.stagePartitions(
-        Seq((10L, "a", 10.0)).toDF("event_id", "event_type", "value"),
-        tbl, "event_type", "wa")
-      ManifestTable.stagePartitions(
-        Seq((20L, "b", 20.0)).toDF("event_id", "event_type", "value"),
-        tbl, "event_type", "wb")
+      val staged = Map(
+        "wa" -> ManifestTable.stagePartitions(
+          Seq((10L, "a", 10.0)).toDF("event_id", "event_type", "value"),
+          tbl, "event_type", "wa"),
+        "wb" -> ManifestTable.stagePartitions(
+          Seq((20L, "b", 20.0)).toDF("event_id", "event_type", "value"),
+          tbl, "event_type", "wb"))
       val results = new java.util.concurrent.ConcurrentHashMap[String,
         Option[ManifestTable.PartitionCommit]]()
       val ts = Seq("wa" -> "a", "wb" -> "b").map { case (w, p) =>
         new Thread(() => results.put(w,
-          ManifestTable.commitStagedPartitions(spark, tbl, "event_type",
-            Seq(p), w, 1L)))
+          ManifestTable.commitStagedPartitions(spark, tbl, staged(w),
+            Seq(p), 1L)))
       }
       ts.foreach(_.start()); ts.foreach(_.join())
       val (ra, rb) = (results.get("wa"), results.get("wb"))
@@ -1274,28 +1304,24 @@ class ManifestTableSpec extends SparkSpec {
           .toDF("event_id", "event_type", "value"),
         tbl, 1L, "event_type")
       // both replace partition a from the same base
-      ManifestTable.stagePartitions(
-        Seq((10L, "a", 10.0)).toDF("event_id", "event_type", "value"),
-        tbl, "event_type", "wa")
-      ManifestTable.stagePartitions(
-        Seq((30L, "a", 30.0)).toDF("event_id", "event_type", "value"),
-        tbl, "event_type", "wc")
-      assert(ManifestTable.commitStagedPartitions(spark, tbl,
-        "event_type", Seq("a"), "wa", 1L)
+      def stage(id: Long, w: String) = ManifestTable.stagePartitions(
+        Seq((id, "a", id.toDouble)).toDF("event_id", "event_type", "value"),
+        tbl, "event_type", w)
+      val (wa, wc) = (stage(10L, "wa"), stage(30L, "wc"))
+      assert(ManifestTable.commitStagedPartitions(spark, tbl, wa, Seq("a"), 1L)
         .contains(ManifestTable.PartitionCommit(2L, 0)))
-      // the stale overlapping commit must be REFUSED, not merged
-      assert(ManifestTable.commitStagedPartitions(spark, tbl,
-        "event_type", Seq("a"), "wc", 1L).isEmpty)
+      // the stale overlapping commit must be REFUSED, not merged, and its
+      // files go with it
+      assert(ManifestTable.commitStagedPartitions(spark, tbl, wc, Seq("a"), 1L)
+        .isEmpty)
+      assert(!new java.io.File(s"$tbl/data/${wc.dir}").exists())
       // ...and still refused however often it retries from the stale base
-      assert(ManifestTable.commitStagedPartitions(spark, tbl,
-        "event_type", Seq("a"), "wc", 1L).isEmpty)
+      assert(ManifestTable.commitStagedPartitions(spark, tbl, wc, Seq("a"), 1L)
+        .isEmpty)
       // serialization: re-stage against the live head, commit on top
-      ManifestTable.stagePartitions(
-        Seq((31L, "a", 31.0)).toDF("event_id", "event_type", "value"),
-        tbl, "event_type", "wc")
+      val wc2 = stage(31L, "wc")
       val head = ManifestTable.currentVersion(spark, tbl).get
-      assert(ManifestTable.commitStagedPartitions(spark, tbl,
-        "event_type", Seq("a"), "wc", head)
+      assert(ManifestTable.commitStagedPartitions(spark, tbl, wc2, Seq("a"), head)
         .contains(ManifestTable.PartitionCommit(3L, 0)))
       val ids = ManifestTable
         .readPartitionedMoR(spark, tbl, "event_type", 3L)

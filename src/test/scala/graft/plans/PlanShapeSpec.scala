@@ -268,7 +268,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("q180: the PQ codebook broadcasts; encoding argmin is the bounded-heap operator") {
+  test("q180: the PQ codebook broadcasts; encoding argmin is a bounded WindowGroupLimit") {
     val p = finalPlan("q180_pq_audit")
     assert(p.contains("BroadcastHashJoin"),
       "the O(sqrt n) per-subspace codebook must broadcast into the encode pass")
@@ -381,7 +381,7 @@ class PlanShapeSpec extends SparkSpec {
       "a global 1-row aggregate needs no hash shuffle")
   }
 
-  test("q200: assignment argmax is the bounded-heap operator; the total broadcasts") {
+  test("q200: assignment argmax is a bounded WindowGroupLimit; the total broadcasts") {
     val p = finalPlan("q200_index_shard_plan")
     assert(p.contains("WindowGroupLimit"),
       "the per-vector cell argmax must be a bounded group limit")
