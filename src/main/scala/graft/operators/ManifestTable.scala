@@ -49,6 +49,13 @@ import graft.functions.OracleSafe
   * no footer is read for schema inference and no Spark job runs until the
   * frame is executed.
   *
+  * Merge-on-read is this layout too: position deletes land as a delete
+  * dir (`del:`) of `(partition, _src_version, _pos)` triples, masked by
+  * one anti-join whose broadcast is gated on the bytes the manifest
+  * records for them, and keyed upserts and tombstones are data dirs
+  * resolved latest-wins per key. A compaction folds either kind back
+  * into one dir per partition.
+  *
   * Protocol: (1) land the new snapshot's data files under `data/<dir>` —
   * an idempotent overwrite of a dir no manifest names yet; (2) commit by
   * a put-if-absent of `manifest/v<N>`, the one commit point; (3) advance
@@ -106,19 +113,39 @@ object ManifestTable {
   def currentVersion(spark: SparkSession, tableDir: String): Option[Long] =
     readPointer(spark, s"$tableDir/CURRENT").map(_.trim.toLong)
 
-  /** Replace the small pointer file `path` with `text`: write `path.tmp`,
-    * then one atomic rename over `path` — readers see the old or the new
-    * content, never a torn write.
+  /** Replace the small pointer file `path` with `text`: write a tmp file
+    * of this call's own (`path.<uuid>.tmp`, so concurrent moves never
+    * share one, and ref listings skip it by its `.tmp`), then one atomic
+    * rename over `path` — readers see the old or the new content, never a
+    * torn write. A local path renames through NIO, which is POSIX
+    * rename(2) and replaces the target atomically: Hadoop's local rename
+    * with OVERWRITE deletes the target first and then renames refusing
+    * an existing target, so a racing move landing in between fails it.
     */
   private def writePointer(spark: SparkSession, path: String,
       text: String): Unit = {
-    val ctx = fc(spark, path)
-    val tmp = new Path(s"$path.tmp")
-    val out = ctx.create(tmp,
-      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
-      CreateOpts.createParent())
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-    ctx.rename(tmp, new Path(path), Options.Rename.OVERWRITE)
+    val tmp = new Path(s"$path.${java.util.UUID.randomUUID()}.tmp")
+    localPath(tmp) match {
+      case Some(t) =>
+        java.nio.file.Files.createDirectories(t.getParent)
+        java.nio.file.Files.write(t, text.getBytes("UTF-8"))
+        java.nio.file.Files.move(t, t.resolveSibling(new Path(path).getName),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case None =>
+        val ctx = fc(spark, path)
+        val out = ctx.create(tmp,
+          EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+          CreateOpts.createParent())
+        try out.write(text.getBytes("UTF-8")) finally out.close()
+        ctx.rename(tmp, new Path(path), Options.Rename.OVERWRITE)
+    }
+  }
+
+  /** `path` as a NIO path when it is on the local filesystem. */
+  private def localPath(path: Path): Option[java.nio.file.Path] = {
+    val uri = path.toUri
+    Option.when(uri.getScheme == null || uri.getScheme == "file")(
+      java.nio.file.Paths.get(uri.getPath))
   }
 
   /** The content of the small pointer file `path`, or None if absent. */
@@ -132,6 +159,13 @@ object ManifestTable {
   private[operators] def live(spark: SparkSession, tableDir: String): Long =
     currentVersion(spark, tableDir).getOrElse(
       sys.error(s"no published snapshot under $tableDir"))
+
+  /** Per-type row counts and cent totals: what the table queries' stages
+    * report, and their oracles recompute from the raw events.
+    */
+  private def typeTotals(df: DataFrame): DataFrame =
+    df.groupBy("event_type").agg(count(lit(1)).as("n"),
+      sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
 
   /** Publish `df` as unpartitioned snapshot `version` through
     * [[commitAt]]: land it under `data/v<version>`, put its manifest,
@@ -214,9 +248,7 @@ object ManifestTable {
       val v = currentVersion(spark, tableDir).getOrElse(
         sys.error("stage read before any publish"))
       read(spark, tableDir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(stage).as("stage"), lit(v).as("version"),
           col("event_type"), col("n"), col("total_cents"))
     }
@@ -262,9 +294,7 @@ object ManifestTable {
     publish(slim, tableDir, 1L)
     publish(slim.filter(col("event_type") =!= "error"), tableDir, 2L)
     def totalsOf(df: DataFrame, stage: String, v: Long): DataFrame = df
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+      .transform(typeTotals)
       .select(lit(stage).as("stage"), lit(v).as("version"),
         lit(versions(spark, tableDir).size.toLong).as("n_versions"),
         col("event_type"), col("n"), col("total_cents"))
@@ -318,30 +348,28 @@ object ManifestTable {
     * atomic on POSIX).
     */
   private[operators] def putIfAbsent(spark: SparkSession, path: Path,
-      content: String): Boolean = {
-    val uri = path.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      val p = java.nio.file.Paths.get(uri.getPath)
-      java.nio.file.Files.createDirectories(p.getParent)
-      try {
-        java.nio.file.Files.write(p, content.getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    } else {
-      val ctx = fc(spark, path.toString)
-      try {
-        val out = ctx.create(path, EnumSet.of(CreateFlag.CREATE),
-          CreateOpts.createParent())
-        try out.write(content.getBytes("UTF-8")) finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      }
+      content: String): Boolean =
+    localPath(path) match {
+      case Some(p) =>
+        java.nio.file.Files.createDirectories(p.getParent)
+        try {
+          java.nio.file.Files.write(p, content.getBytes("UTF-8"),
+            java.nio.file.StandardOpenOption.CREATE_NEW)
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+        }
+      case None =>
+        val ctx = fc(spark, path.toString)
+        try {
+          val out = ctx.create(path, EnumSet.of(CreateFlag.CREATE),
+            CreateOpts.createParent())
+          try out.write(content.getBytes("UTF-8")) finally out.close()
+          true
+        } catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        }
     }
-  }
 
   /** q248 — optimistic concurrency on the manifest table: two writers
     * race from the SAME pinned snapshot, each landing under a dir of its
@@ -383,9 +411,7 @@ object ManifestTable {
       "writer B's rebased v3 attempt races alone and must win")
     def stage(name: String, v: Long, conflict: Int): DataFrame =
       readVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(conflict).as("conflict"), col("event_type"), col("n"),
           col("total_cents"))
@@ -603,9 +629,7 @@ object ManifestTable {
       "the appender's rebased v3 attempt races alone and must win")
     def stage(name: String, v: Long, conflict: Int): DataFrame =
       readVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(conflict).as("conflict"), col("event_type"), col("n"),
           col("total_cents"))
@@ -651,9 +675,11 @@ object ManifestTable {
   /** q253 — partition-spec EVOLUTION under the manifest: the capability
     * that separates a table format from a directory convention. A live
     * table's layout changes (here: 30-day blocks → 7-day blocks, the
-    * coarse-to-fine re-grain) WITHOUT rewriting history — the snapshot's
-    * manifest lists each file group WITH the spec it was written under,
-    * old files stay in the old layout, new files land in the new one,
+    * coarse-to-fine re-grain) WITHOUT rewriting history — each file group
+    * is a partitioned manifest table of its own (`groups/d30`,
+    * `groups/d7`), partitioned by `p`, its block id under the spec it was
+    * written under; old files stay in the old layout, new files land in
+    * the new one, the published snapshot lists each group WITH its spec,
     * and a reader prunes EACH group by its own spec before applying the
     * row-level filter. (Iceberg §4 "partition evolution" is exactly this
     * mechanism: specs are metadata per file group, not a property of the
@@ -678,41 +704,33 @@ object ManifestTable {
     // group A: history, written under the 30-day spec; group B: the rows
     // after the evolution point, written under the 7-day spec
     val split = lo0 + (hi0 - lo0) / 2
-    writeGroup(base.filter(col("day") < split), s"$tableDir/groups/d30", 30)
-    writeGroup(base.filter(col("day") >= split), s"$tableDir/groups/d7", 7)
+    val groups = Seq(("groups/d30", 30, col("day") < split),
+      ("groups/d7", 7, col("day") >= split))
+    for ((dir, grain, rows) <- groups)
+      appendPartitionedDelta(base.filter(rows)
+          .withColumn("p", OracleSafe.intDiv(col("day"), lit(grain.toLong)))
+          .repartition(col("p")),
+        s"$tableDir/$dir", 1L, "p")
     import spark.implicits._
-    val manifest = Seq(("groups/d30", 30), ("groups/d7", 7))
-      .toDF("group_dir", "grain_days")
-    publish(manifest, tableDir, 1L)
+    publish(groups.map { case (dir, grain, _) => (dir, grain) }
+      .toDF("group_dir", "grain_days"), tableDir, 1L)
     // the straddling query range: the middle half of the day span
     val (lo, hi) = (lo0 + (hi0 - lo0) / 4, lo0 + 3 * (hi0 - lo0) / 4)
-    readEvolved(spark, tableDir, lo, hi)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
-      .orderBy("event_type")
+    typeTotals(readEvolved(spark, tableDir, lo, hi)).orderBy("event_type")
   }
 
-  /** One file group of an evolved table: `day DIV grainDays` is the
-    * partition value its spec prunes on.
-    */
-  def writeGroup(df: DataFrame, dir: String, grainDays: Int): Unit =
-    df.withColumn("p", OracleSafe.intDiv(col("day"), lit(grainDays.toLong)))
-      .repartition(col("p"))
-      .write.mode(SaveMode.Overwrite).partitionBy("p").parquet(dir)
-
-  /** Read `[loDay, hiDay]` through the evolved table: resolve the
-    * manifest, prune EACH group by ITS OWN spec (`p` between the range's
-    * block ids under that group's grain — only those partition dirs
-    * open), then apply the exact row filter. The manifest is the bounded
-    * driver-side decision frame every file-skipping reader holds.
+  /** Read `[loDay, hiDay]` through the evolved table: resolve the group
+    * list, prune EACH group by ITS OWN spec (`p` between the range's
+    * block ids under that group's grain — its manifest's file index keeps
+    * only those partitions, nothing is listed), then apply the exact row
+    * filter.
     */
   def readEvolved(spark: SparkSession, tableDir: String,
       loDay: Long, hiDay: Long): DataFrame = {
     val groups = read(spark, tableDir).collect()
       .map(r => (r.getAs[String]("group_dir"), r.getAs[Int]("grain_days")))
     groups.map { case (dir, grain) =>
-      spark.read.parquet(s"$tableDir/$dir")
+      readPartitioned(spark, s"$tableDir/$dir", "p")
         .filter(col("p").between(loDay / grain, hiDay / grain))
         .filter(col("day").between(loDay, hiDay))
         .select("event_id", "event_type", "value", "day")
@@ -723,122 +741,76 @@ object ManifestTable {
     * copy-on-write / merge-on-read split every table format exposes
     * (Delta's deletion vectors, Iceberg's delete files). Every delete so
     * far in this suite rewrote the snapshot (copy-on-write: q244's v2);
-    * here the data files are NEVER rewritten — the commit lands only a
-    * key-list SIDECAR, the manifest references {data files, delete
-    * vector} per version, and the read path masks deleted rows with one
-    * anti-join. A later PURGE compaction applies the vector physically
-    * (the maintenance job MoR deployments schedule), after which reads
-    * drop the anti-join entirely — with identical results, which is the
-    * purge's correctness contract. `ManifestTableSpec` asserts the
-    * physical halves: the base data files are byte-identical across the
-    * MoR delete, and the purged snapshot carries no sidecar.
+    * here the data files are NEVER rewritten — v1 lands the rows with
+    * persisted row ids, and the v2 commit lands only the error rows'
+    * position deletes `(event_type, _src_version, _pos)`
+    * ([[appendPositionDeletes]]), which [[readPartitionedMoR]] masks
+    * with one anti-join, broadcast while the bytes the manifest records
+    * for them fit its gate. The v3 purge compaction applies the deletes
+    * physically (the maintenance job MoR deployments schedule), after
+    * which reads drop the anti-join entirely — with identical results,
+    * which is the purge's correctness contract. `ManifestTableSpec`
+    * asserts the physical halves: the base data files are unchanged
+    * across the delete, and the purged snapshot carries no deletes.
     *
-    * Scale: the delete commit costs O(deleted keys), not O(table) — the
+    * Scale: the delete commit costs O(deleted rows), not O(table) — the
     * entire point at 100 TB, where copy-on-write of a wide snapshot for
-    * a 0.1% delete is the anti-pattern; the read-side anti-join streams
-    * the data once against a broadcast-size vector until the purge
-    * amortizes it away.
+    * a 0.1% delete is the anti-pattern; the read-side anti-join touches
+    * only the partitions with deletes until the purge amortizes it away.
     */
   def mergeOnReadDelete(events: DataFrame, tableDir: String): DataFrame = {
     val spark = events.sparkSession
-    import spark.implicits._
     val slim = events.select(col("event_id"), col("event_type"), col("value"))
-    slim.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/base")
-    publish(Seq(("files/base", "data")).toDF("ref", "kind"), tableDir, 1L)
-    // the MoR delete: a key-list sidecar, data untouched
-    slim.filter(col("event_type") === "error").select("event_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/dv2")
-    publish(Seq(("files/base", "data"), ("files/dv2", "delete_keys"))
-      .toDF("ref", "kind"), tableDir, 2L)
+    appendPartitionedDelta(withRowIds(slim), tableDir, 1L, "event_type")
+    // the MoR delete: the error rows' positions, data untouched
+    appendPositionDeletes(
+      readPartitionedMoR(spark, tableDir, "event_type", 1L, rowIds = true)
+        .filter(col("event_type") === "error"),
+      tableDir, 2L, "event_type")
+    // the purge: apply the deletes physically, drop them from the manifest
+    compactPartitionedMoR(spark, tableDir, 3L, "event_type")
     def stage(name: String, v: Long): DataFrame =
-      readMoRVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+      typeTotals(readPartitionedMoR(spark, tableDir, "event_type", v))
         .select(lit(name).as("stage"), lit(v).as("version"),
           col("event_type"), col("n"), col("total_cents"))
-    val s1 = stage("a_v1_full", 1L)
-    val s2 = stage("b_v2_mor_delete", 2L)
-    // the purge: apply the vector physically, drop the sidecar
-    readMoRVersion(spark, tableDir, 2L)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/purged")
-    publish(Seq(("files/purged", "data")).toDF("ref", "kind"), tableDir, 3L)
-    val s3 = stage("c_v3_purged", 3L)
-    s1.unionByName(s2).unionByName(s3).orderBy("stage", "event_type")
-  }
-
-  /** Resolve a merge-on-read snapshot: union its data refs, patch with
-    * its update sidecars (one broadcast left join, new value wins), then
-    * mask with its delete vectors (one anti-join) — or stream the data
-    * straight through when the snapshot carries no sidecar. Sidecars are
-    * delta-sized by construction (they hold only changed/deleted keys),
-    * which is what licenses the broadcasts.
-    */
-  def readMoRVersion(spark: SparkSession, tableDir: String,
-      version: Long): DataFrame = {
-    val refs = readVersion(spark, tableDir, version).collect()
-      .map(r => (r.getAs[String]("ref"), r.getAs[String]("kind")))
-    val data = refs.collect { case (ref, "data") =>
-      spark.read.parquet(s"$tableDir/$ref") }.reduce(_ unionByName _)
-    val ups = refs.collect { case (ref, "update_rows") =>
-      spark.read.parquet(s"$tableDir/$ref") }
-    val patched = if (ups.isEmpty) data
-    else data.join(broadcast(ups.reduce(_ unionByName _)
-        .withColumnRenamed("value", "__patch_value")),
-      Seq("event_id"), "left")
-      .withColumn("value", coalesce(col("__patch_value"), col("value")))
-      .drop("__patch_value")
-    val dvs = refs.collect { case (ref, "delete_keys") =>
-      spark.read.parquet(s"$tableDir/$ref") }
-    if (dvs.isEmpty) patched
-    else patched.join(broadcast(dvs.reduce(_ unionByName _)),
-      Seq("event_id"), "left_anti")
+    stage("a_v1_full", 1L).unionByName(stage("b_v2_mor_delete", 2L))
+      .unionByName(stage("c_v3_purged", 3L)).orderBy("stage", "event_type")
   }
 
   /** q266 — MERGE-ON-READ row-level UPDATES, completing the q254 story
-    * (deletes were one sidecar kind; real tables also take value
-    * corrections without rewriting data files). A patch sidecar holds
-    * (key, new value) for the changed rows only; the read path applies
-    * it as a broadcast left join with coalesce. The run then STACKS a
-    * delete sidecar on top — v3 resolves base ⊕ updates ⊖ deletes in one
-    * plan — and finally compacts everything into a clean v4 whose totals
-    * must be identical to v3 (the purge contract, again carried by the
+    * (deletes were one kind of delta; real tables also take value
+    * corrections without rewriting data files). The table is keyed by
+    * `event_id`: v2 upserts every purchase at ×2 (same keys — the
+    * changed rows only), v3 STACKS tombstones of the error rows
+    * (`deleted = true`) on top, and [[readPartitionedMoRKeyed]] resolves
+    * base ⊕ upserts ⊖ tombstones latest-wins in one plan. The v4 keyed
+    * compaction applies both physically, and its totals must be
+    * identical to v3's (the purge contract, again carried by the
     * oracle's hash). Data files are never touched until the compaction;
     * the spec pins that physically.
     */
   def mergeOnReadUpdate(events: DataFrame, tableDir: String): DataFrame = {
     val spark = events.sparkSession
-    import spark.implicits._
-    val slim = events.select(col("event_id"), col("event_type"), col("value"))
-    slim.write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/base")
-    publish(Seq(("files/base", "data")).toDF("ref", "kind"), tableDir, 1L)
-    // the MoR update: a (key, new value) sidecar — purchases re-priced
-    slim.filter(col("event_type") === "purchase")
-      .select(col("event_id"), (col("value") * 2).as("value"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/up2")
-    publish(Seq(("files/base", "data"), ("files/up2", "update_rows"))
-      .toDF("ref", "kind"), tableDir, 2L)
-    // a delete sidecar STACKS on top of the update
-    slim.filter(col("event_type") === "error").select("event_id")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/dv3")
-    publish(Seq(("files/base", "data"), ("files/up2", "update_rows"),
-      ("files/dv3", "delete_keys")).toDF("ref", "kind"), tableDir, 3L)
+    val slim = events.select(col("event_id"), col("event_type"), col("value"),
+      lit(false).as("deleted"))
+    appendPartitionedDelta(slim, tableDir, 1L, "event_type")
+    // the MoR update: purchases re-priced under their own keys
+    appendPartitionedDelta(slim.filter(col("event_type") === "purchase")
+      .withColumn("value", col("value") * 2), tableDir, 2L, "event_type")
+    // tombstones STACK on top of the update
+    appendPartitionedDelta(slim.filter(col("event_type") === "error")
+      .withColumn("deleted", lit(true)), tableDir, 3L, "event_type")
+    // compaction: apply upserts and tombstones physically
+    compactPartitionedMoR(spark, tableDir, 4L, "event_type",
+      keyCol = Some("event_id"))
     def stage(name: String, v: Long): DataFrame =
-      readMoRVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+      typeTotals(readPartitionedMoRKeyed(spark, tableDir, "event_type",
+          "event_id", v))
         .select(lit(name).as("stage"), lit(v).as("version"),
           col("event_type"), col("n"), col("total_cents"))
-    val s1 = stage("a_v1_full", 1L)
-    val s2 = stage("b_v2_mor_update", 2L)
-    val s3 = stage("c_v3_upd_del", 3L)
-    // compaction: apply every sidecar physically, publish clean data
-    readMoRVersion(spark, tableDir, 3L)
-      .write.mode(SaveMode.Overwrite).parquet(s"$tableDir/files/purged")
-    publish(Seq(("files/purged", "data")).toDF("ref", "kind"), tableDir, 4L)
-    val s4 = stage("d_v4_purged", 4L)
-    s1.unionByName(s2).unionByName(s3).unionByName(s4)
+    stage("a_v1_full", 1L).unionByName(stage("b_v2_mor_update", 2L))
+      .unionByName(stage("c_v3_upd_del", 3L))
+      .unionByName(stage("d_v4_purged", 4L))
       .orderBy("stage", "event_type")
   }
 
@@ -1213,9 +1185,7 @@ object ManifestTable {
     val d1 = vacuum(spark, tableDir, keep = 1)
     require(d1 == Seq(2L), s"first vacuum must reclaim exactly v2: $d1")
     def totalsOf(df: DataFrame, stage: String, v: Long): DataFrame = df
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+      .transform(typeTotals)
       .select(lit(stage).as("stage"), lit(v).as("version"),
         lit(versions(spark, tableDir).size.toLong).as("n_versions"),
         col("event_type"), col("n"), col("total_cents"))
@@ -1249,9 +1219,7 @@ object ManifestTable {
     val hit = fs.exists(new Path(s"$entry/_SUCCESS"))
     if (!hit) {
       readVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .write.mode(SaveMode.Overwrite).parquet(entry)
     }
     (spark.read.parquet(entry), hit, v)
@@ -1403,9 +1371,7 @@ object ManifestTable {
     def stage(name: String, orphansSeen: Long): DataFrame = {
       val v = currentVersion(spark, tableDir).get
       read(spark, tableDir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(versions(spark, tableDir).size.toLong).as("n_version_dirs"),
           lit(orphansSeen).as("n_orphans"), col("event_type"), col("n"),
@@ -1539,9 +1505,7 @@ object ManifestTable {
     def refTotals(stage: String, ref: String, refFile: String): DataFrame = {
       val v = refVersion(spark, tableDir, refFile).get
       readVersion(spark, tableDir, v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(stage).as("stage"), lit(ref).as("ref"),
           lit(v).as("version"), col("event_type"), col("n"),
           col("total_cents"))
@@ -1737,9 +1701,7 @@ object ManifestTable {
     def stage(name: String, reclaimed: Long): DataFrame = {
       val v = currentVersion(spark, tableDir).get
       read(spark, tableDir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(versions(spark, tableDir).size.toLong).as("n_version_dirs"),
           lit(liveIntentVersions(spark, tableDir, IntentGraceMs).size.toLong)
@@ -1942,9 +1904,7 @@ object ManifestTable {
       val cpSeq = lastCheckpointSeq(spark, tableDir).getOrElse(-1L)
       val v = currentVersion(spark, tableDir).get
       read(spark, tableDir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(listed.size.toLong).as("n_versions"),
           lit(cpSeq).as("cp_seq"), lit(cpHead).as("cp_head"),
@@ -2581,9 +2541,7 @@ object ManifestTable {
       val nNew = entries.count(_.dirs == Seq(s"v$v")).toLong
       val nRef = entries.size - nNew
       readPartitioned(spark, tableDir, "event_type")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(nNew).as("n_new_parts"), lit(nRef).as("n_ref_parts"),
           col("event_type"), col("n"), col("total_cents"))
@@ -2677,9 +2635,7 @@ object ManifestTable {
       val nSrc = readManifest(spark, tableDir, v).parts.values
         .flatMap(_.dirs).toSet.size.toLong
       readPartitioned(spark, tableDir, "event_type")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(versions(spark, tableDir).size.toLong).as("n_version_dirs"),
           lit(nSrc).as("n_src_versions"), col("event_type"), col("n"),
@@ -2867,9 +2823,7 @@ object ManifestTable {
     def stageOf(df: DataFrame, name: String, v: Long): DataFrame = {
       val nSrc = readManifest(spark, tableDir, v).parts.values
         .flatMap(_.dirs).toSet.size.toLong
-      df.groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+      typeTotals(df)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(versions(spark, tableDir).size.toLong).as("n_version_dirs"),
           lit(nSrc).as("n_src_versions"), col("event_type"), col("n"),
@@ -2992,9 +2946,7 @@ object ManifestTable {
       require(currentVersion(spark, tableDir).contains(v),
         "CURRENT and branch_main must track together")
       read(spark, tableDir)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(verdict).as("verdict"), lit(nBad).as("n_bad"),
           lit(versions(spark, tableDir).size.toLong).as("n_version_dirs"),
@@ -3317,9 +3269,7 @@ object ManifestTable {
       s"C's rebased commit races alone and must land v5: $c")
     def stage(name: String, v: Long, losses: Int, conflict: Int): DataFrame =
       readPartitionedMoR(spark, tableDir, "event_type", v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(losses).as("cas_losses"), lit(conflict).as("conflict"),
           col("event_type"), col("n"), col("total_cents"))
@@ -3493,9 +3443,7 @@ object ManifestTable {
       val nSrc = readManifest(spark, tableDir, v).parts.values
         .flatMap(_.dirs).toSet.size.toLong
       readPartitionedMoRKeyed(spark, tableDir, "event_type", "event_id", v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(nSrc).as("n_src_versions"), lit(reclaimed).as("reclaimed"),
           col("event_type"), col("n"), col("total_cents"))
@@ -3615,9 +3563,7 @@ object ManifestTable {
       val nBase = m.flatMap(_.dirs).toSet.size.toLong
       val nDel = m.flatMap(_.dels).toSet.size.toLong
       readPartitionedMoR(spark, tableDir, "event_type", v)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(OracleSafe.quant(col("value"), 100)).as("total_cents"))
+        .transform(typeTotals)
         .select(lit(name).as("stage"), lit(v).as("version"),
           lit(nBase).as("n_base"), lit(nDel).as("n_del"),
           col("event_type"), col("n"), col("total_cents"))

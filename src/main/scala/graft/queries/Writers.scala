@@ -271,9 +271,10 @@ object Writers {
           SELECT version, change_type, event_type, n, total_cents
           FROM change_feed ORDER BY version, change_type, event_type"""),
 
-    // Merge-on-read UPDATES: a (key, new value) patch sidecar applied at
-    // read (broadcast left join + coalesce), a delete sidecar stacked on
-    // top, then compaction — v3 totals must equal v4's (purge contract).
+    // Merge-on-read UPDATES on a keyed table: purchases upserted ×2 under
+    // their own keys, error tombstones stacked on top, the keyed read
+    // resolving latest-wins, then a keyed compaction — v3 totals must
+    // equal v4's (purge contract).
     Query("q266_mor_update", scale = true, build = { (s, dir) =>
       ManifestTable.mergeOnReadUpdate(TestData.events(s, dir),
         scratchDir("graft-q266").toString)
@@ -309,9 +310,10 @@ object Writers {
           FROM forget_user ORDER BY stage, event_type"""),
 
     // Partition-spec evolution under the manifest: old files stay in the
-    // 30-day layout, post-evolution files land in the 7-day layout, the
-    // manifest records each group's spec, and a straddling day-range
-    // read prunes each group by its own spec. Totals are layout-
+    // 30-day layout, post-evolution files land in the 7-day layout, each
+    // group a partitioned manifest table of its own, the published group
+    // list records each group's spec, and a straddling day-range read
+    // prunes each group's manifest by its own spec. Totals are layout-
     // invariant — the oracle filters the raw events directly.
     Query("q253_partition_evolution", scale = true, build = { (s, dir) =>
       ManifestTable.evolvedPartitionRead(TestData.events(s, dir),
@@ -321,10 +323,11 @@ object Writers {
           SELECT event_type, n, total_cents
           FROM evolved_read ORDER BY event_type"""),
 
-    // Merge-on-read deletes: the commit lands only a key-list sidecar
-    // (O(deleted keys), data files untouched), reads mask with one
-    // anti-join, and the purge compaction applies the vector physically
-    // with identical results — the CoW/MoR split table formats expose.
+    // Merge-on-read deletes: the commit lands only the deleted rows'
+    // position deletes (O(deleted rows), data files untouched), reads
+    // mask them with one size-gated anti-join, and the purge compaction
+    // applies them physically with identical results — the CoW/MoR split
+    // table formats expose.
     Query("q254_merge_on_read", scale = true, build = { (s, dir) =>
       ManifestTable.mergeOnReadDelete(TestData.events(s, dir),
         scratchDir("graft-q254").resolve("events_table").toString)

@@ -132,17 +132,33 @@ class ManifestIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     tbl
   }
 
+  /** One file group of a q253 evolved table: `n` 7-day blocks of one
+    * row a day, partitioned by their block id `p`.
+    */
+  private def group(dir: String, n: Int): String = {
+    val tbl = s"$dir/g$n/groups/d7"
+    ManifestTable.appendPartitionedDelta(spark.range(7L * n)
+      .select(col("id").as("event_id"), col("id").as("day"),
+        (col("id") / 7).cast("long").as("p"))
+      .repartition(col("p")), tbl, 1L, "p")
+    tbl
+  }
+
   test("planning a read costs the same filesystem calls and no job at 10 and at 1,000 partitions or files") {
     val out = java.nio.file.Files.createTempDirectory("graft-mplan")
     try {
       // what grows, the table at n, its read, and the rows it serves: 3n
-      // ids less the multiples of 7, or n ids
+      // ids less the multiples of 7, n ids, or the 5 blocks a group's
+      // read keeps
       val inputs = Seq[(String, Int => String, String => DataFrame, Int => Long)](
         ("partitions", table(out.toString, _),
           ManifestTable.readPartitionedMoR(spark, _, "event_type", 3L),
           n => (0L until 3L * n).count(_ % 7 != 0).toLong),
         ("files", flat(out.toString, _), ManifestTable.readVersion(spark, _, 1L),
-          _.toLong))
+          _.toLong),
+        ("groups", group(out.toString, _),
+          ManifestTable.readPartitioned(spark, _, "p").filter(col("p").between(1, 5)),
+          _ => 35L))
       for ((unit, build, read, rows) <- inputs) {
         val plans = Seq(10, 1000).map { n =>
           val tbl = build(n)

@@ -1,8 +1,11 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.functions.OracleSafe
 import graft.sources.TestData
 
 /** q241: the manifest-pointer commit protocol — crash-window isolation,
@@ -15,6 +18,25 @@ class ManifestTableSpec extends SparkSpec {
   private def totals(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
     df.groupBy("event_type").agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** The data files on disk under `data/<dir>`, by partition dir and
+    * name, with their sizes.
+    */
+  private def dataFiles(tbl: String, dir: String): Map[String, Long] = {
+    val root = new java.io.File(s"$tbl/data/$dir").toPath
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.size(f)).toMap
+    finally walk.close()
+  }
+
+  /** The data files manifest `version` records for `data/<dir>`, in the
+    * form of [[dataFiles]].
+    */
+  private def recordedFiles(tbl: String, version: Long, dir: String): Map[String, Long] =
+    ManifestTable.readManifest(spark, tbl, version).catalog(dir).files.toSeq
+      .flatMap { case (p, fs) => fs.map(f =>
+        s"event_type=${ManifestTable.partitionDir(p)}/${f.name}" -> f.bytes) }.toMap
 
   test("a crash between data-write and pointer-swap leaves the old snapshot fully readable") {
     val out = java.nio.file.Files.createTempDirectory("graft-mt-spec")
@@ -39,7 +61,7 @@ class ManifestTableSpec extends SparkSpec {
       assert(ManifestTable.currentVersion(spark, tbl).contains(2L))
       assert(totals(ManifestTable.read(spark, tbl)) == Map("a" -> 2L))
       // commit leaves no tmp pointer debris
-      assert(!new java.io.File(s"$tbl/CURRENT.tmp").exists())
+      assert(!new java.io.File(tbl).list().exists(_.endsWith(".tmp")))
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
@@ -156,6 +178,25 @@ class ManifestTableSpec extends SparkSpec {
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
+  test("8 threads moving one branch at once: none throws, and the ref holds one written value") {
+    val out = java.nio.file.Files.createTempDirectory("graft-mt-spec")
+    try {
+      val tbl = s"$out/tbl"
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val moves = Future.sequence((1L to 8L).map(v =>
+        Future(ManifestTable.setBranch(spark, tbl, "dev", v)).transform(
+          r => scala.util.Success(r.failed.toOption.map(e => s"v$v: $e")))))
+      val failures = Await.result(moves, 2.minutes).flatten
+      assert(failures.isEmpty, s"concurrent pointer moves failed: $failures")
+      val held = ManifestTable.refVersion(spark, tbl, "branch_dev")
+      assert(held.exists((1L to 8L).contains), s"the ref must hold a written value: $held")
+      val debris = new java.io.File(s"$tbl/refs").list().filter(_.endsWith(".tmp"))
+      assert(debris.isEmpty, s"pointer writes left tmp files: ${debris.toSeq}")
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
   test("q249 change feed: insert/delete/update images, and same-cent rewrites are not updates") {
     val out = java.nio.file.Files.createTempDirectory("graft-mt-spec")
     try {
@@ -192,26 +233,29 @@ class ManifestTableSpec extends SparkSpec {
       // (one block, p=0), days 30-59 under the 7-day spec (p = 4..8)
       val base = (0L until 60L).map(d => (d, "t", 1.0 + d, d))
         .toDF("event_id", "event_type", "value", "day")
-      ManifestTable.writeGroup(base.filter(col("day") < 30), s"$tbl/groups/d30", 30)
-      ManifestTable.writeGroup(base.filter(col("day") >= 30), s"$tbl/groups/d7", 7)
+      val groups = Seq(("groups/d30", 30, col("day") < 30),
+        ("groups/d7", 7, col("day") >= 30))
+      for ((dir, grain, rows) <- groups)
+        ManifestTable.appendPartitionedDelta(base.filter(rows)
+          .withColumn("p", OracleSafe.intDiv(col("day"), lit(grain.toLong))),
+          s"$tbl/$dir", 1L, "p")
       ManifestTable.publish(
-        Seq(("groups/d30", 30), ("groups/d7", 7)).toDF("group_dir", "grain_days"),
+        groups.map { case (dir, grain, _) => (dir, grain) }.toDF("group_dir", "grain_days"),
         tbl, 1L)
       // range [15, 44] straddles the evolution point
       val got = ManifestTable.readEvolved(spark, tbl, 15L, 44L)
       assert(got.count() == 30L, "days 15..44 inclusive")
       assert(got.agg(min("day"), max("day")).head() ==
         org.apache.spark.sql.Row(15L, 44L))
-      // physical pruning, per spec: d7 holds p = 4..8 but the range only
+      // physical pruning, per spec, on the read's own plan: d30's one dir
+      // holds the range's start; d7 holds p = 4..8 but the range only
       // needs 15/7=2 .. 44/7=6 → dirs 4, 5, 6 open — 3 of its 5
-      val d7 = spark.read.parquet(s"$tbl/groups/d7")
-        .filter(col("p").between(15 / 7, 44 / 7)).filter(col("day").between(15, 44))
-      d7.collect()
-      val opened = d7.queryExecution.executedPlan.collect {
+      got.collect()
+      val opened = got.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.selectedPartitions.partitionCount
-      }.sum
-      assert(opened == 3, s"the 7-day group must open 3 of 5 dirs, opened $opened")
+      }.sorted
+      assert(opened == Seq(1, 3), s"1 of 1 d30 dirs and 3 of 5 d7 dirs, opened $opened")
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
@@ -219,30 +263,26 @@ class ManifestTableSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft-mt-spec")
     try {
       val tbl = s"$out/tbl"
-      def fileState(d: String): Map[String, Long] = {
-        val dir = new java.io.File(d)
-        if (!dir.isDirectory) Map.empty
-        else dir.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getName -> f.lastModified()).toMap
-      }
       val ev = TestData.events(spark, sf)
       // run the protocol, then inspect the physical layout it left
       val res = ManifestTable.mergeOnReadDelete(ev, tbl).collect()
-      // (a) the delete was merge-on-read: base data files survived the
-      // whole run unmodified (same names — they were written once and
-      // never rewritten; a CoW delete would have replaced them)
-      val base = fileState(s"$tbl/files/base")
-      assert(base.nonEmpty, "base data files must exist")
-      // (b) the sidecar holds exactly the deleted keys
+      // (a) the delete was merge-on-read: v1's data files are on disk
+      // with the names and sizes recorded when they landed — written
+      // once, never rewritten (a CoW delete would have replaced them)
+      assert(dataFiles(tbl, "v1").nonEmpty, "base data files must exist")
+      assert(dataFiles(tbl, "v1") == recordedFiles(tbl, 1L, "v1"))
+      // (b) the delete dir holds exactly the deleted rows' positions
       val nErrors = ev.filter(col("event_type") === "error").count()
-      assert(spark.read.parquet(s"$tbl/files/dv2").count() == nErrors)
-      // (c) v2 resolves {data, delete_keys}; v3 resolves data only —
-      // the purged snapshot carries no sidecar
-      def kinds(v: Long): Set[String] =
-        ManifestTable.readVersion(spark, tbl, v).collect()
-          .map(_.getAs[String]("kind")).toSet
-      assert(kinds(2L) == Set("data", "delete_keys"))
-      assert(kinds(3L) == Set("data"))
+      val dels = spark.read.parquet(s"$tbl/data/v2")
+      assert(dels.columns.toSet == Set("event_type", "_src_version", "_pos"))
+      assert(dels.count() == nErrors)
+      // (c) v2 masks the error partition only; the purged v3 carries no
+      // deletes and serves one dir per partition
+      val m2 = ManifestTable.readManifest(spark, tbl, 2L).parts
+      assert(m2.collect { case (p, e) if e.dels.nonEmpty => p -> e.dels }
+        == Map("error" -> Seq("v2")))
+      assert(ManifestTable.readManifest(spark, tbl, 3L).parts.values
+        .forall(e => e.dirs == Seq("v3") && e.dels.isEmpty))
       // (d) the MoR read and the purged read agree stage-for-stage
       val byStage = res.groupBy(_.getAs[String]("stage")).map { case (s, rows) =>
         s -> rows.map(r => (r.getAs[String]("event_type"), r.getAs[Long]("n"),
@@ -322,9 +362,6 @@ class ManifestTableSpec extends SparkSpec {
       val ev = Seq((1L, "purchase", 10.0), (2L, "error", 5.0),
           (3L, "view", 2.0), (4L, "purchase", 1.5))
         .toDF("event_id", "event_type", "value")
-      def baseFiles() =
-        new java.io.File(s"$tbl/files/base").listFiles()
-          .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified).toSet
       val r = ManifestTable.mergeOnReadUpdate(ev, tbl).collect()
       def tot(s: String) = r.filter(_.getAs[String]("stage") == s)
         .map(x => x.getAs[String]("event_type") ->
@@ -333,15 +370,24 @@ class ManifestTableSpec extends SparkSpec {
       assert(tot("b_v2_mor_update") == Map(
         "purchase" -> ((2L, 2300L)), "error" -> ((1L, 500L)),
         "view" -> ((1L, 200L))))
-      // v3: the delete sidecar stacks ON TOP of the update
+      // v3: the tombstones stack ON TOP of the update
       assert(tot("c_v3_upd_del") == Map(
         "purchase" -> ((2L, 2300L)), "view" -> ((1L, 200L))))
       // purge invisible to readers
       assert(tot("d_v4_purged") == tot("c_v3_upd_del"))
-      // base data files exist untouched through every sidecar commit
-      // (the compaction wrote to files/purged, not files/base)
-      assert(baseFiles().nonEmpty)
-      val v1 = ManifestTable.readMoRVersion(spark, tbl, 1L)
+      // v1's data files survive every upsert and tombstone commit as
+      // they landed (the compaction wrote data/v4, not data/v1)
+      assert(dataFiles(tbl, "v1").nonEmpty)
+      assert(dataFiles(tbl, "v1") == recordedFiles(tbl, 1L, "v1"))
+      // the upsert dir holds exactly the re-priced purchases
+      assert(spark.read.parquet(s"$tbl/data/v2").select("event_id", "value")
+        .collect().map(x => x.getLong(0) -> x.getDouble(1)).toSet ==
+        Set(1L -> 20.0, 4L -> 3.0))
+      // the compacted v4 carries no deletes and one dir per partition
+      assert(ManifestTable.readManifest(spark, tbl, 4L).parts.values
+        .forall(e => e.dirs == Seq("v4") && e.dels.isEmpty))
+      val v1 = ManifestTable.readPartitionedMoRKeyed(spark, tbl, "event_type",
+        "event_id", 1L)
       assert(v1.count() == 4L, "v1 still serves the original rows")
     } finally graft.Scratch.rmTree(out.toFile)
   }
@@ -400,10 +446,10 @@ class ManifestTableSpec extends SparkSpec {
   }
 
   test("q288 manifest growth is bounded by maintenance: purge caps refs, vacuum caps versions") {
-    // The reader's driver-side `.collect()` of the manifest is bounded
-    // only if maintenance actually bounds BOTH growth axes of a
-    // long-lived table: refs-per-version (grows one sidecar per MoR
-    // commit) and versions-on-disk (grows one per commit). This pins
+    // The reader's driver-side decode of the manifest is bounded only if
+    // maintenance actually bounds BOTH growth axes of a long-lived
+    // table: delete dirs per partition (one more per MoR commit that
+    // touches it) and versions on disk (one more per commit). This pins
     // the post-maintenance bounds as a contract, not a convention.
     val out = java.nio.file.Files.createTempDirectory("graft-bound-spec")
     try {
@@ -412,35 +458,38 @@ class ManifestTableSpec extends SparkSpec {
       val base = (1L to 100L).map(i =>
         (i, if (i % 2 == 0) "a" else "b", i.toDouble))
         .toDF("event_id", "event_type", "value")
-      base.write.parquet(s"$tbl/files/base")
-      ManifestTable.publish(
-        Seq(("files/base", "data")).toDF("ref", "kind"), tbl, 1L)
-      var refs = Seq(("files/base", "data"))
-      for (v <- 2L to (n + 1L)) { // each commit stacks one delete sidecar
-        Seq(v - 1L).toDF("event_id").write.parquet(s"$tbl/files/dv$v")
-        refs = refs :+ ((s"files/dv$v", "delete_keys"))
-        ManifestTable.publish(refs.toDF("ref", "kind"), tbl, v)
-      }
-      // the unbounded shape: refs and versions both linear in commits
-      assert(ManifestTable.readVersion(spark, tbl, n + 1L).count() == n + 1L)
+      ManifestTable.appendPartitionedDelta(ManifestTable.withRowIds(base),
+        tbl, 1L, "event_type")
+      def deleteId(id: Long, v: Long): Unit = ManifestTable.appendPositionDeletes(
+        ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v - 1L,
+          rowIds = true).filter(col("event_id") === id), tbl, v, "event_type")
+      def rows(v: Long): Long =
+        ManifestTable.readPartitionedMoR(spark, tbl, "event_type", v).count()
+      for (v <- 2L to (n + 1L)) deleteId(v - 1L, v) // one delete dir each
+      // the unbounded shape: delete dirs and versions both linear in commits
+      val grown = ManifestTable.readManifest(spark, tbl, n + 1L).parts
+      assert(grown.values.map(_.dels.size).sum == n)
       assert(ManifestTable.versions(spark, tbl).size == n + 1)
-      assert(ManifestTable.readMoRVersion(spark, tbl, n + 1L).count()
-        == 100L - n)
-      // maintenance: purge collapses the live manifest to ONE data ref
-      ManifestTable.readMoRVersion(spark, tbl, n + 1L)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$tbl/files/purged")
-      ManifestTable.publish(
-        Seq(("files/purged", "data")).toDF("ref", "kind"), tbl, n + 2L)
-      // ... and vacuum caps the versions the table can ever hold
+      assert(rows(n + 1L) == 100L - n)
+      // maintenance: the purge collapses every partition to ONE dir and
+      // no deletes
+      ManifestTable.compactPartitionedMoR(spark, tbl, n + 2L, "event_type")
+      assert(ManifestTable.readManifest(spark, tbl, n + 2L).parts.values
+        .forall(e => e.dirs == Seq(s"v${n + 2}") && e.dels.isEmpty))
+      // keep = 2 retains the pre-compaction snapshot, and with it the
+      // whole chain it names; once the table commits past the compaction
+      // the chain expires and vacuum caps what the table holds
+      assert(ManifestTable.vacuum(spark, tbl, keep = 2).isEmpty)
+      deleteId(100L, n + 3L)
       val dropped = ManifestTable.vacuum(spark, tbl, keep = 2)
-      assert(dropped.size == n, s"vacuum must reclaim the history: $dropped")
-      assert(ManifestTable.versions(spark, tbl).size == 2)
-      // the bounds the reader's collect holds after maintenance:
-      // one manifest row, and the same masked rows served
-      assert(ManifestTable.read(spark, tbl).count() == 1L)
-      assert(ManifestTable.readMoRVersion(spark, tbl, n + 2L).count()
-        == 100L - n)
+      assert(dropped == (1L to n + 1L), s"vacuum must reclaim the history: $dropped")
+      assert(ManifestTable.versions(spark, tbl) == Seq(n + 2L, n + 3L))
+      // the bounds the reader holds after maintenance: one data dir and
+      // at most one delete dir per partition, and the same masked rows
+      assert(ManifestTable.readManifest(spark, tbl, n + 3L).parts.values
+        .forall(e => e.dirs.size == 1 && e.dels.size <= 1))
+      assert(rows(n + 2L) == 100L - n)
+      assert(rows(n + 3L) == 100L - n - 1)
     } finally graft.Scratch.rmTree(out.toFile)
   }
 
