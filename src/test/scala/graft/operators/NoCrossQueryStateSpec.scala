@@ -5,10 +5,11 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.sources.TestData
 
-/** The curation operators reuse intermediates only through
-  * `localCheckpoint`, whose blocks go with the result. None registers a
-  * plan in the session's cache, where any later query with a matching plan
-  * would read it and so depend on the queries that ran before it.
+/** The curation operators and the stored bank warehouse reuse
+  * intermediates only through `localCheckpoint`, whose blocks go with the
+  * result. None registers a plan in the session's cache, where any later
+  * query with a matching plan would read it and so depend on the queries
+  * that ran before it.
   */
 class NoCrossQueryStateSpec extends SparkSpec {
 
@@ -16,7 +17,7 @@ class NoCrossQueryStateSpec extends SparkSpec {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
-  test("curation operators leave nothing in the session cache") {
+  test("curation operators and the stored warehouse leave nothing in the session cache") {
     spark.catalog.clearCache()
     val docs = TestData.documents(spark, sf)
     val emb = TestData.embeddings(spark, sf)
@@ -27,7 +28,12 @@ class NoCrossQueryStateSpec extends SparkSpec {
       "ivfTopK" -> (() => Similarity.ivfTopK(emb)),
       "cmSketchAudit" -> (() => TextAnalysis.cmSketchAudit(docs)),
       "pagerankResiduals" -> (() => Graph.pagerankResiduals(docs)),
-      "triangleStats" -> (() => Graph.triangleStats(docs)))
+      "triangleStats" -> (() => Graph.triangleStats(docs)),
+      "BankEtl.build(cache = true)" -> { () =>
+        val w = BankEtl.build(spark, sf, cache = true)
+        w.tables.values.foreach(_.count())
+        w.fact
+      })
     for ((name, build) <- built) {
       assert(build().collect().nonEmpty, s"$name returned no rows")
       assert(cacheIsEmpty, s"$name left a plan in the session cache")

@@ -130,14 +130,26 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("dashboard joins: the dim side broadcasts over the cached fact") {
-    // (the fact ASSEMBLY joins are invisible here by design: surrogate-key
-    // assignment materializes them behind an RDD scan, and the q28 query
-    // path reads the cached result — what executes per dashboard query is
-    // the fact⋈dim join below)
-    for (q <- Seq("q30_dash_top_categories", "q31_dash_age_groups")) {
+    // (the fact ASSEMBLY joins are invisible here by design: the warehouse
+    // stores each table behind a checkpointed RDD scan — what executes per
+    // dashboard query is the fact⋈dim join below). The INITIAL plan must
+    // broadcast too: it is planned from the stored tables' statistics, and
+    // a table that reported none would be planned as a sort-merge join that
+    // shuffles the fact on its key before AQE could turn it into a broadcast.
+    for ((q, key) <- Seq(
+        "q29_dash_trend" -> "Date_Key",
+        "q30_dash_top_categories" -> "Merchant_Key",
+        "q31_dash_age_groups" -> "Customer_Key",
+        "q33_sql_dash_top_categories" -> "Merchant_Key",
+        "q34_sql_dash_trend" -> "Date_Key",
+        "q35_sql_dash_age_groups" -> "Customer_Key")) {
       val p = finalPlan(q)
       assert(p.contains("BroadcastHashJoin"), s"$q dim side must broadcast")
       assert(!p.contains("SortMergeJoin"), s"$q must not shuffle-join a small dim")
+      val initial = p.split("== Initial Plan ==")(1)
+      assert(initial.contains("BroadcastHashJoin"), s"$q must plan the broadcast up front:\n$p")
+      assert(!initial.contains(s"Exchange hashpartitioning($key"),
+        s"$q must not shuffle the fact on $key:\n$p")
     }
   }
 
